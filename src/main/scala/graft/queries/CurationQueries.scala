@@ -104,6 +104,45 @@ object CurationQueries {
               / length(col("text"))))
   }
 
+  /** q_corpus_curation's LAZY plan plus its pinned intermediate — PlanSpec
+    * asserts the dedup shape on this relation (the registered body
+    * materializes through SmallResult, whose checkpoint leaf hides the
+    * interior plan from executedPlan).
+    */
+  private[graft] def corpusCurationLazy(documents: DataFrame): (DataFrame, DataFrame) = {
+    val ws = TextOps.words(col("text"))
+    // cache: the PII inject+redact regex chain is the expensive scan
+    // here, and it feeds BOTH the keeper map and the survivor side of
+    // the semi-join below — one regex pass, not two
+    val scrubbed = documents
+      .select(col("doc_id"), col("lang"), PiiQueries.piiText.as("text"))
+      .withColumn("n0", length(col("text")))
+      .withColumn("text", PiiQueries.redactExpr(col("text")))
+      .withColumn("chars_redacted", col("n0") - length(col("text")))
+      .drop("n0")
+      .cache()
+    // exact dedup as groupBy(md5).min(id) + keep-list semi-join (the
+    // funnel's keep1 shape, guide §2.3) instead of a row_number window
+    // partitioned by md5(text): the window shuffled and sorted every
+    // REDACTED TEXT byte just to rank within its hash group, while the
+    // groupBy partial-aggregates map-side and shuffles only (hash, id)
+    // pairs. Same keep-min-id contract (min(doc_id) == rn 1 by doc_id).
+    val keep = scrubbed.groupBy(md5(col("text")).as("h"))
+      .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
+    val out = scrubbed.join(keep, Seq("doc_id"), "left_semi")
+      .filter(qualityCol >= 0.5)
+      .select(col("lang"),
+        size(ws).cast("long").as("n_tokens"),
+        col("chars_redacted"),
+        splitCol(col("doc_id")).as("split"))
+      .groupBy(col("lang"), col("split"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("n_tokens")).as("total_tokens"),
+        sum(when(col("chars_redacted") > 0, 1L).otherwise(0L)).as("n_pii_docs"),
+        sum(col("chars_redacted")).as("chars_redacted"))
+    (out, scrubbed)
+  }
+
   /** SQL twin of `qualityCol` over a text expression. */
   private def qualitySql(t: String): String =
     s"""round(0.4 * least(len(${TextOps.wordsSql(t)}) / 50.0, 1.0)
@@ -172,38 +211,10 @@ object CurationQueries {
          |         AS n_pii_docs,
          |       CAST(sum(chars_redacted) AS BIGINT) AS chars_redacted
          |FROM a GROUP BY lang, split""".stripMargin) { (s, dir) =>
-      import graft.queries.PiiQueries
-      val ws = TextOps.words(col("text"))
-      // cache: the PII inject+redact regex chain is the expensive scan
-      // here, and it feeds BOTH the keeper map and the survivor side of
-      // the semi-join below — one regex pass, not two
-      val scrubbed = Tables.documents(s, dir)
-        .select(col("doc_id"), col("lang"), PiiQueries.piiText.as("text"))
-        .withColumn("n0", length(col("text")))
-        .withColumn("text", PiiQueries.redactExpr(col("text")))
-        .withColumn("chars_redacted", col("n0") - length(col("text")))
-        .drop("n0")
-        .cache()
-      // exact dedup as groupBy(md5).min(id) + keep-list semi-join (the
-      // funnel's keep1 shape, guide §2.3) instead of a row_number window
-      // partitioned by md5(text): the window shuffled and sorted every
-      // REDACTED TEXT byte just to rank within its hash group, while the
-      // groupBy partial-aggregates map-side and shuffles only (hash, id)
-      // pairs. Same keep-min-id contract (min(doc_id) == rn 1 by doc_id).
-      val keep = scrubbed.groupBy(md5(col("text")).as("h"))
-        .agg(min(col("doc_id")).as("doc_id")).select(col("doc_id"))
-      val deduped = scrubbed.join(keep, Seq("doc_id"), "left_semi")
-      deduped
-        .filter(qualityCol >= 0.5)
-        .select(col("lang"),
-          size(ws).cast("long").as("n_tokens"),
-          col("chars_redacted"),
-          splitCol(col("doc_id")).as("split"))
-        .groupBy(col("lang"), col("split"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(col("n_tokens")).as("total_tokens"),
-          sum(when(col("chars_redacted") > 0, 1L).otherwise(0L)).as("n_pii_docs"),
-          sum(col("chars_redacted")).as("chars_redacted"))
+      // per-(lang, split) aggregate → eager SmallResult, scrubbed
+      // unpersists before return
+      val (out, scrubbed) = corpusCurationLazy(Tables.documents(s, dir))
+      SmallResult(out, scrubbed)
     },
 
     // Train/valid/test split 80/10/10 with per-split doc and token counts

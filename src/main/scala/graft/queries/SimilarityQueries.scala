@@ -189,9 +189,11 @@ object SimilarityQueries {
       val candIds = pairs.select(col("a").as("id"))
         .unionAll(pairs.select(col("b").as("id"))).distinct()
       val shv = sh.join(candIds, Seq("id"), "left_semi").localCheckpoint()
-      graft.operators.Dedup.jaccard(pairs, shv)
+      // one result row per cached pair, so no larger than the cache →
+      // eager SmallResult, pairs unpersists before return
+      SmallResult(graft.operators.Dedup.jaccard(pairs, shv)
         .select(col("a"), col("b"),
-          Num.r4(col("cosv")).as("cos"), Num.r4(col("jaccard")).as("jaccard"))
+          Num.r4(col("cosv")).as("cos"), Num.r4(col("jaccard")).as("jaccard")), pairs)
     },
 
     // The 100x-scale twin of q_multisignal_dedup (which stays as the

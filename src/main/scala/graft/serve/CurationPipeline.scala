@@ -17,26 +17,33 @@ import graft.operators.Dedup
 import graft.queries.PiiQueries
 
 /** Live corpus-curation ingest: the batch funnel's guards — PII scrub,
-  * exact dedup, near-dup LSH admit — composed into ONE running Structured
-  * Streaming pipeline behind `POST /corpus/ingest`.
+  * exact dedup, near-dup LSH admit, intra-batch containment — composed
+  * into ONE running Structured Streaming pipeline behind
+  * `POST /corpus/ingest`.
   *
   * Per micro-batch (`foreachBatch`, batch semantics — the any-band OR of
   * the near-dup admit needs a per-doc aggregation append mode cannot
-  * express without state, see `Dedup.nearDupAdmitBatch`):
-  *   1. scrub: `PiiQueries.redactExpr` — map-only, no injection (real
-  *      arrivals carry their own PII), redacted text is what gets admitted;
-  *   2. exact dedup: md5 content hash, first occurrence per hash inside
-  *      the batch wins (min doc_id), then arrivals whose hash exists in
-  *      the PERSISTED corpus hash index are rejected;
-  *   3. near-dup guard, two layers:
-  *      a. INTRA-BATCH: band keys self-collide within the batch — any doc
-  *         band-colliding with a smaller-id doc of the same batch is
-  *         rejected (`near_dup_batch`), regardless of that smaller doc's
-  *         own fate (deterministic, stricter-never-looser). Without this,
-  *         back-to-back near-dup posts — the common scrape pattern —
-  *         would batch together and both pass;
+  * express without state, see `Dedup.nearDupAdmitBatch`), an admit runs
+  * one fetch, two index probes (together in one action) and two appends:
+  *   1. fetch: ONE action scrubs every doc (`PiiQueries.redactExpr` —
+  *      map-only, no injection: real arrivals carry their own PII, and the
+  *      redacted text is what gets admitted) and brings back its md5
+  *      content hash, redacted-char count, length, shingle hashes and
+  *      `Dedup` band rows;
+  *   2. exact dedup: first occurrence per hash inside the batch wins (min
+  *      doc_id, `exact_dup_batch`), then arrivals whose hash exists in the
+  *      PERSISTED corpus hash index are rejected (`exact_dup_corpus`,
+  *      probe 1: `corpusHashHits`);
+  *   3. near-dup guard over the exact survivors, two layers:
+  *      a. INTRA-BATCH: any doc sharing a band key with a smaller-id
+  *         survivor of the same batch is rejected (`near_dup_batch`),
+  *         regardless of that smaller doc's own fate (deterministic,
+  *         stricter-never-looser). Without this, back-to-back near-dup
+  *         posts — the common scrape pattern — would batch together and
+  *         both pass;
   *      b. CORPUS: band keys probed against the persisted band index —
-  *         any band hit rejects (`near_dup_corpus`);
+  *         any band hit rejects (`near_dup_corpus`, probe 2:
+  *         `corpusBandHits`);
   *   4. containment guard (INTRA-BATCH, over the near-dup SURVIVORS —
   *      the batch funnel's stage order): a survivor whose cool shingles
   *      are >=80% inside a LARGER surviving doc of the same batch is
@@ -51,6 +58,13 @@ import graft.queries.PiiQueries
   *   5. admitted docs EXTEND both indexes (hash + band rows appended), so
   *      later batches are guarded against earlier ones — true corpus
   *      extension, not a static snapshot.
+  *
+  * Only the two probes read corpus-sized data; every intra-batch rule is
+  * decided on the driver from the fetched facts. At micro-batch size each
+  * Spark job's fixed cost (scheduling plus one AQE stage materialization,
+  * tens of ms) outweighs its data work, so a rule expressed as a
+  * self-join, groupBy or broadcast join costs more than the batch it
+  * decides; the driver already holds one row per doc for the decision log.
   *
   * INDEX MEMBERSHIP IS SCAN-ONLY, NEVER SHUFFLE: the exact-dup corpus
   * check is `index ⋉ broadcast(batch hashes)` (left semi with the
@@ -101,9 +115,9 @@ object CurationPipeline {
     */
   val CompactEveryBatches = 64
 
-  /** Batch-size bound for the driver-local containment kernel: under it,
-    * one shingle collect (the decision log already collects the batch);
-    * over it, the distributed `containmentDrops` operator — the
+  /** Survivor-count bound for the driver-local containment kernel: under
+    * it, the kernel runs over the fetched shingle hashes; over it, the
+    * distributed `containmentDrops` operator — the
     * connectedComponentsAdaptive small-case/fallback pattern.
     */
   val MaxLocalContainDocs = 20000
@@ -374,6 +388,10 @@ object CurationPipeline {
     }
   }
 
+  /** One doc's facts, fetched once per admit. */
+  private final case class Doc(id: Long, hash: String, charsRedacted: Long,
+                               nChars: Long, shingles: Seq[Long])
+
   /** Admit one micro-batch (columns doc_id, ts, text) through the full
     * funnel; records a Decision per doc and appends admitted docs' hash
     * and band rows to the tail logs. Auto-compacts every
@@ -381,52 +399,60 @@ object CurationPipeline {
     */
   def admitBatch(spark: SparkSession, batch: DataFrame,
                  indexRoot: String, stats: Stats): Unit = {
-    if (batch.isEmpty) return
-    // resolve the (immutable) committed-generation marker ONCE for both
-    // probes below — per-probe resolution doubled the per-batch FS RPCs
-    val gen = currentGeneration(spark, indexRoot)
-    // 1. scrub (map-only). chars_redacted clamps at 0: a redaction token
-    // longer than the matched PII ('a@b.co' -> '<EMAIL>') would otherwise
-    // record a NEGATIVE delta and corrupt the cumulative counter.
+    import spark.implicits._
+    // chars_redacted clamps at 0: a redaction token longer than the matched
+    // PII ('a@b.co' -> '<EMAIL>') would otherwise record a NEGATIVE delta
+    // and corrupt the cumulative counter
     val scrubbed = batch
       .withColumn("redacted", PiiQueries.redactExpr(col("text")))
-      .withColumn("chars_redacted",
+      .select(col("doc_id"), col("redacted").as("text"),
         greatest(lit(0L),
-          (length(col("text")) - length(col("redacted"))).cast("long")))
-      .select(col("doc_id"), col("redacted").as("text"), col("chars_redacted"))
-      .withColumn("text_hash", md5(col("text")))
-      .localCheckpoint() // several consumers below; the batch is micro-sized
-    // 2a. intra-batch exact: first arrival (min doc_id) per hash wins
-    val keeper = scrubbed.groupBy(col("text_hash"))
-      .agg(min(col("doc_id")).as("__keeper"))
-    // 2b. corpus exact: index ⋉ broadcast(batch hashes) — the corpus side
-    // is scanned in place (no distinct, no shuffle); output ≤ batch size
-    val corpusHits = corpusHashHits(spark, indexRoot,
-        scrubbed.select(col("text_hash")), gen)
-      .withColumn("__in_corpus", lit(true))
-    val flagged = scrubbed
-      .join(keeper, "text_hash")
-      .join(broadcast(corpusHits), Seq("text_hash"), "left")
-      .select(col("doc_id"), col("text"), col("text_hash"), col("chars_redacted"),
-        (col("doc_id") =!= col("__keeper")).as("batch_dup"),
-        coalesce(col("__in_corpus"), lit(false)).as("corpus_dup"))
-      .localCheckpoint()
-    // 3. near-dup guards for exact survivors
-    val survivors = flagged.filter(!col("batch_dup") && !col("corpus_dup"))
-    val probeBands = Dedup.bandKeys(Dedup.minhashSignaturesRowwise(
-      survivors, col("doc_id"), col("text"), ShingleN))
-      .localCheckpoint() // probed three ways below; micro-batch-sized
-    // 3a. intra-batch: a band collision with a SMALLER-id doc of the same
-    // batch rejects the larger id (min-id-wins, deterministic; the smaller
-    // doc's own corpus fate does not un-reject it — stricter, never looser)
-    val intraHit = Dedup.candidatePairs(probeBands)
-      .select(col("b").as("doc_id")).distinct()
-      .withColumn("__near_batch", lit(true))
-    // 3b. corpus: any band hit against generation + tail indexes
-    val nearHit = corpusBandHits(spark, indexRoot, probeBands, gen)
-      .select(col("b").as("doc_id")).distinct()
-      .withColumn("__near", lit(true))
-    // 3c. intra-batch containment: same contract as the batch funnel's
+          (length(col("text")) - length(col("redacted"))).cast("long"))
+          .as("chars_redacted"))
+    // 1. the fetch: per-doc facts and band rows as the two branches of one
+    // union (each branch's missing columns read null), so one job brings
+    // back everything the rules below read
+    val facts = scrubbed.select(col("doc_id"), md5(col("text")).as("text_hash"),
+      col("chars_redacted"), length(col("text")).cast("long").as("n_chars"),
+      org.apache.spark.sql.graft.ArrayExpressions.shingleHashes(
+        col("text"), ShingleN).as("hs"))
+    val bandRows = Dedup.bandKeys(Dedup.minhashSignaturesRowwise(
+        scrubbed, col("doc_id"), col("text"), ShingleN)).withColumnRenamed("id", "doc_id")
+    val (bandFetch, factFetch) = facts.unionByName(bandRows, allowMissingColumns = true)
+      .collect().partition(_.isNullAt(4))
+    if (factFetch.isEmpty) return
+    val docs = factFetch.map(r =>
+      Doc(r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getSeq[Long](4)))
+      .sortBy(_.id).toSeq
+    val bands = bandFetch.map(r => (r.getLong(0), r.getInt(5), r.getString(6))).toSeq
+    val keeper = docs.groupMapReduce(_.hash)(_.id)(math.min)
+
+    // 2. the two corpus probes, each run once, as the two branches of one
+    // action so their independent stages overlap: index ⋉ broadcast(batch
+    // hashes), and every doc's band keys against generation + tail (a
+    // doc's band hits are read only if it passes the exact guards). The
+    // (immutable) generation marker is resolved once for both.
+    val gen = currentGeneration(spark, indexRoot)
+    val hashHits = corpusHashHits(spark, indexRoot, keeper.keys.toSeq.toDF("text_hash"), gen)
+      .select(col("text_hash"), lit(null).cast("long").as("b"))
+    val hits =
+      if (bands.isEmpty) hashHits
+      else hashHits.unionAll(
+        corpusBandHits(spark, indexRoot, bands.toDF("id", "band", "key"), gen)
+          .select(lit(null).cast("string").as("text_hash"), col("b")))
+    val (hashRows, bandHitRows) = hits.collect().partition(_.isNullAt(1))
+    val inCorpus = hashRows.map(_.getString(0)).toSet
+    val nearCorpus = bandHitRows.map(_.getLong(1)).toSet
+    val survivors = docs.filter(d => keeper(d.hash) == d.id && !inCorpus(d.hash))
+
+    // 3. intra-batch near-dup: a band collision with a SMALLER-id exact
+    // survivor rejects the larger id, whatever the smaller doc's own fate
+    val survivorIds = survivors.map(_.id).toSet
+    val probeBands = bands.filter(t => survivorIds(t._1))
+    val bucketMin = probeBands.groupMapReduce(t => (t._2, t._3))(_._1)(math.min)
+    val nearBatch = probeBands.collect { case (id, b, k) if bucketMin((b, k)) < id => id }.toSet
+
+    // 4. intra-batch containment: same contract as the batch funnel's
     // d_containment stage (hot cut relative to the BATCH — the df<=8
     // absolute floor is what carries the excerpt signal at micro-batch
     // sizes), and in the funnel's stage ORDER: over the near-dup
@@ -434,88 +460,56 @@ object CurationPipeline {
     // one-word-longer near-dup pair lose BOTH members (the larger to the
     // band guard, the smaller to mutual containment) — after it, the
     // kept member of every near-dup pair is immune and only genuine
-    // excerpt inclusions fall. The common case is the DRIVER-LOCAL kernel
-    // (one codegen'd shingle collect — the batch is micro-sized and its
-    // decision log is collected below anyway; the distributed operator's
-    // ~10 AQE stage materializations tripled p50 batch latency for zero
-    // data); a pathological oversized batch falls back to the distributed
-    // operator, same contract, parity held by SamplingContainmentSpec.
-    val nearSurvivors = survivors
-      .join(broadcast(intraHit), Seq("doc_id"), "left")
-      .join(broadcast(nearHit), Seq("doc_id"), "left")
-      .filter(coalesce(col("__near_batch"), lit(false)) === false &&
-        coalesce(col("__near"), lit(false)) === false)
-    // one action decides size AND fetches: limit(bound+1) — a result
-    // inside the bound is the whole batch, one row over proves oversize
-    val collected = nearSurvivors.select(col("doc_id"),
-        org.apache.spark.sql.graft.ArrayExpressions.shingleHashes(
-          col("text"), ShingleN).as("hs"))
-      .limit(MaxLocalContainDocs + 1).collect()
-    val containedHit: DataFrame =
-      if (collected.length <= MaxLocalContainDocs) {
-        import spark.implicits._
+    // excerpt inclusions fall. The driver-local kernel reads the fetched
+    // shingle hashes; a pathological oversized batch falls back to the
+    // distributed operator, same contract, parity held by
+    // SamplingContainmentSpec.
+    val nearSurvivors = survivors.filterNot(d => nearBatch(d.id) || nearCorpus(d.id))
+    val contained =
+      if (nearSurvivors.size <= MaxLocalContainDocs)
         graft.queries.DedupQueries.containmentDropIdsLocal(
-            collected.toSeq.map(r => (r.getLong(0), r.getSeq[Long](1))))
-          .toSeq.toDF("doc_id")
-          .withColumn("__contained", lit(true))
-      } else
-        graft.queries.DedupQueries.containmentDrops(
-            nearSurvivors.select(col("doc_id").as("id"), col("text")))
-          .select(col("id").as("doc_id"))
-          .withColumn("__contained", lit(true))
-    val decided = flagged
-      .join(broadcast(intraHit), Seq("doc_id"), "left")
-      .join(broadcast(nearHit), Seq("doc_id"), "left")
-      .join(broadcast(containedHit), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("text"), col("text_hash"), col("chars_redacted"),
-        col("batch_dup"), col("corpus_dup"),
-        coalesce(col("__near_batch"), lit(false)).as("near_dup_batch"),
-        coalesce(col("__near"), lit(false)).as("near_dup"),
-        coalesce(col("__contained"), lit(false)).as("contained_batch"))
-      .localCheckpoint()
-    // 4. extend the indexes with the admissions BEFORE recording decisions
-    // (a crash between the two leaves the guard stricter, never looser)
-    val admitted = decided.filter(!col("batch_dup") && !col("corpus_dup") &&
-      !col("near_dup_batch") && !col("near_dup") && !col("contained_batch"))
-    if (!admitted.isEmpty) {
-      admitted.select(col("text_hash"))
+          nearSurvivors.map(d => (d.id, d.shingles)))
+      else
+        graft.queries.DedupQueries.containmentDrops(scrubbed
+            .join(broadcast(nearSurvivors.map(_.id).toDF("doc_id")), Seq("doc_id"), "left_semi")
+            .select(col("doc_id").as("id"), col("text")))
+          .collect().map(_.getLong(0)).toSet
+
+    val decided = docs.map { d =>
+      val reason =
+        if (keeper(d.hash) != d.id) "exact_dup_batch"
+        else if (inCorpus(d.hash)) "exact_dup_corpus"
+        else if (nearBatch(d.id)) "near_dup_batch"
+        else if (nearCorpus(d.id)) "near_dup_corpus"
+        else if (contained(d.id)) "contained_batch"
+        else ""
+      (d, reason)
+    }
+    val admitted = decided.collect { case (d, "") => d }
+    // 5. extend the indexes with the admissions BEFORE recording decisions
+    // (a crash between the two leaves the guard stricter, never looser);
+    // one file per append keeps the per-batch tail probe's file count down
+    if (admitted.nonEmpty) {
+      admitted.map(_.hash).toDF("text_hash").coalesce(1)
         .write.mode("append").parquet(s"$indexRoot/hash_tail")
-      // probeBands (already checkpointed) holds exactly the survivors'
-      // band rows — recomputing shingles + minhash over admitted texts
-      // would pay the dominant per-doc cost twice per batch
-      val newBands = probeBands.join(
-        broadcast(admitted.select(col("doc_id").as("id"))), Seq("id"), "left_semi")
+      val admittedIds = admitted.map(_.id).toSet
+      val newBands = probeBands.filter(t => admittedIds(t._1))
       // all-short-doc batches produce no band rows; an empty append would
       // leave a schema-less directory behind
-      if (!newBands.isEmpty) newBands.write.mode("append").parquet(s"$indexRoot/band_tail")
+      if (newBands.nonEmpty)
+        newBands.toDF("id", "band", "key").coalesce(1)
+          .write.mode("append").parquet(s"$indexRoot/band_tail")
       if (stats.batches.incrementAndGet() % CompactEveryBatches == 0) {
         compact(spark, indexRoot)
         stats.compactions.incrementAndGet()
-        ()
       }
     }
-    var anyAdmitted = false
-    decided.select(col("doc_id"), col("batch_dup"), col("corpus_dup"),
-        col("near_dup_batch"), col("near_dup"), col("chars_redacted"),
-        length(col("text")).cast("long").as("n_chars"), col("contained_batch"))
-      .collect()
-      .sortBy(_.getLong(0))
-      .foreach { r =>
-        val (id, cr) = (r.getLong(0), r.getLong(5))
-        val d =
-          if (r.getBoolean(1)) Decision(id, "rejected", "exact_dup_batch", cr)
-          else if (r.getBoolean(2)) Decision(id, "rejected", "exact_dup_corpus", cr)
-          else if (r.getBoolean(3)) Decision(id, "rejected", "near_dup_batch", cr)
-          else if (r.getBoolean(4)) Decision(id, "rejected", "near_dup_corpus", cr)
-          else if (r.getBoolean(7)) Decision(id, "rejected", "contained_batch", cr)
-          else Decision(id, "admitted", "", cr)
-        if (d.decision == "admitted") {
-          stats.offerSample(id, r.getLong(6))
-          anyAdmitted = true
-        }
-        stats.record(d)
-      }
-    if (anyAdmitted) persistSample(spark, indexRoot, stats)
+    for ((d, reason) <- decided) {
+      if (reason.isEmpty) stats.offerSample(d.id, d.nChars)
+      stats.record(Decision(d.id, if (reason.isEmpty) "admitted" else "rejected",
+        reason, d.charsRedacted))
+    }
+    if (admitted.nonEmpty) persistSample(spark, indexRoot, stats)
   }
 
   /** Persist the serving sample's candidate set next to the dedup

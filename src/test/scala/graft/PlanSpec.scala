@@ -384,7 +384,12 @@ class PlanSpec extends SparkSpec {
     // at 100 TB AQE degrades it to the same hash shuffle the old window
     // paid, but never with a sort). The r18 row_number window shuffled and
     // sorted every REDACTED TEXT byte just to rank within its hash group.
-    val p = plan("q_corpus_curation")
+    // The registered query materializes eagerly through SmallResult, so
+    // the asserts run on the LAZY body the materialization executes.
+    val (out, scrubbed) = graft.queries.CurationQueries.corpusCurationLazy(
+      Tables.documents(spark, dir))
+    val p = out.queryExecution.executedPlan.toString
+    scrubbed.unpersist()
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"dedup must be an equijoin on the keep list:\n$p")
     assert(p.contains("LeftSemi"),

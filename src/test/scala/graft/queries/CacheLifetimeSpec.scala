@@ -79,5 +79,10 @@ class CacheLifetimeSpec extends SparkSpec {
     assert(cacheEmpty, "releaseStages left pinned Dataset caches behind")
     // checkpoint-leaf results remain usable after release
     assert(surv2.count() === n2)
+    // single-query bodies that cache an intermediate release it themselves
+    for (q <- Seq("q_corpus_curation", "q_multisignal_dedup")) {
+      assert(graft.SparkEntry.queries(q)(spark, dir).count() >= 0)
+      assert(cacheEmpty, s"$q left a pinned Dataset cache behind")
+    }
   }
 }

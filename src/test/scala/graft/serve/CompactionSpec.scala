@@ -18,7 +18,9 @@ import graft.operators.Dedup
   *  4. generation-retire reclamation: a second/third compaction deletes
   *     superseded generation dirs and absorbed tail files after a
   *     one-generation grace window, and the guards keep working from the
-  *     generation alone.
+  *     generation alone;
+  *  5. an admit into a compacted index runs at most 12 Spark jobs and
+  *     scans the generation's band files once.
   */
 class CompactionSpec extends SparkSpec {
 
@@ -61,13 +63,30 @@ class CompactionSpec extends SparkSpec {
     // ---- mixed probe batch: every decision class, against both layouts
     val fresh = "an entirely novel submission concerning tidal measurement " +
       "apparatus calibration across coastal stations in winter"
+    // 108 = corpus doc 8 + a tail, 109 = that tail alone: 109's band keys
+    // meet 108's but none of the corpus's (premise checked below)
+    val tail = (0 until 16).map(w => s"coda$w").mkString(" ")
     val probe = Seq(
       101L -> corpusText(3),             // exact_dup_corpus
       102L -> (corpusText(7) + " appended"), // near_dup_corpus
       103L -> fresh,                     // admitted
       104L -> fresh,                     // exact_dup_batch (dup of 103)
       105L -> (fresh + " extra"),        // near_dup_batch (collides with 103)
-      106L -> "tiny doc")                // admitted (short: no band keys)
+      106L -> "tiny doc",                // admitted (short: no band keys)
+      107L -> corpusText(3),             // exact_dup_batch (dup of 101, itself a corpus dup)
+      108L -> (corpusText(8) + " " + tail), // near_dup_corpus
+      109L -> tail,                      // near_dup_batch (collides only with 108)
+      110L -> (corpusText(7) + " annexed")) // near_dup_batch (collides with 102 AND the corpus)
+    val keysOf = Dedup.bandKeys(Dedup.minhashSignaturesRowwise(
+        batchDf(Seq(8L -> corpusText(8), 7L -> corpusText(7)) ++ probe),
+        col("doc_id"), col("text"), CurationPipeline.ShingleN))
+      .collect().groupMap(_.getLong(0))(r => (r.getInt(1), r.getString(2)))
+      .map { case (id, ks) => id -> ks.toSet }
+    def meets(a: Long, b: Long) = (keysOf(a) & keysOf(b)).nonEmpty
+    assert(meets(108L, 8L) && meets(109L, 108L) && !meets(109L, 8L),
+      "premise: 109 band-collides with 108 only, 108 with corpus doc 8")
+    assert(meets(110L, 102L) && meets(110L, 7L),
+      "premise: 110 band-collides with batch doc 102 and corpus doc 7")
     for ((root, stats) <- Seq(root1 -> s1, root2 -> s2))
       CurationPipeline.admitBatch(spark, batchDf(probe.map(p => (p._1, p._2))),
         root, stats)
@@ -81,6 +100,10 @@ class CompactionSpec extends SparkSpec {
     assert(d1(104L) == ("rejected", "exact_dup_batch"), d1)
     assert(d1(105L) == ("rejected", "near_dup_batch"), d1)
     assert(d1(106L) == ("admitted", ""), d1)
+    assert(d1(107L) == ("rejected", "exact_dup_batch"), d1)
+    assert(d1(108L) == ("rejected", "near_dup_corpus"), d1)
+    assert(d1(109L) == ("rejected", "near_dup_batch"), d1)
+    assert(d1(110L) == ("rejected", "near_dup_batch"), d1)
 
     // ---- 2: the production band probe prunes the generation scan to the
     // probe's key slots (AQE off so the scan node is directly observable)
@@ -160,6 +183,58 @@ class CompactionSpec extends SparkSpec {
     assert(dPost(201L) == ("rejected", "near_dup_corpus"), dPost)
     assert(dPost(202L) == ("rejected", "exact_dup_corpus"), dPost)
     assert(dPost(203L) == ("admitted", ""), dPost)
+  }
+
+  test("an admit runs at most 12 Spark jobs and scans the generation's bands once") {
+    val root = java.nio.file.Files.createTempDirectory("graft_jobs").toString
+    val stats = new CurationPipeline.Stats
+    def text(i: Long) =
+      (0 until 14).map(w => s"j${i}z$w").mkString(s"jobs entry $i ", " ", "")
+    CurationPipeline.admitBatch(spark, batchDf((1L to 8L).map(i => (i, text(i)))),
+      root, stats)
+    val gen = CurationPipeline.compact(spark, root)
+    // the first admit after a compaction lists the generation's key-slot
+    // directories (cached per generation); the counted admit is the next
+    // one, which also probes a non-empty tail
+    CurationPipeline.admitBatch(spark, batchDf(Seq(9L -> text(9))), root, stats)
+    val batch = batchDf((11L to 18L).map(i => (i, text(i))) ++
+      Seq(21L -> text(2), 22L -> (text(3) + " more"), 23L -> (text(9) + " more")))
+
+    // the marker job's start is delivered after every event the admit
+    // posted (one listener, one queue), so the counts are complete then
+    val marker = "graft.test.marker"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val bandScans = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    def scansBands(p: org.apache.spark.sql.execution.SparkPlanInfo): Int =
+      (if (p.metadata.get("Location").exists(_.contains(s"${gen.dir}/bands"))) 1 else 0) +
+        p.children.map(scansBands).sum
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null) drained.countDown()
+        else { jobs.incrementAndGet(); () }
+      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+        e match {
+          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+            bandScans.addAndGet(scansBands(s.sparkPlanInfo)); ()
+          case _ => ()
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      CurationPipeline.admitBatch(spark, batch, root, stats)
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1)).count() finally sc.setLocalProperty(marker, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+
+    assert(stats.compactions.get == 0, "the measured admit must not compact")
+    val d = decisionsOf(stats, Set(11L, 21L, 22L, 23L))
+    assert(d(11L) == ("admitted", "") && d(21L) == ("rejected", "exact_dup_corpus") &&
+      d(22L) == ("rejected", "near_dup_corpus") && d(23L) == ("rejected", "near_dup_corpus"), d)
+    assert(jobs.get <= 12, s"admit launched ${jobs.get} jobs")
+    assert(bandScans.get == 1, s"admit scanned ${gen.dir}/bands ${bandScans.get} times")
   }
 
   test("compactOnStart folds a bulk-seeded tail, no-ops when tail is empty") {
