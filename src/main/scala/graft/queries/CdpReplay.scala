@@ -100,10 +100,7 @@ object CdpReplay {
                   traits = plan.map(p => Map("plan" -> p)).getOrElse(Map.empty))
               }
             }
-            val snap = CdpPipeline.foldPreSorted("user:" + uid, run)
-            // drain any tail of the run a short-circuiting fold left behind
-            while (run.hasNext) run.next()
-            snap
+            CdpPipeline.foldPreSorted("user:" + uid, run)
           }
         }
       }

@@ -25,7 +25,8 @@ case class ProfilePacked(
   * timers, RocksDB changelog checkpointing).
   *
   * State is ONE ValueState[ProfilePacked] per profile, dedup cache
-  * included, read and written once per key per micro-batch — the same IO
+  * included, read (one `get()`: `exists()` is itself a full get and
+  * decode) and written at most once per key per micro-batch — the same IO
   * pattern the fMGWS predecessor had. Two designs were tried and
   * rejected, both keeping the dedup cache in its own MapState:
   *  - native `TTLConfig` on the MapState: requires
@@ -51,7 +52,7 @@ private[streaming] abstract class CdpProcessorBase[O]
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     profile = getHandle.getValueState[ProfilePacked]("profile",
-      Encoders.product[ProfilePacked], TTLConfig.NONE)
+      CdpProcessorBase.ProfileEncoder, TTLConfig.NONE)
   }
 
   private def pack(st: ProfileState): ProfilePacked =
@@ -79,11 +80,16 @@ private[streaming] abstract class CdpProcessorBase[O]
     */
   protected def foldBatch(pid: String, rows: Iterator[CdpEvent])
   : (ProfileState, ProfileState, Seq[SegmentEvent]) = {
-    val st0 = if (profile.exists()) unpack(profile.get()) else ProfileState.empty
+    val st0 = Option(profile.get()).map(unpack).getOrElse(ProfileState.empty)
     val (st, emits) = orderedFold(pid, st0, rows)
     if (st != st0) profile.update(pack(st))
     (st0, st, emits)
   }
+}
+
+private[streaming] object CdpProcessorBase {
+  // derived once per JVM: init() runs per partition per micro-batch
+  private val ProfileEncoder = Encoders.product[ProfilePacked]
 }
 
 /** Streaming segment ENTER/EXIT emission (`CdpPipeline.segmentEvents`). */
@@ -128,13 +134,13 @@ class ReengageProcessor(idleMs: Long)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     st = getHandle.getValueState[ReengageState]("reengage",
-      Encoders.product[ReengageState], TTLConfig.NONE)
+      ReengageProcessor.StateEncoder, TTLConfig.NONE)
   }
 
   override def handleInputRows(pid: String, rows: Iterator[CdpEvent],
                                timerValues: TimerValues): Iterator[SegmentEvent] = {
-    val s0 = if (st.exists()) st.get()
-             else ReengageState(0L, inReengage = false, timerMs = -1L)
+    val s0 = Option(st.get())
+      .getOrElse(ReengageState(0L, inReengage = false, timerMs = -1L))
     val batch = rows.toSeq
     if (batch.isEmpty) return Iterator.empty
     val newest = batch.maxBy(e => (micros(e.ts), e.eventId))
@@ -169,4 +175,9 @@ class ReengageProcessor(idleMs: Long)
       Iterator.empty
     }
   }
+}
+
+object ReengageProcessor {
+  // derived once per JVM: init() runs per partition per micro-batch
+  private val StateEncoder = Encoders.product[ReengageState]
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import java.sql.Timestamp
+import scala.collection.mutable
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming entity-analytics pipeline (SURVEY §3.1): per-(entityId, type)
@@ -60,22 +60,86 @@ object EntityPipeline {
   /** Pure fold of one ordered micro-batch: (state, events) → (state,
     * alerts). Shared core between the streaming processor and any replay;
     * caller must feed events in (ts, eventId) order.
+    *
+    * One pass over a merged timeline: the state points sorted by ts, with
+    * the batch's events merged in their given order and state points
+    * placed first on equal ts. An event at timeline position `p` then sees
+    * exactly the window the per-event deque would hold — every state point
+    * with ts ≤ its own ts plus the events before it — so each inclusive
+    * [t − min(w, horizon), t] aggregate is a prefix-sum difference over a
+    * binary-searched lower bound, and R3's distinct tags come from two
+    * count maps slid forward with the window. Values are whole numbers
+    * (`Long` or the default 1.0), so prefix-sum differences equal the
+    * filtered sums exactly and the alerts are bit-identical to a re-scan.
+    * The returned points keep the deque's order (batch events newest
+    * first, then the state points), pruned to the last event's horizon.
     */
   private[streaming] def foldEvents(
       entityId: String, st0: WindowState, ordered: Seq[EntityEvent],
       cfg: RuleConfig): (WindowState, Seq[Alert]) = {
-    var st = st0
+    if (ordered.isEmpty) return (st0, Nil)
+    val evs = ordered.toArray
+    val held = st0.points.toArray.sortBy(_._1)
+    val n = held.length + evs.length
+    val ts = new Array[Long](n)
+    val prefix = new Array[Double](n + 1)
+    val geo = new Array[String](n)
+    val dev = new Array[String](n)
+    val evPos = new Array[Int](evs.length)
+    val evVal = evs.map(_.value.map(_.toDouble).getOrElse(1.0)) // Processor.kt:134-139
+    var i = 0
+    var j = 0
+    while (i + j < n) {
+      val k = i + j
+      if (j == evs.length || (i < held.length && held(i)._1 <= evs(j).ts.getTime)) {
+        val p = held(i)
+        ts(k) = p._1; prefix(k + 1) = prefix(k) + p._2
+        geo(k) = p._3.orNull; dev(k) = p._4.orNull
+        i += 1
+      } else {
+        val e = evs(j)
+        ts(k) = e.ts.getTime; prefix(k + 1) = prefix(k) + evVal(j)
+        geo(k) = e.geo.orNull; dev(k) = e.device.orNull
+        evPos(j) = k
+        j += 1
+      }
+    }
+    // first position in [0, end) whose ts ≥ from, else `end`
+    def lowerBound(end: Int, from: Long): Int = {
+      var lo = 0
+      var h = end
+      while (lo < h) {
+        val mid = (lo + h) >>> 1
+        if (ts(mid) < from) lo = mid + 1 else h = mid
+      }
+      lo
+    }
+    // R3's trailing window [r3Lo, r3Hi) as non-null tag → count
+    val geos = mutable.HashMap.empty[String, Int]
+    val devs = mutable.HashMap.empty[String, Int]
+    def add(m: mutable.HashMap[String, Int], s: String): Unit =
+      if (s != null) m.update(s, m.getOrElse(s, 0) + 1)
+    def drop(m: mutable.HashMap[String, Int], s: String): Unit =
+      if (s != null) {
+        val c = m(s) - 1
+        if (c == 0) m.remove(s) else m.update(s, c)
+      }
+    var r3Lo = 0
+    var r3Hi = 0
+    var ewmaReg = st0.ewma
     val out = Seq.newBuilder[Alert]
-    ordered.foreach { e =>
-      val t = e.ts.getTime
-      val v = e.value.map(_.toDouble).getOrElse(1.0) // Processor.kt:134-139
-      val pts = ((t, v, e.geo, e.device) :: st.points)
-        .filter(_._1 >= t - cfg.horizonMs)
+    j = 0
+    while (j < evs.length) {
+      val e = evs(j)
+      val p = evPos(j)
+      val t = ts(p)
+      val v = evVal(j)
       // inclusive-bound window aggregates anchored at the event ts; the
       // upper bound matters for late events whose state already holds
       // points with LATER timestamps (batch RANGE frames exclude them too)
-      def cnt(ms: Long) = pts.count(p => p._1 >= t - ms && p._1 <= t).toDouble
-      def sum(ms: Long) = pts.filter(p => p._1 >= t - ms && p._1 <= t).map(_._2).sum
+      def lo(ms: Long) = lowerBound(p + 1, t - math.min(ms, cfg.horizonMs))
+      def cnt(ms: Long) = (p + 1 - lo(ms)).toDouble
+      def sum(ms: Long) = prefix(p + 1) - prefix(lo(ms))
       val rateNow = cnt(60000L)
       val cnt5m = cnt(300000L)
       val avg5m = if (cnt5m == 0) 0.0 else sum(300000L) / cnt5m
@@ -83,11 +147,11 @@ object EntityPipeline {
       val avg1h = if (cnt1h == 0) 0.0 else sum(cfg.horizonMs) / cnt1h
       val sum30s = sum(30000L)
       // R2 updates EWMA with the current value before comparing
-      val ewma = st.ewma match {
+      val ewma = ewmaReg match {
         case None => v
-        case Some(p) => cfg.r2Alpha * v + (1 - cfg.r2Alpha) * p
+        case Some(prev) => cfg.r2Alpha * v + (1 - cfg.r2Alpha) * prev
       }
-      st = WindowState(pts, Some(ewma))
+      ewmaReg = Some(ewma)
       val thr1 = avg5m * cfg.r1Factor
       if (rateNow > thr1 && rateNow >= cfg.r1MinRate)
         out += Alert(e.ts, "R1_VELOCITY_SPIKE", entityId,
@@ -98,19 +162,24 @@ object EntityPipeline {
           severity(v, thr2), v, thr2)
       // R3: conflicting geo/device tags in the trailing window — the real
       // implementation of the reference's stubbed spec (Rules.kt:98-154)
-      val recent = pts.filter(p => p._1 >= t - cfg.r3WindowMs && p._1 <= t)
-      val geos = recent.flatMap(_._3).distinct
-      val devs = recent.flatMap(_._4).distinct
-      if (geos.length > 1 || devs.length > 1)
+      while (r3Hi <= p) { add(geos, geo(r3Hi)); add(devs, dev(r3Hi)); r3Hi += 1 }
+      val r3From = lo(cfg.r3WindowMs)
+      while (r3Lo < r3From) { drop(geos, geo(r3Lo)); drop(devs, dev(r3Lo)); r3Lo += 1 }
+      if (geos.size > 1 || devs.size > 1)
         out += Alert(e.ts, "R3_TAG_MISMATCH", entityId, "MEDIUM",
-          math.max(geos.length, devs.length).toDouble, 1.0)
+          math.max(geos.size, devs.size).toDouble, 1.0)
       // R4: exfil — sum(30 s) above the P95 fallback
       // max(floor(factor * avg1h), min) (Rules.kt:159-200)
       val thr4 = math.max(math.floor(avg1h * cfg.r4FactorP95), cfg.r4MinThreshold)
       if (sum30s > thr4)
         out += Alert(e.ts, "R4_EXFIL", entityId, "HIGH", sum30s, thr4)
+      j += 1
     }
-    (st, out.result())
+    val cut = evs.last.ts.getTime - cfg.horizonMs
+    val newest = evs.indices.reverseIterator
+      .map(k => (evs(k).ts.getTime, evVal(k), evs(k).geo, evs(k).device))
+    val pts = (newest ++ st0.points.iterator).filter(_._1 >= cut).toList
+    (WindowState(pts, ewmaReg), out.result())
   }
 }
 
@@ -119,9 +188,11 @@ object EntityPipeline {
   * `ValueState` — read once per micro-batch, folded in memory, written
   * back once. When no point aged out of the horizon, only the NEW points
   * are appended (an append-only RocksDB changelog write); a prune rewrites
-  * the list. Point order in state is irrelevant: every window aggregate is
-  * a filter over (ts ≤ anchor) — order sensitivity lives in the per-batch
-  * event sort, not the deque.
+  * the list. Point order in state is irrelevant: `foldEvents` sorts the
+  * state points by ts and merges the batch's (ts, eventId)-sorted events
+  * into that timeline (state first on equal ts), so each window aggregate
+  * covers the timeline up to the event's own position — order sensitivity
+  * lives in the per-batch event sort, not the deque.
   *
   * DEAD-KEY TRADEOFF (deliberate): an entity that stops sending pins its
   * last window (≤ horizon of points) + EWMA register forever — total
@@ -140,17 +211,15 @@ class EntityAlertProcessor(cfg: EntityPipeline.RuleConfig)
   extends org.apache.spark.sql.streaming.StatefulProcessor[
     (String, String), EntityEvent, Alert] {
 
-  import org.apache.spark.sql.Encoders
   import org.apache.spark.sql.streaming.{ListState, TTLConfig, TimeMode, TimerValues, ValueState}
-
-  type Point = (Long, Double, Option[String], Option[String])
+  import EntityAlertProcessor.{Point, PointEncoder}
 
   @transient private var points: ListState[Point] = _
   @transient private var ewma: ValueState[Double] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     points = getHandle.getListState[Point]("points",
-      Encoders.product[Point], TTLConfig.NONE)
+      PointEncoder, TTLConfig.NONE)
     ewma = getHandle.getValueState[Double]("ewma",
       Encoders.scalaDouble, TTLConfig.NONE)
   }
@@ -175,4 +244,11 @@ class EntityAlertProcessor(cfg: EntityPipeline.RuleConfig)
     st.ewma.foreach(ewma.update)
     alerts.iterator
   }
+}
+
+object EntityAlertProcessor {
+  type Point = (Long, Double, Option[String], Option[String])
+
+  // derived once per JVM: init() runs per partition per micro-batch
+  private val PointEncoder = Encoders.product[Point]
 }

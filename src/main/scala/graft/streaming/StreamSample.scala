@@ -33,7 +33,7 @@ class StreamSampleProcessor(k: Int, salt: String)
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     cands = getHandle.getListState[(Long, Long)]("cands",
-      Encoders.product[(Long, Long)], TTLConfig.NONE)
+      StreamSampleProcessor.CandEncoder, TTLConfig.NONE)
     seen = getHandle.getValueState[Long]("seen", Encoders.scalaLong, TTLConfig.NONE)
   }
 
@@ -61,6 +61,11 @@ class StreamSampleProcessor(k: Int, salt: String)
     sketch.sample.iterator
       .map { case (id, w, p) => (key, id, w, p, sketch.tau, n) }
   }
+}
+
+object StreamSampleProcessor {
+  // derived once per JVM: init() runs per partition per micro-batch
+  private val CandEncoder = Encoders.product[(Long, Long)]
 }
 
 object StreamSample {

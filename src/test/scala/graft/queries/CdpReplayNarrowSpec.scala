@@ -39,4 +39,24 @@ class CdpReplayNarrowSpec extends SparkSpec {
       s, CdpReplay.cdpEventLog(s, events)).toDF())
     assert(narrow == wide)
   }
+
+  test("equal-timestamp signups: the larger eventId wins the plan in both replays") {
+    val s = spark
+    import s.implicits._
+    val t = new java.sql.Timestamp(1700000000000L)
+    // k parity picks the plan (even = pro); the ids cross a digit boundary
+    // so string order ("12" < "7") would pick the other event
+    val events = Seq(
+      (7L, t, 1L, "signup", """{"k": 2}"""),   // user 1: pro
+      (12L, t, 1L, "signup", """{"k": 3}"""),  // user 1: free, larger id
+      (10L, t, 2L, "signup", """{"k": 4}"""),  // user 2: pro, larger id
+      (9L, t, 2L, "signup", """{"k": 1}""")    // user 2: free
+    ).toDF("event_id", "ts", "user_id", "event_type", "props")
+    val narrow = canon(CdpReplay.replaySnapshots(s, events).toDF())
+    val wide = canon(CdpPipeline.profileSnapshots(
+      s, CdpReplay.cdpEventLog(s, events)).toDF())
+    val want = Map("user:1" -> Some("free"), "user:2" -> Some("pro"))
+    assert(narrow.map(r => r._1 -> r._2).toMap == want)
+    assert(wide.map(r => r._1 -> r._2).toMap == want)
+  }
 }

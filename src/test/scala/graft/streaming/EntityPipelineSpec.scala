@@ -54,10 +54,20 @@ class EntityPipelineSpec extends SparkSpec {
       // third event arrives in a LATER batch: rate must count prior state
       input.addData(ev("e3", "2024-01-01T00:01:00Z", "a", "t", 1))
       query.processAllAvailable()
+      // late events in a later batch, older than e2/e3 already in state:
+      // those later points must not count toward their rate
+      input.addData(
+        ev("e4", "2024-01-01T00:00:10Z", "a", "t", 1),
+        ev("e5", "2024-01-01T00:00:20Z", "a", "t", 1))
+      query.processAllAvailable()
       val out = spark.table("alerts_r1").as[Alert].collect()
         .filter(_.rule == "R1_VELOCITY_SPIKE")
       // e3: window [00:00:00, 00:01:00] inclusive -> rate 3 >= minRate 3
-      assert(out.exists(a => a.rateNow == 3.0))
+      assert(out.exists(a => a.ts == ts("2024-01-01T00:01:00Z") && a.rateNow == 3.0))
+      // e4: window [23:59:10, 00:00:10] holds e1, e4 -> rate 2 < minRate 3
+      assert(!out.exists(_.ts == ts("2024-01-01T00:00:10Z")))
+      // e5: window [23:59:20, 00:00:20] holds e1, e4, e5 (not e2, e3) -> 3
+      assert(out.filter(_.ts == ts("2024-01-01T00:00:20Z")).map(_.rateNow).toSeq == Seq(3.0))
     } finally query.stop()
   }
 
