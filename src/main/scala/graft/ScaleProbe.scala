@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Route
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -172,12 +173,12 @@ object ScaleProbe {
     // doc count by k, so this is exactly the hot-span stress case
     timeDf("dedup_spans")(graft.queries.DedupQueries.dupSpans(docs))
     timeDf("dedup_span_runs")(graft.queries.DedupQueries.spanRuns(docs))
-    // localMaxDocs = 0: the probe measures the DISTRIBUTED operator's
+    // Route.Docs -> 0: the probe measures the DISTRIBUTED operator's
     // growth curve; letting small replication levels route to the driver
     // kernel would make the curve's low end measure a different
     // implementation than its high end (route switch, not scaling)
-    timeDf("dedup_span_survivors")(
-      graft.queries.DedupQueries.spanSurvivors(docs, localMaxDocs = 0))
+    timeDf("dedup_span_survivors")(Route.forcing(Route.Docs -> 0L)(
+      graft.queries.DedupQueries.spanSurvivors(docs)))
     // containment inherits the funnel discipline: exact-dedup FIRST. The
     // replicated corpus is pure exact copies, on which enumerating all
     // containment pairs is Ω(k²) BY DEFINITION of the output; production
@@ -212,11 +213,11 @@ object ScaleProbe {
     // integer PageRank: replication multiplies identity-graph nodes while
     // degree distribution is fixed — cost must track the 5 edge-sized
     // join+groupBy rounds, linear in the edge count
-    // localMaxEdges = 0: the probe measures the DISTRIBUTED route's
+    // Route.PagerankEdges -> 0: the probe measures the DISTRIBUTED route's
     // curve (the driver kernel would otherwise absorb every replication
     // level and the curve would measure a different implementation)
-    timeDf("identity_pagerank")(graft.queries.CdpBatch.identityPagerank(
-      graft.queries.CdpBatch.identityEdges(events), localMaxEdges = 0))
+    timeDf("identity_pagerank")(Route.forcing(Route.PagerankEdges -> 0L)(
+      graft.queries.CdpBatch.identityPagerank(graft.queries.CdpBatch.identityEdges(events))))
     // BPE: the merge loop is dictionary-bound (each round collects ONE
     // winner row to literals); the only corpus-sized work is the word
     // groupBy + the final broadcast-dict token scan, so the curve must

@@ -192,7 +192,7 @@ object ServeMain {
     CurationPipeline.loadSample(spark, s"$corpusDir/index", corpusStats)
     // serve-path default: start from the key-slot-pruned compacted layout
     // — any bulk-seeded tail folds into a generation before batch 1 (see
-    // compactOnStart; SPARK_GRAFT_COMPACT_ON_START=0 keeps the lazy tail)
+    // compactOnStart)
     CurationPipeline.compactOnStart(spark, s"$corpusDir/index")
     val corpusIn =
       org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, java.sql.Timestamp, String)]

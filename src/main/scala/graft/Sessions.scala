@@ -29,10 +29,8 @@ object Sessions {
       // rows each). At cluster scale this is the documented production
       // setting — partitions track data size (64 MB advisory), not a
       // fixed count, which is exactly the 100 TB posture.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
       .getOrCreate()
 
   def streaming(name: String, cores: Int): SparkSession =

@@ -95,22 +95,13 @@ object Bpe {
       case None      => dict
     }
 
-  /** Dictionary-size bound for the driver-local training kernel: 200k
-    * words × ~60 chars of spaced encoding ≈ 25 MB on the driver — the
-    * containment/verifiedClusters bounded-collect order. Classic BPE
-    * already trains on the weighted dictionary, so past the bound only
-    * the per-round argmax loop goes distributed; the corpus scan is the
-    * same either way.
-    */
-  val LocalMaxWords = 200000
-
   /** Run `Rounds` merge rounds. Returns (merges, finalDict):
     * merges = (merge_round, left_sym, right_sym, merged, cnt), one row
     * per round; finalDict = (word, s, cnt) after all merges.
     *
     * Adaptive (the containmentDropsAdaptive pattern): the weighted
     * dictionary is materialized once (eager localCheckpoint — the one
-    * corpus-scan stage), and when it is within `LocalMaxWords` the
+    * corpus-scan stage), and when it is within `Route.BpeWords` the
     * `Rounds` merge rounds run in a driver-local kernel over the
     * collected rows — replacing `Rounds` scheduled jobs (each a
     * vocab-sized groupBy + argmax round-trip, pure per-job overhead at
@@ -126,7 +117,7 @@ object Bpe {
     val spark = documents.sparkSession
     import spark.implicits._
     val d0 = dictionary(documents).localCheckpoint()
-    if (d0.limit(LocalMaxWords + 1).count() <= LocalMaxWords) {
+    if (Route.fits("Bpe.train", Route.BpeWords, d0)) {
       val rows = d0.as[(String, String, Long)].collect()
       val (winners, dict) = trainLocal(rows)
       (winners.toDF("merge_round", "left_sym", "right_sym", "merged", "cnt"),
@@ -135,9 +126,9 @@ object Bpe {
   }
 
   /** The distributed per-round loop over a materialized dictionary —
-    * the fallback past `LocalMaxWords` (and the parity spec's anchor).
+    * the fallback past `Route.BpeWords`.
     */
-  private[graft] def trainDistributed(d0: DataFrame): (DataFrame, DataFrame) = {
+  private def trainDistributed(d0: DataFrame): (DataFrame, DataFrame) = {
     val spark = d0.sparkSession
     import spark.implicits._
     var d = d0

@@ -908,7 +908,8 @@ object Dedup {
     * the old explode + groupBy formulation, kept below for the spec).
     */
   def simhash(docs: DataFrame, id: Column, text: Column): DataFrame =
-    docs.select(id.as("id"),
+    // null text has no words: no row, as in the explode+groupBy contract
+    docs.filter(text.isNotNull).select(id.as("id"),
       org.apache.spark.sql.graft.ArrayExpressions
         .simhashBits(text, SimBits).as("simhash"))
 

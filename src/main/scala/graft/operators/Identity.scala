@@ -45,11 +45,7 @@ object Identity {
     var labels: DataFrame = null
     var converged = false
     var i = 0
-    val dbg = sys.env.contains("GRAFT_CC_DEBUG")
-    var tPrev = System.nanoTime()
-    if (dbg) println(f"[cc] init done")
     while (!converged && i < maxIter) {
-      if (dbg) { println(f"[cc] round $i start +${(System.nanoTime()-tPrev)/1e9}%.2fs"); tPrev = System.nanoTime() }
       val neighborComp =
         if (labels == null) sym.select(col("src").as("node"), col("dst").as("comp"))
         else sym
@@ -71,7 +67,6 @@ object Identity {
       labels = next.select("node", "comp")
       converged = changed == 0
       i += 1
-      if (dbg) { println(f"[cc] round ${i-1} end +${(System.nanoTime()-tPrev)/1e9}%.2fs changed=${changed > 0}"); tPrev = System.nanoTime() }
     }
     require(converged,
       s"connectedComponents did not converge in $maxIter rounds — component " +
@@ -130,36 +125,35 @@ object Identity {
       Utf8StringOrdering.asInstanceOf[Ordering[T]]
     else ord
 
-  /** Adaptive CC: materialize the edge set once; within `localThreshold`
-    * edges, union-find on the driver (one bounded collect, zero CC jobs);
-    * beyond it, the iterative distributed propagation. The probe IS the
-    * collect in the common case — at most threshold+1 id pairs reach the
-    * driver, never the component labels of a big graph. Output:
-    * (node, component), the same deterministic min-id contract. Returns
-    * the component frame plus the probed edge count (-1 when the probe
-    * overflowed and the distributed path ran).
+  /** Adaptive CC: materialize the edge set once; within `bound` edges
+    * (`Route.CcEdges` unless the caller names its own), union-find on the
+    * driver (one bounded collect, zero CC jobs); beyond it, the iterative
+    * distributed propagation. The probe IS the collect in the common case
+    * — at most bound+1 id pairs reach the driver, never the component
+    * labels of a big graph. Output: (node, component), the same
+    * deterministic min-id contract. Returns the component frame plus the
+    * probed edge count (-1 when the distributed path ran).
     */
   def connectedComponentsAdaptiveCounted[T](
       edges: org.apache.spark.sql.Dataset[(T, T)],
-      localThreshold: Long = 1000000L,
+      bound: Route.Bound = Route.CcEdges,
       maxIter: Int = 20)(
       implicit ord: Ordering[T],
       enc: org.apache.spark.sql.Encoder[(T, T)]): (DataFrame, Long) = {
     val e0 = edges.localCheckpoint(true)
-    val probeLimit = (math.min(localThreshold, Int.MaxValue - 1L) + 1L).toInt
-    val probe = e0.limit(probeLimit).collect()
-    if (probe.length <= localThreshold) {
-      val comp = connectedComponentsLocal(probe.toSeq)(engineOrdering(probe, ord))
-      (e0.sparkSession.createDataset(comp.toSeq)(enc).toDF("node", "component"),
-        probe.length.toLong)
-    } else
-      (ccIterative(e0.toDF("src", "dst"), maxIter), -1L)
+    Route.collectWithin("Identity.connectedComponentsAdaptive", bound, e0) match {
+      case Some(probe) =>
+        val comp = connectedComponentsLocal(probe.toSeq)(engineOrdering(probe, ord))
+        (e0.sparkSession.createDataset(comp.toSeq)(enc).toDF("node", "component"),
+          probe.length.toLong)
+      case None =>
+        (ccIterative(e0.toDF("src", "dst"), maxIter), -1L)
+    }
   }
 
   def connectedComponentsAdaptive[T](edges: org.apache.spark.sql.Dataset[(T, T)],
-                                     localThreshold: Long = 1000000L,
                                      maxIter: Int = 20)(
       implicit ord: Ordering[T],
       enc: org.apache.spark.sql.Encoder[(T, T)]): DataFrame =
-    connectedComponentsAdaptiveCounted(edges, localThreshold, maxIter)._1
+    connectedComponentsAdaptiveCounted(edges, Route.CcEdges, maxIter)._1
 }

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Identity, Num}
+import graft.operators.{Identity, Num, Route}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -69,20 +69,13 @@ object CdpBatch {
     * differ in a single micro-rank (PagerankSpec pins both against a
     * closed-form fixpoint and against each other).
     */
-  private[graft] def identityPagerank(edges: DataFrame,
-                                      localMaxEdges: Int = 200000): DataFrame = {
-    // default sized like the other adaptive kernels' driver bounds: the
-    // kernel symmetrizes to 2x (String, String) boxed tuples plus id
-    // maps (~50-100 MB at 200k edges) — the old 1M default risked
-    // driver OOM just below the routing boundary for zero benefit (the
-    // verify tiers sit far below 200k edges; bigger inputs belong on
-    // the distributed route anyway)
+  private[graft] def identityPagerank(edges: DataFrame): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
     // cheap count probe first (no row collect just to learn "too big" —
-    // the verifiedClusters/spanSurvivors pattern)
-    if (localMaxEdges > 0 &&
-        edges.limit(localMaxEdges + 1).count() <= localMaxEdges) {
+    // the verifiedClusters/spanSurvivors pattern); `Route.PagerankEdges`
+    // carries the kernel's memory rationale
+    if (Route.fits("CdpBatch.identityPagerank", Route.PagerankEdges, edges)) {
       val probe = edges.select(col("src"), col("dst"))
         .as[(String, String)].collect()
       return spark.createDataset(identityPagerankLocal(probe.toSeq).toSeq)

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Dedup, Num, TextOps}
+import graft.operators.{Dedup, Num, Route, TextOps}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -683,7 +683,7 @@ object CurationQueries {
     * contamination check with the sides swapped: eval shingles build, train
     * docs probe, and the rounded overlap drives the drop decision.
     */
-  def decontamTrain(docs: DataFrame, localMaxDocs: Int = 20000): DataFrame = {
+  def decontamTrain(docs: DataFrame): DataFrame = {
     // Driver kernel for bounded corpora (the pairwise-dedup pattern): one
     // bounded collect of (id, split, distinct 3-gram set) — the split
     // label is computed by the ENGINE in the collect projection, so the
@@ -691,9 +691,10 @@ object CurationQueries {
     // hot-cut / per-train-doc hit counts are set operations on the
     // driver, returning integer evidence only; the overlap ratio, its
     // rounding and the drop decision stay the Column expressions below on
-    // both routes (ContaminationRouteParitySpec holds them equal).
+    // both routes (DedupRouteParitySpec's contamination test holds them
+    // equal).
     val s = docs.sparkSession
-    contaminationProbe(docs, localMaxDocs) match {
+    contaminationProbe("CurationQueries.decontamTrain", docs) match {
       case Some(probe) =>
         val nEval = probe.count(_._2 == "test")
         val evalH = contaminationCoolSet(
@@ -759,16 +760,14 @@ object CurationQueries {
 
   /** Bounded collect for the contamination kernels: (doc_id, split,
     * distinct 3-gram hashes) rows, the split label computed engine-side
-    * in the projection. None past `localMaxDocs` (id-only limit probe
+    * in the projection. None past `Route.Docs` (id-only limit probe
     * first — the verifiedClusters discipline).
     */
-  private def contaminationProbe(docs: DataFrame, localMaxDocs: Int)
+  private def contaminationProbe(site: String, docs: DataFrame)
       : Option[Array[(Long, String, Seq[Long])]] = {
     val s = docs.sparkSession
     import s.implicits._
-    val bounded = localMaxDocs > 0 &&
-      docs.select(col("doc_id")).limit(localMaxDocs + 1).count() <= localMaxDocs
-    if (!bounded) None
+    if (!Route.fits(site, Route.Docs, docs.select(col("doc_id")))) None
     else Some(docs.select(col("doc_id"), splitCol(col("doc_id")).as("split"),
         org.apache.spark.sql.graft.ArrayExpressions
           .shingleHashes(col("text"), 3).as("hs"))
@@ -1320,14 +1319,13 @@ object CurationQueries {
     * (the scale probe feeds replicated inputs through the same code the
     * query runs).
     */
-  def contamination(docs: org.apache.spark.sql.DataFrame,
-                    localMaxDocs: Int = 20000): org.apache.spark.sql.DataFrame = {
+  def contamination(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // Driver kernel for bounded corpora — decontamTrain's twin with the
     // sides swapped: the train-side cool set is built once on the driver
     // and each test doc's hit count is a set intersection; integer
     // evidence only, ratios/rounding engine-side (see decontamTrain).
     val s = docs.sparkSession
-    contaminationProbe(docs, localMaxDocs) match {
+    contaminationProbe("CurationQueries.contamination", docs) match {
       case Some(probe) =>
         val nTrain = probe.count(_._2 == "train")
         val trainH = contaminationCoolSet(

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables}
-import graft.operators.{Dedup, Num, TextOps}
+import graft.operators.{Dedup, Num, Route, TextOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -81,13 +81,6 @@ object DedupQueries {
   private[queries] val ContainHotPct = 5
   private[queries] val ContainHotMin = 8
 
-  /** Candidate-pair bound for the driver-local verify: 20k pairs means at
-    * most 40k involved docs' shingle arrays reach the driver (~tens of MB,
-    * the ingest-guard collect order). Past it, the distributed verify+CC
-    * runs unchanged.
-    */
-  private[queries] val VerifyLocalMaxPairs = 20000
-
   /** Raw-pair enumeration budget for the full-local LSH kernel: ~1M
     * (Long, Long) tuples ≈ 80 MB of driver set — the same order as the
     * doc-shingle collect it sits next to. Counted from bucket sizes
@@ -97,45 +90,71 @@ object DedupQueries {
 
   /** Bounded-corpus shingle collect shared by the pairwise driver
     * kernels: Some((id, distinct shingle-hash array) rows) when the
-    * corpus holds at most `localMaxDocs` docs, None otherwise (the
-    * verifiedClusters probe-then-collect discipline — an id-only limit
-    * probe first, so an oversized corpus never ships shingle arrays just
-    * to learn it must take the distributed route). `localMaxDocs = 0`
-    * forces the distributed route (the route-parity specs' switch).
+    * corpus fits `Route.Docs`, None otherwise — an id-only limit probe
+    * first, so an oversized corpus never ships shingle arrays just to
+    * learn it must take the distributed route. `Route.forcing(Route.Docs
+    * -> 0)` forces the distributed route.
     */
   private[queries] def collectShinglesBounded(
-      docs: DataFrame, n: Int, localMaxDocs: Int): Option[Array[(Long, Seq[Long])]] = {
+      site: String, docs: DataFrame): Option[Array[(Long, Seq[Long])]] =
+    if (Route.fits(site, Route.Docs, docs.select(col("id")))) Some(collectShingles(docs))
+    else None
+
+  /** (id, distinct shingle-hash array) rows of an (id, text) relation. */
+  private def collectShingles(docs: DataFrame): Array[(Long, Seq[Long])] = {
     val s = docs.sparkSession
     import s.implicits._
-    val bounded = localMaxDocs > 0 &&
-      docs.select(col("id")).limit(localMaxDocs + 1).count() <= localMaxDocs
-    if (!bounded) None
-    else Some(docs.select(col("id"),
-        org.apache.spark.sql.graft.ArrayExpressions
-          .shingleHashes(col("text"), n).as("hs"))
-      .as[(Long, Seq[Long])].collect())
+    docs.select(col("id"), org.apache.spark.sql.graft.ArrayExpressions
+        .shingleHashes(col("text"), ShingleN).as("hs"))
+      .as[(Long, Seq[Long])].collect()
   }
 
-  /** (a, b, inter, sza, szb) rows from a driver kernel, back in
-    * DataFrame land — integers only, so every downstream ratio and
-    * rounding is the same Column expression the distributed route runs.
+  /** Integer (a, b, inter, sza, szb) evidence from one bounded shingle
+    * collect: `pairs` generates the candidate pairs over the collected rows
+    * (None past its budget). None => the caller's distributed route.
+    */
+  private def localEvidence(site: String, docs: DataFrame)(
+      pairs: Seq[(Long, Seq[Long])] => Option[Seq[(Long, Long)]])
+      : Option[Seq[(Long, Long, Long, Long, Long)]] =
+    for {
+      probe <- collectShinglesBounded(site, docs)
+      cand <- pairs(probe.toSeq)
+    } yield Dedup.intersectionEvidenceLocal(Dedup.sortedShingleMap(probe.toSeq), cand)
+
+  /** Inverted-index candidates (>= 2 shared shingles) as plain pairs. */
+  private def invertedPairs(probe: Seq[(Long, Seq[Long])]): Option[Seq[(Long, Long)]] =
+    Dedup.invertedPairsLocal(probe, 2, LocalPairBudget)
+      .map(_.map { case (a, b, _) => (a, b) })
+
+  /** The candidate pairs whose exact Jaccard clears `JaccardThreshold`:
+    * the evidence kernel's two-pointer intersections (boxed-set membership
+    * measured ~3x slower) and `Dedup.jaccard`'s double arithmetic. A pair
+    * with a side that has no shingles has Jaccard 0, so dropping it is
+    * the same cut.
+    */
+  private def verifiedLocal(shMap: Map[Long, Array[Long]],
+                            cand: Seq[(Long, Long)]): Seq[(Long, Long)] =
+    Dedup.intersectionEvidenceLocal(shMap, cand).collect {
+      case (a, b, inter, sza, szb)
+          if sza + szb - inter > 0 && inter * 1.0 / (sza + szb - inter) >= JaccardThreshold =>
+        (a, b)
+    }
+
+  /** (a, b, inter, sza, szb, jaccard) rows from a driver kernel's integer
+    * evidence, back in DataFrame land: the jaccard column is EXACTLY
+    * `Dedup.jaccard`'s expression (long * 1.0 / long in double
+    * arithmetic), so every downstream ratio and rounding is the same
+    * Column expression the distributed route runs.
     */
   private def evidenceDF(s: SparkSession,
                          ev: Seq[(Long, Long, Long, Long, Long)]): DataFrame = {
     import s.implicits._
     s.createDataset(ev).toDF("a", "b", "inter", "sza", "szb")
+      .withColumn("jaccard", col("inter") * 1.0 / (col("sza") + col("szb") - col("inter")))
   }
 
-  /** The jaccard column over evidence rows — EXACTLY `Dedup.jaccard`'s
-    * expression (long * 1.0 / long in double arithmetic).
-    */
-  private def jaccardCol: org.apache.spark.sql.Column =
-    col("inter") * 1.0 / (col("sza") + col("szb") - col("inter"))
-
   private[queries] def verifiedClusters(s: SparkSession, docs: DataFrame,
-                                        bucketCap: Option[Int] = None,
-                                        localMaxPairs: Int = VerifyLocalMaxPairs,
-                                        localMaxDocs: Int = 20000): DataFrame = {
+                                        bucketCap: Option[Int] = None): DataFrame = {
     import s.implicits._
     // Whole-pipeline driver kernel for bounded corpora (the
     // containmentDropsAdaptive pattern, one level up): ONE bounded
@@ -143,56 +162,25 @@ object DedupQueries {
     // candidates, the exact-Jaccard verify, and union-find — replacing
     // the band cache + candidate self-join + pair probe + shingle
     // re-collect (~8 AQE stage materializations) the distributed route
-    // pays even when the corpus is a few thousand docs. Memory bound:
-    // localMaxDocs × ~130 shingles × 8 B ≈ 20 MB, the containment
-    // guard's order. Same integers end-to-end
+    // pays even when the corpus is a few thousand docs. Memory bound: the
+    // `Route.Docs` shingle collect. Same integers end-to-end
     // (VerifiedClustersAdaptiveSpec holds the routes equal); at 100 TB
-    // the limit probe short-circuits and the distributed route runs.
-    // id-only size probe first: computing shingle arrays for
-    // localMaxDocs+1 docs just to learn "too big" is a wasted ~20 MB
-    // collect on every large-corpus call (the exact shape that must take
-    // the distributed route)
-    val boundedDocs = localMaxDocs > 0 &&
-      docs.select(col("id")).limit(localMaxDocs + 1).count() <= localMaxDocs
-    if (boundedDocs) {
-      val docProbe = docs
-        .select(col("id"),
-          org.apache.spark.sql.graft.ArrayExpressions
-            .shingleHashes(col("text"), ShingleN).as("hs"))
-        .as[(Long, Seq[Long])].collect()
-      // pair budget: the old pair-probe route bounded the collected pair
-      // list; the local kernel must bound its enumeration the same way —
-      // a boilerplate-dominated uncapped bucket can hold millions of
-      // pairs even under the doc bound. None => distributed verify below.
-      Dedup.candidatePairsLocal(docProbe.toSeq, bucketCap,
-          pairBudget = LocalPairBudget) match {
-        case Some(candLocal) =>
-          // sorted primitive arrays + two-pointer intersections (the
-          // intersectionEvidenceLocal shape) — boxed-set membership tests
-          // measured ~3x slower on the same pairs
-          val shMap = Dedup.sortedShingleMap(docProbe.toSeq)
-          val empty = Array.emptyLongArray
-          def interOf(sa: Array[Long], sb: Array[Long]): Long = {
-            var i = 0; var j = 0; var n = 0L
-            while (i < sa.length && j < sb.length) {
-              if (sa(i) == sb(j)) { n += 1; i += 1; j += 1 }
-              else if (sa(i) < sb(j)) i += 1
-              else j += 1
-            }
-            n
-          }
-          val verified = candLocal.filter { case (a, b) =>
-            val sa = shMap.getOrElse(a, empty)
-            val sb = shMap.getOrElse(b, empty)
-            val inter = interOf(sa, sb)
-            val denom = sa.length.toLong + sb.length - inter
-            denom > 0 && inter * 1.0 / denom >= JaccardThreshold
-          }
-          val comp = graft.operators.Identity.connectedComponentsLocal(verified)
-          return s.createDataset(comp.toSeq).toDF("node", "component")
-        case None => () // pair explosion: fall through to the distributed route
-      }
+    // the id-only limit probe short-circuits and the distributed route
+    // runs.
+    // pair budget: the old pair-probe route bounded the collected pair
+    // list; the local kernel must bound its enumeration the same way — a
+    // boilerplate-dominated uncapped bucket can hold millions of pairs
+    // even under the doc bound. None => distributed verify below.
+    val fullLocal = for {
+      docProbe <- collectShinglesBounded("DedupQueries.verifiedClusters", docs)
+      candLocal <- Dedup.candidatePairsLocal(docProbe.toSeq, bucketCap,
+        pairBudget = LocalPairBudget)
+    } yield {
+      val comp = graft.operators.Identity.connectedComponentsLocal(
+        verifiedLocal(Dedup.sortedShingleMap(docProbe.toSeq), candLocal))
+      s.createDataset(comp.toSeq).toDF("node", "component")
     }
+    if (fullLocal.isDefined) return fullLocal.get
     // Signatures come from the map-only rowwise expression, NOT the
     // shingle-explode + 12-way-min groupBy: same integers (parity asserted
     // in StreamNearDupSpec/RandomizedParitySpec) with zero shuffle and no
@@ -216,52 +204,43 @@ object DedupQueries {
     // shingle sets, inter*1.0/(sza+szb-inter) in double arithmetic, the
     // same >= threshold cut, and the same min-id component contract
     // (VerifiedClustersAdaptiveSpec holds the routes equal).
-    val probe = cand.limit(localMaxPairs + 1).as[(Long, Long)].collect()
-    val clusters = if (probe.length <= localMaxPairs) {
-      val candIdsLocal = probe.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
-      val shArr = docs
-        .join(s.createDataset(candIdsLocal.toSeq).toDF("id"), Seq("id"), "left_semi")
-        .select(col("id"),
-          org.apache.spark.sql.graft.ArrayExpressions
-            .shingleHashes(col("text"), ShingleN).as("hs"))
-        .as[(Long, Seq[Long])].collect()
-        .map { case (id, hs) => id -> hs.toSet }.toMap
-      val verified = probe.filter { case (a, b) =>
-        val sa = shArr.getOrElse(a, Set.empty[Long])
-        val sb = shArr.getOrElse(b, Set.empty[Long])
-        val inter = sa.count(sb.contains)
-        val denom = sa.size.toLong + sb.size - inter
-        denom > 0 && inter * 1.0 / denom >= JaccardThreshold
-      }
-      val comp = graft.operators.Identity.connectedComponentsLocal(verified.toSeq)
-      s.createDataset(comp.toSeq).toDF("node", "component")
-    } else {
-      // The exact-Jaccard verify only ever looks at docs that appear in a
-      // candidate pair — shingle THOSE, not the whole corpus. The
-      // restricted shingle table gives identical jaccard values for every
-      // candidate pair (per-doc shingle sets are untouched by the row
-      // filter).
-      val candIds = cand.select(col("a").as("id"))
-        .unionAll(cand.select(col("b").as("id"))).distinct()
-      // localCheckpoint, not cache: jaccard references sh FOUR times (both
-      // join sides + the size table twice) and each reference duplicates
-      // sh's entire logical lineage in the analyzed plan — against a
-      // wide-union input (the 100x probe's replicated corpus) that tree
-      // reaches hundreds of MB and every downstream action pays tens of
-      // seconds of driver-side analysis before any task runs. A checkpoint
-      // leaf keeps the verify plan O(1) in input lineage; the table is
-      // candidate-restricted, so the materialization is pair-proportional,
-      // never corpus-sized. checkpoint() is the cluster-durable twin.
-      val sh = Dedup.shingleHashes(
-          docs.join(candIds, Seq("id"), "left_semi"),
-          col("id"), col("text"), ShingleN)
-        .localCheckpoint()
-      val verified = Dedup.jaccard(cand, sh)
-        .filter(col("jaccard") >= JaccardThreshold)
-        .select(col("a"), col("b")).as[(Long, Long)]
-      // connectedComponentsAdaptive eagerly localCheckpoints the edge set,
-      // so nothing downstream depends on sh or cand lineage
-      graft.operators.Identity.connectedComponentsAdaptive(verified)
+    val pairProbe = Route.collectWithin("DedupQueries.verifiedClusters",
+      Route.VerifyPairs, cand.as[(Long, Long)])
+    val clusters = pairProbe match {
+      case Some(probe) =>
+        val candIdsLocal = probe.iterator.flatMap(p => Iterator(p._1, p._2)).toSet
+        val shArr = collectShingles(docs
+          .join(s.createDataset(candIdsLocal.toSeq).toDF("id"), Seq("id"), "left_semi"))
+        val comp = graft.operators.Identity.connectedComponentsLocal(
+          verifiedLocal(Dedup.sortedShingleMap(shArr.toSeq), probe.toSeq))
+        s.createDataset(comp.toSeq).toDF("node", "component")
+      case None =>
+        // The exact-Jaccard verify only ever looks at docs that appear in a
+        // candidate pair — shingle THOSE, not the whole corpus. The
+        // restricted shingle table gives identical jaccard values for every
+        // candidate pair (per-doc shingle sets are untouched by the row
+        // filter).
+        val candIds = cand.select(col("a").as("id"))
+          .unionAll(cand.select(col("b").as("id"))).distinct()
+        // localCheckpoint, not cache: jaccard references sh FOUR times (both
+        // join sides + the size table twice) and each reference duplicates
+        // sh's entire logical lineage in the analyzed plan — against a
+        // wide-union input (the 100x probe's replicated corpus) that tree
+        // reaches hundreds of MB and every downstream action pays tens of
+        // seconds of driver-side analysis before any task runs. A checkpoint
+        // leaf keeps the verify plan O(1) in input lineage; the table is
+        // candidate-restricted, so the materialization is pair-proportional,
+        // never corpus-sized. checkpoint() is the cluster-durable twin.
+        val sh = Dedup.shingleHashes(
+            docs.join(candIds, Seq("id"), "left_semi"),
+            col("id"), col("text"), ShingleN)
+          .localCheckpoint()
+        val verified = Dedup.jaccard(cand, sh)
+          .filter(col("jaccard") >= JaccardThreshold)
+          .select(col("a"), col("b")).as[(Long, Long)]
+        // connectedComponentsAdaptive eagerly localCheckpoints the edge set,
+        // so nothing downstream depends on sh or cand lineage
+        graft.operators.Identity.connectedComponentsAdaptive(verified)
     }
     bk.unpersist(blocking = false)
     cand.unpersist(blocking = false)
@@ -337,8 +316,7 @@ object DedupQueries {
     * drive synthetic corpora through the exact production plan (see the
     * QueryDef comment for semantics and thresholds).
     */
-  def containmentPairs(docs: DataFrame,
-                       localMaxDocs: Int = 20000): DataFrame = {
+  def containmentPairs(docs: DataFrame): DataFrame = {
     // Driver kernel for bounded corpora (the verifiedClusters pattern):
     // the inverted-index pair enumeration runs over one collected shingle
     // batch and only INTEGER evidence returns to DataFrame land — the
@@ -346,15 +324,8 @@ object DedupQueries {
     // the same Column expressions on both routes, so the kernel cannot
     // fork a float boundary (DedupRouteParitySpec holds the routes
     // equal). Budget-guarded: past LocalPairBudget raw pairs (the Σ df²
-    // shape) or localMaxDocs, the distributed plan runs unchanged.
-    val localEv = collectShinglesBounded(docs, ShingleN, localMaxDocs)
-      .flatMap { probe =>
-        Dedup.invertedPairsLocal(probe.toSeq, 2, LocalPairBudget).map { cand =>
-          val shMap = Dedup.sortedShingleMap(probe.toSeq)
-          Dedup.intersectionEvidenceLocal(
-            shMap, cand.map { case (a, b, _) => (a, b) })
-        }
-      }
+    // shape) or `Route.Docs`, the distributed plan runs unchanged.
+    val localEv = localEvidence("DedupQueries.containmentPairs", docs)(invertedPairs)
     val directed = localEv match {
       case Some(ev) =>
         val s = docs.sparkSession
@@ -389,17 +360,11 @@ object DedupQueries {
     * returns integer evidence only — the jaccard ratio, threshold, and
     * rounding stay the same Column expressions either way.
     */
-  private[queries] def minhashLsh(s: SparkSession, docs: DataFrame,
-                                  localMaxDocs: Int = 20000): DataFrame = {
-    val localEv = collectShinglesBounded(docs, ShingleN, localMaxDocs)
-      .flatMap { probe =>
-        Dedup.candidatePairsLocal(probe.toSeq, None, LocalPairBudget).map { cand =>
-          val shMap = Dedup.sortedShingleMap(probe.toSeq)
-          Dedup.intersectionEvidenceLocal(shMap, cand)
-        }
-      }
+  private[queries] def minhashLsh(s: SparkSession, docs: DataFrame): DataFrame = {
+    val localEv = localEvidence("DedupQueries.minhashLsh", docs)(
+      Dedup.candidatePairsLocal(_, None, LocalPairBudget))
     val jac = localEv match {
-      case Some(ev) => evidenceDF(s, ev).withColumn("jaccard", jaccardCol)
+      case Some(ev) => evidenceDF(s, ev)
       case None =>
         // sh feeds signatures AND the candidate-restricted verify — cache
         // it. NEGATIVE RESULT (r19, kept for the record): rewiring this
@@ -431,18 +396,10 @@ object DedupQueries {
   /** q_dedup_ngram_jaccard body: inverted-index candidates (>= 2 shared
     * shingles) + exact Jaccard at 0.3, adaptive like `minhashLsh`.
     */
-  private[queries] def ngramJaccard(s: SparkSession, docs: DataFrame,
-                                    localMaxDocs: Int = 20000): DataFrame = {
-    val localEv = collectShinglesBounded(docs, ShingleN, localMaxDocs)
-      .flatMap { probe =>
-        Dedup.invertedPairsLocal(probe.toSeq, 2, LocalPairBudget).map { cand =>
-          val shMap = Dedup.sortedShingleMap(probe.toSeq)
-          Dedup.intersectionEvidenceLocal(
-            shMap, cand.map { case (a, b, _) => (a, b) })
-        }
-      }
+  private[queries] def ngramJaccard(s: SparkSession, docs: DataFrame): DataFrame = {
+    val localEv = localEvidence("DedupQueries.ngramJaccard", docs)(invertedPairs)
     val jac = localEv match {
-      case Some(ev) => evidenceDF(s, ev).withColumn("jaccard", jaccardCol)
+      case Some(ev) => evidenceDF(s, ev)
       case None =>
         val sh = Dedup.shingleHashes(docs, col("id"), col("text"), ShingleN)
           .cache()
@@ -463,18 +420,11 @@ object DedupQueries {
     * and applies r4). Adaptive like `minhashLsh`, with the capped
     * candidate generator.
     */
-  private[queries] def multisignalPairs(s: SparkSession, docs: DataFrame,
-                                        localMaxDocs: Int = 20000): DataFrame = {
-    val localEv = collectShinglesBounded(docs, ShingleN, localMaxDocs)
-      .flatMap { probe =>
-        Dedup.candidatePairsLocal(probe.toSeq, Some(LshBucketCap),
-          LocalPairBudget).map { cand =>
-          val shMap = Dedup.sortedShingleMap(probe.toSeq)
-          Dedup.intersectionEvidenceLocal(shMap, cand)
-        }
-      }
+  private[queries] def multisignalPairs(s: SparkSession, docs: DataFrame): DataFrame = {
+    val localEv = localEvidence("DedupQueries.multisignalPairs", docs)(
+      Dedup.candidatePairsLocal(_, Some(LshBucketCap), LocalPairBudget))
     val jac = localEv match {
-      case Some(ev) => evidenceDF(s, ev).withColumn("jaccard", jaccardCol)
+      case Some(ev) => evidenceDF(s, ev)
       case None =>
         // map-only rowwise signatures → bands → capped candidates (the
         // verifiedClusters chain); bk feeds the bucket count and both
@@ -503,23 +453,14 @@ object DedupQueries {
     * vs its 12-register MinHash estimate, for every source pair.
     * Adaptive: the distinct (source, h) relation is bounded by the
     * source count × per-source vocabulary, so bounded corpora collect it
-    * once (limit-probe + collect in ONE job — length > bound means
-    * incomplete, fall back) and compute sizes, pairwise intersections,
-    * registers and register agreement on the driver; integer evidence
-    * only, ratios/rounding engine-side. Past `localMaxRows` (or past
-    * `maxPairs` source pairs) the distributed plan runs unchanged.
+    * once (a cached count-then-collect, see below) and compute sizes,
+    * pairwise intersections, registers and register agreement on the
+    * driver; integer evidence only, ratios/rounding engine-side. Past
+    * `Route.SourceRows` rows (or `Route.SourcePairs` source pairs) the
+    * distributed plan runs unchanged.
     */
-  private[graft] def sourceSimilarity(s: SparkSession, docs: DataFrame,
-                                        // ~400k (source, h) rows is where
-                                        // the single-threaded kernel stops
-                                        // beating the parallel plan: the
-                                        // 10x tier (~1.6M rows) measured 2x
-                                        // SLOWER through the kernel (collect
-                                        // + GC churn of ~1.6M boxed tuples),
-                                        // so it falls back distributed there
-                                        localMaxRows: Int = 400000,
-                                        maxPairs: Long = 500000L,
-                                        localMaxDocs: Int = 20000): DataFrame = {
+  private[graft] def sourceSimilarity(s: SparkSession, docs: DataFrame): DataFrame = {
+    val site = "DedupQueries.sourceSimilarity"
     import s.implicits._
     // distinct (source, h): the per-SOURCE shingle set (shingleHashes
     // already dedups within a doc; sources need one more distinct)
@@ -530,14 +471,13 @@ object DedupQueries {
     // itself costs a full serial materialization of the distinct (cache +
     // count) that the r17 plan never paid — on the too-big path that was
     // a measured ~2 s pure overhead at the 10x tier (5.9 s quiet vs the
-    // 3.5 s r17 stamp). A corpus past the kernels' shared 20k-doc bound
-    // cannot be worth the probe (50k docs put the distinct far past
-    // 400k rows), so it goes straight to the distributed plan, whose
-    // consumers populate the cache INSIDE the one job where the work
-    // overlaps (guide §2.6). The cheap id-limit count is column-pruned —
-    // the verifiedClusters probe discipline.
-    val docBounded = localMaxRows > 0 && localMaxDocs > 0 &&
-      docs.select(col("doc_id")).limit(localMaxDocs + 1).count() <= localMaxDocs
+    // 3.5 s r17 stamp). A corpus past the kernels' shared `Route.Docs`
+    // bound cannot be worth the probe (50k docs put the distinct far past
+    // `Route.SourceRows`), so it goes straight to the distributed plan,
+    // whose consumers populate the cache INSIDE the one job where the
+    // work overlaps (guide §2.6). The cheap id-limit count is
+    // column-pruned — the verifiedClusters probe discipline.
+    val docBounded = Route.fits(site, Route.Docs, docs.select(col("doc_id")))
     // count-then-collect, NOT limit(bound+1).collect(): a GlobalLimit
     // past ~1e6 rows funnels the whole relation through ONE gather task
     // (measured: the 10x tier paid ~3 s in that single task); the cache
@@ -546,8 +486,7 @@ object DedupQueries {
     // fallback otherwise, where it feeds four consumers)
     val sh = sh0.cache()
     val probe: Option[Array[(String, Long)]] =
-      if (!docBounded) None
-      else if (sh.count() <= localMaxRows) {
+      if (docBounded && Route.admits(site, Route.SourceRows, sh.count())) {
         val rows = sh.as[(String, Long)].collect()
         sh.unpersist(blocking = false)
         Some(rows)
@@ -557,7 +496,7 @@ object DedupQueries {
         .mapValues(_.map(_._2).sorted).toMap
       val sources = bySource.keys.toSeq.sorted
       val nPairs = sources.size.toLong * (sources.size - 1) / 2
-      if (nPairs > maxPairs) None
+      if (!Route.admits(site, Route.SourcePairs, nPairs)) None
       else {
         // registers per source — the same 64-bit (h * a_i + b_i) % P
         // arithmetic as minhashSignatures (the candidatePairsLocal
@@ -645,24 +584,17 @@ object DedupQueries {
     * shingle batch on bounded corpora; the jr rounding, bucket boundaries
     * and recall aggregation stay engine-side on both routes.
     */
-  private[queries] def lshRecall(s: SparkSession, docs: DataFrame,
-                                 localMaxDocs: Int = 20000): DataFrame = {
-    val local = collectShinglesBounded(docs, ShingleN, localMaxDocs)
-      .flatMap { probe =>
-        for {
-          truthCand <- Dedup.invertedPairsLocal(probe.toSeq, 2, LocalPairBudget)
-          lshCand <- Dedup.candidatePairsLocal(probe.toSeq, None, LocalPairBudget)
-        } yield {
-          val shMap = Dedup.sortedShingleMap(probe.toSeq)
-          val ev = Dedup.intersectionEvidenceLocal(
-            shMap, truthCand.map { case (a, b, _) => (a, b) })
-          (ev, lshCand)
-        }
-      }
+  private[queries] def lshRecall(s: SparkSession, docs: DataFrame): DataFrame = {
+    val local = for {
+      probe <- collectShinglesBounded("DedupQueries.lshRecall", docs)
+      truthCand <- invertedPairs(probe.toSeq)
+      lshCand <- Dedup.candidatePairsLocal(probe.toSeq, None, LocalPairBudget)
+    } yield (Dedup.intersectionEvidenceLocal(
+      Dedup.sortedShingleMap(probe.toSeq), truthCand), lshCand)
     local match {
       case Some((ev, lshCand)) =>
         import s.implicits._
-        val truth = evidenceDF(s, ev).withColumn("jaccard", jaccardCol)
+        val truth = evidenceDF(s, ev)
           .filter(col("jaccard") >= 0.3)
           .select(col("a"), col("b"), Num.r4(col("jaccard")).as("jr"))
         val lsh = s.createDataset(lshCand).toDF("la", "lb")
@@ -702,12 +634,11 @@ object DedupQueries {
     * a driver kernel (integer evidence only, like the others).
     */
   private[queries] def incrementalDedup(s: SparkSession, corpus: DataFrame,
-                                        batch: DataFrame,
-                                        localMaxDocs: Int = 20000): DataFrame = {
+                                        batch: DataFrame): DataFrame = {
     val localEv =
       for {
-        corpusSh <- collectShinglesBounded(corpus, ShingleN, localMaxDocs)
-        batchSh <- collectShinglesBounded(batch, ShingleN, localMaxDocs)
+        corpusSh <- collectShinglesBounded("DedupQueries.incrementalDedup.corpus", corpus)
+        batchSh <- collectShinglesBounded("DedupQueries.incrementalDedup.batch", batch)
         cand <- Dedup.candidatePairsAcrossLocal(
           corpusSh.toSeq, batchSh.toSeq, LocalPairBudget)
       } yield {
@@ -715,7 +646,7 @@ object DedupQueries {
         Dedup.intersectionEvidenceLocal(shMap, cand)
       }
     val jac = localEv match {
-      case Some(ev) => evidenceDF(s, ev).withColumn("jaccard", jaccardCol)
+      case Some(ev) => evidenceDF(s, ev)
       case None =>
         // cached shingle tables on both sides — the rowwise rewire was
         // tried and reverted here too (see minhashLsh's negative-result
@@ -874,33 +805,27 @@ object DedupQueries {
 
   /** Adaptive front for `containmentDrops` — the connectedComponentsAdaptive
     * pattern applied to the containment stage: a corpus within
-    * `localMaxDocs` collects its (id, distinct-shingle-array) rows (the
+    * `Route.Docs` collects its (id, distinct-shingle-array) rows (the
     * arrays come out of the same codegen'd expression the distributed plan
     * explodes) and runs the driver-local kernel, which replaces the
     * distributed stage's ~8 jobs (count, df groupBy, array build, candidate
     * probe, recount, checkpoint) with ONE collect job — at sf0.1 the funnel
     * corpus is ~7k docs and those jobs are pure scheduling overhead. Past
     * the bound the distributed plan runs unchanged; the two agree exactly
-    * (SamplingContainmentSpec drives both through randomized corpora). The
-    * bound is doc-count-based: 20k docs × ~130 shingles × 8 B ≈ 20 MB on
-    * the driver, the same order as the ingest guard's bounded collect.
+    * (SamplingContainmentSpec drives both through randomized corpora).
     * The route decision is a count (not the former limit-collect probe,
     * which shipped 20k shingle arrays to the driver just to learn the
     * corpus was too big — ~1 s wasted per distributed-path call at the
     * 10x tier), and the count is passed into the distributed path so the
     * stage never scans the corpus twice for its own denominator.
     */
-  def containmentDropsAdaptive(docs: DataFrame, hotPct: Int = ContainHotPct,
-      localMaxDocs: Int = 20000): DataFrame = {
+  def containmentDropsAdaptive(docs: DataFrame,
+      hotPct: Int = ContainHotPct): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val nDocs = docs.count()
-    if (nDocs <= localMaxDocs) {
-      val probe = docs.select(col("id"),
-          org.apache.spark.sql.graft.ArrayExpressions
-            .shingleHashes(col("text"), ShingleN).as("hs"))
-        .as[(Long, Seq[Long])].collect()
-      val drops = containmentDropIdsLocal(probe.toSeq, hotPct)
+    if (Route.admits("DedupQueries.containmentDropsAdaptive", Route.Docs, nDocs)) {
+      val drops = containmentDropIdsLocal(collectShingles(docs).toSeq, hotPct)
       spark.createDataset(drops.toSeq).toDF("id")
     } else containmentDropsCounted(docs, hotPct, nDocs)
   }
@@ -1714,14 +1639,14 @@ object DedupQueries {
     * the ExactSubstr cut as a per-doc keep/trim/drop manifest with exact
     * cut-token counts.
     */
-  def spanSurvivors(docs: DataFrame, localMaxDocs: Int = 20000): DataFrame = {
+  def spanSurvivors(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Driver-local fast path (the verifiedClusters/containment pattern):
     // ONE bounded collect of (id, n_words, positional span hashes)
     // replaces the span-table cache + dup-hash agg + semi-join + two
     // window passes + result join — ~6 AQE stage materializations the
     // distributed route pays even for a few thousand docs. Memory bound:
-    // localMaxDocs × ~n_words longs ≈ tens of MB at the guard. Exactly
+    // `Route.Docs` × ~n_words longs ≈ tens of MB at the guard. Exactly
     // the same integers (spanCutLocal mirrors the island/interval-union
     // arithmetic; RandomizedParitySpec holds the default route equal to
     // an independent mask-based oracle, SpanRouteSpec holds the two
@@ -1734,9 +1659,7 @@ object DedupQueries {
       else size(TextOps.words(col("text"))).cast("long")
     // id-only size probe first — same rationale as verifiedClusters: no
     // positional-hash computation just to learn the corpus is too big
-    val boundedDocs = localMaxDocs > 0 &&
-      docs.select(col("doc_id")).limit(localMaxDocs + 1).count() <= localMaxDocs
-    if (boundedDocs) {
+    if (Route.fits("DedupQueries.spanSurvivors", Route.Docs, docs.select(col("doc_id")))) {
       val docProbe = docs.select(col("doc_id"), nWordsCol.as("n_words"),
           org.apache.spark.sql.graft.ArrayExpressions
             .shingleHashSeq(col("text"), SpanN).as("hs"))

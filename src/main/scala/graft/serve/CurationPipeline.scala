@@ -13,7 +13,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
-import graft.operators.Dedup
+import graft.operators.{Dedup, Route}
 import graft.queries.PiiQueries
 
 /** Live corpus-curation ingest: the batch funnel's guards — PII scrub,
@@ -114,13 +114,6 @@ object CurationPipeline {
     * micro-batch-scale while the corpus bulk lives in the pruned layout.
     */
   val CompactEveryBatches = 64
-
-  /** Survivor-count bound for the driver-local containment kernel: under
-    * it, the kernel runs over the fetched shingle hashes; over it, the
-    * distributed `containmentDrops` operator — the
-    * connectedComponentsAdaptive small-case/fallback pattern.
-    */
-  val MaxLocalContainDocs = 20000
 
   private val HashSchema = "text_hash STRING"
   private val BandSchema = "id BIGINT, band INT, key STRING"
@@ -461,12 +454,12 @@ object CurationPipeline {
     // band guard, the smaller to mutual containment) — after it, the
     // kept member of every near-dup pair is immune and only genuine
     // excerpt inclusions fall. The driver-local kernel reads the fetched
-    // shingle hashes; a pathological oversized batch falls back to the
+    // shingle hashes; a batch past `Route.Docs` survivors falls back to the
     // distributed operator, same contract, parity held by
     // SamplingContainmentSpec.
     val nearSurvivors = survivors.filterNot(d => nearBatch(d.id) || nearCorpus(d.id))
     val contained =
-      if (nearSurvivors.size <= MaxLocalContainDocs)
+      if (Route.admits("CurationPipeline.admitBatch", Route.Docs, nearSurvivors.size))
         graft.queries.DedupQueries.containmentDropIdsLocal(
           nearSurvivors.map(d => (d.id, d.shingles)))
       else
@@ -558,16 +551,11 @@ object CurationPipeline {
     * flat-tail probe on EVERY batch until the 64-batch auto-compaction
     * cadence first fires; measured at the 5M-doc corpus the pruned
     * generation wins p50 outright (INGEST_1000X: -17% p50, -21% p95,
-    * -42% first batch), and corpus ≫ batch is the production regime. The
-    * old lazy-tail start stays behind `SPARK_GRAFT_COMPACT_ON_START=0`
-    * (it remains CORRECT either way — membership probes are
-    * layout-independent, and IngestBench reports identical
-    * admitted/rejected tallies for both layouts). No-op when the live
-    * tail is empty: compacting then would only rewrite the current
-    * generation.
+    * -42% first batch), and corpus ≫ batch is the production regime.
+    * No-op when the live tail is empty: compacting then would only
+    * rewrite the current generation.
     */
   def compactOnStart(spark: SparkSession, root: String): Option[Generation] = {
-    if (sys.env.get("SPARK_GRAFT_COMPACT_ON_START").contains("0")) return None
     val gen = currentGeneration(spark, root)
     val live =
       liveTail(spark, s"$root/hash_tail",

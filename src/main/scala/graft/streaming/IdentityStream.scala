@@ -8,7 +8,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-import graft.operators.Identity
+import graft.operators.{Identity, Route}
 
 /** Streaming identity resolution (SURVEY §7.4 hard-part 1, reference
   * `cdp/identity/IdentityGraph.kt` + `docs/cdp/README.md:85-126`).
@@ -134,14 +134,14 @@ object IdentityStream {
   /** Wire the resolver onto a stream of (src, dst) identifier edges.
     * Returns the writer (caller starts it) and the mapping handle.
     */
-  /** `localCcThreshold`: contracted graphs at or below this many edges run
-    * union-find on the driver (one tiny collect, microseconds) instead of
-    * iterative distributed CC (~8 Spark jobs) — the contracted graph is
-    * bounded by the BATCH's edge count, so this is the common case; a
-    * genuinely huge batch falls back to the distributed path.
+  /** Contracted graphs within `Route.StreamCcEdges` run union-find on the
+    * driver (one tiny collect, microseconds) instead of iterative
+    * distributed CC (~8 Spark jobs) — the contracted graph is bounded by
+    * the BATCH's edge count, so this is the common case; a genuinely huge
+    * batch falls back to the distributed path.
     */
   def resolver(spark: SparkSession, edges: DataFrame, stateDir: String,
-               maxIter: Int = 100, localCcThreshold: Long = 100000L)
+               maxIter: Int = 100)
   : (DataStreamWriter[org.apache.spark.sql.Row], MappingHandle) = {
     val handle = new MappingHandle(spark, stateDir)
     // Version base: one past the highest version already on disk. Batch ids
@@ -190,7 +190,7 @@ object IdentityStream {
           // case: zero CC jobs), falls back to distributed propagation
           // when the probe overflows
           val (ccDf, probedCount) = Identity.connectedComponentsAdaptiveCounted(
-            contracted.as[(String, String)], localCcThreshold, maxIter)
+            contracted.as[(String, String)], Route.StreamCcEdges, maxIter)
           val nContracted =
             if (probedCount >= 0) probedCount else contracted.count()
           val deltas =

@@ -1,5 +1,7 @@
 package graft
 
+import graft.operators.Route
+
 /** Physical-plan regression guards: the properties that make these queries
   * scale (column pruning, filter pushdown, broadcast dimension joins) are
   * asserted, not assumed — a refactor that reintroduces a full-table scan
@@ -278,8 +280,8 @@ class PlanSpec extends SparkSpec {
     // query takes the bounded driver kernel at spec scale, whose plan is
     // just the evidence local relation (DedupRouteParitySpec holds the
     // routes equal)
-    val p = graft.queries.CurationQueries.contamination(
-      graft.Tables.documents(spark, dir), localMaxDocs = 0)
+    val p = Route.forcing(Route.Docs -> 0L)(
+        graft.queries.CurationQueries.contamination(graft.Tables.documents(spark, dir)))
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
       s"contamination candidates must come from the shingle-hash equijoin:\n$p")
@@ -320,12 +322,11 @@ class PlanSpec extends SparkSpec {
   test("q_dedup_span_survivors: cut stays occurrence-linear, doc-partitioned") {
     // the registered query routes to the driver-local span kernel at this
     // corpus size; the 100 TB shape under guard here is the DISTRIBUTED
-    // route, so force it (localMaxDocs = 0) over the same variant input
-    val p = graft.queries.DedupQueries.spanSurvivors(
+    // route, so force it (Route.Docs -> 0) over the same variant input
+    val p = Route.forcing(Route.Docs -> 0L)(graft.queries.DedupQueries.spanSurvivors(
         graft.queries.DedupQueries.withSharedPrefixCopies(spark, dir)
           .select(org.apache.spark.sql.functions.col("id").as("doc_id"),
-            org.apache.spark.sql.functions.col("text")),
-        localMaxDocs = 0)
+            org.apache.spark.sql.functions.col("text"))))
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),
       s"span marking must be an equijoin on h:\n$p")
@@ -338,8 +339,8 @@ class PlanSpec extends SparkSpec {
 
   test("q_source_similarity: exact side is an h-equijoin; pairwise joins broadcast") {
     // distributed fallback, same rationale as the contamination pin above
-    val p = graft.queries.DedupQueries.sourceSimilarity(
-      spark, graft.Tables.documents(spark, dir), localMaxRows = 0)
+    val p = Route.forcing(Route.SourceRows -> 0L)(
+        graft.queries.DedupQueries.sourceSimilarity(spark, graft.Tables.documents(spark, dir)))
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
       s"no unbounded cross product (source-bounded sides must broadcast):\n$p")
@@ -405,8 +406,8 @@ class PlanSpec extends SparkSpec {
 
   test("q_decontam_train: eval set builds, train probes, hot shingles anti-joined") {
     // distributed fallback, same rationale as the contamination pin above
-    val p = graft.queries.CurationQueries.decontamTrain(
-      graft.Tables.documents(spark, dir), localMaxDocs = 0)
+    val p = Route.forcing(Route.Docs -> 0L)(
+        graft.queries.CurationQueries.decontamTrain(graft.Tables.documents(spark, dir)))
       .queryExecution.executedPlan.toString
     assert(!p.contains("CartesianProduct"),
       s"decontamination candidates must come from the shingle-hash equijoin:\n$p")

@@ -18,8 +18,8 @@ class BpeAdaptiveParitySpec extends SparkSpec {
 
   private def bothRoutes(texts: Seq[String]) = {
     val d = docsOf(texts)
-    val local = Bpe.train(d) // corpora here are far under LocalMaxWords
-    val dist = Bpe.trainDistributed(Bpe.dictionary(d).localCheckpoint())
+    val local = Bpe.train(d) // corpora here are far under Route.BpeWords
+    val dist = Route.forcing(Route.BpeWords -> 0L)(Bpe.train(d))
     (local, dist)
   }
 

@@ -37,9 +37,10 @@ class OperatorsSpec extends SparkSpec {
     val viaLocal = Identity.connectedComponentsAdaptive(edges.toDS())
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(viaLocal == viaDistributed)
-    // threshold 0 forces the distributed branch through the adaptive API
-    val viaFallback = Identity.connectedComponentsAdaptive(edges.toDS(), localThreshold = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // a 0 edge bound forces the distributed branch through the adaptive API
+    val viaFallback = Route.forcing(Route.CcEdges -> 0L)(
+      Identity.connectedComponentsAdaptive(edges.toDS())
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(viaFallback == viaDistributed)
   }
 

@@ -7,9 +7,10 @@ import org.apache.spark.sql.functions._
   * r18 explode + 60-sum groupBy formulation bit-for-bit — the oracle SQL
   * still computes the groupBy form, so any divergence is a correctness
   * break, not a perf regression. Randomized corpora cover the traps: empty
-  * text (tokenizes to [""] — both paths emit a row), repeated words
-  * (multiset votes), whitespace-edged text (wordsJvm/words parity), and
-  * exact vote ties (2 * ones == n -> bit clear).
+  * text (tokenizes to [""] — both paths emit a row), null text (no words
+  * — neither path emits a row), repeated words (multiset votes),
+  * whitespace-edged text (wordsJvm/words parity), and exact vote ties
+  * (2 * ones == n -> bit clear).
   */
 class SimhashParitySpec extends SparkSpec {
 
@@ -33,12 +34,13 @@ class SimhashParitySpec extends SparkSpec {
     val s = spark
     import s.implicits._
     for (seed <- Seq(1L, 2L, 3L)) {
-      val docs = corpus(seed, 120).toDF("id", "text")
+      val docs = (corpus(seed, 120) :+ ((120L, null: String))).toDF("id", "text")
       val fast = Dedup.simhash(docs, col("id"), col("text"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val ref = Dedup.simhashViaGroupBy(docs, col("id"), col("text"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(fast.keySet == ref.keySet, s"seed $seed: id sets differ")
+      assert(!fast.contains(120L), s"seed $seed: null text got a signature")
       for ((id, sig) <- ref)
         assert(fast(id) == sig, s"seed $seed: simhash differs for id $id")
     }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.Route
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import scala.util.Random
@@ -41,11 +42,17 @@ class DedupRouteParitySpec extends SparkSpec {
   private def canon(df: DataFrame): Set[Seq[String]] =
     df.collect().map(_.toSeq.map(String.valueOf)).map(_.toSeq).toSet
 
+  /** The distributed route: `Route.Docs` forced to 0 while the body
+    * decides its route (every probe runs eagerly inside the call).
+    */
+  private def distributed(df: => DataFrame): DataFrame =
+    Route.forcing(Route.Docs -> 0L)(df)
+
   test("minhashLsh: local kernel == distributed route") {
     for (seed <- 0 until 5) {
       val d = corpus(seed)
       assert(canon(DedupQueries.minhashLsh(spark, d)) ==
-        canon(DedupQueries.minhashLsh(spark, d, localMaxDocs = 0)), s"seed=$seed")
+        canon(distributed(DedupQueries.minhashLsh(spark, d))), s"seed=$seed")
       spark.catalog.clearCache()
     }
   }
@@ -54,7 +61,7 @@ class DedupRouteParitySpec extends SparkSpec {
     for (seed <- 5 until 10) {
       val d = corpus(seed)
       assert(canon(DedupQueries.ngramJaccard(spark, d)) ==
-        canon(DedupQueries.ngramJaccard(spark, d, localMaxDocs = 0)), s"seed=$seed")
+        canon(distributed(DedupQueries.ngramJaccard(spark, d))), s"seed=$seed")
       spark.catalog.clearCache()
     }
   }
@@ -63,7 +70,7 @@ class DedupRouteParitySpec extends SparkSpec {
     for (seed <- 10 until 15) {
       val d = corpus(seed)
       assert(canon(DedupQueries.lshRecall(spark, d)) ==
-        canon(DedupQueries.lshRecall(spark, d, localMaxDocs = 0)), s"seed=$seed")
+        canon(distributed(DedupQueries.lshRecall(spark, d))), s"seed=$seed")
       spark.catalog.clearCache()
     }
   }
@@ -74,7 +81,7 @@ class DedupRouteParitySpec extends SparkSpec {
       val base = d.filter($"id" < 1000L)
       val batch = d.filter($"id" >= 1000L)
       assert(canon(DedupQueries.incrementalDedup(spark, base, batch)) ==
-        canon(DedupQueries.incrementalDedup(spark, base, batch, localMaxDocs = 0)),
+        canon(distributed(DedupQueries.incrementalDedup(spark, base, batch))),
         s"seed=$seed")
       spark.catalog.clearCache()
     }
@@ -84,7 +91,7 @@ class DedupRouteParitySpec extends SparkSpec {
     for (seed <- 20 until 25) {
       val d = corpus(seed)
       assert(canon(DedupQueries.multisignalPairs(spark, d)) ==
-        canon(DedupQueries.multisignalPairs(spark, d, localMaxDocs = 0)), s"seed=$seed")
+        canon(distributed(DedupQueries.multisignalPairs(spark, d))), s"seed=$seed")
       spark.catalog.clearCache()
     }
   }
@@ -93,7 +100,7 @@ class DedupRouteParitySpec extends SparkSpec {
     for (seed <- 25 until 30) {
       val d = corpus(seed)
       assert(canon(DedupQueries.containmentPairs(d)) ==
-        canon(DedupQueries.containmentPairs(d, localMaxDocs = 0)), s"seed=$seed")
+        canon(distributed(DedupQueries.containmentPairs(d))), s"seed=$seed")
       spark.catalog.clearCache()
     }
   }
@@ -103,9 +110,9 @@ class DedupRouteParitySpec extends SparkSpec {
       val d = corpus(seed)
         .select($"id".as("doc_id"), $"text")
       assert(canon(CurationQueries.contamination(d)) ==
-        canon(CurationQueries.contamination(d, localMaxDocs = 0)), s"seed=$seed")
+        canon(distributed(CurationQueries.contamination(d))), s"seed=$seed")
       assert(canon(CurationQueries.decontamTrain(d)) ==
-        canon(CurationQueries.decontamTrain(d, localMaxDocs = 0)), s"seed=$seed")
+        canon(distributed(CurationQueries.decontamTrain(d))), s"seed=$seed")
       spark.catalog.clearCache()
     }
   }
@@ -116,7 +123,8 @@ class DedupRouteParitySpec extends SparkSpec {
         .select($"id".as("doc_id"), $"text",
           concat(lit("src"), pmod($"id", lit(5L)).cast("string")).as("source"))
       assert(canon(DedupQueries.sourceSimilarity(spark, d)) ==
-        canon(DedupQueries.sourceSimilarity(spark, d, localMaxRows = 0)),
+        canon(Route.forcing(Route.SourceRows -> 0L)(
+          DedupQueries.sourceSimilarity(spark, d))),
         s"seed=$seed")
       spark.catalog.clearCache()
     }
@@ -129,7 +137,7 @@ class DedupRouteParitySpec extends SparkSpec {
     val d = (0 until 60).map(i =>
       (i.toLong, "same words repeated for every document here ok")).toDF("id", "text")
     val viaTinyBudget = DedupQueries.minhashLsh(spark, d)
-    val viaDistributed = DedupQueries.minhashLsh(spark, d, localMaxDocs = 0)
+    val viaDistributed = distributed(DedupQueries.minhashLsh(spark, d))
     assert(canon(viaTinyBudget) == canon(viaDistributed))
     spark.catalog.clearCache()
   }

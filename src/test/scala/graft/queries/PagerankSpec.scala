@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.Route
 import org.apache.spark.sql.functions._
 
 /** Behavioral tests for the integer-scaled identity PageRank beyond its
@@ -57,12 +58,12 @@ class PagerankSpec extends SparkSpec {
     val rnd = new scala.util.Random(23)
     val edges = ((1 to 60).map(i => (s"u:$i", s"k:${rnd.nextInt(15)}")) ++
       (1 to 10).map(i => (s"u:$i", s"k:x$i"))).distinct
-    val viaLocal = CdpBatch.identityPagerank(
-        edges.toDF("src", "dst"), localMaxEdges = 1000000)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val viaDistributed = CdpBatch.identityPagerank(
-        edges.toDF("src", "dst"), localMaxEdges = 0)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val viaLocal = Route.forcing(Route.PagerankEdges -> 1000000L)(
+      CdpBatch.identityPagerank(edges.toDF("src", "dst"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+    val viaDistributed = Route.forcing(Route.PagerankEdges -> 0L)(
+      CdpBatch.identityPagerank(edges.toDF("src", "dst"))
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     assert(viaLocal == viaDistributed)
   }
 
@@ -75,10 +76,12 @@ class PagerankSpec extends SparkSpec {
     // and nodes reachable only via null sit at the teleport floor
     val edges = Seq(("u:1", "k:a"), ("u:2", "k:a"), ("u:3", null),
       (null, "k:b")).toDF("src", "dst")
-    val viaLocal = CdpBatch.identityPagerank(edges, localMaxEdges = 1000)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val viaDistributed = CdpBatch.identityPagerank(edges, localMaxEdges = 0)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val viaLocal = Route.forcing(Route.PagerankEdges -> 1000L)(
+      CdpBatch.identityPagerank(edges)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
+    val viaDistributed = Route.forcing(Route.PagerankEdges -> 0L)(
+      CdpBatch.identityPagerank(edges)
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
     assert(viaLocal == viaDistributed)
     assert(viaLocal.keySet ==
       Set("u:1", "u:2", "u:3", "k:a", "k:b", null))

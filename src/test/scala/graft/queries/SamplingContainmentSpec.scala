@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.Route
 import org.apache.spark.sql.functions._
 
 import scala.util.Random
@@ -288,11 +289,11 @@ class SamplingContainmentSpec extends SparkSpec {
     }
     val docs = planted.map { case (id, ws) => (id, ws.mkString(" ")) }
       .toDF("id", "text")
-    val viaLocal = DedupQueries.containmentDropsAdaptive(docs, localMaxDocs = 1000)
-      .collect().map(_.getLong(0)).toSet
+    val viaLocal = Route.forcing(Route.Docs -> 1000L)(
+      DedupQueries.containmentDropsAdaptive(docs).collect().map(_.getLong(0)).toSet)
     // a bound below the corpus size forces the distributed fallback
-    val viaDistributed = DedupQueries.containmentDropsAdaptive(docs, localMaxDocs = 3)
-      .collect().map(_.getLong(0)).toSet
+    val viaDistributed = Route.forcing(Route.Docs -> 3L)(
+      DedupQueries.containmentDropsAdaptive(docs).collect().map(_.getLong(0)).toSet)
     assert(viaLocal == viaDistributed)
     assert(viaLocal == DedupQueries.containmentDrops(docs)
       .collect().map(_.getLong(0)).toSet)

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.Route
 import scala.util.Random
 
 /** The driver-local span-cut kernel (one collect + spanCutLocal) and the
@@ -28,12 +29,12 @@ class SpanRouteSpec extends SparkSpec {
         }
         (i.toLong, ws.mkString(" "))
       }.toDF("doc_id", "text")
-      def via(maxDocs: Int) =
-        DedupQueries.spanSurvivors(docs, localMaxDocs = maxDocs)
+      def via(maxDocs: Long) = Route.forcing(Route.Docs -> maxDocs)(
+        DedupQueries.spanSurvivors(docs)
           .collect()
           .map(r => r.getLong(0) ->
             ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))))
-          .toMap
+          .toMap)
       assert(via(100000) == via(0), s"seed=$seed")
       spark.catalog.clearCache()
     }
@@ -43,10 +44,10 @@ class SpanRouteSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((1L, "a b c d e f g h", 8L), (2L, "a b", 2L))
       .toDF("doc_id", "text", "n_words")
-    def via(maxDocs: Int) =
-      DedupQueries.spanSurvivors(docs, localMaxDocs = maxDocs)
+    def via(maxDocs: Long) = Route.forcing(Route.Docs -> maxDocs)(
+      DedupQueries.spanSurvivors(docs)
         .select("doc_id", "n_words", "action").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+        .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet)
     val expect = Set((1L, 8L, "keep"), (2L, 2L, "keep"))
     assert(via(100000) == expect && via(0) == expect)
   }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.SparkSpec
+import graft.operators.Route
 import scala.util.Random
 
 /** The three `verifiedClusters` routes — the full-local LSH kernel
@@ -13,12 +14,17 @@ import scala.util.Random
   */
 class VerifiedClustersAdaptiveSpec extends SparkSpec {
 
+  /** The three routes, chosen by the bounds in force: `maxDocs` gates the
+    * full-local kernel, `maxPairs` the pair-probe local verify.
+    */
+  private def via[T](maxPairs: Long, maxDocs: Long = 0L)(body: => T): T =
+    Route.forcing(Route.VerifyPairs -> maxPairs, Route.Docs -> maxDocs)(body)
+
   private def clustersVia(docs: org.apache.spark.sql.DataFrame,
-                          localMaxPairs: Int,
-                          localMaxDocs: Int = 0): Map[Long, Long] =
-    DedupQueries.verifiedClusters(spark, docs, localMaxPairs = localMaxPairs,
-        localMaxDocs = localMaxDocs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+                          maxPairs: Long,
+                          maxDocs: Long = 0L): Map[Long, Long] =
+    via(maxPairs, maxDocs)(DedupQueries.verifiedClusters(spark, docs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
 
   test("full-local LSH kernel == distributed route on 8 random corpora") {
     import spark.implicits._
@@ -37,8 +43,8 @@ class VerifiedClustersAdaptiveSpec extends SparkSpec {
       }
       val docs = planted.map { case (id, ws) => (id, ws.mkString(" ")) }
         .toDF("id", "text")
-      val viaFullLocal = clustersVia(docs, localMaxPairs = 0, localMaxDocs = 100000)
-      val viaDistributed = clustersVia(docs, localMaxPairs = 0)
+      val viaFullLocal = clustersVia(docs, maxPairs = 0, maxDocs = 100000)
+      val viaDistributed = clustersVia(docs, maxPairs = 0)
       assert(viaFullLocal == viaDistributed, s"seed=$seed")
       spark.catalog.clearCache()
     }
@@ -56,7 +62,7 @@ class VerifiedClustersAdaptiveSpec extends SparkSpec {
     assert(full.exists(_.size == 1770))
     // and the verifiedClusters route survives the refusal end-to-end
     // (falls to the distributed verify, same answer) — exercised by the
-    // route-parity tests below via localMaxDocs routing
+    // route-parity tests below via Route.Docs routing
   }
 
   test("local verify route == distributed verify route on 8 random corpora") {
@@ -77,8 +83,8 @@ class VerifiedClustersAdaptiveSpec extends SparkSpec {
       }
       val docs = planted.map { case (id, ws) => (id, ws.mkString(" ")) }
         .toDF("id", "text")
-      val viaLocal = clustersVia(docs, localMaxPairs = 100000)
-      val viaDistributed = clustersVia(docs, localMaxPairs = 0)
+      val viaLocal = clustersVia(docs, maxPairs = 100000)
+      val viaDistributed = clustersVia(docs, maxPairs = 0)
       assert(viaLocal == viaDistributed, s"seed=$seed")
       spark.catalog.clearCache()
     }
@@ -93,15 +99,11 @@ class VerifiedClustersAdaptiveSpec extends SparkSpec {
       (i.toLong, s"$shared body${i % 3} t$i u$i v$i w$i x$i y$i z$i")
     }.toDF("id", "text")
     val capped = Some(5)
-    val viaFullLocal = DedupQueries.verifiedClusters(spark, docs, capped,
-      localMaxPairs = 0, localMaxDocs = 100000)
+    def clusters() = DedupQueries.verifiedClusters(spark, docs, capped)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaLocal = DedupQueries.verifiedClusters(spark, docs, capped,
-      localMaxPairs = 100000, localMaxDocs = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val viaDistributed = DedupQueries.verifiedClusters(spark, docs, capped,
-      localMaxPairs = 0, localMaxDocs = 0)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val viaFullLocal = via(maxPairs = 0, maxDocs = 100000)(clusters())
+    val viaLocal = via(maxPairs = 100000, maxDocs = 0)(clusters())
+    val viaDistributed = via(maxPairs = 0, maxDocs = 0)(clusters())
     assert(viaLocal == viaDistributed)
     assert(viaFullLocal == viaDistributed)
     spark.catalog.clearCache()

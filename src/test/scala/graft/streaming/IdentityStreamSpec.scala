@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.SparkSpec
+import graft.operators.Route
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 /** Streaming identity resolution: components grow across batches; a late
@@ -127,12 +128,12 @@ class IdentityStreamSpec extends SparkSpec {
 
     val dir = java.nio.file.Files.createTempDirectory("idstream5").toString
     val input = MemoryStream[(String, String)]
-    // threshold 0 forces the DISTRIBUTED CC path here; the other tests
-    // exercise the default driver-local union-find kernel
     val (writer, mapping) = IdentityStream.resolver(
-      spark, input.toDF().toDF("src", "dst"), s"$dir/labels",
-      localCcThreshold = 0L)
-    val query = writer.start()
+      spark, input.toDF().toDF("src", "dst"), s"$dir/labels")
+    // a 0 edge bound forces the DISTRIBUTED CC path here (the query's
+    // micro-batch thread starts inside the override and keeps it); the
+    // other tests exercise the default driver-local union-find kernel
+    val query = Route.forcing(Route.StreamCcEdges -> 0L)(writer.start())
     try {
       batches.foreach { b =>
         input.addData(b: _*)
