@@ -6,16 +6,16 @@ import org.apache.spark.sql.functions._
 /** Materialize a k-times replica of a testdata directory as REAL parquet
   * (round-13 verdict #4): the full-suite bench at a 10x tier catches
   * operators whose constants work at sf0.1 but whose curves were only
-  * ever probed per-family (ScaleProbe replicates lazily per query; this
-  * writes the replication ONCE so the bench reads genuine files with
-  * genuine row groups, not a 10-way union plan).
+  * ever probed per-family. The replication is written ONCE so the bench
+  * reads genuine files with genuine row groups, not a 10-way union plan:
+  * `MakeTier <src> <out> <k>` then `SPARK_GRAFT_SF_DIR=<out> Bench <filter>`
+  * times the registered query bodies on the tier.
   *
   * Replication model (organic growth, not duplication):
   *   - fact keys are offset per replica by a 1e9 stride (far above every
   *     query-level id offset, e.g. the funnel's 1e5 variant offsets), so
   *     replicas never collide and bounded-id contracts (vec_id < TrainMax
-  *     training slices, < MaxQueryId query sets) keep their fixed size —
-  *     the ScaleProbe convention;
+  *     training slices, < MaxQueryId query sets) keep their fixed size;
   *   - document text goes through a per-replica word-substitution cipher
   *     (every word gains a replica suffix; replica 0 is byte-identical to
   *     the source): intra-replica dup/near-dup structure is preserved

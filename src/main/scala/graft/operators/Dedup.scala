@@ -63,20 +63,6 @@ object Dedup {
       .withWatermark("ts", delay)
       .dropDuplicatesWithinWatermark("text_hash")
 
-  /** Streaming CORPUS-EXTENSION exact dedup: intra-stream copies collapse
-    * via the watermark store, then arrivals whose content hash already
-    * exists in the persisted corpus index are dropped by a stream-static
-    * anti-join — the streaming twin of q_dedup_incremental's admit path.
-    * `corpusHashes` is a static (text_hash) relation; in production the
-    * write-time-bucketed index (cf. writeBandIndex) so the per-batch
-    * anti-join prunes to the probed buckets instead of re-scanning the
-    * corpus. State stays bounded: only the watermark dedup store.
-    */
-  def exactStreamAgainstIndex(docs: DataFrame, text: Column, delay: String,
-                              corpusHashes: DataFrame): DataFrame =
-    exactStream(docs, text, delay)
-      .join(corpusHashes, Seq("text_hash"), "left_anti")
-
   // -------------------------------------------------------------- minhash
 
   /** Base for positional rolling-hash composition of shingles. */
@@ -470,10 +456,9 @@ object Dedup {
 
   /** Cross-set candidates: distinct (a = index id, b = probe id) sharing
     * a band bucket — the INCREMENTAL shape. `index` is the persisted
-    * corpus band table (in production written once, bucketed on
-    * (band, key)); `probe` is a new batch's bands. Cost is the probe's
-    * band rows joined against the index — ∝ the new batch, never a
-    * re-pass over the corpus.
+    * corpus band table; `probe` is a new batch's bands. Cost is the
+    * probe's band rows joined against the index — ∝ the new batch, never
+    * a re-pass over the corpus.
     */
   def candidatePairsAcross(index: DataFrame, probe: DataFrame): DataFrame = {
     val l = index.as("l"); val r = probe.as("r")
@@ -483,23 +468,14 @@ object Dedup {
       .distinct()
   }
 
-  /** Persist the corpus band table BUCKETED on exactly the probe-join
-    * keys (band, key). At 100 TB this is what makes corpus-extension
-    * dedup incremental in practice, not just in plan shape: the probe
-    * join reuses the write-time bucketing, so only the NEW BATCH's band
-    * rows shuffle — the corpus-sized index is read in place, never
-    * re-partitioned (asserted in BucketingSpec).
-    */
-  def writeBandIndex(bands: DataFrame, table: String, path: String,
-                     buckets: Int = 64): Unit =
-    bands.write.mode("overwrite").option("path", path)
-      .bucketBy(buckets, "band", "key").sortBy("band", "key")
-      .saveAsTable(table)
-
-  /** Key-slot count for the PRUNED band-index layout. Size it so expected
-    * probe-batch keys ≪ slots (each slot is a partition directory; at
-    * 100 TB use thousands — a slot directory is still huge there, and a
-    * batch of B docs probes ≤ B×Bands slots regardless of corpus size).
+  /** Key-slot count of the PRUNED band-index layout — the modulus
+    * `CurationPipeline.compact` writes every generation with (and records
+    * in its `_COMMITTED` marker). Size it so expected probe-batch keys ≪
+    * slots: each slot is a partition directory, and a batch of B docs
+    * probes ≤ B×Bands slots regardless of corpus size. At 100 TB a slot
+    * directory is still huge; this constant is the thing to raise
+    * (thousands). Generations already written keep the modulus their
+    * marker records.
     */
   val IndexKeyParts = 256
 
@@ -510,103 +486,17 @@ object Dedup {
   def keyPart(key: Column, parts: Int): Column =
     pmod(xxhash64(key), lit(parts.toLong)).cast("int")
 
-  /** Column-metadata key carrying the slot count an index was written
-    * with. The modulus is part of the LAYOUT: probing with a different
-    * one computes wrong slot sets and silently ADMITS true near-dups, so
-    * it must travel with the index, not live in a code comment.
-    */
-  val KeyPartsMetaKey = "graft.keyParts"
-
-  /** Persist the band index PARTITIONED by key slot and bucketed on
-    * (band, key). `writeBandIndex`'s bucket-only layout already avoids
-    * re-shuffling the corpus per probe, but every probe still SCANS the
-    * whole index (the ScaleProbe curve tracks corpus size even for a
-    * fixed batch). With this layout a probe batch prunes the read to the
-    * partition directories its keys hash into — admission cost tracks
-    * the BATCH's key-slot count, not the corpus (BucketingSpec asserts
-    * the production probe's scan reads files ⊆ probed slots).
-    *
-    * `keyParts` is recorded as metadata on the `kp` column (it survives
-    * saveAsTable's catalog schema), so table-read probes resolve the
-    * written modulus instead of assuming the default.
-    */
-  def writeBandIndexPruned(bands: DataFrame, table: String, path: String,
-                           keyParts: Int = IndexKeyParts,
-                           buckets: Int = 8): Unit = {
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putLong(KeyPartsMetaKey, keyParts.toLong).build()
-    bands.withColumn("kp", keyPart(col("key"), keyParts).as("kp", meta))
-      .write.mode("overwrite").option("path", path)
-      .partitionBy("kp")
-      .bucketBy(buckets, "band", "key").sortBy("band", "key")
-      .saveAsTable(table)
-  }
-
-  /** The slot count a pruned index was written with, from the `kp`
-    * column's metadata; None for an index whose read path lost the
-    * metadata (e.g. a raw `spark.read.parquet` over the directory, where
-    * partition columns are inferred from directory names).
-    */
-  def indexKeyParts(index: DataFrame): Option[Int] = {
-    val f = index.schema.fields.find(_.name == "kp")
-    f.collect {
-      case sf if sf.metadata.contains(KeyPartsMetaKey) =>
-        sf.metadata.getLong(KeyPartsMetaKey).toInt
-    }
-  }
-
-  /** Resolve the modulus to probe a pruned index with: its persisted
-    * metadata when present, else the default — VERIFIED two ways, because
-    * probing with the wrong modulus silently admits near-duplicates:
-    *  - max(kp) < default: an index written with a MULTIPLE of the default
-    *    (e.g. 512) has rows in slots ≥ 256, but every row in a slot < 256
-    *    is consistent with the default (hash ≡ kp mod 512 ⇒ hash mod 256 =
-    *    kp there) — an unordered sample drawn from low-slot partition
-    *    directories would false-pass, so the multiple case needs the max.
-    *  - a 1000-row consistency sample: an index written with a DIVISOR of
-    *    the default (e.g. 64) disagrees with it on 3/4 of rows in every
-    *    slot, so any sample region catches it with overwhelming
-    *    probability (and max(kp) would pass).
-    */
-  private def resolveKeyParts(index: DataFrame): Int =
-    indexKeyParts(index).getOrElse {
-      val mxRow = index.agg(max(col("kp"))).head
-      require(!mxRow.isNullAt(0) && mxRow.getInt(0) < IndexKeyParts,
-        s"pruned band index carries no $KeyPartsMetaKey metadata and holds " +
-          s"key slots ≥ the default keyParts=$IndexKeyParts (max kp = " +
-          s"${if (mxRow.isNullAt(0)) "none" else mxRow.getInt(0)}) — it was " +
-          "written with a larger modulus; pass the written keyParts to " +
-          "candidatePairsAcrossPruned explicitly")
-      val bad = index.select(col("key"), col("kp")).limit(1000)
-        .filter(keyPart(col("key"), IndexKeyParts) =!= col("kp")).count()
-      require(bad == 0,
-        s"pruned band index carries no $KeyPartsMetaKey metadata and its kp " +
-          s"values are inconsistent with the default keyParts=$IndexKeyParts " +
-          "— pass the written keyParts to candidatePairsAcrossPruned explicitly")
-      IndexKeyParts
-    }
-
-  /** Cross-set candidates against a PRUNED index, resolving the written
-    * key-slot modulus from the index itself (metadata, else a verified
-    * default — see `resolveKeyParts`).
-    */
-  def candidatePairsAcrossPruned(index: DataFrame, probe: DataFrame): DataFrame =
-    candidatePairsAcrossPruned(index, probe, resolveKeyParts(index))
-
-  /** Cross-set candidates against a PRUNED index with an explicit slot
-    * modulus: collect the probe's distinct key slots (bounded by
-    * min(keyParts, probe keys) ints — driver-safe) and restrict the index
-    * scan to those partitions with a literal IN, which Spark turns into
-    * static partition pruning. `keyParts` MUST equal the value the index
-    * was written with; when the index carries metadata the two are
-    * cross-checked.
+  /** Cross-set candidates against a PRUNED index (a `kp` key-slot
+    * partition column): collect the probe's distinct key slots (bounded
+    * by min(keyParts, probe keys) ints — driver-safe) and restrict the
+    * index scan to those partitions with a literal IN, which Spark turns
+    * into static partition pruning. `keyParts` MUST equal the value the
+    * index was written with — probing with another modulus computes wrong
+    * slot sets and silently ADMITS true near-dups; `CurationPipeline`
+    * passes the one its generation marker records.
     */
   def candidatePairsAcrossPruned(index: DataFrame, probe: DataFrame,
                                  keyParts: Int): DataFrame = {
-    indexKeyParts(index).foreach { written =>
-      require(written == keyParts,
-        s"index written with keyParts=$written but probed with $keyParts")
-    }
     val slots = probe.select(keyPart(col("key"), keyParts).as("kp"))
       .distinct().collect().map(_.getInt(0)).toSeq
     candidatePairsAcross(
@@ -629,18 +519,18 @@ object Dedup {
         col("inter") * 1.0 / (col("sza") + col("szb") - col("inter")))
   }
 
-  // ------------------------------------------- streaming near-dup guard
+  // ------------------------------------------------ rowwise signatures
 
   /** Per-ROW minhash signatures — the stateless twin of
     * `shingleHashes` → `minhashSignatures`: the per-doc distinct shingle
     * set comes out of the codegen'd ShingleHashArray expression where the
     * row already is, and each register m_i = array_min of (h*a_i+b_i) % P
     * over that array. Same integers as the groupBy path (parity asserted
-    * in StreamNearDupSpec), but computed entirely map-side — which is what
-    * makes the STREAMING band probe possible: a streaming groupBy would
-    * put a state store in the plan; this needs none. Docs with < n words
-    * have no shingles and are excluded, mirroring the batch path (they
-    * produce no shingle rows there).
+    * in StreamNearDupSpec), but computed entirely map-side with no
+    * shuffle — the shape a per-micro-batch admit (`CurationPipeline`)
+    * and a probe batch's band keys need. Docs with < n words have no
+    * shingles and are excluded, mirroring the batch path (they produce no
+    * shingle rows there).
     */
   def minhashSignaturesRowwise(docs: DataFrame, id: Column, text: Column,
                                n: Int): DataFrame = {
@@ -666,51 +556,6 @@ object Dedup {
           org.apache.spark.sql.graft.ArrayExpressions.shingleHashes(text, n))
           .as("rs"))
       .select(col("id") +: regs: _*)
-  }
-
-  /** Streaming corpus-extension near-dup probe: each arriving doc's band
-    * keys (computed map-only via `minhashSignaturesRowwise`) are equi-
-    * joined against the PERSISTED corpus band index — the stream-static
-    * analogue of `candidatePairsAcross`, and the near-dup twin of
-    * `exactStreamAgainstIndex`. Emits (a = corpus id, b = probe id, band)
-    * candidate hits in append mode; a pair colliding in k bands appears k
-    * times (k <= Bands) — the downstream Jaccard verify deduplicates,
-    * exactly as the batch funnel's `distinct()` does. The plan is
-    * stateless (no watermark, no state store — asserted in
-    * StreamNearDupSpec): at 100 TB the per-batch cost is the NEW batch's
-    * band rows probed into the write-time-bucketed index
-    * (`writeBandIndex`), never a re-pass over the corpus.
-    */
-  def bandProbeStream(docs: DataFrame, id: Column, text: Column, n: Int,
-                      index: DataFrame): DataFrame = {
-    val probe = bandKeys(minhashSignaturesRowwise(docs, id, text, n))
-    probe.as("r").join(index.as("l"),
-        col("l.band") === col("r.band") && col("l.key") === col("r.key"))
-      .select(col("l.id").as("a"), col("r.id").as("b"), col("r.band").as("band"))
-  }
-
-  /** Doc-level near-dup ADMIT for one micro-batch (run inside
-    * `foreachBatch`): arrivals none of whose bands hit the corpus index
-    * are admitted. The any-band OR needs a per-doc aggregation (distinct
-    * hit ids + anti-join), which streaming append mode cannot express
-    * without state — foreachBatch gives it batch semantics per
-    * micro-batch with zero streaming state, the idiomatic Spark shape for
-    * a guarded admit stage.
-    */
-  def nearDupAdmitBatch(batch: DataFrame, id: Column, text: Column, n: Int,
-                        index: DataFrame): DataFrame = {
-    val probeBands = bandKeys(minhashSignaturesRowwise(batch, id, text, n))
-    // a pruned-layout index (writeBandIndexPruned) carries its key-slot
-    // column; probe it with partition pruning so each micro-batch reads
-    // only the slots its keys hash into, not the whole corpus index. The
-    // written modulus is resolved from the index's kp-column metadata
-    // (else verified against the default) — see resolveKeyParts.
-    val hits =
-      if (index.columns.contains("kp"))
-        candidatePairsAcrossPruned(index, probeBands)
-      else candidatePairsAcross(index, probeBands)
-    batch.join(hits.select(col("b").as("__hit_id")).distinct(),
-      id === col("__hit_id"), "left_anti")
   }
 
   // ---------------------------------------------------- minhash oracle SQL
@@ -905,32 +750,13 @@ object Dedup {
     * map-side by the native `SimhashBits` expression — no explode, no
     * `SimBits`-sum groupBy, no shuffle (the expression's scaladoc carries
     * the exact-equivalence argument; SimhashParitySpec holds it equal to
-    * the old explode + groupBy formulation, kept below for the spec).
+    * the explode + groupBy formulation `simhashSql` replays).
     */
   def simhash(docs: DataFrame, id: Column, text: Column): DataFrame =
     // null text has no words: no row, as in the explode+groupBy contract
     docs.filter(text.isNotNull).select(id.as("id"),
       org.apache.spark.sql.graft.ArrayExpressions
         .simhashBits(text, SimBits).as("simhash"))
-
-  /** The r18-era explode + groupBy SimHash — retained ONLY as the parity
-    * reference for SimhashParitySpec (same integers as `simhash`; the
-    * query path uses the map-side expression above).
-    */
-  private[graft] def simhashViaGroupBy(docs: DataFrame, id: Column,
-                                       text: Column): DataFrame = {
-    val wordRows = docs.select(id.as("id"),
-        explode(TextOps.words(text)).as("w"))
-      .select(col("id"), TextOps.hash64(col("w")).as("h"))
-    val sums = (0 until SimBits).map { j =>
-      sum(shiftright(col("h"), j).bitwiseAND(1) * 2 - 1).as(s"s$j")
-    }
-    val sig = (0 until SimBits).map { j =>
-      when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-    wordRows.groupBy(col("id")).agg(sums.head, sums.tail: _*)
-      .select(col("id"), sig.as("simhash"))
-  }
 
   def simhashSql: String = {
     val sums = (0 until SimBits)

@@ -150,7 +150,7 @@ object Ivf {
     // ~hundreds of samples per centroid): the default fits the oracle-
     // replayed bench tier (k <= 64); a deployment growing k to bound
     // cell population passes a proportionally larger sample — see
-    // ScaleProbe's ivf_query_k256 (trainMax = 2x its k)
+    // USAGE.md's k = 4096 example (trainMax = 256 x k)
     // an undersized training bound must fail loudly: seeding takes the
     // first k train vectors, so k > trainMax would silently yield at most
     // trainMax centroids instead of k

@@ -58,7 +58,7 @@ object Pq {
                        // Standard practice (FAISS trains on ~256*K samples)
                        // is a bounded sample; the deterministic id cut keeps
                        // the sample replayable in both engines and constant
-                       // under corpus growth (ScaleProbe replicas carry
+                       // under corpus growth (MakeTier replicas carry
                        // offset ids, so the training set never grows with k).
 
   /** Rounded squared L2, identical expression tree in both engines:

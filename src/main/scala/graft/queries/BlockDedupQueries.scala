@@ -131,9 +131,7 @@ object BlockDedupQueries {
       blockRebuild(DedupQueries.withTruncatedCopies(s, dir))
     })
 
-  /** q_dedup_blocks body over an arbitrary (id, text) corpus (shared with
-    * the scale probe).
-    */
+  /** q_dedup_blocks body over an arbitrary (id, text) corpus. */
   def blockStats(docs: DataFrame): DataFrame =
     marked(docs)
       .groupBy(col("id").as("doc_id"))
@@ -142,9 +140,7 @@ object BlockDedupQueries {
         Num.r4(sum(when(col("k") =!= col("k0"), 1L).otherwise(0L)) * 1.0
           / count(lit(1))).as("dup_frac"))
 
-  /** q_dedup_block_rebuild body over an arbitrary (id, text) corpus
-    * (shared with the scale probe).
-    */
+  /** q_dedup_block_rebuild body over an arbitrary (id, text) corpus. */
   def blockRebuild(docs: DataFrame): DataFrame = {
     val agg = marked(docs)
       .filter(col("k") === col("k0"))

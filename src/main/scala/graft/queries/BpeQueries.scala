@@ -51,10 +51,9 @@ object BpeQueries {
       tokenCount(Tables.documents(s, dir))
     })
 
-  /** q_bpe_token_count body over an arbitrary documents relation (the
-    * scale probe feeds replicated inputs through the same code the query
-    * runs): train the merge table on the corpus, then broadcast the
-    * word->symbol-count dictionary over one corpus word scan.
+  /** q_bpe_token_count body over an arbitrary documents relation: train
+    * the merge table on the corpus, then broadcast the word->symbol-count
+    * dictionary over one corpus word scan.
     */
   def tokenCount(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val dict = Bpe.train(docs)._2

@@ -20,22 +20,14 @@ object CdpBatch {
   private val kTag = regexp_extract(col("props"), "\"k\":\\s*(\\d+)", 1)
   private val kTagSql = """regexp_extract(props, '"k":\s*(\d+)', 1)"""
 
-  /** Identity edges both sides: u:<user> — k:<tag> with support >= 5.
-    * The events-relation overload is the probe-sharing seam: ScaleProbe
-    * builds the SAME graph shape over replicated events, so a change to
-    * the edge definition (tag source, support threshold) cannot leave the
-    * probe measuring a stale shape.
-    */
-  private[graft] def identityEdges(events: DataFrame): DataFrame =
-    events
+  /** Identity edges both sides: u:<user> — k:<tag> with support >= 5. */
+  private def edges(s: SparkSession, dir: String): DataFrame =
+    Tables.events(s, dir)
       .groupBy(concat(lit("u:"), col("user_id")).as("src"),
         concat(lit("k:"), kTag).as("dst"))
       .agg(count(lit(1)).as("cnt"))
       .filter(col("cnt") >= 5)
       .select("src", "dst")
-
-  private def edges(s: SparkSession, dir: String): DataFrame =
-    identityEdges(Tables.events(s, dir))
 
   // MATERIALIZED: both graph oracles reference the edge relation from
   // several downstream CTEs (components recursively, pagerank once per

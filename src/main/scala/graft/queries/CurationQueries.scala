@@ -788,8 +788,8 @@ object CurationQueries {
     cool
   }
 
-  /** q_curation_funnel body over an arbitrary documents relation (shared
-    * with the scale probe). Builds a PRIVATE FunnelStages — registered
+  /** q_curation_funnel body over an arbitrary documents relation (a test
+    * fixture corpus, say). Builds a PRIVATE FunnelStages — registered
     * queries over a data dir go through `stagesFor` instead, so the five
     * stage dumps and the funnel report share one set of stage leaves.
     */
@@ -875,9 +875,9 @@ object CurationQueries {
     * Lifetime: `pin` records each cache created by a lazy-val body;
     * `close()` unpersists them (the localCheckpoint leaves are GC-managed
     * once the instance is unreferenced). Callers either scope an instance
-    * themselves (ScaleProbe's replicated inputs) or go through the shared
+    * themselves (MakeFunnel, `funnel`) or go through the shared
     * `stagesFor`/`releaseStages` pair above.
-    * Verify/Bench/ScaleProbe clear the cache after each query; a
+    * Verify/Bench clear the cache after each query; a
     * long-lived session embedding the funnel should clearCache() or
     * unpersist after consuming the result.
     */
@@ -981,7 +981,7 @@ object CurationQueries {
       // Jaccard verify, surv2, the stage agg) — a cache keeps the full
       // corpus lineage in the logical plan, and each downstream reference
       // textually duplicates it, so when the input is itself a wide union
-      // (the 100x scale probe replicates sf0.1 as a 100-way unionAll) the
+      // (a k-fold replica assembled as a 100-way unionAll, say) the
       // verify's analyzed tree reaches ~1000 duplicated scan subtrees and
       // every action pays ~tens of seconds of pure driver analysis on a
       // 368 MB plan string (measured at k=100: jaccard verify 68 s, of
@@ -1315,9 +1315,8 @@ object CurationQueries {
       })
   }
 
-  /** q_train_eval_contamination body over an arbitrary documents relation
-    * (the scale probe feeds replicated inputs through the same code the
-    * query runs).
+  /** q_train_eval_contamination body over an arbitrary documents
+    * relation.
     */
   def contamination(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // Driver kernel for bounded corpora — decontamTrain's twin with the

@@ -225,7 +225,7 @@ object DedupQueries {
         // localCheckpoint, not cache: jaccard references sh FOUR times (both
         // join sides + the size table twice) and each reference duplicates
         // sh's entire logical lineage in the analyzed plan — against a
-        // wide-union input (the 100x probe's replicated corpus) that tree
+        // wide-union input (a 100-way replicated corpus) that tree
         // reaches hundreds of MB and every downstream action pays tens of
         // seconds of driver-side analysis before any task runs. A checkpoint
         // leaf keeps the verify plan O(1) in input lineage; the table is
@@ -1284,15 +1284,15 @@ object DedupQueries {
       incrementalDedup(s, base(s, dir), truncatedCopiesOnly(s, dir))
     },
 
-    // Doc-level near-dup ADMIT over the persisted index — the batch twin
-    // of the STREAMING guard (Dedup.bandProbeStream/nearDupAdmitBatch,
-    // StreamNearDupSpec): each probe doc's bands come from the PER-ROW
-    // signature path (map-only, the one the stateless stream probe uses;
-    // parity with the groupBy path is exactly what the oracle certifies,
-    // since the SQL side computes registers via GROUP BY), hits are the
-    // stream-static candidatePairsAcross equijoin, and a doc is admitted
+    // Doc-level near-dup ADMIT over the persisted index — the oracle-
+    // checked shape of the served `/corpus/ingest` corpus band probe
+    // (CurationPipeline.corpusBandHits): each probe doc's bands come from
+    // the PER-ROW signature path (map-only, the one the served admit
+    // uses; parity with the groupBy path is exactly what the oracle
+    // certifies, since the SQL side computes registers via GROUP BY),
+    // hits are the candidatePairsAcross equijoin, and a doc is admitted
     // iff NO corpus band bucket matched. Cost ∝ the probe batch against
-    // the bucketed index — never a corpus re-pass.
+    // the index — never a corpus re-pass.
     QueryDef(
       "q_neardup_admit",
       s"""WITH $truncatedBaseSql,
@@ -1615,7 +1615,7 @@ object DedupQueries {
     spans.join(duph, Seq("h"), "left_semi").select(col("id"), col("pos"))
   }
 
-  /** q_dedup_span_runs body (shared with the scale probe). */
+  /** q_dedup_span_runs body. */
   def spanRuns(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val starts = dupStarts(docs)
@@ -1635,8 +1635,7 @@ object DedupQueries {
         (coalesce(col("longest"), lit(0L)) >= CutTokens).as("cut50"))
   }
 
-  /** q_dedup_span_survivors body (shared with the scale probe): materialize
-    * the ExactSubstr cut as a per-doc keep/trim/drop manifest with exact
+  /** q_dedup_span_survivors body: materialize the ExactSubstr cut as a per-doc keep/trim/drop manifest with exact
     * cut-token counts.
     */
   def spanSurvivors(docs: DataFrame): DataFrame = {
@@ -1769,9 +1768,7 @@ object DedupQueries {
     out.result()
   }
 
-  /** q_dedup_spans body over an arbitrary documents relation (shared with
-    * the scale probe).
-    */
+  /** q_dedup_spans body over an arbitrary documents relation. */
   def dupSpans(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val starts = dupStarts(docs)

@@ -365,9 +365,7 @@ object EventAnalytics {
       saxWords(Tables.events(s, dir))
     })
 
-  /** q_session_paths body over an arbitrary events relation (the scale
-    * probe feeds replicated inputs through the same code the query runs).
-    */
+  /** q_session_paths body over an arbitrary events relation. */
   def sessionPaths(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val w = Window.partitionBy(col("user_id"), col("session_idx"))
       .orderBy(col("ts"), col("event_id"))
@@ -383,10 +381,7 @@ object EventAnalytics {
       .limit(20)
   }
 
-  /** q_retention_cohorts body over an arbitrary events relation (the
-    * scale probe feeds replicated inputs through the same code the query
-    * runs).
-    */
+  /** q_retention_cohorts body over an arbitrary events relation. */
   def retentionCohorts(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val firstSeen = events.groupBy(col("user_id"))
       .agg(expr("min(unix_micros(ts)) div 86400000000").as("cohort_day"))
@@ -398,9 +393,7 @@ object EventAnalytics {
       .agg(countDistinct(col("user_id")).as("active_users"))
   }
 
-  /** q_event_transitions body over an arbitrary events relation (same
-    * probe-sharing contract as above).
-    */
+  /** q_event_transitions body over an arbitrary events relation. */
   def eventTransitions(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     events
@@ -412,9 +405,7 @@ object EventAnalytics {
         col("n") * 1.0 / sum(col("n")).over(Window.partitionBy(col("event_type")))))
   }
 
-  /** q_pattern_negation body over an arbitrary events relation (the scale
-    * probe feeds replicated inputs through the same code the query runs).
-    */
+  /** q_pattern_negation body over an arbitrary events relation. */
   def patternNegation(events: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
     val o = events.withColumn("errs",

@@ -140,10 +140,10 @@ object LmQueries {
       (s, dir) => classifierFilter(Tables.documents(s, dir))
     })
 
-  /** q_bigram_logprob body over an arbitrary documents relation (shared
-    * with the scale probe). Model tables c1/c2 are train-slice-sized
-    * dictionaries — broadcast; the scoring unions the first-token stream
-    * with the bigram stream and reduces per doc.
+  /** q_bigram_logprob body over an arbitrary documents relation. Model
+    * tables c1/c2 are train-slice-sized dictionaries — broadcast; the
+    * scoring unions the first-token stream with the bigram stream and
+    * reduces per doc.
     */
   def bigramLogprob(docs: DataFrame): DataFrame = {
     // tokenize ONCE: five streams (train unigrams, train bigrams, vocab,
@@ -201,9 +201,9 @@ object LmQueries {
       .withColumn("kept", col("ppl") <= PplKeep)
   }
 
-  /** q_classifier_filter body over an arbitrary documents relation (shared
-    * with the scale probe). The weight table is vocab-sized (broadcast);
-    * scoring is one equijoin + per-doc sum.
+  /** q_classifier_filter body over an arbitrary documents relation. The
+    * weight table is vocab-sized (broadcast); scoring is one equijoin +
+    * per-doc sum.
     */
   def classifierFilter(docs: DataFrame): DataFrame = {
     // tokenize ONCE (see bigramLogprob): class counts, vocab, doc counts,

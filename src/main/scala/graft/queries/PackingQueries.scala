@@ -24,8 +24,7 @@ object PackingQueries {
   val ChunkSize = 40
   val ChunkStride = 30
 
-  /** q_chunk_manifest body (shared with the scale probe): one row per
-    * (doc, chunk window). Entirely map-side — tokenize, explode the
+  /** q_chunk_manifest body: one row per (doc, chunk window). Entirely map-side — tokenize, explode the
     * arithmetic start positions, slice; NO shuffle anywhere, so at 100 TB
     * this is a single pass over the text bytes, embarrassingly parallel,
     * and composes with any upstream filter without a re-partition.

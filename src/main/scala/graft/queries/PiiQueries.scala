@@ -109,10 +109,7 @@ object PiiQueries {
   private def withPii(documents: DataFrame): DataFrame =
     documents.select(col("doc_id"), piiText.as("text"))
 
-  /** Query bodies over an arbitrary documents relation — the scale probe
-    * feeds replicated inputs through the same code the registered queries
-    * run.
-    */
+  /** Query bodies over an arbitrary documents relation. */
   def scan(documents: DataFrame): DataFrame =
     withPii(documents).select(
       col("doc_id"),

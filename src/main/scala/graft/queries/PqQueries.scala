@@ -187,17 +187,8 @@ object PqQueries {
   /** Shared IVF-PQ assembly: probed-cell candidates, the query distance
     * table, and the code table.
     */
-  private def ivfPqParts(s: SparkSession, dir: String) =
-    ivfPqPartsOver(s, Tables.embeddings(s, dir))
-
-  /** IVF-PQ assembly over an arbitrary embeddings relation — the
-    * probe-sharing seam (ScaleProbe drives replicated corpora through the
-    * exact production composition; queries stay the fixed < MaxQueryId
-    * originals, so the curve isolates corpus growth).
-    */
-  private[graft] def ivfPqPartsOver(s: SparkSession,
-      embeddings: org.apache.spark.sql.DataFrame) = {
-    val prepN = Similarity.prepared(embeddings).cache()
+  private def ivfPqParts(s: SparkSession, dir: String) = {
+    val prepN = Similarity.prepared(Tables.embeddings(s, dir)).cache()
     val cents = Ivf.centroids(prepN, IvfK).cache()
     // map-only cell assignment (no corpus-wide window shuffle); identical
     // results to Ivf.assign by the assignBroadcast parity contract

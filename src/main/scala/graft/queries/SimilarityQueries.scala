@@ -491,9 +491,7 @@ object SimilarityQueries {
           col("b_label"), col("cosr").as("cos"))
     })
 
-  /** q_embed_quantize body over an arbitrary embeddings relation (the
-    * scale probe feeds replicated inputs through the same code).
-    */
+  /** q_embed_quantize body over an arbitrary embeddings relation. */
   def quantize(embeddings: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     embeddings
       .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("e"))

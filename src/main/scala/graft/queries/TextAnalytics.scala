@@ -45,8 +45,7 @@ object TextAnalytics {
     vocab.repartitionByRange(math.max(nPart, 2), col("cnt").desc, col("w"))
       .sortWithinPartitions(col("cnt").desc, col("w"))
 
-  /** q_token_rarity body over an arbitrary documents relation (the scale
-    * probe feeds replicated inputs through the same code the query runs).
+  /** q_token_rarity body over an arbitrary documents relation.
     * NOTE: construction is EAGER — repartitionByRange samples and
     * zipWithIndex runs its offset job when the DataFrame is built; that is
     * the price of a shuffle-scalable global rank (see the QueryDef
@@ -997,9 +996,7 @@ object TextAnalytics {
     SmallResult(out, bb, freq)
   }
 
-  /** q_vocab_growth body over an arbitrary documents relation (shared
-    * with the scale probe).
-    */
+  /** q_vocab_growth body over an arbitrary documents relation. */
   def vocabGrowth(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val mx = docs.agg((max(col("doc_id")) + 1).as("m"))
@@ -1026,9 +1023,7 @@ object TextAnalytics {
     SmallResult(out, b)
   }
 
-  /** q_novel_ngrams body over an arbitrary documents relation (shared
-    * with the scale probe).
-    */
+  /** q_novel_ngrams body over an arbitrary documents relation. */
   def novelNgrams(docs: DataFrame): DataFrame = {
     val s = docs.select(col("doc_id").as("id"), col("text"),
       CurationQueries.splitCol(col("doc_id")).as("split")).cache()
@@ -1048,9 +1043,7 @@ object TextAnalytics {
     SmallResult(arms.reduce(_ unionAll _), s)
   }
 
-  /** q_unigram_logprob body over an arbitrary documents relation (shared
-    * with the scale probe).
-    */
+  /** q_unigram_logprob body over an arbitrary documents relation. */
   def unigramLogprob(docs: DataFrame): DataFrame = {
     // wpos feeds both the LM build and the scoring join — cache so the
     // corpus tokenizes once (at scale: persist the token table per pass)
@@ -1067,9 +1060,7 @@ object TextAnalytics {
         Num.r4(exp(-avg(col("logp")))).as("ppl"))
   }
 
-  /** q_dsir_weights body over an arbitrary documents relation (shared
-    * with the scale probe).
-    */
+  /** q_dsir_weights body over an arbitrary documents relation. */
   def dsirWeights(docs: DataFrame): DataFrame = {
     // wpos feeds the raw model, the target model, and the scoring join —
     // cache so the corpus tokenizes once
@@ -1093,9 +1084,7 @@ object TextAnalytics {
       .withColumn("kept", col("dsir_logratio") > 0)
   }
 
-  /** q_source_mix_kl body over an arbitrary documents relation (shared
-    * with the scale probe).
-    */
+  /** q_source_mix_kl body over an arbitrary documents relation. */
   def sourceMixKl(docs: DataFrame): DataFrame = {
     val (out, sw) = sourceMixKlLazy(docs)
     SmallResult(out, sw)

@@ -23,7 +23,7 @@ import graft.queries.PiiQueries
   *
   * Per micro-batch (`foreachBatch`, batch semantics — the any-band OR of
   * the near-dup admit needs a per-doc aggregation append mode cannot
-  * express without state, see `Dedup.nearDupAdmitBatch`), an admit runs
+  * express without state), an admit runs
   * one fetch, two index probes (together in one action) and two appends:
   *   1. fetch: ONE action scrubs every doc (`PiiQueries.redactExpr` —
   *      map-only, no injection: real arrivals carry their own PII, and the
@@ -80,9 +80,9 @@ import graft.queries.PiiQueries
   *                admitting batch
   *   band_tail/   append-only (id, band, key) parquet
   *   gen_<v>/     a compacted generation: `hash/` (distinct hashes),
-  *                `bands/` (partitioned by key slot `kp` — the
-  *                `Dedup.writeBandIndexPruned` pruning layout, probed with
-  *                partition pruning so a batch reads only its own key
+  *                `bands/` (partitioned by key slot
+  *                `kp = Dedup.keyPart(key, Dedup.IndexKeyParts)`, probed
+  *                with partition pruning so a batch reads only its own key
   *                slots), and a `_COMMITTED` marker recording the written
   *                keyParts and the tail files the generation absorbed.
   * Readers resolve latest committed generation ∪ non-absorbed tail files
@@ -369,7 +369,7 @@ object CurationPipeline {
     gen match {
       case Some(g) =>
         // the partition column kp arrives via directory discovery; the
-        // written modulus comes from the commit marker, not metadata
+        // written modulus comes from the commit marker
         val genBands = cachedGenRead(spark, root, g.dir, "bands",
           spark.read
             .schema(StructType.fromDDL(s"$BandSchema, kp INT"))
@@ -574,9 +574,12 @@ object CurationPipeline {
     * only by the NEXT compaction (grace window for a reader that resolved
     * the old generation just before the commit). Safe to run concurrently
     * with appends: files appended after the snapshot stay live tail.
+    * Every generation is written with `Dedup.IndexKeyParts` slots; the
+    * marker records the modulus, so readers probe each generation with
+    * the one it was written with.
     */
-  def compact(spark: SparkSession, root: String,
-              keyParts: Int = Dedup.IndexKeyParts): Generation = {
+  def compact(spark: SparkSession, root: String): Generation = {
+    val keyParts = Dedup.IndexKeyParts
     val f = fs(spark, root)
     val prev = currentGeneration(spark, root)
 

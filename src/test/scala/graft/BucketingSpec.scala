@@ -42,135 +42,4 @@ class BucketingSpec extends SparkSpec {
       spark.sql("DROP TABLE IF EXISTS t_profiles")
     }
   }
-
-  test("persisted LSH band index probes without re-shuffling the corpus side") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_bandidx").toString
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    try {
-      def bands(docs: Seq[(Long, String)]) =
-        Dedup.bandKeys(Dedup.minhashSignatures(Dedup.shingleHashes(
-          docs.toDF("id", "text"), col("id"), col("text"), 3)))
-      val corpusDocs = (0L until 40L).map(i =>
-        (i, s"the quick brown fox jumps over dog number ${i % 5} again and again"))
-      val batchDocs = (100L until 110L).map(i =>
-        (i, s"the quick brown fox jumps over dog number ${i % 5} again and again"))
-      Dedup.writeBandIndex(bands(corpusDocs), "t_band_index", s"$dir/idx", buckets = 8)
-      val index = spark.table("t_band_index")
-      val got = Dedup.candidatePairsAcross(index, bands(batchDocs))
-      val plan = got.queryExecution.executedPlan.toString
-      // the corpus-side scan must be bucketed and feed the join with NO
-      // exchange; only the probe side may shuffle
-      assert(plan.contains("SortMergeJoin"), s"expected SMJ:\n$plan")
-      assert(plan.contains("Bucketed: true"),
-        s"index scan must report bucketed read:\n$plan")
-      // the index child prints first under the SMJ: no Exchange may occur
-      // between the join and the bucketed corpus scan
-      val indexSide = plan.substring(plan.indexOf("SortMergeJoin"),
-        plan.indexOf("Bucketed: true"))
-      assert(!indexSide.contains("Exchange"),
-        s"corpus-side index must not re-shuffle:\n$plan")
-      // parity: same candidates as the unbucketed in-memory index
-      val want = Dedup.candidatePairsAcross(bands(corpusDocs), bands(batchDocs))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val gotSet = got.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(gotSet == want && want.nonEmpty)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS t_band_index")
-    }
-  }
-
-  test("PRUNED band index: small probe reads only its key-slot partitions") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_bandidx_p").toString
-    try {
-      def bands(docs: Seq[(Long, String)]) =
-        Dedup.bandKeys(Dedup.minhashSignatures(Dedup.shingleHashes(
-          docs.toDF("id", "text"), col("id"), col("text"), 3)))
-      // 120 distinct texts -> 720 band keys spread over the 64 slots; the
-      // 2-doc probe carries <= 12 keys -> <= 12 slots
-      val corpusDocs = (0L until 120L).map(i =>
-        (i, s"corpus document number $i speaks about topic ${i % 40} at length"))
-      val batchDocs = Seq(
-        (500L, "corpus document number 7 speaks about topic 7 at length"),
-        (501L, "an entirely novel probe document about something else entirely"))
-      val keyParts = 64
-      Dedup.writeBandIndexPruned(bands(corpusDocs), "t_band_index_p",
-        s"$dir/idx", keyParts = keyParts, buckets = 4)
-      val index = spark.table("t_band_index_p")
-      // the written modulus travels with the index: the 2-arg probe below
-      // resolves it from kp-column metadata, so a custom keyParts can never
-      // be silently probed with the default
-      assert(Dedup.indexKeyParts(index).contains(keyParts),
-        s"kp metadata lost: ${index.schema("kp").metadata}")
-      val probe = bands(batchDocs).cache()
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      // AQE off so the executed plan exposes the index scan node directly —
-      // the files-read assertion must observe the PRODUCTION probe's own
-      // scan, not a reconstructed filter that would prune by construction
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      val (gotSet, scans) =
-        try {
-          val got = Dedup.candidatePairsAcrossPruned(index, probe)
-          val g = got.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-          (g, got.queryExecution.executedPlan.collect {
-            case f: org.apache.spark.sql.execution.FileSourceScanExec
-                if f.metadata.get("Location").exists(_.contains("idx")) => f
-          })
-        } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      // parity with the unpruned in-memory probe
-      val want = Dedup.candidatePairsAcross(bands(corpusDocs), probe)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      assert(gotSet == want && want.nonEmpty, s"got $gotSet want $want")
-      val slots = probe.select(Dedup.keyPart(col("key"), keyParts).as("kp"))
-        .distinct().collect().map(_.getInt(0)).toSet
-      assert(slots.size <= 12, s"probe should touch few slots: $slots")
-      // what the production probe's scan ACTUALLY read: its partition count
-      // is bounded by the probed slots, and its file count is a strict
-      // subset of the index (scan metrics, populated by the collect above)
-      assert(scans.nonEmpty, "no FileSourceScanExec over the index in the probe plan")
-      val partsRead = scans.map(_.metrics("numPartitions").value).sum
-      val filesRead = scans.map(_.metrics("numFiles").value).sum
-      val corpusSlots = spark.table("t_band_index_p")
-        .select("kp").distinct().count()
-      assert(partsRead > 0 && partsRead <= slots.size,
-        s"probe plan read $partsRead partitions, probed slots ${slots.size}")
-      val allIndexFiles = index.select(input_file_name().as("f"))
-        .distinct().count()
-      assert(filesRead > 0 && filesRead < allIndexFiles,
-        s"probe plan read $filesRead of $allIndexFiles index files — no pruning")
-      // and the corpus occupies far more slots than the probe touches,
-      // so the pruned read demonstrably skips most of the index
-      assert(corpusSlots > slots.size * 2,
-        s"corpus slots $corpusSlots vs probe slots ${slots.size}")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS t_band_index_p")
-    }
-  }
-
-  test("pruned index probed with the WRONG explicit modulus fails loudly") {
-    import spark.implicits._
-    import graft.operators.Dedup
-    val dir = java.nio.file.Files.createTempDirectory("graft_bandidx_w").toString
-    try {
-      def bands(docs: Seq[(Long, String)]) =
-        Dedup.bandKeys(Dedup.minhashSignatures(Dedup.shingleHashes(
-          docs.toDF("id", "text"), col("id"), col("text"), 3)))
-      val corpus = (0L until 20L).map(i => (i, s"document $i about topic ${i % 7} words"))
-      Dedup.writeBandIndexPruned(bands(corpus), "t_band_index_w",
-        s"$dir/idx", keyParts = 32, buckets = 2)
-      val index = spark.table("t_band_index_w")
-      val probe = bands(Seq((900L, "document 3 about topic 3 words")))
-      val e = intercept[IllegalArgumentException] {
-        Dedup.candidatePairsAcrossPruned(index, probe, 256)
-      }
-      assert(e.getMessage.contains("keyParts=32"))
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS t_band_index_w")
-    }
-  }
 }

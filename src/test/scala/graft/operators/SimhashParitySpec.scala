@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The native map-side SimHash expression (`SimhashBits`) must equal the
@@ -13,6 +14,26 @@ import org.apache.spark.sql.functions._
   * (2 * ones == n -> bit clear).
   */
 class SimhashParitySpec extends SparkSpec {
+
+  /** The r18-era explode + groupBy SimHash — the parity reference for
+    * `Dedup.simhash` (same integers; the query path uses the map-side
+    * expression).
+    */
+  private def simhashViaGroupBy(docs: DataFrame, id: Column,
+                                text: Column): DataFrame = {
+    import Dedup.SimBits
+    val wordRows = docs.select(id.as("id"),
+        explode(TextOps.words(text)).as("w"))
+      .select(col("id"), TextOps.hash64(col("w")).as("h"))
+    val sums = (0 until SimBits).map { j =>
+      sum(shiftright(col("h"), j).bitwiseAND(1) * 2 - 1).as(s"s$j")
+    }
+    val sig = (0 until SimBits).map { j =>
+      when(col(s"s$j") > 0, lit(1L << j)).otherwise(lit(0L))
+    }.reduce(_ + _)
+    wordRows.groupBy(col("id")).agg(sums.head, sums.tail: _*)
+      .select(col("id"), sig.as("simhash"))
+  }
 
   private def corpus(seed: Long, n: Int) = {
     val rnd = new scala.util.Random(seed)
@@ -37,7 +58,7 @@ class SimhashParitySpec extends SparkSpec {
       val docs = (corpus(seed, 120) :+ ((120L, null: String))).toDF("id", "text")
       val fast = Dedup.simhash(docs, col("id"), col("text"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val ref = Dedup.simhashViaGroupBy(docs, col("id"), col("text"))
+      val ref = simhashViaGroupBy(docs, col("id"), col("text"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(fast.keySet == ref.keySet, s"seed $seed: id sets differ")
       assert(!fast.contains(120L), s"seed $seed: null text got a signature")

@@ -42,32 +42,4 @@ class StreamDedupSpec extends SparkSpec {
       assert(ids == Seq(1L, 2L, 4L, 5L, 6L), ids.toString)
     } finally query.stop()
   }
-
-  test("corpus-extension guard: arrivals already in the index are dropped") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    // persisted corpus index: the content hashes already admitted
-    val corpus = Seq("alpha", "beta").toDF("text")
-      .select(md5(col("text")).as("text_hash"))
-    val input = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val query = Dedup.exactStreamAgainstIndex(
-        input.toDF().toDF("id", "ts", "text"), col("text"),
-        delay = "10 minutes", corpusHashes = corpus)
-      .select("id", "text")
-      .writeStream.format("memory").queryName("sdedup_idx")
-      .outputMode("append").start()
-    try {
-      input.addData(
-        (1L, ts("2024-01-01T00:00:00Z"), "alpha"), // in corpus -> dropped
-        (2L, ts("2024-01-01T00:01:00Z"), "gamma")) // new -> admitted
-      query.processAllAvailable()
-      input.addData(
-        (3L, ts("2024-01-01T00:02:00Z"), "gamma"), // intra-stream dup -> dropped
-        (4L, ts("2024-01-01T00:03:00Z"), "beta"),  // in corpus -> dropped
-        (5L, ts("2024-01-01T00:04:00Z"), "delta")) // new -> admitted
-      query.processAllAvailable()
-      val ids = spark.table("sdedup_idx").select("id").as[Long].collect().sorted.toSeq
-      assert(ids == Seq(2L, 5L), ids.toString)
-    } finally query.stop()
-  }
 }

@@ -2,15 +2,12 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.operators.Dedup
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Streaming corpus-extension NEAR-dup guard: arrivals are band-probed
-  * against the persisted LSH index (the near-dup analogue of the exact
-  * `exactStreamAgainstIndex` guard). Three properties pinned here:
-  * parity of the per-row signature path with the batch groupBy path,
-  * parity of the stream-static probe with `candidatePairsAcross`, and the
-  * STATELESSNESS of the probe plan (no state store, no watermark).
+/** Per-row minhash signatures (`Dedup.minhashSignaturesRowwise`, the
+  * shuffle-free shape the corpus-ingest admit computes per micro-batch)
+  * must equal the batch groupBy signatures (`shingleHashes` →
+  * `minhashSignatures`) register for register.
   */
 class StreamNearDupSpec extends SparkSpec {
 
@@ -21,12 +18,6 @@ class StreamNearDupSpec extends SparkSpec {
     (101L, "pack my box with five dozen liquor jugs"),
     (102L, "how vexingly quick daft zebras jump"))
 
-  private val probeDocs = Seq(
-    (1L, "the quick brown fox jumps over the lazy dog"), // verbatim of 100
-    (2L, "sphinx of black quartz judge my vow"),         // novel
-    (3L, "pack my box with five dozen liquor jugs"),     // verbatim of 101
-    (4L, "ab"))                                          // < N words: no shingles
-
   test("rowwise minhash signatures match the batch groupBy signatures") {
     import spark.implicits._
     val docs = corpusDocs.toDF("id", "text")
@@ -36,63 +27,5 @@ class StreamNearDupSpec extends SparkSpec {
       docs, col("id"), col("text"), N)
     assert(viaGroupBy.except(viaRowwise).isEmpty
       && viaRowwise.except(viaGroupBy).isEmpty)
-  }
-
-  test("stream band probe matches batch candidatePairsAcross and is stateless") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val index = Dedup.bandKeys(Dedup.minhashSignatures(
-      Dedup.shingleHashes(corpusDocs.toDF("id", "text"),
-        col("id"), col("text"), N))).cache()
-
-    val input = MemoryStream[(Long, String)]
-    val query = Dedup.bandProbeStream(
-        input.toDF().toDF("id", "text"), col("id"), col("text"), N, index)
-      .writeStream.format("memory").queryName("snear_probe")
-      .outputMode("append").start()
-    try {
-      input.addData(probeDocs: _*)
-      query.processAllAvailable()
-      val got = spark.table("snear_probe").select("a", "b").distinct()
-        .as[(Long, Long)].collect().toSet
-      val want = Dedup.candidatePairsAcross(index,
-          Dedup.bandKeys(Dedup.minhashSignatures(Dedup.shingleHashes(
-            probeDocs.toDF("id", "text"), col("id"), col("text"), N))))
-        .as[(Long, Long)].collect().toSet
-      assert(got == want, s"got $got want $want")
-      // the verbatim copies MUST collide (identical signatures)
-      assert(got.contains((100L, 1L)) && got.contains((101L, 3L)))
-      // the probe is stateless: no state store operators, no watermark
-      assert(query.lastProgress.stateOperators.isEmpty,
-        query.lastProgress.prettyJson)
-    } finally query.stop()
-  }
-
-  test("foreachBatch admit drops near-dup arrivals, keeps novel ones") {
-    import spark.implicits._
-    implicit val sq = spark.sqlContext
-    val index = Dedup.bandKeys(Dedup.minhashSignatures(
-      Dedup.shingleHashes(corpusDocs.toDF("id", "text"),
-        col("id"), col("text"), N))).cache()
-
-    val admitted = scala.collection.mutable.Set[Long]()
-    val input = MemoryStream[(Long, String)]
-    val query = input.toDF().toDF("id", "text")
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-        admitted ++= Dedup.nearDupAdmitBatch(
-            batch, col("id"), col("text"), N, index)
-          .select("id").as[Long](org.apache.spark.sql.Encoders.scalaLong)
-          .collect()
-        ()
-      }
-      .start()
-    try {
-      input.addData(probeDocs: _*)
-      query.processAllAvailable()
-      // 1 and 3 are verbatim near-dups of the corpus -> dropped;
-      // 2 is novel -> admitted; 4 has no shingles -> no bands -> admitted
-      assert(admitted.toSet == Set(2L, 4L), admitted.toString)
-    } finally query.stop()
   }
 }
