@@ -105,27 +105,6 @@ object Tables {
     }
   }
 
-  /** Apply the same adaptive ts conversion `events` resolves for `sfDir`
-    * to an arbitrary events-schema DataFrame — the STREAMING twin:
-    * StreamParity's file source reads `events.parquet` raw, and without
-    * this an INT64 (s/ms/µs/ns) or NANOS-annotated table would flow
-    * unconverted longs into the pipeline's timestamp column. Call
-    * `events` (or this, on any batch frame) once first so the unit probe
-    * has run batch-side; the probe itself cannot run on a streaming frame
-    * (it needs a max(abs) job), so an unprobed dir fails fast here rather
-    * than guessing. For TsNanosFooter dirs the caller's stream read must
-    * already happen under `nanosAsLong=true` — `events` leaves the
-    * session conf in that state when it resolves the unit.
-    */
-  def normalizeEventsTs(sfDir: String, df: DataFrame): DataFrame =
-    tsUnits.get(sfDir) match {
-      case TsNative       => df.withColumn("ts", col("ts").cast("timestamp"))
-      case TsInt64(div)   => df.withColumn("ts", timestamp_micros(expr(div)))
-      case TsNanosFooter  => df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case null => throw new IllegalStateException(
-        s"events ts unit for $sfDir not probed yet — call Tables.events " +
-          "on the dir (batch) before normalizing a streaming frame")
-    }
   def documents(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "documents")
   def embeddings(spark: SparkSession, sfDir: String): DataFrame = load(spark, sfDir, "embeddings")
 

@@ -25,9 +25,10 @@ object CdpReplay {
   private val GraceSec = 120
 
   /** The events table mapped onto a CDP event log (every event a TRACK;
-    * `signup` events carry a `plan` trait from the k-tag's parity) —
-    * shared by q_cdp_profile_replay and the streaming parity harness
-    * (graft.StreamParity), so stream and batch replay the IDENTICAL log.
+    * `signup` events carry a `plan` trait from the k-tag's parity). No
+    * registered query reads it: `replaySnapshots` builds its own narrow
+    * columns. It is CdpReplayNarrowSpec's reference log, folded by
+    * `profileSnapshots` to hold the narrow replay equal to the object fold.
     */
   def cdpEventLog(s: org.apache.spark.sql.SparkSession,
                   events: org.apache.spark.sql.DataFrame)

@@ -88,20 +88,14 @@ object CurationQueries {
     * the curation manifest and the funnel so the cut lives in one place.
     */
   private[queries] def qualityCol: org.apache.spark.sql.Column = {
-    val stop = Seq("the", "a", "of", "and", "data", "value")
     val ws = TextOps.words(col("text"))
-    Num.r4(
-      lit(0.4) * least(size(ws) / 50.0, lit(1.0))
-        + lit(0.3) * (size(filter(ws,
-            w => stop.foldLeft(lit(false))((acc, v) => acc || (w === v)))) * 1.0 / size(ws))
-        // native twin of size(regexp_extract_all(text, "[^A-Za-z0-9\s]"))
-        // — the regex form materialized a match array per row on the
-        // corpus-scan quality paths (AsciiCountsParitySpec pins equality;
-        // the oracle keeps its regexp form)
-        + lit(0.3) * (lit(1.0) -
-            org.apache.spark.sql.graft.ArrayExpressions
-              .nonAlnumSpaceCount(col("text")) * 1.0
-              / length(col("text"))))
+    // native twin of size(regexp_extract_all(text, "[^A-Za-z0-9\s]"))
+    // — the regex form materialized a match array per row on the
+    // corpus-scan quality paths (AsciiCountsParitySpec pins equality;
+    // the oracle keeps its regexp form)
+    TextAnalytics.qualityScore(size(ws), TextAnalytics.stopCount(ws),
+      org.apache.spark.sql.graft.ArrayExpressions.nonAlnumSpaceCount(col("text")),
+      length(col("text")))
   }
 
   /** q_corpus_curation's LAZY plan plus its pinned intermediate — PlanSpec
@@ -145,12 +139,9 @@ object CurationQueries {
 
   /** SQL twin of `qualityCol` over a text expression. */
   private def qualitySql(t: String): String =
-    s"""round(0.4 * least(len(${TextOps.wordsSql(t)}) / 50.0, 1.0)
-       |      + 0.3 * (len(list_filter(${TextOps.wordsSql(t)},
-       |                w -> w IN ('the', 'a', 'of', 'and', 'data', 'value'))) * 1.0
-       |               / len(${TextOps.wordsSql(t)}))
-       |      + 0.3 * (1.0 - len(regexp_extract_all($t, '[^A-Za-z0-9\\s]')) * 1.0
-       |               / length($t)) + 0.00000025, 4)""".stripMargin
+    TextAnalytics.qualityScoreSql(s"len(${TextOps.wordsSql(t)})",
+      TextAnalytics.stopCountSql(TextOps.wordsSql(t)),
+      s"len(regexp_extract_all($t, '[^A-Za-z0-9\\s]'))", s"length($t)")
 
   val defs: Seq[QueryDef] = Seq(
 

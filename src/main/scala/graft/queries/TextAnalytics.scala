@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{QueryDef, Tables}
 import graft.operators.{Num, TextOps}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Text-analysis operators for an LLM-training-data pipeline, over the
@@ -151,10 +151,33 @@ object TextAnalytics {
   /** Top-k cut for q_bm25_topk. */
   private val Bm25TopK = 10
 
-  /** Quality-score stopword list — interpolated into qualityChainSql and
-    * folded into qualityScored's filter; ONE definition for both engines.
-    */
+  /** Quality-score stopword list: ONE definition for both engines. */
   private val QualityStopWords = Seq("the", "a", "of", "and", "data", "value")
+
+  /** n_stop of the quality score: stopword hits in a word array. */
+  private[queries] def stopCount(ws: Column): Column =
+    size(filter(ws, w => QualityStopWords.foldLeft(lit(false))((acc, v) => acc || (w === v))))
+
+  /** SQL twin of `stopCount` over a word-array expression. */
+  private[queries] def stopCountSql(ws: String): String =
+    s"len(list_filter($ws, w -> w IN (${QualityStopWords.map(w => s"'$w'").mkString(", ")})))"
+
+  /** The quality score on the r4 grid over (n_words, n_stop, n_punct,
+    * n_chars): ONE formula for q_text_quality, q_dedup_keeper_quality, the
+    * curation manifest and the funnel's quality cut.
+    */
+  private[queries] def qualityScore(nWords: Column, nStop: Column, nPunct: Column,
+                                    nChars: Column): Column =
+    Num.r4(lit(0.4) * least(nWords / 50.0, lit(1.0))
+      + lit(0.3) * (nStop * 1.0 / nWords)
+      + lit(0.3) * (lit(1.0) - nPunct * 1.0 / nChars))
+
+  /** SQL twin of `qualityScore`. */
+  private[queries] def qualityScoreSql(nWords: String, nStop: String, nPunct: String,
+                                       nChars: String): String =
+    s"""round(0.4 * least($nWords / 50.0, 1.0)
+       |      + 0.3 * (($nStop * 1.0) / $nWords)
+       |      + 0.3 * (1.0 - ($nPunct * 1.0) / $nChars) + 0.00000025, 4)""".stripMargin
 
   /** The quality-score CTE chain over an (idCol, text) relation `rel`:
     * qt(id, counts) → qscore(id, counts, quality on the r4 grid). ONE
@@ -167,14 +190,11 @@ object TextAnalytics {
        |         length(text) AS n_chars2,
        |         len(${TextOps.wordsSql("text")}) AS n_words,
        |         len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct,
-       |         len(list_filter(${TextOps.wordsSql("text")},
-       |             w -> w IN (${QualityStopWords.map(w => s"'$w'").mkString(", ")}))) AS n_stop
+       |         ${stopCountSql(TextOps.wordsSql("text"))} AS n_stop
        |  FROM $rel),
        |qscore AS MATERIALIZED (
        |  SELECT id, n_chars2, n_words, n_punct, n_stop,
-       |         round(0.4 * least(n_words / 50.0, 1.0)
-       |             + 0.3 * ((n_stop * 1.0) / n_words)
-       |             + 0.3 * (1.0 - (n_punct * 1.0) / n_chars2) + 0.00000025, 4) AS quality
+       |         ${qualityScoreSql("n_words", "n_stop", "n_punct", "n_chars2")} AS quality
        |  FROM qt)""".stripMargin
 
   /** Scala twin of qualityChainSql over an (id, text) relation:
@@ -189,12 +209,9 @@ object TextAnalytics {
         // (AsciiCountsParitySpec; the oracle keeps its regexp form)
         org.apache.spark.sql.graft.ArrayExpressions
           .nonAlnumSpaceCount(col("text")).as("n_punct"),
-        size(filter(TextOps.words(col("text")),
-          w => QualityStopWords.foldLeft(lit(false))((acc, v) => acc || (w === v)))).as("n_stop"))
+        stopCount(TextOps.words(col("text"))).as("n_stop"))
       .withColumn("quality",
-        Num.r4(lit(0.4) * least(col("n_words") / 50.0, lit(1.0))
-          + lit(0.3) * (col("n_stop") * 1.0 / col("n_words"))
-          + lit(0.3) * (lit(1.0) - col("n_punct") * 1.0 / col("n_chars2"))))
+        qualityScore(col("n_words"), col("n_stop"), col("n_punct"), col("n_chars2")))
 
   /** The BM25 scoring CTE chain over a `q(qid, term)` relation —
     * ws → tot → w → tf → dft → c → sc(qid, doc_id, score_u) in integer

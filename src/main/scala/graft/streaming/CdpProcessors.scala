@@ -7,10 +7,13 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
 
 import CdpPipeline._
 
-/** Avro-friendly storage form of `ProfileState`: the state store's Avro
-  * encoder (schema evolution across query upgrades) has no MapType, so
-  * the profile's maps — including the `seenEventIds` dedup cache — are
-  * stored as entry arrays and rebuilt on read.
+/** Storage form of `ProfileState`, with every map stored as an entry
+  * array and rebuilt on read. This packing is required, not an opt-in
+  * encoding choice: transformWithState writes each state variable's schema
+  * as Avro metadata, and Avro map keys must be strings. `ProfileState`
+  * stored directly fails at query start with `IncompatibleSchemaException:
+  * Unexpected type MapType(LongType,LongType,false)` (`buckets` is
+  * `Map[Long, Long]`; seen on Spark 4.1.2).
   */
 case class TraitKV(k: String, v: String, ts: Long, eid: String)
 case class BucketKV(b: Long, n: Long)
@@ -38,8 +41,8 @@ case class ProfilePacked(
   *    determinism, which the batch path's event-time sweep has.
   *  - manual-TTL MapState (`containsKey`/`updateValue` per event): two
   *    encoder+RocksDB point-ops per event cost ~40% of CDP throughput
-  *    (StreamBench 21k → 12k events/s) versus one row read/write per
-  *    KEY per batch.
+  *    versus one row read/write per KEY per batch (a past measurement of
+  *    the segment pipeline on synthetic events: 21k → 12k events/s).
   * Keeping the cache inline also means the stream and the batch replay
   * share `applyEvent`/`orderedFold` verbatim — dedup semantics (10 m
   * event-time TTL, 10k size cap, amortized sweep) are bit-identical by
