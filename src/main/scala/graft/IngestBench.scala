@@ -10,16 +10,16 @@ import graft.serve.CurationPipeline
   * (`POST /corpus/ingest` → `CurationPipeline.admitBatch`): per-batch wall
   * time and admitted docs/sec for B-doc batches against an N-doc corpus
   * index, measured on BOTH index layouts the pipeline serves from —
-  * the flat append tail (what a freshly started corpus looks like) and a
-  * compacted key-slot-partitioned generation (what the corpus looks like
-  * after `compact()` folds the tail).
+  * the append tail (what a freshly started or bulk-seeded corpus looks
+  * like) and a compacted generation (what the corpus looks like after
+  * `compact()` folds the tail into a few flat files).
   *
-  * The number this exists to defend: batch admit cost must track the
-  * BATCH, not the corpus. The tail layout scans the whole index per batch
+  * What this measures: how per-batch admit cost splits between the BATCH
+  * and the corpus. Both layouts scan the whole index per batch
   * (scan-only — the membership joins broadcast the batch — but still a
-  * full read); the compacted layout prunes the band probe to the batch's
-  * key slots, so its per-batch time should hold as N grows while the
-  * tail's drifts with N.
+  * full read); they differ in how many files that read opens, so the gap
+  * between them is file-count cost and the drift of either with N is
+  * scan cost.
   *
   * `runMain graft.IngestBench [indexDocs] [batchSize] [nBatches] [cores]`
   * — prints one JSON line. Workload per batch: 80% fresh docs, 10% exact
@@ -29,13 +29,9 @@ import graft.serve.CurationPipeline
   * SPARK_GRAFT_INGEST_CORPUS=<dir with documents.parquet> seeds the index
   * from a REAL corpus (a MakeTier tier) instead of the synthetic
   * generator, and draws the duplicate batch slices from that corpus —
-  * the corpus ≫ batch regime where the key-slot-pruned layout's
-  * read-volume bound must show up in wall-clock (at the default 100k
-  * synthetic docs a 1000-doc batch hits all 256 key slots, so the tail
-  * and compacted layouts read similar volumes; at 500k+ real docs the
-  * per-slot pruning is the difference between scanning the corpus and
-  * scanning the batch's slice of it). `indexDocs` is ignored in this
-  * mode (the corpus row count is reported instead).
+  * the corpus ≫ batch regime, where the index scan's share of the admit
+  * grows with N. `indexDocs` is ignored in this mode (the corpus row
+  * count is reported instead).
   */
 object IngestBench {
 
@@ -95,7 +91,7 @@ object IngestBench {
       ()
     }
     val gen = CurationPipeline.compact(spark, s"$root/compacted")
-    println(s"seeded index_docs=$corpusN gen=${gen.version} keyParts=${gen.keyParts}")
+    println(s"seeded index_docs=$corpusN gen=${gen.version}")
 
     // ---- the per-batch workload: 80% fresh / 10% exact dup / 10% near dup
     def batchDf(b: Int): DataFrame = {

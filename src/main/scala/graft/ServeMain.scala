@@ -190,8 +190,8 @@ object ServeMain {
     // restore the serving sample if this index root has prior admissions
     // (a fresh temp dir here, but the attach contract is root-agnostic)
     CurationPipeline.loadSample(spark, s"$corpusDir/index", corpusStats)
-    // serve-path default: start from the key-slot-pruned compacted layout
-    // — any bulk-seeded tail folds into a generation before batch 1 (see
+    // serve-path default: start from a compacted generation — any
+    // bulk-seeded tail folds into a few flat files before batch 1 (see
     // compactOnStart)
     CurationPipeline.compactOnStart(spark, s"$corpusDir/index")
     val corpusIn =

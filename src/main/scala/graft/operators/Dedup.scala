@@ -105,16 +105,28 @@ object Dedup {
     sh.groupBy(col("id")).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** Band `b`'s key: its `RowsPerBand` registers joined by '_', with
+    * register i read by `m(i)`.
+    */
+  private def bandKey(b: Int, m: Int => Column): Column =
+    concat_ws("_", (0 until RowsPerBand).map(r => m(b * RowsPerBand + r)): _*)
+
   /** (id, band, key) — one row per band, key = concat of that band's rows. */
   def bandKeys(sig: DataFrame): DataFrame = {
     val bandRows = (0 until Bands).map { b =>
-      val cols = (0 until RowsPerBand).map(r => col(s"m${b * RowsPerBand + r}"))
-      struct(lit(b).as("band"),
-        concat_ws("_", cols: _*).as("key"))
+      struct(lit(b).as("band"), bandKey(b, i => col(s"m$i")).as("key"))
     }
     sig.select(col("id"), explode(array(bandRows: _*)).as("bk"))
       .select(col("id"), col("bk.band").as("band"), col("bk.key").as("key"))
   }
+
+  /** A doc's band keys as one array (element b = band b's `bandKeys` key)
+    * from its `MinhashRegisters` array; a doc without shingles (empty
+    * registers) gets an empty array.
+    */
+  def bandKeyArray(registers: Column): Column =
+    when(size(registers) === 0, array().cast("array<string>"))
+      .otherwise(array((0 until Bands).map(b => bandKey(b, i => registers.getItem(i))): _*))
 
   /** Distinct candidate pairs (a < b) sharing at least one band bucket. */
   def candidatePairs(bands: DataFrame): DataFrame = {
@@ -466,41 +478,6 @@ object Dedup {
         col("l.band") === col("r.band") && col("l.key") === col("r.key"))
       .select(col("l.id").as("a"), col("r.id").as("b"))
       .distinct()
-  }
-
-  /** Key-slot count of the PRUNED band-index layout — the modulus
-    * `CurationPipeline.compact` writes every generation with (and records
-    * in its `_COMMITTED` marker). Size it so expected probe-batch keys ≪
-    * slots: each slot is a partition directory, and a batch of B docs
-    * probes ≤ B×Bands slots regardless of corpus size. At 100 TB a slot
-    * directory is still huge; this constant is the thing to raise
-    * (thousands). Generations already written keep the modulus their
-    * marker records.
-    */
-  val IndexKeyParts = 256
-
-  /** A band key's partition slot: Spark-native xxhash64 mod `parts`. Both
-    * sides of a probe are Spark, so cross-engine portability (the reason
-    * shingles use md5-prefix hashing) is not needed here.
-    */
-  def keyPart(key: Column, parts: Int): Column =
-    pmod(xxhash64(key), lit(parts.toLong)).cast("int")
-
-  /** Cross-set candidates against a PRUNED index (a `kp` key-slot
-    * partition column): collect the probe's distinct key slots (bounded
-    * by min(keyParts, probe keys) ints — driver-safe) and restrict the
-    * index scan to those partitions with a literal IN, which Spark turns
-    * into static partition pruning. `keyParts` MUST equal the value the
-    * index was written with — probing with another modulus computes wrong
-    * slot sets and silently ADMITS true near-dups; `CurationPipeline`
-    * passes the one its generation marker records.
-    */
-  def candidatePairsAcrossPruned(index: DataFrame, probe: DataFrame,
-                                 keyParts: Int): DataFrame = {
-    val slots = probe.select(keyPart(col("key"), keyParts).as("kp"))
-      .distinct().collect().map(_.getInt(0)).toSeq
-    candidatePairsAcross(
-      index.filter(col("kp").isin(slots: _*)).drop("kp"), probe)
   }
 
   /** Exact Jaccard for given pairs, from the shingle-hash sets. */

@@ -11,6 +11,7 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ArrayExpressions
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Dedup, Route}
@@ -24,12 +25,13 @@ import graft.queries.PiiQueries
   * Per micro-batch (`foreachBatch`, batch semantics — the any-band OR of
   * the near-dup admit needs a per-doc aggregation append mode cannot
   * express without state), an admit runs
-  * one fetch, two index probes (together in one action) and two appends:
-  *   1. fetch: ONE action scrubs every doc (`PiiQueries.redactExpr` —
+  * one fetch, two index probes (together in one map-only stage) and two
+  * appends:
+  *   1. fetch: ONE projection per doc scrubs it (`PiiQueries.redactExpr` —
   *      map-only, no injection: real arrivals carry their own PII, and the
   *      redacted text is what gets admitted) and brings back its md5
-  *      content hash, redacted-char count, length, shingle hashes and
-  *      `Dedup` band rows;
+  *      content hash, redacted-char count, length, shingle hashes and the
+  *      `Dedup` band keys computed from those same shingle hashes;
   *   2. exact dedup: first occurrence per hash inside the batch wins (min
   *      doc_id, `exact_dup_batch`), then arrivals whose hash exists in the
   *      PERSISTED corpus hash index are rejected (`exact_dup_corpus`,
@@ -68,10 +70,11 @@ import graft.queries.PiiQueries
   *
   * INDEX MEMBERSHIP IS SCAN-ONLY, NEVER SHUFFLE: the exact-dup corpus
   * check is `index ⋉ broadcast(batch hashes)` (left semi with the
-  * micro-batch side broadcast), and the band probe broadcasts the batch's
-  * band keys the same way. The corpus-sized side is read in place — no
-  * distinct(), no HashAggregate, no Exchange over it, per batch
-  * (PlanSpec asserts the shape). The direction matters: a batch-side-left
+  * micro-batch side broadcast), and the band probe is
+  * `index ⋈ broadcast(batch band rows)`. The corpus-sized side is read in
+  * place — no distinct(), no HashAggregate, no Exchange over it or over
+  * the hits, per batch (CompactionSpec asserts the shape); admitBatch
+  * folds the hits into sets. The direction matters: a batch-side-left
   * semi join would have to BUILD the index (broadcast or shuffle it);
   * putting the index on the left keeps it streaming through the join.
   *
@@ -80,11 +83,9 @@ import graft.queries.PiiQueries
   *                admitting batch
   *   band_tail/   append-only (id, band, key) parquet
   *   gen_<v>/     a compacted generation: `hash/` (distinct hashes),
-  *                `bands/` (partitioned by key slot
-  *                `kp = Dedup.keyPart(key, Dedup.IndexKeyParts)`, probed
-  *                with partition pruning so a batch reads only its own key
-  *                slots), and a `_COMMITTED` marker recording the written
-  *                keyParts and the tail files the generation absorbed.
+  *                `bands/` (distinct band rows, flat files — see
+  *                `compact`), and a `_COMMITTED` marker recording the
+  *                tail files the generation absorbed.
   * Readers resolve latest committed generation ∪ non-absorbed tail files
   * per batch; `compact()` folds gen + tail snapshot into gen_{v+1} and
   * retires the absorbed tail files with a one-generation grace window
@@ -109,9 +110,10 @@ object CurationPipeline {
   val MaxDecisions = 200
 
   /** Auto-compaction cadence: every this-many admitting batches the tail
-    * logs fold into a new pruned generation. Between compactions the tail
-    * holds at most this many batches' rows, so the plain tail probe stays
-    * micro-batch-scale while the corpus bulk lives in the pruned layout.
+    * logs fold into a new generation. Between compactions the tail holds
+    * at most this many batches' rows, so its file count stays
+    * micro-batch-scale while the corpus bulk lives in a few generation
+    * files.
     */
   val CompactEveryBatches = 64
 
@@ -230,7 +232,7 @@ object CurationPipeline {
     * — readers fall back to the previous generation + the full tail, which
     * is stricter-never-looser (nothing absorbed, nothing lost).
     */
-  final case class Generation(version: Long, dir: String, keyParts: Int,
+  final case class Generation(version: Long, dir: String,
                               absorbedHash: Set[String], absorbedBand: Set[String])
 
   private val marker = new ObjectMapper()
@@ -254,8 +256,7 @@ object CurationPipeline {
       val node = marker.readTree(body)
       def files(field: String): Set[String] =
         node.path(field).elements().asScala.map(_.asText).toSet
-      Generation(v, d.toString, node.path("keyParts").asInt,
-        files("absorbedHash"), files("absorbedBand"))
+      Generation(v, d.toString, files("absorbedHash"), files("absorbedBand"))
     }
   }
 
@@ -265,11 +266,9 @@ object CurationPipeline {
       StructType.fromDDL(schemaDdl))
 
   /** Generation reads cached by directory: a committed generation is
-    * IMMUTABLE, so its DataFrame (and the file/partition listing inside
-    * its FileIndex) is reused across micro-batches instead of re-listing
-    * every key-slot directory per batch — at production slot counts
-    * (thousands of directories) per-batch re-discovery would dwarf the
-    * pruned read itself. Superseded generations are evicted when a newer
+    * IMMUTABLE, so its DataFrame (and the file listing inside its
+    * FileIndex) is reused across micro-batches instead of re-listing the
+    * generation per batch. Superseded generations are evicted when a newer
     * one resolves for the same root.
     */
   private val genReads =
@@ -307,25 +306,34 @@ object CurationPipeline {
                        absorbed: Set[String]): Seq[String] =
     partFiles(spark, dir).filterNot(absorbed.contains)
 
-  /** The hash index visible to a batch: generation hashes ∪ live tail. */
-  def hashIndex(spark: SparkSession, root: String): DataFrame =
-    hashIndex(spark, root, currentGeneration(spark, root))
-
-  /** Variant over a pre-resolved generation: admitBatch resolves the
-    * (immutable) marker ONCE per micro-batch and feeds both probes —
-    * resolving per probe doubled the gen-dir listing + marker read, fixed
-    * driver-side FS RPC latency on every batch.
+  /** A generation's `sub` (hash or bands) rows. Reading with the index
+    * schema and projecting it also serves a generation written in the
+    * older key-slot layout (bands under `kp=` directories): the
+    * discovered `kp` column is dropped, and the next `compact` rewrites
+    * the generation flat.
     */
-  private[serve] def hashIndex(spark: SparkSession, root: String,
-                               gen: Option[Generation]): DataFrame = {
+  private def genFiles(spark: SparkSession, genDir: String, sub: String,
+                       schemaDdl: String): DataFrame = {
+    val schema = StructType.fromDDL(schemaDdl)
+    spark.read.schema(schema).parquet(s"$genDir/$sub")
+      .select(schema.fieldNames.toSeq.map(col): _*)
+  }
+
+  /** One index as a batch sees it: generation rows ∪ live tail files.
+    * admitBatch resolves the (immutable) marker ONCE per micro-batch and
+    * feeds both probes — resolving per probe doubled the gen-dir listing
+    * + marker read, fixed driver-side FS RPC latency on every batch.
+    */
+  private def index(spark: SparkSession, root: String, gen: Option[Generation],
+                    sub: String, tailDir: String, absorbed: Generation => Set[String],
+                    schemaDdl: String): DataFrame = {
     val tail = readFiles(spark,
-      liveTail(spark, s"$root/hash_tail", gen.map(_.absorbedHash).getOrElse(Set.empty)),
-      HashSchema)
+      liveTail(spark, s"$root/$tailDir", gen.map(absorbed).getOrElse(Set.empty)),
+      schemaDdl)
     gen match {
       case Some(g) =>
-        cachedGenRead(spark, root, g.dir, "hash",
-          spark.read.schema(StructType.fromDDL(HashSchema))
-            .parquet(s"${g.dir}/hash")).unionAll(tail)
+        cachedGenRead(spark, root, g.dir, sub, genFiles(spark, g.dir, sub, schemaDdl))
+          .unionAll(tail)
       case None => tail
     }
   }
@@ -333,10 +341,10 @@ object CurationPipeline {
   /** Corpus exact-dup hits for a batch's content hashes:
     * `index ⋉ broadcast(batch hashes)` — a left-semi join with the
     * micro-batch side broadcast, so the corpus-sized index STREAMS through
-    * the join (scan-only: no distinct, no HashAggregate, no Exchange over
-    * it; CompactionSpec asserts the shape on the executed plan). Output is
-    * ≤ batch-sized; the trailing distinct folds the grace-window gen/tail
-    * overlap and costs one exchange of that tiny set.
+    * the join (scan-only: no distinct, no HashAggregate, no Exchange;
+    * CompactionSpec asserts the shape on the executed plan). A hash held
+    * by both a generation and a tail file still inside the grace window
+    * comes back twice; callers fold hits into a set.
     */
   def corpusHashHits(spark: SparkSession, root: String,
                      batchHashes: DataFrame): DataFrame =
@@ -345,15 +353,15 @@ object CurationPipeline {
   private[serve] def corpusHashHits(spark: SparkSession, root: String,
                                     batchHashes: DataFrame,
                                     gen: Option[Generation]): DataFrame =
-    hashIndex(spark, root, gen)
-      .join(broadcast(batchHashes.distinct()), Seq("text_hash"), "left_semi")
-      .distinct()
+    index(spark, root, gen, "hash", "hash_tail", _.absorbedHash, HashSchema)
+      .join(broadcast(batchHashes), Seq("text_hash"), "left_semi")
 
-  /** Corpus band-collision hits for a batch's band keys: the pruned
-    * generation probed with partition pruning (read volume ∝ the batch's
-    * key slots) ∪ the plain tail probed with the batch broadcast. This is
-    * THE production probe — CompactionSpec runs it directly and asserts
-    * the generation scan's files from the executed plan.
+  /** Corpus band-collision hits for a batch's (id, band, key) rows:
+    * `index ⋈ broadcast(batch band rows)` over generation ∪ live tail,
+    * projected to the probe-side id `b` — one map-only stage, one row per
+    * colliding index row (callers fold them into a set). This is THE
+    * production probe; CompactionSpec runs it directly and asserts its
+    * executed plan has no Exchange.
     */
   def corpusBandHits(spark: SparkSession, root: String,
                      probeBands: DataFrame): DataFrame =
@@ -361,25 +369,11 @@ object CurationPipeline {
 
   private[serve] def corpusBandHits(spark: SparkSession, root: String,
                                     probeBands: DataFrame,
-                                    gen: Option[Generation]): DataFrame = {
-    val tailBands = readFiles(spark,
-      liveTail(spark, s"$root/band_tail", gen.map(_.absorbedBand).getOrElse(Set.empty)),
-      BandSchema)
-    val tailHits = Dedup.candidatePairsAcross(tailBands, broadcast(probeBands))
-    gen match {
-      case Some(g) =>
-        // the partition column kp arrives via directory discovery; the
-        // written modulus comes from the commit marker
-        val genBands = cachedGenRead(spark, root, g.dir, "bands",
-          spark.read
-            .schema(StructType.fromDDL(s"$BandSchema, kp INT"))
-            .option("basePath", s"${g.dir}/bands")
-            .parquet(s"${g.dir}/bands"))
-        Dedup.candidatePairsAcrossPruned(genBands, broadcast(probeBands), g.keyParts)
-          .unionAll(tailHits)
-      case None => tailHits
-    }
-  }
+                                    gen: Option[Generation]): DataFrame =
+    index(spark, root, gen, "bands", "band_tail", _.absorbedBand, BandSchema)
+      .join(broadcast(probeBands.select(col("id").as("b"), col("band"), col("key"))),
+        Seq("band", "key"))
+      .select(col("b"))
 
   /** One doc's facts, fetched once per admit. */
   private final case class Doc(id: Long, hash: String, charsRedacted: Long,
@@ -402,29 +396,30 @@ object CurationPipeline {
         greatest(lit(0L),
           (length(col("text")) - length(col("redacted"))).cast("long"))
           .as("chars_redacted"))
-    // 1. the fetch: per-doc facts and band rows as the two branches of one
-    // union (each branch's missing columns read null), so one job brings
-    // back everything the rules below read
-    val facts = scrubbed.select(col("doc_id"), md5(col("text")).as("text_hash"),
-      col("chars_redacted"), length(col("text")).cast("long").as("n_chars"),
-      org.apache.spark.sql.graft.ArrayExpressions.shingleHashes(
-        col("text"), ShingleN).as("hs"))
-    val bandRows = Dedup.bandKeys(Dedup.minhashSignaturesRowwise(
-        scrubbed, col("doc_id"), col("text"), ShingleN)).withColumnRenamed("id", "doc_id")
-    val (bandFetch, factFetch) = facts.unionByName(bandRows, allowMissingColumns = true)
-      .collect().partition(_.isNullAt(4))
-    if (factFetch.isEmpty) return
-    val docs = factFetch.map(r =>
+    // 1. the fetch: one projection per doc, so the scrub and the shingle
+    // hashing run once; the band keys come from the same shingle array
+    // (each step its own projection: the optimizer does not inline an
+    // expensive column into a consumer that reads it more than once)
+    val fetched = scrubbed.select(col("doc_id"), md5(col("text")).as("text_hash"),
+        col("chars_redacted"), length(col("text")).cast("long").as("n_chars"),
+        ArrayExpressions.shingleHashes(col("text"), ShingleN).as("hs"))
+      .withColumn("rs", ArrayExpressions.minhashRegisters(col("hs")))
+      .select(col("doc_id"), col("text_hash"), col("chars_redacted"), col("n_chars"),
+        col("hs"), Dedup.bandKeyArray(col("rs")).as("keys"))
+      .collect()
+    if (fetched.isEmpty) return
+    val docs = fetched.map(r =>
       Doc(r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3), r.getSeq[Long](4)))
       .sortBy(_.id).toSeq
-    val bands = bandFetch.map(r => (r.getLong(0), r.getInt(5), r.getString(6))).toSeq
+    val bands = fetched.toSeq.flatMap(r =>
+      r.getSeq[String](5).zipWithIndex.map { case (k, b) => (r.getLong(0), b, k) })
     val keeper = docs.groupMapReduce(_.hash)(_.id)(math.min)
 
     // 2. the two corpus probes, each run once, as the two branches of one
-    // action so their independent stages overlap: index ⋉ broadcast(batch
-    // hashes), and every doc's band keys against generation + tail (a
-    // doc's band hits are read only if it passes the exact guards). The
-    // (immutable) generation marker is resolved once for both.
+    // map-only action: index ⋉ broadcast(batch hashes), and every doc's
+    // band keys against generation + tail (a doc's band hits are read
+    // only if it passes the exact guards). The (immutable) generation
+    // marker is resolved once for both.
     val gen = currentGeneration(spark, indexRoot)
     val hashHits = corpusHashHits(spark, indexRoot, keeper.keys.toSeq.toDF("text_hash"), gen)
       .select(col("text_hash"), lit(null).cast("long").as("b"))
@@ -545,13 +540,13 @@ object CurationPipeline {
     }.getOrElse(())
 
   /** Startup compaction — the serve path's DEFAULT: fold any pre-existing
-    * tail bulk into a key-slot-pruned generation BEFORE the first served
-    * batch. A corpus bulk-seeded into the append tail (an offline
-    * loader's natural output shape) would otherwise pay the O(corpus)
-    * flat-tail probe on EVERY batch until the 64-batch auto-compaction
-    * cadence first fires; measured at the 5M-doc corpus the pruned
-    * generation wins p50 outright (INGEST_1000X: -17% p50, -21% p95,
-    * -42% first batch), and corpus ≫ batch is the production regime.
+    * tail bulk into a generation BEFORE the first served batch. A corpus
+    * bulk-seeded into the append tail (an offline loader's natural output
+    * shape) would otherwise be probed as however many files the loader
+    * wrote on EVERY batch until the 64-batch auto-compaction cadence
+    * first fires; measured at the 5M-doc corpus a compacted generation
+    * won p50 outright (INGEST_1000X: -17% p50, -21% p95, -42% first
+    * batch), and corpus ≫ batch is the production regime.
     * No-op when the live tail is empty: compacting then would only
     * rewrite the current generation.
     */
@@ -567,19 +562,26 @@ object CurationPipeline {
 
   /** Compact the append logs into a new committed generation:
     * gen_{v+1} = current generation ∪ a snapshot of the live tail files,
-    * hashes distinct'd, bands rewritten into the key-slot-partitioned
-    * pruning layout. The marker commits LAST (readers never see a partial
-    * generation); the absorbed tail files and the superseded generation
-    * directory are excluded from reads immediately but PHYSICALLY deleted
-    * only by the NEXT compaction (grace window for a reader that resolved
-    * the old generation just before the commit). Safe to run concurrently
-    * with appends: files appended after the snapshot stay live tail.
-    * Every generation is written with `Dedup.IndexKeyParts` slots; the
-    * marker records the modulus, so readers probe each generation with
-    * the one it was written with.
+    * hashes and band rows each distinct'd into a few flat parquet files.
+    * The marker commits LAST (readers never see a partial generation);
+    * the absorbed tail files and the superseded generation directory are
+    * excluded from reads immediately but PHYSICALLY deleted only by the
+    * NEXT compaction (grace window for a reader that resolved the old
+    * generation just before the commit). Safe to run concurrently with
+    * appends: files appended after the snapshot stay live tail.
+    *
+    * The band files are FLAT, not partitioned by key slot, so every probe
+    * reads the whole band generation: a slot layout prunes only when a
+    * batch's keys miss most slots, and a 1000-doc batch's 6000 band keys
+    * reach every slot of a layout of a few hundred slots, which then
+    * costs a directory per slot on every scan and a slot-collect job per
+    * admit. The trade-off: a batch of a few dozen docs against a
+    * multi-million-doc index reads the whole band generation where slots
+    * would let it read its own (it reads the whole hash generation
+    * either way). A generation written in the older `kp=` slot layout is
+    * still read correctly (see `genFiles`) and comes out flat here.
     */
   def compact(spark: SparkSession, root: String): Generation = {
-    val keyParts = Dedup.IndexKeyParts
     val f = fs(spark, root)
     val prev = currentGeneration(spark, root)
 
@@ -613,33 +615,15 @@ object CurationPipeline {
     val bandSnap = liveTail(spark, s"$root/band_tail",
       prev.map(_.absorbedBand).getOrElse(Set.empty))
 
-    val allHashes = prev match {
-      case Some(g) => spark.read.schema(StructType.fromDDL(HashSchema))
-        .parquet(s"${g.dir}/hash").unionAll(readFiles(spark, hashSnap, HashSchema))
-      case None => readFiles(spark, hashSnap, HashSchema)
-    }
     // distinct belongs HERE, in the offline compaction, not the serving
     // path: the tail is unique by construction, but gen ∪ tail may overlap
     // within a grace window and a rewrite is the one place to fold it
-    allHashes.distinct().write.mode("overwrite").parquet(s"$dir/hash")
-
-    val allBands = prev match {
-      case Some(g) => spark.read
-        .schema(StructType.fromDDL(s"$BandSchema, kp INT"))
-        .parquet(s"${g.dir}/bands")
-        .select(col("id"), col("band"), col("key"))
-        .unionAll(readFiles(spark, bandSnap, BandSchema))
-      case None => readFiles(spark, bandSnap, BandSchema)
-    }
-    // repartition BY the partition column before partitionBy: without it
-    // every shuffle partition writes into every kp directory — up to
-    // shufflePartitions × keyParts tiny files, and the probe pays file-open
-    // cost instead of the pruning win. With it each slot directory holds
-    // one file per owning task (~1).
-    allBands.distinct()
-      .withColumn("kp", Dedup.keyPart(col("key"), keyParts))
-      .repartition(col("kp"))
-      .write.mode("overwrite").partitionBy("kp").parquet(s"$dir/bands")
+    for ((sub, snap, schemaDdl) <- Seq(("hash", hashSnap, HashSchema),
+                                       ("bands", bandSnap, BandSchema)))
+      (prev.map(g => genFiles(spark, g.dir, sub, schemaDdl)).toSeq :+
+          readFiles(spark, snap, schemaDdl))
+        .reduce(_ unionAll _)
+        .distinct().write.mode("overwrite").parquet(s"$dir/$sub")
 
     // commit marker LAST; the absorbed-file lists make the new generation
     // self-describing (a restarted process resolves them from disk). The
@@ -647,14 +631,13 @@ object CurationPipeline {
     // compaction's reclamation pass — a reader that resolved it just
     // before this commit keeps working through the grace window.
     val body = marker.createObjectNode()
-    body.put("keyParts", keyParts)
     val ah = body.putArray("absorbedHash")
     hashSnap.sorted.foreach(ah.add)
     val ab = body.putArray("absorbedBand")
     bandSnap.sorted.foreach(ab.add)
     val out = f.create(new Path(s"$dir/_COMMITTED"), true)
     try out.write(marker.writeValueAsBytes(body)) finally out.close()
-    Generation(nextVer, dir, keyParts, hashSnap.toSet, bandSnap.toSet)
+    Generation(nextVer, dir, hashSnap.toSet, bandSnap.toSet)
   }
 }
 

@@ -239,6 +239,15 @@ class RandomizedParitySpec extends SparkSpec {
         docs, col("id"), col("text"), 5)
       assert(viaGroupBy.except(viaRowwise).isEmpty
         && viaRowwise.except(viaGroupBy).isEmpty, s"seed=$seed")
+      // the admit's per-doc band-key array (CurationPipeline's fetch)
+      // holds exactly the bandKeys rows, and none for a sub-5-word doc
+      val batchBands = Dedup.bandKeys(viaGroupBy)
+      val keyArray = docs.select(col("id"), posexplode(Dedup.bandKeyArray(
+          org.apache.spark.sql.graft.ArrayExpressions.minhashRegisters(
+            org.apache.spark.sql.graft.ArrayExpressions.shingleHashes(col("text"), 5)))))
+        .select(col("id"), col("pos").as("band"), col("col").as("key"))
+      assert(batchBands.exceptAll(keyArray).isEmpty
+        && keyArray.exceptAll(batchBands).isEmpty, s"band keys, seed=$seed")
     }
   }
 }

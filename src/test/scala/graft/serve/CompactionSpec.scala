@@ -1,5 +1,7 @@
 package graft.serve
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -9,9 +11,10 @@ import graft.operators.Dedup
 /** The corpus-index compaction contract (CurationPipeline.compact):
   *  1. admit decisions are IDENTICAL against a compacted index and an
   *     uncompacted control — compaction is a pure layout change;
-  *  2. the compacted generation is probed with partition pruning: the
-  *     production probe's own executed plan reads no more key-slot
-  *     partitions than the batch's band keys hash into;
+  *  2. the generation's band files are flat (no `kp=` slot directories)
+  *     and the production band probe's executed plan has no shuffle
+  *     Exchange: the index streams through a join against the broadcast
+  *     batch;
   *  3. the exact-dup membership join streams the corpus index through a
   *     broadcast LEFT SEMI with NO Exchange/HashAggregate on the index
   *     side (the serving path must scan the index, never shuffle it);
@@ -19,8 +22,13 @@ import graft.operators.Dedup
   *     superseded generation dirs and absorbed tail files after a
   *     one-generation grace window, and the guards keep working from the
   *     generation alone;
-  *  5. an admit into a compacted index runs at most 12 Spark jobs and
-  *     scans the generation's band files once.
+  *  5. an admit into a compacted index runs at most 6 Spark jobs and
+  *     scans the generation's band files once;
+  *  6. a generation written in the older key-slot layout (`kp=`
+  *     directories, `keyParts` in its marker) gives the same decisions,
+  *     and the next compaction rewrites it flat;
+  *  probes and admits against a compacted index log no misplaced-hint
+  *  WARN.
   */
 class CompactionSpec extends SparkSpec {
 
@@ -34,7 +42,41 @@ class CompactionSpec extends SparkSpec {
     stats.recent.filter(d => ids.contains(d.docId))
       .map(d => d.docId -> (d.decision, d.reason)).toMap
 
-  test("compaction preserves decisions, prunes probes, reclaims with grace") {
+  private def kpDirs(genDir: String): Seq[String] =
+    new java.io.File(s"$genDir/bands").listFiles().toSeq.map(_.getName)
+      .filter(_.startsWith("kp="))
+
+  /** Runs `body` and returns what Spark's hint-error logger printed
+    * meanwhile (a broadcast hint planned outside a join lands there).
+    */
+  private def hintWarnings(body: => Unit): Seq[String] = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logger = LogManager.getLogger(
+      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger").asInstanceOf[Logger]
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val appender = new AbstractAppender("hint-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        lines.add(e.getMessage.getFormattedMessage); ()
+      }
+    }
+    val prevLevel = logger.getLevel
+    appender.start()
+    logger.addAppender(appender)
+    logger.setLevel(Level.WARN)
+    try body
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(prevLevel)
+      appender.stop()
+    }
+    lines.asScala.toSeq
+  }
+
+  test("compaction preserves decisions, probes flat bands unshuffled, reclaims with grace") {
     val root1 = java.nio.file.Files.createTempDirectory("graft_compact1").toString
     val root2 = java.nio.file.Files.createTempDirectory("graft_compact2").toString
     val s1 = new CurationPipeline.Stats
@@ -56,9 +98,8 @@ class CompactionSpec extends SparkSpec {
     val gen0 = CurationPipeline.compact(spark, root1)
     assert(CurationPipeline.currentGeneration(spark, root1)
       .exists(_.version == gen0.version))
-    // the generation absorbed the whole tail: nothing live left
-    assert(new java.io.File(s"${gen0.dir}/bands").listFiles()
-      .exists(_.getName.startsWith("kp=")), "pruned layout missing kp= dirs")
+    // ---- 2a: the generation's band files are flat
+    assert(kpDirs(gen0.dir).isEmpty, s"slot directories under ${gen0.dir}/bands")
 
     // ---- mixed probe batch: every decision class, against both layouts
     val fresh = "an entirely novel submission concerning tidal measurement " +
@@ -87,71 +128,78 @@ class CompactionSpec extends SparkSpec {
       "premise: 109 band-collides with 108 only, 108 with corpus doc 8")
     assert(meets(110L, 102L) && meets(110L, 7L),
       "premise: 110 band-collides with batch doc 102 and corpus doc 7")
-    for ((root, stats) <- Seq(root1 -> s1, root2 -> s2))
-      CurationPipeline.admitBatch(spark, batchDf(probe.map(p => (p._1, p._2))),
-        root, stats)
-    val ids = probe.map(_._1).toSet
-    val d1 = decisionsOf(s1, ids)
-    val d2 = decisionsOf(s2, ids)
-    assert(d1 == d2, s"compacted vs control decisions differ:\n$d1\n$d2")
-    assert(d1(101L) == ("rejected", "exact_dup_corpus"), d1)
-    assert(d1(102L) == ("rejected", "near_dup_corpus"), d1)
-    assert(d1(103L) == ("admitted", ""), d1)
-    assert(d1(104L) == ("rejected", "exact_dup_batch"), d1)
-    assert(d1(105L) == ("rejected", "near_dup_batch"), d1)
-    assert(d1(106L) == ("admitted", ""), d1)
-    assert(d1(107L) == ("rejected", "exact_dup_batch"), d1)
-    assert(d1(108L) == ("rejected", "near_dup_corpus"), d1)
-    assert(d1(109L) == ("rejected", "near_dup_batch"), d1)
-    assert(d1(110L) == ("rejected", "near_dup_batch"), d1)
+    // the admit into the compacted index and the probes below log no
+    // misplaced-hint WARN
+    val hints = hintWarnings {
+      for ((root, stats) <- Seq(root1 -> s1, root2 -> s2))
+        CurationPipeline.admitBatch(spark, batchDf(probe.map(p => (p._1, p._2))),
+          root, stats)
+      val ids = probe.map(_._1).toSet
+      val d1 = decisionsOf(s1, ids)
+      val d2 = decisionsOf(s2, ids)
+      assert(d1 == d2, s"compacted vs control decisions differ:\n$d1\n$d2")
+      assert(d1(101L) == ("rejected", "exact_dup_corpus"), d1)
+      assert(d1(102L) == ("rejected", "near_dup_corpus"), d1)
+      assert(d1(103L) == ("admitted", ""), d1)
+      assert(d1(104L) == ("rejected", "exact_dup_batch"), d1)
+      assert(d1(105L) == ("rejected", "near_dup_batch"), d1)
+      assert(d1(106L) == ("admitted", ""), d1)
+      assert(d1(107L) == ("rejected", "exact_dup_batch"), d1)
+      assert(d1(108L) == ("rejected", "near_dup_corpus"), d1)
+      assert(d1(109L) == ("rejected", "near_dup_batch"), d1)
+      assert(d1(110L) == ("rejected", "near_dup_batch"), d1)
 
-    // ---- 2: the production band probe prunes the generation scan to the
-    // probe's key slots (AQE off so the scan node is directly observable)
-    val probeBands = Dedup.bandKeys(Dedup.minhashSignaturesRowwise(
-      batchDf(Seq(900L -> (corpusText(5) + " trailer"))),
-      col("doc_id"), col("text"), CurationPipeline.ShingleN)).cache()
-    val slots = probeBands
-      .select(Dedup.keyPart(col("key"), gen0.keyParts).as("kp"))
-      .distinct().collect().map(_.getInt(0)).toSet
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val hits = CurationPipeline.corpusBandHits(spark, root1, probeBands)
-      // execute hits ITSELF so its executedPlan's scan metrics populate
-      assert(hits.collect().map(_.getAs[Long]("b")).toSet == Set(900L),
-        "probe should band-hit its corpus near-original")
-      val scans = hits.queryExecution.executedPlan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-            if f.metadata.get("Location").exists(_.contains("gen_")) => f
-      }
-      assert(scans.nonEmpty, "no scan over the compacted generation")
-      val partsRead = scans.map(_.metrics("numPartitions").value).sum
-      assert(partsRead > 0 && partsRead <= slots.size,
-        s"generation probe read $partsRead partitions for ${slots.size} probed slots")
+      // ---- 2b: the production band probe streams the generation through a
+      // join against the broadcast batch — no shuffle, and the generation is
+      // never the broadcast side (AQE off so the plan is directly observable)
+      val probeBands = Dedup.bandKeys(Dedup.minhashSignaturesRowwise(
+        batchDf(Seq(900L -> (corpusText(5) + " trailer"))),
+        col("doc_id"), col("text"), CurationPipeline.ShingleN)).cache()
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      try {
+        val hits = CurationPipeline.corpusBandHits(spark, root1, probeBands)
+        assert(hits.collect().map(_.getAs[Long]("b")).toSet == Set(900L),
+          "probe should band-hit its corpus near-original")
+        val plan = hits.queryExecution.executedPlan
+        assert(plan.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec
+              if f.metadata.get("Location").exists(_.contains("gen_")) => f
+        }.nonEmpty, s"no scan over the compacted generation:\n$plan")
+        assert(plan.collect {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+        }.isEmpty, s"band probe shuffles:\n$plan")
+        assert(plan.collect {
+          case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
+        }.forall(_.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+        }.isEmpty), s"band probe broadcasts an index scan:\n$plan")
 
-      // ---- 3: exact-dup membership = broadcast LEFT SEMI streaming the
-      // index side — no Exchange/HashAggregate anywhere under the join's
-      // streamed (index) subtree
-      val memb = CurationPipeline.corpusHashHits(spark, root1,
-        batchDf(Seq(901L -> corpusText(4))).select(md5(col("text")).as("text_hash")))
-      assert(memb.count() == 1, "hash of a corpus text must hit")
-      val bhj = memb.queryExecution.executedPlan.collectFirst {
-        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-            if j.joinType.toString == "LeftSemi" => j
-      }
-      assert(bhj.nonEmpty,
-        s"expected broadcast left-semi membership join:\n${memb.queryExecution.executedPlan}")
-      val indexSide = bhj.get.left
-      assert(indexSide.collect {
-        case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-      }.isEmpty, s"index side of the membership join shuffles:\n$indexSide")
-      assert(indexSide.collect {
-        case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
-      }.isEmpty, s"index side of the membership join aggregates:\n$indexSide")
-      assert(indexSide.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-      }.nonEmpty, "index scan missing from the membership join's streamed side")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        // ---- 3: exact-dup membership = broadcast LEFT SEMI streaming the
+        // index side — no Exchange/HashAggregate anywhere under the join's
+        // streamed (index) subtree
+        val memb = CurationPipeline.corpusHashHits(spark, root1,
+          batchDf(Seq(901L -> corpusText(4))).select(md5(col("text")).as("text_hash")))
+        assert(memb.count() == 1, "hash of a corpus text must hit")
+        val bhj = memb.queryExecution.executedPlan.collectFirst {
+          case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+              if j.joinType.toString == "LeftSemi" => j
+        }
+        assert(bhj.nonEmpty,
+          s"expected broadcast left-semi membership join:\n${memb.queryExecution.executedPlan}")
+        val indexSide = bhj.get.left
+        assert(indexSide.collect {
+          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+        }.isEmpty, s"index side of the membership join shuffles:\n$indexSide")
+        assert(indexSide.collect {
+          case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
+        }.isEmpty, s"index side of the membership join aggregates:\n$indexSide")
+        assert(indexSide.collect {
+          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
+        }.nonEmpty, "index scan missing from the membership join's streamed side")
+      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
+    assert(hints.isEmpty, s"misplaced-hint WARNs:\n${hints.mkString("\n")}")
 
     // ---- 4: generation-retire reclamation across two more compactions.
     // gen1 absorbs the probe batch's tail; gen0 survives one grace window
@@ -185,7 +233,7 @@ class CompactionSpec extends SparkSpec {
     assert(dPost(203L) == ("admitted", ""), dPost)
   }
 
-  test("an admit runs at most 12 Spark jobs and scans the generation's bands once") {
+  test("an admit runs at most 6 Spark jobs and scans the generation's bands once") {
     val root = java.nio.file.Files.createTempDirectory("graft_jobs").toString
     val stats = new CurationPipeline.Stats
     def text(i: Long) =
@@ -193,9 +241,9 @@ class CompactionSpec extends SparkSpec {
     CurationPipeline.admitBatch(spark, batchDf((1L to 8L).map(i => (i, text(i)))),
       root, stats)
     val gen = CurationPipeline.compact(spark, root)
-    // the first admit after a compaction lists the generation's key-slot
-    // directories (cached per generation); the counted admit is the next
-    // one, which also probes a non-empty tail
+    // the first admit after a compaction lists the generation's files
+    // (cached per generation); the counted admit is the next one, which
+    // also probes a non-empty tail
     CurationPipeline.admitBatch(spark, batchDf(Seq(9L -> text(9))), root, stats)
     val batch = batchDf((11L to 18L).map(i => (i, text(i))) ++
       Seq(21L -> text(2), 22L -> (text(3) + " more"), 23L -> (text(9) + " more")))
@@ -233,8 +281,66 @@ class CompactionSpec extends SparkSpec {
     val d = decisionsOf(stats, Set(11L, 21L, 22L, 23L))
     assert(d(11L) == ("admitted", "") && d(21L) == ("rejected", "exact_dup_corpus") &&
       d(22L) == ("rejected", "near_dup_corpus") && d(23L) == ("rejected", "near_dup_corpus"), d)
-    assert(jobs.get <= 12, s"admit launched ${jobs.get} jobs")
+    assert(jobs.get <= 6, s"admit launched ${jobs.get} jobs")
     assert(bandScans.get == 1, s"admit scanned ${gen.dir}/bands ${bandScans.get} times")
+  }
+
+  test("a generation in the old key-slot layout probes the same, compacts flat") {
+    val rootOld = java.nio.file.Files.createTempDirectory("graft_kp_old").toString
+    val rootCtl = java.nio.file.Files.createTempDirectory("graft_kp_ctl").toString
+    val sOld = new CurationPipeline.Stats
+    val sCtl = new CurationPipeline.Stats
+    def corpusText(i: Long) =
+      (0 until 14).map(w => s"k${i}v$w").mkString(s"legacy entry $i ", " ", "")
+    val seed = (1L to 8L).map(i => (i, corpusText(i)))
+    for ((root, stats) <- Seq(rootOld -> sOld, rootCtl -> sCtl))
+      CurationPipeline.admitBatch(spark, batchDf(seed), root, stats)
+
+    // hand-write the older layout over a fresh generation: band rows under
+    // kp=<xxhash64(key) mod 8> directories, and keyParts in the marker
+    val gen = CurationPipeline.compact(spark, rootOld)
+    val bands = new java.io.File(s"${gen.dir}/bands")
+    val slotted = s"${gen.dir}/bands_kp"
+    spark.read.parquet(bands.getPath)
+      .withColumn("kp", pmod(xxhash64(col("key")), lit(8L)).cast("int"))
+      .write.partitionBy("kp").parquet(slotted)
+    org.apache.commons.io.FileUtils.deleteDirectory(bands)
+    assert(new java.io.File(slotted).renameTo(bands))
+    val markerPath = new org.apache.hadoop.fs.Path(gen.dir, "_COMMITTED")
+    val fs = markerPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val in = fs.open(markerPath)
+    val marker = try json.readTree(in).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+      finally in.close()
+    marker.put("keyParts", 8)
+    val out = fs.create(markerPath, true)
+    try out.write(json.writeValueAsBytes(marker)) finally out.close()
+    assert(kpDirs(gen.dir).size > 1, "premise: bands sit under several kp= directories")
+    assert(CurationPipeline.currentGeneration(spark, rootOld).map(_.version) ==
+      Some(gen.version))
+
+    val probe = Seq(
+      11L -> corpusText(2),                  // exact_dup_corpus
+      12L -> (corpusText(5) + " appended"),  // near_dup_corpus
+      13L -> (corpusText(6) + " annexed"),   // near_dup_corpus
+      14L -> corpusText(40))                 // admitted
+    for ((root, stats) <- Seq(rootOld -> sOld, rootCtl -> sCtl))
+      CurationPipeline.admitBatch(spark, batchDf(probe), root, stats)
+    val ids = probe.map(_._1).toSet
+    val dOld = decisionsOf(sOld, ids)
+    assert(dOld == decisionsOf(sCtl, ids), s"old-layout vs control decisions differ: $dOld")
+    assert(dOld == Map(11L -> ("rejected", "exact_dup_corpus"),
+      12L -> ("rejected", "near_dup_corpus"), 13L -> ("rejected", "near_dup_corpus"),
+      14L -> ("admitted", "")), dOld)
+
+    // the next compaction folds the old generation into flat band files
+    val next = CurationPipeline.compact(spark, rootOld)
+    assert(kpDirs(next.dir).isEmpty, s"slot directories under ${next.dir}/bands")
+    val post = Seq(21L -> (corpusText(7) + " trailer"), 22L -> (corpusText(40) + " trailer"))
+    CurationPipeline.admitBatch(spark, batchDf(post), rootOld, sOld)
+    val dPost = decisionsOf(sOld, post.map(_._1).toSet)
+    assert(dPost == Map(21L -> ("rejected", "near_dup_corpus"),
+      22L -> ("rejected", "near_dup_corpus")), dPost)
   }
 
   test("compactOnStart folds a bulk-seeded tail, no-ops when tail is empty") {
