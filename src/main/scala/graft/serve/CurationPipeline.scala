@@ -9,7 +9,13 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.example.data.Group
+import org.apache.parquet.example.data.simple.SimpleGroupFactory
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.metadata.CompressionCodecName
+import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ArrayExpressions
 import org.apache.spark.sql.types.StructType
@@ -25,13 +31,19 @@ import graft.queries.PiiQueries
   * Per micro-batch (`foreachBatch`, batch semantics — the any-band OR of
   * the near-dup admit needs a per-doc aggregation append mode cannot
   * express without state), an admit runs
-  * one fetch, two index probes (together in one map-only stage) and two
-  * appends:
+  * one fetch and two index probes (together in one map-only stage) as
+  * Spark work — at most 5 jobs, none of which writes — and two
+  * driver-written appends:
   *   1. fetch: ONE projection per doc scrubs it (`PiiQueries.redactExpr` —
   *      map-only, no injection: real arrivals carry their own PII, and the
   *      redacted text is what gets admitted) and brings back its md5
   *      content hash, redacted-char count, length, shingle hashes and the
-  *      `Dedup` band keys computed from those same shingle hashes;
+  *      `Dedup` band keys computed from those same shingle hashes. The
+  *      batch is first repartitioned to `defaultParallelism` (an explicit
+  *      count, which AQE does not coalesce), so this runs on every core
+  *      even when the micro-batch is one partition, as a `MemoryStream`
+  *      batch is; the price is one tiny shuffle-map stage (~16 ms), which
+  *      a 1-doc HTTP batch pays too;
   *   2. exact dedup: first occurrence per hash inside the batch wins (min
   *      doc_id, `exact_dup_batch`), then arrivals whose hash exists in the
   *      PERSISTED corpus hash index are rejected (`exact_dup_corpus`,
@@ -57,16 +69,19 @@ import graft.queries.PiiQueries
   *      asymmetric overlap), so cross-batch excerpts are the batch
   *      funnel's d_containment stage's job — a documented bounded posture,
   *      stricter-never-looser within each batch;
-  *   5. admitted docs EXTEND both indexes (hash + band rows appended), so
+  *   5. admitted docs EXTEND both indexes (hash + band rows appended as
+  *      one parquet file each, written on the driver — no Spark job), so
   *      later batches are guarded against earlier ones — true corpus
   *      extension, not a static snapshot.
   *
   * Only the two probes read corpus-sized data; every intra-batch rule is
-  * decided on the driver from the fetched facts. At micro-batch size each
-  * Spark job's fixed cost (scheduling plus one AQE stage materialization,
-  * tens of ms) outweighs its data work, so a rule expressed as a
-  * self-join, groupBy or broadcast join costs more than the batch it
-  * decides; the driver already holds one row per doc for the decision log.
+  * decided on the driver from the fetched facts, and the appends are
+  * written there too. At micro-batch size each Spark job's fixed cost
+  * (scheduling plus one AQE stage materialization, and for a write its
+  * commit: tens to a hundred-odd ms) outweighs its data work, so a rule
+  * expressed as a self-join, groupBy or broadcast join, or a write of a
+  * batch's few KB of index rows, costs more than the batch it serves; the
+  * driver already holds one row per doc for the decision log.
   *
   * INDEX MEMBERSHIP IS SCAN-ONLY, NEVER SHUFFLE: the exact-dup corpus
   * check is `index ⋉ broadcast(batch hashes)` (left semi with the
@@ -79,8 +94,9 @@ import graft.queries.PiiQueries
   * putting the index on the left keeps it streaming through the join.
   *
   * INDEX LAYOUT + COMPACTION (`indexRoot`):
-  *   hash_tail/   append-only (text_hash) parquet — one file set per
-  *                admitting batch
+  *   hash_tail/   append-only (text_hash) parquet — one file per
+  *                admitting batch (Spark-written files from a bulk seed
+  *                are read alike)
   *   band_tail/   append-only (id, band, key) parquet
   *   gen_<v>/     a compacted generation: `hash/` (distinct hashes),
   *                `bands/` (distinct band rows, flat files — see
@@ -117,8 +133,8 @@ object CurationPipeline {
     */
   val CompactEveryBatches = 64
 
-  private val HashSchema = "text_hash STRING"
-  private val BandSchema = "id BIGINT, band INT, key STRING"
+  private[serve] val HashSchema = "text_hash STRING"
+  private[serve] val BandSchema = "id BIGINT, band INT, key STRING"
 
   final case class Decision(docId: Long, decision: String, reason: String,
                             charsRedacted: Long)
@@ -301,6 +317,32 @@ object CurationPipeline {
     if (files.isEmpty) emptyDf(spark, schemaDdl)
     else spark.read.schema(StructType.fromDDL(schemaDdl)).parquet(files: _*)
 
+  /** Append `rows` to the tail directory `dir` as ONE snappy parquet file
+    * written on the driver: an admit's hashes and band rows are already in
+    * driver memory, and a Spark write job would cost its scheduling and
+    * commit floor for a file of a few KB. The file is written under a
+    * `_`-prefixed name, which `partFiles` and Spark's listing both skip,
+    * and renamed to `part-<uuid>.snappy.parquet` once closed, so a reader
+    * never sees a half-written file; a failed rename fails the micro-batch
+    * (stricter, never looser). The file schema is `schemaDdl` as Spark's
+    * own parquet writer converts it.
+    */
+  private def appendTail[T](spark: SparkSession, dir: String, schemaDdl: String,
+                            rows: Seq[T])(fill: (Group, T) => Group): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val schema = new SparkToParquetSchemaConverter(spark.sessionState.conf)
+      .convert(StructType.fromDDL(schemaDdl))
+    val name = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
+    val tmp = new Path(dir, s"_$name")
+    val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
+      .withConf(conf).withType(schema)
+      .withCompressionCodec(CompressionCodecName.SNAPPY).build()
+    val groups = new SimpleGroupFactory(schema)
+    try rows.foreach(r => out.write(fill(groups.newGroup(), r))) finally out.close()
+    if (!fs(spark, dir).rename(tmp, new Path(dir, name)))
+      throw new java.io.IOException(s"tail append: could not rename $tmp into $dir")
+  }
+
   /** Tail files not yet absorbed by the current generation. */
   private def liveTail(spark: SparkSession, dir: String,
                        absorbed: Set[String]): Seq[String] =
@@ -389,8 +431,9 @@ object CurationPipeline {
     import spark.implicits._
     // chars_redacted clamps at 0: a redaction token longer than the matched
     // PII ('a@b.co' -> '<EMAIL>') would otherwise record a NEGATIVE delta
-    // and corrupt the cumulative counter
-    val scrubbed = batch
+    // and corrupt the cumulative counter. The repartition spreads the fetch
+    // over every core (step 1 of the scaladoc).
+    val scrubbed = batch.repartition(spark.sparkContext.defaultParallelism)
       .withColumn("redacted", PiiQueries.redactExpr(col("text")))
       .select(col("doc_id"), col("redacted").as("text"),
         greatest(lit(0L),
@@ -476,17 +519,17 @@ object CurationPipeline {
     val admitted = decided.collect { case (d, "") => d }
     // 5. extend the indexes with the admissions BEFORE recording decisions
     // (a crash between the two leaves the guard stricter, never looser);
-    // one file per append keeps the per-batch tail probe's file count down
+    // one driver-written file per append keeps the per-batch tail probe's
+    // file count down
     if (admitted.nonEmpty) {
-      admitted.map(_.hash).toDF("text_hash").coalesce(1)
-        .write.mode("append").parquet(s"$indexRoot/hash_tail")
+      appendTail(spark, s"$indexRoot/hash_tail", HashSchema, admitted)(
+        (g, d) => g.append("text_hash", d.hash))
       val admittedIds = admitted.map(_.id).toSet
       val newBands = probeBands.filter(t => admittedIds(t._1))
-      // all-short-doc batches produce no band rows; an empty append would
-      // leave a schema-less directory behind
+      // all-short-doc batches produce no band rows, and no band file
       if (newBands.nonEmpty)
-        newBands.toDF("id", "band", "key").coalesce(1)
-          .write.mode("append").parquet(s"$indexRoot/band_tail")
+        appendTail(spark, s"$indexRoot/band_tail", BandSchema, newBands)(
+          (g, t) => g.append("id", t._1).append("band", t._2).append("key", t._3))
       if (stats.batches.incrementAndGet() % CompactEveryBatches == 0) {
         compact(spark, indexRoot)
         stats.compactions.incrementAndGet()

@@ -2,8 +2,12 @@ package graft.serve
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlanInfo}
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.SparkSpec
 import graft.operators.Dedup
@@ -22,11 +26,17 @@ import graft.operators.Dedup
   *     superseded generation dirs and absorbed tail files after a
   *     one-generation grace window, and the guards keep working from the
   *     generation alone;
-  *  5. an admit into a compacted index runs at most 6 Spark jobs and
-  *     scans the generation's band files once;
+  *  5. an admit into a compacted index runs at most 5 Spark jobs, none of
+  *     which writes, and scans the generation's band files once;
   *  6. a generation written in the older key-slot layout (`kp=`
   *     directories, `keyParts` in its marker) gives the same decisions,
   *     and the next compaction rewrites it flat;
+  *  7. the driver-written tail appends are renamed `part-` files that
+  *     read back as exactly the admitted rows and compact like any other;
+  *  8. the fetch of a one-partition batch runs `defaultParallelism` tasks
+  *     and decides as the same batch in its own partitioning does;
+  *  9. startup compaction folds a Spark-written bulk seed and
+  *     driver-written appends into one generation;
   *  probes and admits against a compacted index log no misplaced-hint
   *  WARN.
   */
@@ -74,6 +84,40 @@ class CompactionSpec extends SparkSpec {
       appender.stop()
     }
     lines.asScala.toSeq
+  }
+
+  /** `gen` absorbed every part file of both tails under `root`. */
+  private def assertAbsorbsTail(gen: CurationPipeline.Generation, root: String): Unit =
+    for ((dir, absorbed) <- Seq("hash_tail" -> gen.absorbedHash, "band_tail" -> gen.absorbedBand))
+      assert(absorbed.map(new org.apache.hadoop.fs.Path(_).getName) ==
+        new java.io.File(s"$root/$dir").list().toSet.filter(_.startsWith("part-")), dir)
+
+  /** The job starts and SQL execution starts that `body` posts. A marker
+    * job's start is delivered after every event `body` posted (one
+    * listener, one queue), so the list is complete once it arrives.
+    */
+  private def eventsDuring(body: => Unit): Seq[SparkListenerEvent] = {
+    val marker = "graft.test.marker"
+    val events = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerEvent]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty(marker) != null) drained.countDown()
+        else { events.add(e); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => events.add(s); ()
+        case _ => ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setLocalProperty(marker, "1")
+      try sc.parallelize(Seq(1)).count() finally sc.setLocalProperty(marker, null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    events.asScala.toSeq
   }
 
   test("compaction preserves decisions, probes flat bands unshuffled, reclaims with grace") {
@@ -233,7 +277,7 @@ class CompactionSpec extends SparkSpec {
     assert(dPost(203L) == ("admitted", ""), dPost)
   }
 
-  test("an admit runs at most 6 Spark jobs and scans the generation's bands once") {
+  test("an admit runs at most 5 Spark jobs, none writing, scans the bands once") {
     val root = java.nio.file.Files.createTempDirectory("graft_jobs").toString
     val stats = new CurationPipeline.Stats
     def text(i: Long) =
@@ -248,41 +292,128 @@ class CompactionSpec extends SparkSpec {
     val batch = batchDf((11L to 18L).map(i => (i, text(i))) ++
       Seq(21L -> text(2), 22L -> (text(3) + " more"), 23L -> (text(9) + " more")))
 
-    // the marker job's start is delivered after every event the admit
-    // posted (one listener, one queue), so the counts are complete then
-    val marker = "graft.test.marker"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val bandScans = new java.util.concurrent.atomic.AtomicInteger
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    def scansBands(p: org.apache.spark.sql.execution.SparkPlanInfo): Int =
+    val events = eventsDuring(CurationPipeline.admitBatch(spark, batch, root, stats))
+    val jobs = events.collect { case j: SparkListenerJobStart => j }
+    val plans = events.collect { case e: SparkListenerSQLExecutionStart => e.sparkPlanInfo }
+    def scansBands(p: SparkPlanInfo): Int =
       (if (p.metadata.get("Location").exists(_.contains(s"${gen.dir}/bands"))) 1 else 0) +
         p.children.map(scansBands).sum
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(marker) != null) drained.countDown()
-        else { jobs.incrementAndGet(); () }
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            bandScans.addAndGet(scansBands(s.sparkPlanInfo)); ()
-          case _ => ()
-        }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      CurationPipeline.admitBatch(spark, batch, root, stats)
-      sc.setLocalProperty(marker, "1")
-      try sc.parallelize(Seq(1)).count() finally sc.setLocalProperty(marker, null)
-      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
+    def writeNodes(p: SparkPlanInfo): Seq[String] =
+      Seq(p.nodeName).filter(n => n.contains("InsertIntoHadoopFsRelationCommand") ||
+        n == "WriteFiles") ++ p.children.flatMap(writeNodes)
 
     assert(stats.compactions.get == 0, "the measured admit must not compact")
     val d = decisionsOf(stats, Set(11L, 21L, 22L, 23L))
     assert(d(11L) == ("admitted", "") && d(21L) == ("rejected", "exact_dup_corpus") &&
       d(22L) == ("rejected", "near_dup_corpus") && d(23L) == ("rejected", "near_dup_corpus"), d)
-    assert(jobs.get <= 6, s"admit launched ${jobs.get} jobs")
-    assert(bandScans.get == 1, s"admit scanned ${gen.dir}/bands ${bandScans.get} times")
+    assert(jobs.size <= 5, s"admit launched ${jobs.size} jobs")
+    val writes = plans.flatMap(writeNodes)
+    assert(writes.isEmpty, s"admit planned Spark writes: ${writes.mkString(", ")}")
+    val bandScans = plans.map(scansBands).sum
+    assert(bandScans == 1, s"admit scanned ${gen.dir}/bands $bandScans times")
+  }
+
+  test("driver-written tail appends read back and compact exactly") {
+    val root = java.nio.file.Files.createTempDirectory("graft_tail").toString
+    val ctl = java.nio.file.Files.createTempDirectory("graft_tail_ctl").toString
+    val stats = new CurationPipeline.Stats
+    val sCtl = new CurationPipeline.Stats
+    def text(i: Long) =
+      (0 until 14).map(w => s"t${i}u$w").mkString(s"tail entry $i ", " ", "")
+    val batches = Seq(
+      (1L to 6L).map(i => (i, text(i))) :+ (7L -> "tiny doc"),
+      (8L to 10L).map(i => (i, text(i))) :+ (11L -> text(1)), // 11: exact_dup_corpus
+      Seq(12L -> "short one", 13L -> "short two"))            // all short: no band rows
+    for (b <- batches; (r, st) <- Seq(root -> stats, ctl -> sCtl))
+      CurationPipeline.admitBatch(spark, batchDf(b), r, st)
+    assert(stats.charsRedacted.get == 0, "premise: the scrub leaves these texts as they are")
+    val admitted = batches.flatten.filter(_._1 != 11L)
+    assert(stats.admitted.get == admitted.size)
+
+    // one part file per admitting batch (none for the all-short batch),
+    // beside checksum files only: no _SUCCESS, no temp-named file
+    for ((dir, files) <- Seq("hash_tail" -> 3, "band_tail" -> 2)) {
+      val names = new java.io.File(s"$root/$dir").list().toSeq
+      assert(names.count(_.startsWith("part-")) == files, s"$dir: $names")
+      assert(names.forall(n => (n.startsWith("part-") && n.endsWith(".snappy.parquet")) ||
+        (n.startsWith(".part-") && n.endsWith(".crc"))), s"$dir: $names")
+    }
+
+    // read back through Spark's own listing: the file schema is the index
+    // schema, and the rows are exactly the admissions' hashes and band rows
+    def rows(dir: String, ddl: String): Seq[String] = {
+      val df = spark.read.schema(ddl).parquet(s"$root/$dir")
+      df.collect().map(_.mkString("|")).toSeq.sorted
+    }
+    for ((dir, ddl) <- Seq("hash_tail" -> CurationPipeline.HashSchema,
+                           "band_tail" -> CurationPipeline.BandSchema))
+      assert(spark.read.parquet(s"$root/$dir").schema == StructType.fromDDL(ddl), dir)
+    val admittedDf = batchDf(admitted)
+    assert(rows("hash_tail", CurationPipeline.HashSchema) ==
+      admittedDf.select(md5(col("text"))).collect().map(_.mkString("|")).toSeq.sorted)
+    assert(rows("band_tail", CurationPipeline.BandSchema) ==
+      Dedup.bandKeys(Dedup.minhashSignaturesRowwise(admittedDf, col("doc_id"), col("text"),
+        CurationPipeline.ShingleN)).collect().map(_.mkString("|")).toSeq.sorted)
+
+    // compaction absorbs every tail file, and the generation decides as
+    // the uncompacted control does
+    val gen = CurationPipeline.compact(spark, root)
+    assertAbsorbsTail(gen, root)
+    val probe = Seq(
+      21L -> text(2),               // exact_dup_corpus
+      22L -> (text(3) + " more"),   // near_dup_corpus
+      23L -> "tiny doc",            // exact_dup_corpus (short doc, hash only)
+      24L -> (text(9) + " more"),   // near_dup_corpus (second batch)
+      25L -> text(40))              // admitted
+    for ((r, st) <- Seq(root -> stats, ctl -> sCtl))
+      CurationPipeline.admitBatch(spark, batchDf(probe), r, st)
+    val ids = probe.map(_._1).toSet
+    val d = decisionsOf(stats, ids)
+    assert(d == decisionsOf(sCtl, ids), s"compacted vs control decisions differ: $d")
+    assert(d == Map(21L -> ("rejected", "exact_dup_corpus"),
+      22L -> ("rejected", "near_dup_corpus"), 23L -> ("rejected", "exact_dup_corpus"),
+      24L -> ("rejected", "near_dup_corpus"), 25L -> ("admitted", "")), d)
+  }
+
+  test("the fetch of a one-partition batch runs on every core, same decisions") {
+    val rootOne = java.nio.file.Files.createTempDirectory("graft_fetch1").toString
+    val rootAny = java.nio.file.Files.createTempDirectory("graft_fetchn").toString
+    val sOne = new CurationPipeline.Stats
+    val sAny = new CurationPipeline.Stats
+    def text(i: Long) =
+      (0 until 14).map(w => s"f${i}p$w").mkString(s"fetch entry $i ", " ", "")
+    val seed = (1L to 8L).map(i => (i, text(i)))
+    for ((r, st) <- Seq(rootOne -> sOne, rootAny -> sAny))
+      CurationPipeline.admitBatch(spark, batchDf(seed), r, st)
+    val probe = (11L to 40L).map(i => (i, text(i))) ++ Seq(
+      41L -> text(2),              // exact_dup_corpus
+      42L -> (text(3) + " more"),  // near_dup_corpus
+      43L -> text(11),             // exact_dup_batch
+      44L -> (text(12) + " more"), // near_dup_batch
+      45L -> "tiny doc")           // admitted (short)
+
+    // a MemoryStream micro-batch is one partition; coalesce(1) stands in
+    val one = batchDf(probe).coalesce(1)
+    assert(one.rdd.getNumPartitions == 1, "premise: a one-partition batch")
+    val events = eventsDuring(CurationPipeline.admitBatch(spark, one, rootOne, sOne))
+    CurationPipeline.admitBatch(spark, batchDf(probe), rootAny, sAny)
+
+    // the fetch is the admit's first SQL execution; the final stage of its
+    // last job is the stage that scrubs, shingles and MinHashes
+    val jobs = events.collect { case j: SparkListenerJobStart => j }
+      .map(j => (j.properties.getProperty(SQLExecution.EXECUTION_ID_KEY).toLong, j))
+    val fetchJobs = jobs.filter(_._1 == jobs.map(_._1).min).map(_._2)
+    val result = fetchJobs.maxBy(_.jobId).stageInfos.maxBy(_.stageId)
+    assert(result.numTasks == spark.sparkContext.defaultParallelism,
+      s"the fetch's result stage ran ${result.numTasks} tasks")
+
+    val ids = probe.map(_._1).toSet
+    val d = decisionsOf(sOne, ids)
+    assert(d == decisionsOf(sAny, ids), s"one-partition vs default decisions differ: $d")
+    assert(d == (11L to 40L).map(_ -> ("admitted", "")).toMap ++ Map(
+      41L -> ("rejected", "exact_dup_corpus"), 42L -> ("rejected", "near_dup_corpus"),
+      43L -> ("rejected", "exact_dup_batch"), 44L -> ("rejected", "near_dup_batch"),
+      45L -> ("admitted", "")), d)
   }
 
   test("a generation in the old key-slot layout probes the same, compacts flat") {
@@ -348,8 +479,17 @@ class CompactionSpec extends SparkSpec {
     def corpusText(i: Long) =
       (0 until 14).map(w => s"c${i}y$w").mkString(s"seeded entry $i ", " ", "")
     val seed = (1L to 8L).map(i => (i, corpusText(i)))
+    // docs 1-4 bulk-seeded by Spark writes, as an offline loader writes
+    // the tail; docs 5-8 admitted on top as driver-written appends
+    val bulk = batchDf(seed.take(4))
+    bulk.select(md5(col("text")).as("text_hash"))
+      .write.mode("overwrite").parquet(s"$root/hash_tail")
+    Dedup.bandKeys(Dedup.minhashSignaturesRowwise(bulk, col("doc_id"), col("text"),
+        CurationPipeline.ShingleN))
+      .write.mode("overwrite").parquet(s"$root/band_tail")
     val stats = new CurationPipeline.Stats
-    CurationPipeline.admitBatch(spark, batchDf(seed), root, stats)
+    CurationPipeline.admitBatch(spark, batchDf(seed.drop(4)), root, stats)
+    assert(stats.admitted.get == 4, "the admitted docs are new to the bulk seed")
     assert(CurationPipeline.currentGeneration(spark, root).isEmpty,
       "seed admissions should land in the tail, not a generation")
 
@@ -358,6 +498,7 @@ class CompactionSpec extends SparkSpec {
     assert(gen.nonEmpty, "compactOnStart left a bulk-seeded tail unfolded")
     assert(CurationPipeline.currentGeneration(spark, root)
       .exists(_.version == gen.get.version))
+    assertAbsorbsTail(gen.get, root)
 
     // idempotent when nothing new arrived: same generation, no rewrite
     val again = CurationPipeline.compactOnStart(spark, root)
@@ -365,12 +506,15 @@ class CompactionSpec extends SparkSpec {
       "compactOnStart with an empty live tail must not rewrite the generation")
 
     // decisions against the startup-compacted index match the tail
-    // semantics: a corpus dup rejects, fresh admits
+    // semantics: dups of bulk-seeded and of admitted docs reject, fresh
+    // admits
     val s2 = new CurationPipeline.Stats
-    CurationPipeline.admitBatch(spark,
-      batchDf(Seq((301L, corpusText(3)), (302L, corpusText(300)))), root, s2)
-    val d = decisionsOf(s2, Set(301L, 302L))
-    assert(d(301L)._1 == "rejected", d)
-    assert(d(302L) == ("admitted", ""), d)
+    CurationPipeline.admitBatch(spark, batchDf(Seq((301L, corpusText(3)),
+      (302L, corpusText(300)), (303L, corpusText(2) + " more"), (304L, corpusText(6)),
+      (305L, corpusText(7) + " more"))), root, s2)
+    val d = decisionsOf(s2, Set(301L, 302L, 303L, 304L, 305L))
+    assert(d == Map(301L -> ("rejected", "exact_dup_corpus"), 302L -> ("admitted", ""),
+      303L -> ("rejected", "near_dup_corpus"), 304L -> ("rejected", "exact_dup_corpus"),
+      305L -> ("rejected", "near_dup_corpus")), d)
   }
 }
