@@ -13,13 +13,8 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
     // transformWithState (CDP/entity/rolling-counter processors) requires
-    // the RocksDB state store; mirrors Sessions.streaming
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    // see Sessions.streaming: 4.1's per-file checkpoint checksums deadlock
-    // local-mode state commits
-    .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
+    // the RocksDB state store; the streaming settings are Sessions.streaming's
+    .config(Sessions.streamingConf)
     .getOrCreate()
 
   override def afterAll(): Unit = {
