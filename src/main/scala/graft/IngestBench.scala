@@ -15,11 +15,14 @@ import graft.serve.CurationPipeline
   * `compact()` folds the tail into a few flat files).
   *
   * What this measures: how per-batch admit cost splits between the BATCH
-  * and the corpus. Both layouts scan the whole index per batch
-  * (scan-only — the membership joins broadcast the batch — but still a
-  * full read); they differ in how many files that read opens, so the gap
-  * between them is file-count cost and the drift of either with N is
-  * scan cost.
+  * and the corpus. Neither layout reads the index per batch. A compacted
+  * generation is read once, at its first probe, into resident sorted
+  * key partitions that each admit binary-searches in one Spark job; a
+  * tail file is read once onto the driver, and each admit searches it
+  * there. So `first_ms` carries the one-time load (the generation build,
+  * or the driver read of a bulk-seeded tail), and the drift of `p50_ms`
+  * with N is the O(batch × log N) search plus the resident partitions'
+  * memory.
   *
   * `runMain graft.IngestBench [indexDocs] [batchSize] [nBatches] [cores]`
   * — prints one JSON line. Workload per batch: 80% fresh docs, 10% exact
@@ -29,8 +32,7 @@ import graft.serve.CurationPipeline
   * SPARK_GRAFT_INGEST_CORPUS=<dir with documents.parquet> seeds the index
   * from a REAL corpus (a MakeTier tier) instead of the synthetic
   * generator, and draws the duplicate batch slices from that corpus —
-  * the corpus ≫ batch regime, where the index scan's share of the admit
-  * grows with N. `indexDocs` is ignored in this mode (the corpus row
+  * the corpus ≫ batch regime. `indexDocs` is ignored in this mode (the corpus row
   * count is reported instead).
   */
 object IngestBench {

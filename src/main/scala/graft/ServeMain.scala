@@ -40,10 +40,14 @@ object ServeMain {
                        queries: Seq[StreamingQuery], sim: SimControl,
                        alertsHub: EventHub, segmentsHub: EventHub,
                        profilesHub: EventHub, cdpMetrics: CdpMetrics,
-                       feeders: Seq[IngestFeeder[_]] = Nil) {
-    /** Stop queries, feeders, server, and detach the metrics listener. */
+                       feeders: Seq[IngestFeeder[_]] = Nil,
+                       corpusRoot: Option[String] = None) {
+    /** Stop queries, feeders, server, and detach the metrics listener;
+      * release the corpus index's resident generation.
+      */
     def close(): Unit = {
       queries.foreach(_.stop())
+      corpusRoot.foreach(CurationPipeline.release)
       feeders.foreach(_.interrupt())
       sim.stop()
       cdpMetrics.detach(spark)
@@ -219,7 +223,7 @@ object ServeMain {
       corpusIngest = Some(corpusIngest), corpusStats = Some(corpusStats)).start()
     App(server, spark, Seq(segmentQuery, reengageQuery, profileQuery, corpusQuery), sim,
       alertsHub, segmentsHub, profilesHub, cdpMetrics,
-      feeders = cdpFeeders :+ corpusFeeder)
+      feeders = cdpFeeders :+ corpusFeeder, corpusRoot = Some(s"$corpusDir/index"))
   }
 
   /** Bounded top-20 by (lastSeen desc, profileId) without sorting the

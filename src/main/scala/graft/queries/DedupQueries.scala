@@ -1285,14 +1285,16 @@ object DedupQueries {
     },
 
     // Doc-level near-dup ADMIT over the persisted index — the oracle-
-    // checked shape of the served `/corpus/ingest` corpus band probe
-    // (CurationPipeline.corpusBandHits): each probe doc's bands come from
-    // the PER-ROW signature path (map-only, the one the served admit
-    // uses; parity with the groupBy path is exactly what the oracle
-    // certifies, since the SQL side computes registers via GROUP BY),
-    // hits are the candidatePairsAcross equijoin, and a doc is admitted
-    // iff NO corpus band bucket matched. Cost ∝ the probe batch against
-    // the index — never a corpus re-pass.
+    // checked semantics of the served `/corpus/ingest` band guard: each
+    // probe doc's bands come from the PER-ROW signature path (map-only,
+    // the one the served admit uses; parity with the groupBy path is
+    // exactly what the oracle certifies, since the SQL side computes
+    // registers via GROUP BY), and a doc is admitted iff NO corpus band
+    // bucket matched. Here the hits are the candidatePairsAcross
+    // equijoin; the served admit answers the same band-key membership by
+    // binary search over its resident packed index
+    // (CurationPipeline.corpusBandHits), which CompactionSpec holds equal
+    // to set membership over the index files.
     QueryDef(
       "q_neardup_admit",
       s"""WITH $truncatedBaseSql,

@@ -4,24 +4,33 @@ import java.sql.Timestamp
 import java.util.concurrent.ConcurrentLinkedDeque
 import java.util.concurrent.atomic.AtomicLong
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.HadoopOutputFile
+import org.apache.parquet.hadoop.util.HadoopStreams
+import org.apache.parquet.io.{OutputFile, PositionOutputStream}
+import org.apache.spark.{HashPartitioner, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaConverter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ArrayExpressions
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Dedup, Route}
 import graft.queries.PiiQueries
+import graft.streaming.LocalCheckpointFileManager
 
 /** Live corpus-curation ingest: the batch funnel's guards — PII scrub,
   * exact dedup, near-dup LSH admit, intra-batch containment — composed
@@ -31,9 +40,9 @@ import graft.queries.PiiQueries
   * Per micro-batch (`foreachBatch`, batch semantics — the any-band OR of
   * the near-dup admit needs a per-doc aggregation append mode cannot
   * express without state), an admit runs
-  * one fetch and two index probes (together in one map-only stage) as
-  * Spark work — at most 5 jobs, none of which writes — and two
-  * driver-written appends:
+  * one fetch and one probe of the resident index (both index probes in
+  * one job) as Spark work — at most 3 jobs, none of which writes — and
+  * two driver-written appends:
   *   1. fetch: ONE projection per doc scrubs it (`PiiQueries.redactExpr` —
   *      map-only, no injection: real arrivals carry their own PII, and the
   *      redacted text is what gets admitted) and brings back its md5
@@ -47,7 +56,7 @@ import graft.queries.PiiQueries
   *   2. exact dedup: first occurrence per hash inside the batch wins (min
   *      doc_id, `exact_dup_batch`), then arrivals whose hash exists in the
   *      PERSISTED corpus hash index are rejected (`exact_dup_corpus`,
-  *      probe 1: `corpusHashHits`);
+  *      the probe's hash keys);
   *   3. near-dup guard over the exact survivors, two layers:
   *      a. INTRA-BATCH: any doc sharing a band key with a smaller-id
   *         survivor of the same batch is rejected (`near_dup_batch`),
@@ -56,8 +65,8 @@ import graft.queries.PiiQueries
   *         posts — the common scrape pattern — would batch together and
   *         both pass;
   *      b. CORPUS: band keys probed against the persisted band index —
-  *         any band hit rejects (`near_dup_corpus`, probe 2:
-  *         `corpusBandHits`);
+  *         any band hit rejects (`near_dup_corpus`, the probe's band
+  *         keys);
   *   4. containment guard (INTRA-BATCH, over the near-dup SURVIVORS —
   *      the batch funnel's stage order): a survivor whose cool shingles
   *      are >=80% inside a LARGER surviving doc of the same batch is
@@ -74,7 +83,7 @@ import graft.queries.PiiQueries
   *      later batches are guarded against earlier ones — true corpus
   *      extension, not a static snapshot.
   *
-  * Only the two probes read corpus-sized data; every intra-batch rule is
+  * Only the probe reads corpus-sized data; every intra-batch rule is
   * decided on the driver from the fetched facts, and the appends are
   * written there too. At micro-batch size each Spark job's fixed cost
   * (scheduling plus one AQE stage materialization, and for a write its
@@ -83,15 +92,25 @@ import graft.queries.PiiQueries
   * batch's few KB of index rows, costs more than the batch it serves; the
   * driver already holds one row per doc for the decision log.
   *
-  * INDEX MEMBERSHIP IS SCAN-ONLY, NEVER SHUFFLE: the exact-dup corpus
-  * check is `index ⋉ broadcast(batch hashes)` (left semi with the
-  * micro-batch side broadcast), and the band probe is
-  * `index ⋈ broadcast(batch band rows)`. The corpus-sized side is read in
-  * place — no distinct(), no HashAggregate, no Exchange over it or over
-  * the hits, per batch (CompactionSpec asserts the shape); admitBatch
-  * folds the hits into sets. The direction matters: a batch-side-left
-  * semi join would have to BUILD the index (broadcast or shuffle it);
-  * putting the index on the left keeps it streaming through the join.
+  * THE INDEX IS RESIDENT, PROBED BY BINARY SEARCH: the first probe of a
+  * committed generation builds it once into a persisted
+  * (`MEMORY_AND_DISK`) RDD of sorted primitive `long` arrays, one
+  * `KeySet` per partition, partitioned by key (`Keys` packs a content
+  * hash into two longs and a band key into one, exactly). An admit packs
+  * its batch keys on the driver, runs ONE job of binary-search tasks over
+  * those partitions (no Catalyst plan, no broadcast, no generation file
+  * read), and searches the live tail on the driver: each live tail file's
+  * packed keys are loaded once per file name, and `appendTail` adds the
+  * file it writes. Per admit the work is O(batch × log index), plus a
+  * fixed job cost. A generation too large for memory reads its
+  * disk-backed blocks: still one job, with no planning. Membership is all
+  * either side answers, so the hits are the same as a join's.
+  *
+  * The resident generation is keyed by root, generation directory and
+  * `SparkContext`: a superseded generation is unpersisted when a newer
+  * one first resolves for its root, an entry whose context has stopped
+  * is dropped without being called into, and a tail file leaves the
+  * driver tail once a generation absorbs it.
   *
   * INDEX LAYOUT + COMPACTION (`indexRoot`):
   *   hash_tail/   append-only (text_hash) parquet — one file per
@@ -110,11 +129,10 @@ import graft.queries.PiiQueries
   * at the NEXT compaction). Appends racing a compaction land in new tail
   * files outside the snapshot and stay visible. Membership semantics make
   * the gen/tail overlap during the grace window harmless: both indexes are
-  * probed for EXISTENCE (semi-join / band hit), so a row present in both a
-  * generation and a not-yet-deleted tail file changes no decision.
+  * probed for EXISTENCE (hash or band key present), so a key present in
+  * both a generation and a not-yet-deleted tail file changes no decision.
   * `admitBatch` auto-compacts every `CompactEveryBatches` admitting
-  * batches; serving cost per batch stays ∝ batch size between compactions
-  * because tail probes are also broadcast-batch joins.
+  * batches, which bounds the driver tail at that many batches' keys.
   *
   * Docs shorter than the shingle width (n=5 words) produce no band keys:
   * they pass the near-dup guards trivially but are still exact-dedup'd by
@@ -159,6 +177,12 @@ object CurationPipeline {
     val charsRedacted = new AtomicLong
     val batches = new AtomicLong
     val compactions = new AtomicLong
+    /** Size and build time of the last resident generation an admit
+      * probed (`admitBatch`); 0 before the first generation.
+      */
+    val indexResidentKeys = new AtomicLong
+    val indexResidentBytes = new AtomicLong
+    val indexBuildMs = new AtomicLong
     private val decisions = new ConcurrentLinkedDeque[Decision]()
 
     def record(d: Decision): Unit = {
@@ -225,7 +249,7 @@ object CurationPipeline {
       val recentJson = recent.take(50).map { d =>
         s"""{"docId":${d.docId},"decision":"${d.decision}","reason":"${d.reason}","charsRedacted":${d.charsRedacted}}"""
       }.mkString("[", ",", "]")
-      s"""{"received":${received.get},"admitted":${admitted.get},"rejected_exact_batch":${rejectedExactBatch.get},"rejected_exact_corpus":${rejectedExactCorpus.get},"rejected_near_dup_batch":${rejectedNearDupBatch.get},"rejected_near_dup":${rejectedNearDup.get},"rejected_contained_batch":${rejectedContained.get},"chars_redacted":${charsRedacted.get},"batches":${batches.get},"compactions":${compactions.get},"decisions":$recentJson}"""
+      s"""{"received":${received.get},"admitted":${admitted.get},"rejected_exact_batch":${rejectedExactBatch.get},"rejected_exact_corpus":${rejectedExactCorpus.get},"rejected_near_dup_batch":${rejectedNearDupBatch.get},"rejected_near_dup":${rejectedNearDup.get},"rejected_contained_batch":${rejectedContained.get},"chars_redacted":${charsRedacted.get},"batches":${batches.get},"compactions":${compactions.get},"index_resident_keys":${indexResidentKeys.get},"index_resident_bytes":${indexResidentBytes.get},"index_build_ms":${indexBuildMs.get},"decisions":$recentJson}"""
     }
   }
 
@@ -281,41 +305,39 @@ object CurationPipeline {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType.fromDDL(schemaDdl))
 
-  /** Generation reads cached by directory: a committed generation is
-    * IMMUTABLE, so its DataFrame (and the file listing inside its
-    * FileIndex) is reused across micro-batches instead of re-listing the
-    * generation per batch. Superseded generations are evicted when a newer
-    * one resolves for the same root.
-    */
-  private val genReads =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** The cache key carries the owning SparkContext's identity: a pipeline
-    * restarted in the same JVM (new session, same indexRoot) must NOT be
-    * served a DataFrame whose plan and FileIndex belong to the STOPPED
-    * context — every micro-batch would fail on 'stopped SparkContext'
-    * until the next compaction happened to change the key. Touching a
-    * root evicts both superseded generations and stale-session entries
-    * for it.
-    */
-  private def cachedGenRead(spark: SparkSession, root: String, genDir: String,
-                            kind: String, mk: => DataFrame): DataFrame = {
-    val sess = System.identityHashCode(spark.sparkContext)
-    genReads.keySet().removeIf(k =>
-      k.startsWith(root + "|") && !k.startsWith(s"$root|$genDir|$sess|"))
-    genReads.computeIfAbsent(s"$root|$genDir|$sess|$kind", _ => mk)
-  }
-
   /** Read a set of tail part files with an EXPLICIT schema: an empty file
     * list and a _SUCCESS-only directory both yield an empty frame without
     * schema inference, while genuine read failures (corrupt file,
-    * transient FS error) PROPAGATE and fail the micro-batch — the guard
-    * must get stricter on failure, never looser.
+    * transient FS error) PROPAGATE and fail the compaction.
     */
   private def readFiles(spark: SparkSession, files: Seq[String],
                         schemaDdl: String): DataFrame =
     if (files.isEmpty) emptyDf(spark, schemaDdl)
     else spark.read.schema(StructType.fromDDL(schemaDdl)).parquet(files: _*)
+
+  /** The file system the driver writes `dir`'s files through. On a local
+    * path it is the checkpoint manager's checksummed `LocalFileSystem`,
+    * which sets permissions in-process, so writing a file and its `.crc`
+    * starts no `chmod`; any other scheme gets its own file system.
+    */
+  private def writeFs(spark: SparkSession, dir: String): FileSystem =
+    fs(spark, dir) match {
+      case local: LocalFileSystem =>
+        LocalCheckpointFileManager.nioPermissionsFs(local.getUri,
+          spark.sparkContext.hadoopConfiguration)
+      case other => other
+    }
+
+  /** `p` on `f` as a parquet `OutputFile`. */
+  private def outputFile(f: FileSystem, p: Path): OutputFile = new OutputFile {
+    override def create(blockSizeHint: Long): PositionOutputStream =
+      HadoopStreams.wrap(f.create(p, false))
+    override def createOrOverwrite(blockSizeHint: Long): PositionOutputStream =
+      HadoopStreams.wrap(f.create(p, true))
+    override def supportsBlockSize: Boolean = false
+    override def defaultBlockSize: Long = 0L
+    override def getPath: String = p.toString
+  }
 
   /** Append `rows` to the tail directory `dir` as ONE snappy parquet file
     * written on the driver: an admit's hashes and band rows are already in
@@ -325,22 +347,25 @@ object CurationPipeline {
     * and renamed to `part-<uuid>.snappy.parquet` once closed, so a reader
     * never sees a half-written file; a failed rename fails the micro-batch
     * (stricter, never looser). The file schema is `schemaDdl` as Spark's
-    * own parquet writer converts it.
+    * own parquet writer converts it. Returns the file's qualified path,
+    * as `partFiles` lists it.
     */
   private def appendTail[T](spark: SparkSession, dir: String, schemaDdl: String,
-                            rows: Seq[T])(fill: (Group, T) => Group): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
+                            rows: Seq[T])(fill: (Group, T) => Group): String = {
+    val f = writeFs(spark, dir)
     val schema = new SparkToParquetSchemaConverter(spark.sessionState.conf)
       .convert(StructType.fromDDL(schemaDdl))
     val name = s"part-${java.util.UUID.randomUUID()}.snappy.parquet"
     val tmp = new Path(dir, s"_$name")
-    val out = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(tmp, conf))
-      .withConf(conf).withType(schema)
+    val out = ExampleParquetWriter.builder(outputFile(f, tmp))
+      .withConf(spark.sparkContext.hadoopConfiguration).withType(schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY).build()
     val groups = new SimpleGroupFactory(schema)
     try rows.foreach(r => out.write(fill(groups.newGroup(), r))) finally out.close()
-    if (!fs(spark, dir).rename(tmp, new Path(dir, name)))
+    val dst = new Path(dir, name)
+    if (!f.rename(tmp, dst))
       throw new java.io.IOException(s"tail append: could not rename $tmp into $dir")
+    f.makeQualified(dst).toString
   }
 
   /** Tail files not yet absorbed by the current generation. */
@@ -361,61 +386,414 @@ object CurationPipeline {
       .select(schema.fieldNames.toSeq.map(col): _*)
   }
 
-  /** One index as a batch sees it: generation rows ∪ live tail files.
-    * admitBatch resolves the (immutable) marker ONCE per micro-batch and
-    * feeds both probes — resolving per probe doubled the gen-dir listing
-    * + marker read, fixed driver-side FS RPC latency on every batch.
+  // ------------------------------------------------------ the resident probe
+
+  /** Exact primitive packings of the index keys (the parquet files keep
+    * the strings):
+    *  - a content hash, 32 lowercase hex chars (an md5), is two longs, its
+    *    chars 0-15 and 16-31 as unsigned 64-bit values; compared unsigned,
+    *    `hi` first (`compareHash`), the pairs order as the strings do;
+    *  - a band key `"r0_r1"`, two canonical decimal MinHash registers each
+    *    below `Dedup.P` = 2^31 - 1, is one long, `(r0 << 31) | r1`.
+    * Both packings are one-to-one on well-formed keys, so membership of
+    * the packed key is membership of the string. A key that is not well
+    * formed throws, and fails the probe: it is never read as a miss.
     */
-  private def index(spark: SparkSession, root: String, gen: Option[Generation],
-                    sub: String, tailDir: String, absorbed: Generation => Set[String],
-                    schemaDdl: String): DataFrame = {
-    val tail = readFiles(spark,
-      liveTail(spark, s"$root/$tailDir", gen.map(absorbed).getOrElse(Set.empty)),
-      schemaDdl)
-    gen match {
-      case Some(g) =>
-        cachedGenRead(spark, root, g.dir, sub, genFiles(spark, g.dir, sub, schemaDdl))
-          .unionAll(tail)
-      case None => tail
+  private[serve] object Keys {
+
+    private def malformed(kind: String, s: String): Nothing =
+      throw new IllegalArgumentException(s"corpus index: malformed $kind key '$s'")
+
+    private def hex64(s: String, from: Int): Long = {
+      if (s == null || s.length != 32) malformed("content hash", s)
+      var v = 0L
+      var i = from
+      while (i < from + 16) {
+        val c = s.charAt(i)
+        val d =
+          if (c >= '0' && c <= '9') c - '0'
+          else if (c >= 'a' && c <= 'f') c - 'a' + 10
+          else malformed("content hash", s)
+        v = (v << 4) | d
+        i += 1
+      }
+      v
+    }
+
+    def hashHi(s: String): Long = hex64(s, 0)
+    def hashLo(s: String): Long = hex64(s, 16)
+
+    /** The register in `s(from until until)`: decimal digits, no sign, no
+      * leading zero, below `Dedup.P`.
+      */
+    private def register(s: String, from: Int, until: Int): Long = {
+      val n = until - from
+      if (n < 1 || n > 10 || (n > 1 && s.charAt(from) == '0')) malformed("band", s)
+      var v = 0L
+      var i = from
+      while (i < until) {
+        val c = s.charAt(i)
+        if (c < '0' || c > '9') malformed("band", s)
+        v = v * 10 + (c - '0')
+        i += 1
+      }
+      if (v >= Dedup.P) malformed("band", s)
+      v
+    }
+
+    def band(s: String): Long = {
+      val u = if (s == null) -1 else s.indexOf('_')
+      if (u < 0) malformed("band", s)
+      (register(s, 0, u) << 31) | register(s, u + 1, s.length)
+    }
+
+    def compareHash(hi: Long, lo: Long, hi2: Long, lo2: Long): Int = {
+      val c = java.lang.Long.compareUnsigned(hi, hi2)
+      if (c != 0) c else java.lang.Long.compareUnsigned(lo, lo2)
+    }
+
+    /** Sorts interleaved (hi, lo) pairs in place into `compareHash` order
+      * (a heapsort: primitive, in place).
+      */
+    def sortPairs(a: Array[Long]): Unit = {
+      def less(i: Int, j: Int): Boolean =
+        compareHash(a(2 * i), a(2 * i + 1), a(2 * j), a(2 * j + 1)) < 0
+      def swap(i: Int, j: Int): Unit = {
+        val hi = a(2 * i)
+        val lo = a(2 * i + 1)
+        a(2 * i) = a(2 * j)
+        a(2 * i + 1) = a(2 * j + 1)
+        a(2 * j) = hi
+        a(2 * j + 1) = lo
+      }
+      def sift(from: Int, end: Int): Unit = {
+        var root = from
+        var child = 2 * root + 1
+        while (child < end) {
+          if (child + 1 < end && less(child, child + 1)) child += 1
+          if (!less(root, child)) return
+          swap(root, child)
+          root = child
+          child = 2 * root + 1
+        }
+      }
+      val n = a.length / 2
+      var i = n / 2 - 1
+      while (i >= 0) { sift(i, n); i -= 1 }
+      var end = n - 1
+      while (end > 0) { swap(0, end); sift(0, end); end -= 1 }
+    }
+
+    /** The resident partition of a packed key, by multiplicative hashing. */
+    def partOf(key: Long, parts: Int): Int =
+      ((key * 0x9E3779B97F4A7C15L) >>> 33).toInt % parts
+  }
+
+  /** Packed keys of one part of the index, sorted for binary search:
+    * content hashes as interleaved (hi, lo) pairs in `Keys.compareHash`
+    * order, and band keys per band (`bands(b)`, ascending).
+    */
+  private[serve] final class KeySet(val hashes: Array[Long], val bands: Array[Array[Long]])
+      extends Serializable {
+
+    def hasHash(hi: Long, lo: Long): Boolean = {
+      var l = 0
+      var h = hashes.length / 2 - 1
+      while (l <= h) {
+        val m = (l + h) >>> 1
+        val c = Keys.compareHash(hashes(2 * m), hashes(2 * m + 1), hi, lo)
+        if (c == 0) return true
+        if (c < 0) l = m + 1 else h = m - 1
+      }
+      false
+    }
+
+    def hasBand(band: Int, key: Long): Boolean =
+      java.util.Arrays.binarySearch(bands(band), key) >= 0
+
+    /** Positions i of the (hi, lo) pairs of `q` held here, among the pairs
+      * whose `hi` is `mine`.
+      */
+    def hashHits(q: Array[Long], mine: Long => Boolean): Array[Int] = {
+      val out = new mutable.ArrayBuilder.ofInt
+      var i = 0
+      while (i < q.length / 2) {
+        if (mine(q(2 * i)) && hasHash(q(2 * i), q(2 * i + 1))) out += i
+        i += 1
+      }
+      out.result()
+    }
+
+    /** Positions i of the (band, key) pairs of `q` held here, among the
+      * pairs whose key is `mine`.
+      */
+    def bandHits(q: Array[Long], mine: Long => Boolean): Array[Int] = {
+      val out = new mutable.ArrayBuilder.ofInt
+      var i = 0
+      while (i < q.length / 2) {
+        if (mine(q(2 * i + 1)) && hasBand(q(2 * i).toInt, q(2 * i + 1))) out += i
+        i += 1
+      }
+      out.result()
+    }
+
+    def size: Long = hashes.length / 2 + bands.map(_.length.toLong).sum
+    def bytes: Long = 8L * (hashes.length + bands.map(_.length.toLong).sum)
+  }
+
+  /** Collects packed keys into a [[KeySet]]. */
+  private[serve] final class KeyBuilder {
+    private val hashes = new mutable.ArrayBuilder.ofLong
+    private val bands = Array.fill(Dedup.Bands)(new mutable.ArrayBuilder.ofLong)
+
+    def hash(hi: Long, lo: Long): Unit = { hashes += hi; hashes += lo; () }
+    def hash(s: String): Unit = hash(Keys.hashHi(s), Keys.hashLo(s))
+
+    def band(b: Int, key: Long): Unit = {
+      if (b < 0 || b >= Dedup.Bands)
+        throw new IllegalArgumentException(s"corpus index: band $b out of range")
+      bands(b) += key
+      ()
+    }
+
+    def addAll(ks: KeySet): Unit = {
+      hashes.addAll(ks.hashes)
+      ks.bands.indices.foreach(b => bands(b).addAll(ks.bands(b)))
+    }
+
+    /** The keys; `sorted = false` leaves them in arrival order (a chunk
+      * another builder sorts).
+      */
+    def result(sorted: Boolean = true): KeySet = {
+      val hs = hashes.result()
+      val bs = bands.map(_.result())
+      if (sorted) {
+        Keys.sortPairs(hs)
+        bs.foreach(java.util.Arrays.sort)
+      }
+      new KeySet(hs, bs)
     }
   }
 
-  /** Corpus exact-dup hits for a batch's content hashes:
-    * `index ⋉ broadcast(batch hashes)` — a left-semi join with the
-    * micro-batch side broadcast, so the corpus-sized index STREAMS through
-    * the join (scan-only: no distinct, no HashAggregate, no Exchange;
-    * CompactionSpec asserts the shape on the executed plan). A hash held
-    * by both a generation and a tail file still inside the grace window
-    * comes back twice; callers fold hits into a set.
+  /** A generation built into one [[KeySet]] per partition. */
+  private final class Resident(val sc: SparkContext, val genDir: String,
+                               val keys: RDD[KeySet], val size: Long,
+                               val bytes: Long, val buildMs: Long)
+
+  /** The driver tail of one root: each live tail file's keys. */
+  private final class Tail(val sc: SparkContext) {
+    val files = mutable.HashMap.empty[String, KeySet]
+  }
+
+  private val residents = new java.util.concurrent.ConcurrentHashMap[String, Resident]()
+  private val tails = new java.util.concurrent.ConcurrentHashMap[String, Tail]()
+  private val residentLock = new Object
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.serve.CurationPipeline")
+
+  /** `root`'s resident generation for `gen` on this session's context,
+    * built at its first probe. Entries of a stopped context are dropped
+    * without being called into (a pipeline restarted in the same JVM must
+    * not reach a stopped context); a superseded generation of the live
+    * context is unpersisted here, where the newer one first resolves.
+    */
+  private def resident(spark: SparkSession, root: String,
+                       gen: Option[Generation]): Option[Resident] =
+    residentLock.synchronized {
+      residents.values.removeIf(_.sc.isStopped)
+      tails.values.removeIf(_.sc.isStopped)
+      val sc = spark.sparkContext
+      Option(residents.get(root))
+        .filter(r => (r.sc eq sc) && gen.exists(_.dir == r.genDir))
+        .orElse {
+          Option(residents.remove(root)).filter(_.sc eq sc)
+            .foreach(_.keys.unpersist(blocking = false))
+          gen.map { g =>
+            val r = build(spark, g)
+            residents.put(root, r)
+            r
+          }
+        }
+    }
+
+  /** Drops `root`'s resident generation and driver tail, as a stopped
+    * pipeline does; the generation is unpersisted if its context runs.
+    */
+  def release(root: String): Unit = residentLock.synchronized {
+    Option(residents.remove(root)).filterNot(_.sc.isStopped)
+      .foreach(_.keys.unpersist(blocking = false))
+    tails.remove(root)
+    ()
+  }
+
+  private def string(r: InternalRow, i: Int): String =
+    if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+
+  /** Builds generation `g` into a persisted RDD of one sorted [[KeySet]]
+    * per partition (`defaultParallelism` partitions, by `Keys.partOf`):
+    * one job that packs each generation file's keys into a chunk per
+    * target partition, shuffles the chunks (primitive arrays, a few
+    * records per task) and sorts each partition's keys.
+    */
+  private def build(spark: SparkSession, g: Generation): Resident = {
+    val t0 = System.nanoTime()
+    val sc = spark.sparkContext
+    val n = sc.defaultParallelism
+    def chunks(df: DataFrame)(add: (Array[KeyBuilder], InternalRow) => Unit) =
+      df.queryExecution.toRdd.mapPartitions { rows =>
+        val parts = Array.fill(n)(new KeyBuilder)
+        rows.foreach(add(parts, _))
+        parts.iterator.zipWithIndex.map { case (b, p) => (p, b.result(sorted = false)) }
+      }
+    val hashes = chunks(genFiles(spark, g.dir, "hash", HashSchema)) { (parts, r) =>
+      val s = string(r, 0)
+      val hi = Keys.hashHi(s)
+      parts(Keys.partOf(hi, n)).hash(hi, Keys.hashLo(s))
+    }
+    val bands = chunks(genFiles(spark, g.dir, "bands", BandSchema).select("band", "key")) {
+      (parts, r) =>
+        val k = Keys.band(string(r, 1))
+        parts(Keys.partOf(k, n)).band(if (r.isNullAt(0)) -1 else r.getInt(0), k)
+    }
+    val keys = hashes.union(bands).partitionBy(new HashPartitioner(n))
+      .mapPartitions({ cs =>
+        val b = new KeyBuilder
+        cs.foreach(c => b.addAll(c._2))
+        Iterator(b.result())
+      }, preservesPartitioning = true)
+      .setName(s"corpus index ${g.dir}")
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sizes =
+      try keys.map(ks => (ks.size, ks.bytes)).collect()
+      catch { case e: Throwable => keys.unpersist(blocking = false); throw e }
+    val r = new Resident(sc, g.dir, keys, sizes.map(_._1).sum, sizes.map(_._2).sum,
+      (System.nanoTime() - t0) / 1000000L)
+    log.info(s"corpus index resident: generation ${g.dir} keys=${r.size} " +
+      s"bytes=${r.bytes} build_ms=${r.buildMs}")
+    r
+  }
+
+  /** One tail file's keys, read on the driver. */
+  private def readTailFile(conf: Configuration, file: String, bandFile: Boolean): KeySet = {
+    val b = new KeyBuilder
+    val in = ParquetReader.builder(new GroupReadSupport, new Path(file)).withConf(conf).build()
+    try {
+      var g = in.read()
+      while (g != null) {
+        if (bandFile) b.band(g.getInteger("band", 0), Keys.band(g.getString("key", 0)))
+        else b.hash(g.getString("text_hash", 0))
+        g = in.read()
+      }
+    } finally in.close()
+    b.result()
+  }
+
+  /** `root`'s live tail as driver-held keys: files `gen` absorbed leave,
+    * files not yet held are read once.
+    */
+  private def tailKeys(spark: SparkSession, root: String,
+                       gen: Option[Generation]): Seq[KeySet] =
+    residentLock.synchronized {
+      val sc = spark.sparkContext
+      val t = Option(tails.get(root)).filter(_.sc eq sc).getOrElse {
+        val t = new Tail(sc)
+        tails.put(root, t)
+        t
+      }
+      val live =
+        liveTail(spark, s"$root/hash_tail", gen.map(_.absorbedHash).getOrElse(Set.empty))
+          .map(_ -> false) ++
+        liveTail(spark, s"$root/band_tail", gen.map(_.absorbedBand).getOrElse(Set.empty))
+          .map(_ -> true)
+      val liveNames = live.map(_._1).toSet
+      t.files.filterInPlace((f, _) => liveNames(f))
+      for ((f, bandFile) <- live if !t.files.contains(f))
+        t.files(f) = readTailFile(sc.hadoopConfiguration, f, bandFile)
+      t.files.values.toSeq
+    }
+
+  /** Adds the keys of a tail file `appendTail` just wrote to `root`'s
+    * driver tail.
+    */
+  private def addTail(spark: SparkSession, root: String, file: String, keys: KeySet): Unit =
+    residentLock.synchronized {
+      Option(tails.get(root)).filter(_.sc eq spark.sparkContext).foreach(_.files(file) = keys)
+    }
+
+  private final case class Hits(hash: Array[Boolean], band: Array[Boolean],
+                                resident: Option[Resident])
+
+  /** Which batch keys the index holds, as flags aligned with `hashes`
+    * ((hi, lo) pairs) and `bands` ((band, key) pairs), both packed by
+    * `Keys`: one Spark job of binary searches over the resident
+    * generation, each task searching the keys of its own partition, then
+    * the driver tail.
+    */
+  private def probe(spark: SparkSession, root: String, gen: Option[Generation],
+                    hashes: Array[Long], bands: Array[Long]): Hits = {
+    val hits = Hits(new Array[Boolean](hashes.length / 2),
+      new Array[Boolean](bands.length / 2), resident(spark, root, gen))
+    def mark(h: Array[Int], b: Array[Int]): Unit = {
+      h.foreach(hits.hash(_) = true)
+      b.foreach(hits.band(_) = true)
+    }
+    hits.resident.foreach { r =>
+      val n = r.keys.getNumPartitions
+      spark.sparkContext.runJob(r.keys, (ctx: TaskContext, it: Iterator[KeySet]) => {
+        val p = ctx.partitionId()
+        val ks = it.next()
+        (ks.hashHits(hashes, Keys.partOf(_, n) == p), ks.bandHits(bands, Keys.partOf(_, n) == p))
+      }).foreach { case (h, b) => mark(h, b) }
+    }
+    tailKeys(spark, root, gen).foreach(ks =>
+      mark(ks.hashHits(hashes, _ => true), ks.bandHits(bands, _ => true)))
+    hits
+  }
+
+  private def packHashes(hs: Seq[String]): Array[Long] = {
+    val q = new Array[Long](2 * hs.size)
+    hs.iterator.zipWithIndex.foreach { case (h, i) =>
+      q(2 * i) = Keys.hashHi(h)
+      q(2 * i + 1) = Keys.hashLo(h)
+    }
+    q
+  }
+
+  private def packBands(rows: Seq[(Int, String)]): Array[Long] = {
+    val q = new Array[Long](2 * rows.size)
+    rows.iterator.zipWithIndex.foreach { case ((b, k), i) =>
+      q(2 * i) = b
+      q(2 * i + 1) = Keys.band(k)
+    }
+    q
+  }
+
+  /** Corpus exact-dup hits for a batch's content hashes (column
+    * `text_hash`): the batch side is collected, probed against the
+    * resident generation and the driver tail as an admit probes it, and
+    * each hashing row comes back once, as a local frame.
     */
   def corpusHashHits(spark: SparkSession, root: String,
-                     batchHashes: DataFrame): DataFrame =
-    corpusHashHits(spark, root, batchHashes, currentGeneration(spark, root))
+                     batchHashes: DataFrame): DataFrame = {
+    import spark.implicits._
+    val hs = batchHashes.select("text_hash").collect().map(_.getString(0)).toSeq
+    val hit = probe(spark, root, currentGeneration(spark, root), packHashes(hs),
+      Array.emptyLongArray).hash
+    hs.indices.filter(hit(_)).map(hs).toDF("text_hash")
+  }
 
-  private[serve] def corpusHashHits(spark: SparkSession, root: String,
-                                    batchHashes: DataFrame,
-                                    gen: Option[Generation]): DataFrame =
-    index(spark, root, gen, "hash", "hash_tail", _.absorbedHash, HashSchema)
-      .join(broadcast(batchHashes), Seq("text_hash"), "left_semi")
-
-  /** Corpus band-collision hits for a batch's (id, band, key) rows:
-    * `index ⋈ broadcast(batch band rows)` over generation ∪ live tail,
-    * projected to the probe-side id `b` — one map-only stage, one row per
-    * colliding index row (callers fold them into a set). This is THE
-    * production probe; CompactionSpec runs it directly and asserts its
-    * executed plan has no Exchange.
+  /** Corpus band-collision hits for a batch's (id, band, key) rows: the
+    * probe-side id `b` of every band row whose (band, key) the index holds,
+    * probed as an admit probes them, as a local frame.
     */
   def corpusBandHits(spark: SparkSession, root: String,
-                     probeBands: DataFrame): DataFrame =
-    corpusBandHits(spark, root, probeBands, currentGeneration(spark, root))
-
-  private[serve] def corpusBandHits(spark: SparkSession, root: String,
-                                    probeBands: DataFrame,
-                                    gen: Option[Generation]): DataFrame =
-    index(spark, root, gen, "bands", "band_tail", _.absorbedBand, BandSchema)
-      .join(broadcast(probeBands.select(col("id").as("b"), col("band"), col("key"))),
-        Seq("band", "key"))
-      .select(col("b"))
+                     probeBands: DataFrame): DataFrame = {
+    import spark.implicits._
+    val rows = probeBands.select(col("id"), col("band"), col("key")).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getString(2))).toSeq
+    val hit = probe(spark, root, currentGeneration(spark, root), Array.emptyLongArray,
+      packBands(rows.map(t => (t._2, t._3)))).band
+    rows.indices.filter(hit(_)).map(i => rows(i)._1).toDF("b")
+  }
 
   /** One doc's facts, fetched once per admit. */
   private final case class Doc(id: Long, hash: String, charsRedacted: Long,
@@ -458,22 +836,22 @@ object CurationPipeline {
       r.getSeq[String](5).zipWithIndex.map { case (k, b) => (r.getLong(0), b, k) })
     val keeper = docs.groupMapReduce(_.hash)(_.id)(math.min)
 
-    // 2. the two corpus probes, each run once, as the two branches of one
-    // map-only action: index ⋉ broadcast(batch hashes), and every doc's
-    // band keys against generation + tail (a doc's band hits are read
-    // only if it passes the exact guards). The (immutable) generation
-    // marker is resolved once for both.
+    // 2. the corpus probe: the batch's distinct hashes and every doc's
+    // band keys, packed here, against the resident generation (one job)
+    // and the driver tail (a doc's band hits are read only if it passes
+    // the exact guards). The (immutable) generation marker is resolved
+    // once per batch.
     val gen = currentGeneration(spark, indexRoot)
-    val hashHits = corpusHashHits(spark, indexRoot, keeper.keys.toSeq.toDF("text_hash"), gen)
-      .select(col("text_hash"), lit(null).cast("long").as("b"))
-    val hits =
-      if (bands.isEmpty) hashHits
-      else hashHits.unionAll(
-        corpusBandHits(spark, indexRoot, bands.toDF("id", "band", "key"), gen)
-          .select(lit(null).cast("string").as("text_hash"), col("b")))
-    val (hashRows, bandHitRows) = hits.collect().partition(_.isNullAt(1))
-    val inCorpus = hashRows.map(_.getString(0)).toSet
-    val nearCorpus = bandHitRows.map(_.getLong(1)).toSet
+    val batchHashes = keeper.keys.toSeq
+    val hits = probe(spark, indexRoot, gen, packHashes(batchHashes),
+      packBands(bands.map(t => (t._2, t._3))))
+    hits.resident.foreach { r =>
+      stats.indexResidentKeys.set(r.size)
+      stats.indexResidentBytes.set(r.bytes)
+      stats.indexBuildMs.set(r.buildMs)
+    }
+    val inCorpus = batchHashes.indices.filter(hits.hash(_)).map(batchHashes).toSet
+    val nearCorpus = bands.indices.filter(hits.band(_)).map(bands(_)._1).toSet
     val survivors = docs.filter(d => keeper(d.hash) == d.id && !inCorpus(d.hash))
 
     // 3. intra-batch near-dup: a band collision with a SMALLER-id exact
@@ -522,14 +900,23 @@ object CurationPipeline {
     // one driver-written file per append keeps the per-batch tail probe's
     // file count down
     if (admitted.nonEmpty) {
-      appendTail(spark, s"$indexRoot/hash_tail", HashSchema, admitted)(
-        (g, d) => g.append("text_hash", d.hash))
+      val hashKeys = new KeyBuilder
+      admitted.foreach(d => hashKeys.hash(d.hash))
+      addTail(spark, indexRoot,
+        appendTail(spark, s"$indexRoot/hash_tail", HashSchema, admitted)(
+          (g, d) => g.append("text_hash", d.hash)),
+        hashKeys.result())
       val admittedIds = admitted.map(_.id).toSet
       val newBands = probeBands.filter(t => admittedIds(t._1))
       // all-short-doc batches produce no band rows, and no band file
-      if (newBands.nonEmpty)
-        appendTail(spark, s"$indexRoot/band_tail", BandSchema, newBands)(
-          (g, t) => g.append("id", t._1).append("band", t._2).append("key", t._3))
+      if (newBands.nonEmpty) {
+        val bandKeys = new KeyBuilder
+        newBands.foreach(t => bandKeys.band(t._2, Keys.band(t._3)))
+        addTail(spark, indexRoot,
+          appendTail(spark, s"$indexRoot/band_tail", BandSchema, newBands)(
+            (g, t) => g.append("id", t._1).append("band", t._2).append("key", t._3)),
+          bandKeys.result())
+      }
       if (stats.batches.incrementAndGet() % CompactEveryBatches == 0) {
         compact(spark, indexRoot)
         stats.compactions.incrementAndGet()
@@ -550,7 +937,7 @@ object CurationPipeline {
     * guard state's. K+1 rows, so the write is trivially small.
     */
   def persistSample(spark: SparkSession, root: String, stats: Stats): Unit = {
-    val f = fs(spark, root)
+    val f = writeFs(spark, root)
     val tmp = new Path(s"$root/sample.json.tmp")
     val dst = new Path(s"$root/sample.json")
     val body = stats.sampleCandidates
@@ -585,11 +972,11 @@ object CurationPipeline {
   /** Startup compaction — the serve path's DEFAULT: fold any pre-existing
     * tail bulk into a generation BEFORE the first served batch. A corpus
     * bulk-seeded into the append tail (an offline loader's natural output
-    * shape) would otherwise be probed as however many files the loader
-    * wrote on EVERY batch until the 64-batch auto-compaction cadence
-    * first fires; measured at the 5M-doc corpus a compacted generation
-    * won p50 outright (INGEST_1000X: -17% p50, -21% p95, -42% first
-    * batch), and corpus ≫ batch is the production regime.
+    * shape) would otherwise be held as driver tail keys, read file by file
+    * on the driver at the first admit, until the 64-batch auto-compaction
+    * cadence first fires; a generation spreads the same keys over the
+    * resident partitions, built by one parallel job, and corpus ≫ batch is
+    * the production regime.
     * No-op when the live tail is empty: compacting then would only
     * rewrite the current generation.
     */
@@ -613,16 +1000,14 @@ object CurationPipeline {
     * generation just before the commit). Safe to run concurrently with
     * appends: files appended after the snapshot stay live tail.
     *
-    * The band files are FLAT, not partitioned by key slot, so every probe
-    * reads the whole band generation: a slot layout prunes only when a
-    * batch's keys miss most slots, and a 1000-doc batch's 6000 band keys
-    * reach every slot of a layout of a few hundred slots, which then
-    * costs a directory per slot on every scan and a slot-collect job per
-    * admit. The trade-off: a batch of a few dozen docs against a
-    * multi-million-doc index reads the whole band generation where slots
-    * would let it read its own (it reads the whole hash generation
-    * either way). A generation written in the older `kp=` slot layout is
-    * still read correctly (see `genFiles`) and comes out flat here.
+    * The band files are FLAT, not partitioned by key slot: no probe reads
+    * them. A generation's files are read once, when its first probe builds
+    * it into the resident key partitions, so their layout costs one build,
+    * not a scan per admit. That build is not done here: `compact` stays a
+    * pure write, and the admit after it pays the build (one job over the
+    * generation's files, about one scan). A generation written in the
+    * older `kp=` slot layout is still read correctly (see `genFiles`) and
+    * comes out flat here.
     */
   def compact(spark: SparkSession, root: String): Generation = {
     val f = fs(spark, root)
@@ -678,7 +1063,7 @@ object CurationPipeline {
     hashSnap.sorted.foreach(ah.add)
     val ab = body.putArray("absorbedBand")
     bandSnap.sorted.foreach(ab.add)
-    val out = f.create(new Path(s"$dir/_COMMITTED"), true)
+    val out = writeFs(spark, root).create(new Path(s"$dir/_COMMITTED"), true)
     try out.write(marker.writeValueAsBytes(body)) finally out.close()
     Generation(nextVer, dir, hashSnap.toSet, bandSnap.toSet)
   }

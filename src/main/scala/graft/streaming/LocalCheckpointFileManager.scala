@@ -96,7 +96,7 @@ object LocalCheckpointFileManager {
   /** A checksummed `LocalFileSystem` over [[NioPermissionsRawFs]], set up as
     * `FileSystem.get` sets up the cached one (conf first, then initialize).
     */
-  private def nioPermissionsFs(uri: URI, conf: Configuration): LocalFileSystem = {
+  private[graft] def nioPermissionsFs(uri: URI, conf: Configuration): LocalFileSystem = {
     val fs = new LocalFileSystem(new NioPermissionsRawFs)
     fs.setConf(conf)
     fs.initialize(uri, conf)

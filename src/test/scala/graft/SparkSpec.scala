@@ -4,9 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for specs. */
-trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
+object SparkSpec {
+
+  /** The specs' local session: the running one, or a new one with these
+    * settings once the running one has stopped.
+    */
+  def session(): SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
     .config("spark.sql.shuffle.partitions", 4)
@@ -16,6 +19,11 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the RocksDB state store; the streaming settings are Sessions.streaming's
     .config(Sessions.streamingConf)
     .getOrCreate()
+}
+
+/** Shared local SparkSession for specs. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
+  lazy val spark: SparkSession = SparkSpec.session()
 
   override def afterAll(): Unit = {
     // shared across suites in one JVM; do not stop

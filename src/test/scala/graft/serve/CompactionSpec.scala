@@ -12,22 +12,28 @@ import org.apache.spark.sql.types.StructType
 import graft.SparkSpec
 import graft.operators.Dedup
 
-/** The corpus-index compaction contract (CurationPipeline.compact):
+/** Committed after the measured work; seeing it means the JFR stream has
+  * delivered every event recorded before it.
+  */
+@jdk.jfr.Name("graft.CompactionSpec.Mark")
+class CompactionForkMark extends jdk.jfr.Event
+
+/** The corpus-index compaction contract (CurationPipeline.compact) and
+  * the resident probe:
   *  1. admit decisions are IDENTICAL against a compacted index and an
   *     uncompacted control — compaction is a pure layout change;
-  *  2. the generation's band files are flat (no `kp=` slot directories)
-  *     and the production band probe's executed plan has no shuffle
-  *     Exchange: the index streams through a join against the broadcast
-  *     batch;
-  *  3. the exact-dup membership join streams the corpus index through a
-  *     broadcast LEFT SEMI with NO Exchange/HashAggregate on the index
-  *     side (the serving path must scan the index, never shuffle it);
+  *  2. the generation's band files are flat (no `kp=` slot directories),
+  *     and the public probes hit what the index holds;
+  *  3. the resident probe's hits equal brute-force set membership over
+  *     the generation's and the live tail's keys, read from the files:
+  *     tail only, generation only, both, inside a grace window, and on a
+  *     generation in the old `kp=` layout;
   *  4. generation-retire reclamation: a second/third compaction deletes
   *     superseded generation dirs and absorbed tail files after a
   *     one-generation grace window, and the guards keep working from the
   *     generation alone;
-  *  5. an admit into a compacted index runs at most 5 Spark jobs, none of
-  *     which writes, and scans the generation's band files once;
+  *  5. an admit into a compacted index runs at most 3 Spark jobs, none of
+  *     which writes or broadcasts, and reads no generation file;
   *  6. a generation written in the older key-slot layout (`kp=`
   *     directories, `keyParts` in its marker) gives the same decisions,
   *     and the next compaction rewrites it flat;
@@ -37,6 +43,14 @@ import graft.operators.Dedup
   *     and decides as the same batch in its own partitioning does;
   *  9. startup compaction folds a Spark-written bulk seed and
   *     driver-written appends into one generation;
+  * 10. a malformed index key fails the admit;
+  * 11. a root holds one persisted resident generation: superseded ones
+  *     are unpersisted, `release` drops the last, and each build logs
+  *     one INFO line and no WARN;
+  * 12. the pipeline's own writes (tail appends, the sample, the marker)
+  *     start no process (JFR `jdk.ProcessStart` with stacks);
+  * 13. a new SparkContext on the same root probes and decides the same
+  *     (this test stops the suite's context, so it runs last);
   *  probes and admits against a compacted index log no misplaced-hint
   *  WARN.
   */
@@ -56,27 +70,28 @@ class CompactionSpec extends SparkSpec {
     new java.io.File(s"$genDir/bands").listFiles().toSeq.map(_.getName)
       .filter(_.startsWith("kp="))
 
-  /** Runs `body` and returns what Spark's hint-error logger printed
-    * meanwhile (a broadcast hint planned outside a join lands there).
+  /** Runs `body` and returns the (level, message) lines logger `name`
+    * (the root logger if empty) printed meanwhile at `level` or above.
     */
-  private def hintWarnings(body: => Unit): Seq[String] = {
-    import org.apache.logging.log4j.{Level, LogManager}
+  private def logged(name: String, level: org.apache.logging.log4j.Level)(
+      body: => Unit): Seq[(org.apache.logging.log4j.Level, String)] = {
+    import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
-    val logger = LogManager.getLogger(
-      "org.apache.spark.sql.catalyst.analysis.HintErrorLogger").asInstanceOf[Logger]
-    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val appender = new AbstractAppender("hint-capture", null, null, true,
+    val logger = LogManager.getLogger(name).asInstanceOf[Logger]
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[(org.apache.logging.log4j.Level, String)]
+    val appender = new AbstractAppender("test-capture", null, null, true,
         Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = {
-        lines.add(e.getMessage.getFormattedMessage); ()
-      }
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel.isMoreSpecificThan(level)) {
+          lines.add((e.getLevel, e.getMessage.getFormattedMessage)); ()
+        }
     }
     val prevLevel = logger.getLevel
     appender.start()
     logger.addAppender(appender)
-    logger.setLevel(Level.WARN)
+    if (prevLevel.isMoreSpecificThan(level) && prevLevel != level) logger.setLevel(level)
     try body
     finally {
       logger.removeAppender(appender)
@@ -84,6 +99,62 @@ class CompactionSpec extends SparkSpec {
       appender.stop()
     }
     lines.asScala.toSeq
+  }
+
+  /** What Spark's hint-error logger printed while `body` ran (a broadcast
+    * hint planned outside a join lands there).
+    */
+  private def hintWarnings(body: => Unit): Seq[String] =
+    logged("org.apache.spark.sql.catalyst.analysis.HintErrorLogger",
+      org.apache.logging.log4j.Level.WARN)(body).map(_._2)
+
+  /** The index's keys as strings, read from its files: the current
+    * generation's and the live (not absorbed) tail files'.
+    */
+  private def indexKeys(root: String): (Set[String], Set[(Int, String)]) = {
+    val gen = CurationPipeline.currentGeneration(spark, root)
+    def read(paths: Seq[String], ddl: String): Seq[org.apache.spark.sql.Row] =
+      paths.flatMap { p =>
+        val df = spark.read.schema(ddl).parquet(p)
+        df.select(StructType.fromDDL(ddl).fieldNames.toSeq.map(col): _*).collect().toSeq
+      }
+    def live(dir: String, absorbed: Set[String]): Seq[String] = {
+      val gone = absorbed.map(new org.apache.hadoop.fs.Path(_).getName)
+      Option(new java.io.File(s"$root/$dir").listFiles()).toSeq.flatten
+        .map(_.getName).filter(n => n.startsWith("part-") && !gone(n)).map(n => s"$root/$dir/$n")
+    }
+    val hashes = read(gen.map(g => s"${g.dir}/hash").toSeq ++
+      live("hash_tail", gen.map(_.absorbedHash).getOrElse(Set.empty)), CurationPipeline.HashSchema)
+    val bands = read(gen.map(g => s"${g.dir}/bands").toSeq ++
+      live("band_tail", gen.map(_.absorbedBand).getOrElse(Set.empty)), CurationPipeline.BandSchema)
+    (hashes.map(_.getString(0)).toSet, bands.map(r => (r.getInt(1), r.getString(2))).toSet)
+  }
+
+  /** Random probes of held keys, held band keys under another band, and
+    * fresh keys through the public probes: each hit set equals set
+    * membership over [[indexKeys]].
+    */
+  private def assertProbesExact(root: String, rnd: scala.util.Random): Unit = {
+    import spark.implicits._
+    val (hashes, bands) = indexKeys(root)
+    assert(hashes.nonEmpty && bands.nonEmpty, s"premise: $root holds keys")
+    val md5 = java.security.MessageDigest.getInstance("MD5")
+    def fresh(): String =
+      md5.digest(rnd.nextString(12).getBytes("UTF-8")).map(b => f"$b%02x").mkString
+    for (_ <- 0 until 3) {
+      val hq = rnd.shuffle(hashes.toSeq.sorted).take(15) ++ Seq.fill(15)(fresh())
+      val gotH = CurationPipeline.corpusHashHits(spark, root, hq.toDF("text_hash"))
+        .collect().map(_.getString(0)).toSet
+      assert(gotH == hq.filter(hashes).toSet, s"hash hits differ from membership in $root")
+      val held = rnd.shuffle(bands.toSeq.sorted).take(30)
+      val bq = (held ++ held.take(10).map { case (b, k) => ((b + 1) % Dedup.Bands, k) } ++
+        Seq.fill(10)((rnd.nextInt(Dedup.Bands), s"${rnd.nextLong(Dedup.P)}_${rnd.nextLong(Dedup.P)}")))
+        .zipWithIndex.map { case ((b, k), i) => (i.toLong, b, k) }
+      val gotB = CurationPipeline.corpusBandHits(spark, root, bq.toDF("id", "band", "key"))
+        .collect().map(_.getLong(0)).toSet
+      assert(gotB == bq.filter(r => bands((r._2, r._3))).map(_._1).toSet,
+        s"band hits differ from membership in $root")
+    }
   }
 
   /** `gen` absorbed every part file of both tails under `root`. */
@@ -120,7 +191,7 @@ class CompactionSpec extends SparkSpec {
     events.asScala.toSeq
   }
 
-  test("compaction preserves decisions, probes flat bands unshuffled, reclaims with grace") {
+  test("compaction keeps decisions, probes resident keys, reclaims with grace") {
     val root1 = java.nio.file.Files.createTempDirectory("graft_compact1").toString
     val root2 = java.nio.file.Files.createTempDirectory("graft_compact2").toString
     val s1 = new CurationPipeline.Stats
@@ -193,55 +264,18 @@ class CompactionSpec extends SparkSpec {
       assert(d1(109L) == ("rejected", "near_dup_batch"), d1)
       assert(d1(110L) == ("rejected", "near_dup_batch"), d1)
 
-      // ---- 2b: the production band probe streams the generation through a
-      // join against the broadcast batch — no shuffle, and the generation is
-      // never the broadcast side (AQE off so the plan is directly observable)
+      // ---- 2b: the public probes answer from the resident generation: a
+      // near-copy's band rows hit, a corpus text's hash hits
       val probeBands = Dedup.bandKeys(Dedup.minhashSignaturesRowwise(
         batchDf(Seq(900L -> (corpusText(5) + " trailer"))),
-        col("doc_id"), col("text"), CurationPipeline.ShingleN)).cache()
-      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      try {
-        val hits = CurationPipeline.corpusBandHits(spark, root1, probeBands)
-        assert(hits.collect().map(_.getAs[Long]("b")).toSet == Set(900L),
-          "probe should band-hit its corpus near-original")
-        val plan = hits.queryExecution.executedPlan
-        assert(plan.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec
-              if f.metadata.get("Location").exists(_.contains("gen_")) => f
-        }.nonEmpty, s"no scan over the compacted generation:\n$plan")
-        assert(plan.collect {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-        }.isEmpty, s"band probe shuffles:\n$plan")
-        assert(plan.collect {
-          case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b
-        }.forall(_.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }.isEmpty), s"band probe broadcasts an index scan:\n$plan")
-
-        // ---- 3: exact-dup membership = broadcast LEFT SEMI streaming the
-        // index side — no Exchange/HashAggregate anywhere under the join's
-        // streamed (index) subtree
-        val memb = CurationPipeline.corpusHashHits(spark, root1,
-          batchDf(Seq(901L -> corpusText(4))).select(md5(col("text")).as("text_hash")))
-        assert(memb.count() == 1, "hash of a corpus text must hit")
-        val bhj = memb.queryExecution.executedPlan.collectFirst {
-          case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-              if j.joinType.toString == "LeftSemi" => j
-        }
-        assert(bhj.nonEmpty,
-          s"expected broadcast left-semi membership join:\n${memb.queryExecution.executedPlan}")
-        val indexSide = bhj.get.left
-        assert(indexSide.collect {
-          case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
-        }.isEmpty, s"index side of the membership join shuffles:\n$indexSide")
-        assert(indexSide.collect {
-          case a: org.apache.spark.sql.execution.aggregate.HashAggregateExec => a
-        }.isEmpty, s"index side of the membership join aggregates:\n$indexSide")
-        assert(indexSide.collect {
-          case f: org.apache.spark.sql.execution.FileSourceScanExec => f
-        }.nonEmpty, "index scan missing from the membership join's streamed side")
-      } finally spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+        col("doc_id"), col("text"), CurationPipeline.ShingleN))
+      val hits = CurationPipeline.corpusBandHits(spark, root1, probeBands)
+      assert(hits.collect().map(_.getAs[Long]("b")).toSet == Set(900L),
+        "probe should band-hit its corpus near-original")
+      val memb = CurationPipeline.corpusHashHits(spark, root1,
+        batchDf(Seq(901L -> corpusText(4), 902L -> "a text no batch here admits"))
+          .select(md5(col("text")).as("text_hash")))
+      assert(memb.count() == 1, "of a corpus text and a fresh one, one hash must hit")
     }
     assert(hints.isEmpty, s"misplaced-hint WARNs:\n${hints.mkString("\n")}")
 
@@ -277,7 +311,7 @@ class CompactionSpec extends SparkSpec {
     assert(dPost(203L) == ("admitted", ""), dPost)
   }
 
-  test("an admit runs at most 5 Spark jobs, none writing, scans the bands once") {
+  test("an admit runs at most 3 Spark jobs, reads no generation file") {
     val root = java.nio.file.Files.createTempDirectory("graft_jobs").toString
     val stats = new CurationPipeline.Stats
     def text(i: Long) =
@@ -285,9 +319,9 @@ class CompactionSpec extends SparkSpec {
     CurationPipeline.admitBatch(spark, batchDf((1L to 8L).map(i => (i, text(i)))),
       root, stats)
     val gen = CurationPipeline.compact(spark, root)
-    // the first admit after a compaction lists the generation's files
-    // (cached per generation); the counted admit is the next one, which
-    // also probes a non-empty tail
+    // the first admit after a compaction builds the resident generation;
+    // the counted admit is the next one, which also probes a non-empty
+    // tail
     CurationPipeline.admitBatch(spark, batchDf(Seq(9L -> text(9))), root, stats)
     val batch = batchDf((11L to 18L).map(i => (i, text(i))) ++
       Seq(21L -> text(2), 22L -> (text(3) + " more"), 23L -> (text(9) + " more")))
@@ -295,22 +329,23 @@ class CompactionSpec extends SparkSpec {
     val events = eventsDuring(CurationPipeline.admitBatch(spark, batch, root, stats))
     val jobs = events.collect { case j: SparkListenerJobStart => j }
     val plans = events.collect { case e: SparkListenerSQLExecutionStart => e.sparkPlanInfo }
-    def scansBands(p: SparkPlanInfo): Int =
-      (if (p.metadata.get("Location").exists(_.contains(s"${gen.dir}/bands"))) 1 else 0) +
-        p.children.map(scansBands).sum
-    def writeNodes(p: SparkPlanInfo): Seq[String] =
-      Seq(p.nodeName).filter(n => n.contains("InsertIntoHadoopFsRelationCommand") ||
-        n == "WriteFiles") ++ p.children.flatMap(writeNodes)
+    def genScans(p: SparkPlanInfo): Seq[String] =
+      p.metadata.get("Location").filter(_.contains(gen.dir)).toSeq ++
+        p.children.flatMap(genScans)
+    def nodes(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(nodes)
 
     assert(stats.compactions.get == 0, "the measured admit must not compact")
     val d = decisionsOf(stats, Set(11L, 21L, 22L, 23L))
     assert(d(11L) == ("admitted", "") && d(21L) == ("rejected", "exact_dup_corpus") &&
       d(22L) == ("rejected", "near_dup_corpus") && d(23L) == ("rejected", "near_dup_corpus"), d)
-    assert(jobs.size <= 5, s"admit launched ${jobs.size} jobs")
-    val writes = plans.flatMap(writeNodes)
+    assert(jobs.size <= 3, s"admit launched ${jobs.size} jobs")
+    val writes = plans.flatMap(nodes).filter(n =>
+      n.contains("InsertIntoHadoopFsRelationCommand") || n == "WriteFiles")
     assert(writes.isEmpty, s"admit planned Spark writes: ${writes.mkString(", ")}")
-    val bandScans = plans.map(scansBands).sum
-    assert(bandScans == 1, s"admit scanned ${gen.dir}/bands $bandScans times")
+    val broadcasts = plans.flatMap(nodes).filter(_.contains("Broadcast"))
+    assert(broadcasts.isEmpty, s"admit planned broadcasts: ${broadcasts.mkString(", ")}")
+    val scans = plans.flatMap(genScans)
+    assert(scans.isEmpty, s"admit read generation files: ${scans.mkString(", ")}")
   }
 
   test("driver-written tail appends read back and compact exactly") {
@@ -449,6 +484,7 @@ class CompactionSpec extends SparkSpec {
     assert(kpDirs(gen.dir).size > 1, "premise: bands sit under several kp= directories")
     assert(CurationPipeline.currentGeneration(spark, rootOld).map(_.version) ==
       Some(gen.version))
+    assertProbesExact(rootOld, new scala.util.Random(5))
 
     val probe = Seq(
       11L -> corpusText(2),                  // exact_dup_corpus
@@ -516,5 +552,170 @@ class CompactionSpec extends SparkSpec {
     assert(d == Map(301L -> ("rejected", "exact_dup_corpus"), 302L -> ("admitted", ""),
       303L -> ("rejected", "near_dup_corpus"), 304L -> ("rejected", "exact_dup_corpus"),
       305L -> ("rejected", "near_dup_corpus")), d)
+  }
+
+  test("resident hits equal set membership over generation and live tail") {
+    val root = java.nio.file.Files.createTempDirectory("graft_diff").toString
+    val stats = new CurationPipeline.Stats
+    val rnd = new scala.util.Random(7)
+    def text(i: Long) =
+      (0 until 14).map(w => s"d${i}r$w").mkString(s"diff entry $i ", " ", "")
+    def admit(ids: Seq[Long]): Unit =
+      CurationPipeline.admitBatch(spark, batchDf(ids.map(i => i -> text(i))), root, stats)
+    admit(1L to 10L)
+    admit(11L to 20L)
+    assertProbesExact(root, rnd) // tail only
+    val gen0 = CurationPipeline.compact(spark, root)
+    assertProbesExact(root, rnd) // generation only
+    admit(21L to 30L)
+    assertProbesExact(root, rnd) // generation and live tail
+    val gen1 = CurationPipeline.compact(spark, root)
+    admit(31L to 40L)
+    // inside the grace window: gen0 and the tail files gen1 absorbed are
+    // still on disk, beside gen1 and a new live tail
+    assert(new java.io.File(gen0.dir).exists() && gen1.absorbedHash.nonEmpty &&
+      gen1.absorbedHash.forall(p => new java.io.File(p.stripPrefix("file:")).exists()),
+      "premise: a grace window")
+    assertProbesExact(root, rnd)
+    assert(stats.admitted.get == 40)
+  }
+
+  test("a malformed index key fails the admit, never reads as a miss") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_bad").toString
+    val stats = new CurationPipeline.Stats
+    def text(i: Long) =
+      (0 until 14).map(w => s"m${i}n$w").mkString(s"malformed entry $i ", " ", "")
+    CurationPipeline.admitBatch(spark, batchDf((1L to 4L).map(i => i -> text(i))), root, stats)
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    def causes(e: Throwable): Seq[Throwable] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+    def failsOnKey(batch: Seq[(Long, String)]): Unit = {
+      val admitted = stats.admitted.get
+      val e = intercept[Exception](CurationPipeline.admitBatch(spark, batchDf(batch), root, stats))
+      assert(causes(e).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+        c.getMessage.contains("malformed")), e)
+      assert(stats.admitted.get == admitted, "a failed admit recorded decisions")
+    }
+    // in a live tail file, read on the driver
+    def names(dir: String): Set[String] = new java.io.File(s"$root/$dir").list().toSet
+    val good = names("hash_tail")
+    Seq("NOT-A-CONTENT-HASH").toDF("text_hash").write.mode("append").parquet(s"$root/hash_tail")
+    failsOnKey(Seq(10L -> text(10)))
+    // in a generation, read when its first probe builds it
+    (names("hash_tail") -- good).foreach(n => new java.io.File(s"$root/hash_tail/$n").delete())
+    Seq((99L, 0, "1_02")).toDF("id", "band", "key").write.mode("append").parquet(s"$root/band_tail")
+    CurationPipeline.compact(spark, root)
+    failsOnKey(Seq(11L -> text(11)))
+    assert(spark.sparkContext.getPersistentRDDs.size == persisted,
+      "a failed build left a persisted RDD")
+  }
+
+  test("one resident generation per root, released; a build logs one INFO line") {
+    import org.apache.logging.log4j.Level
+    val sc = spark.sparkContext
+    val base = sc.getPersistentRDDs.size
+    val root = java.nio.file.Files.createTempDirectory("graft_resident").toString
+    val stats = new CurationPipeline.Stats
+    def text(i: Long) =
+      (0 until 14).map(w => s"p${i}o$w").mkString(s"resident entry $i ", " ", "")
+    def admit(ids: Seq[Long]): Unit =
+      CurationPipeline.admitBatch(spark, batchDf(ids.map(i => i -> text(i))), root, stats)
+    def residentNames: Seq[String] =
+      sc.getPersistentRDDs.values.map(_.name).filter(n => n != null && n.contains(root)).toSeq
+    admit(1L to 8L)
+    for (round <- 1 to 3) {
+      val gen = CurationPipeline.compact(spark, root)
+      val rows = Seq("hash", "bands").map(sub => spark.read.parquet(s"${gen.dir}/$sub").count())
+      val warns = logged("", Level.WARN) {
+        val info = logged("graft.serve.CurationPipeline", Level.INFO) {
+          admit((round * 10L) until (round * 10L + 4))
+        }
+        assert(info.size == 1 && info.head._1 == Level.INFO &&
+          Seq(s"gen_${gen.version}", "keys=", "bytes=", "build_ms=").forall(info.head._2.contains),
+          info)
+      }
+      assert(warns.isEmpty, s"WARN lines during a build:\n${warns.mkString("\n")}")
+      assert(sc.getPersistentRDDs.size == base + 1, s"round $round: ${sc.getPersistentRDDs}")
+      assert(residentNames.size == 1 && residentNames.head.endsWith(s"gen_${gen.version}"),
+        residentNames)
+      assert(stats.indexResidentKeys.get == rows.sum, s"resident keys vs rows $rows")
+      assert(stats.indexResidentBytes.get == 8L * (2 * rows(0) + rows(1)))
+      assert(stats.json.contains(s""""index_resident_keys":${rows.sum}"""), stats.json)
+    }
+    CurationPipeline.release(root)
+    assert(sc.getPersistentRDDs.size == base, "release left the resident generation persisted")
+  }
+
+  test("admits and compaction start no process from a pipeline stack") {
+    import jdk.jfr.consumer.RecordingStream
+    val root = java.nio.file.Files.createTempDirectory("graft_forks").toString
+    val stats = new CurationPipeline.Stats
+    def text(i: Long) =
+      (0 until 14).map(w => s"f${i}k$w").mkString(s"fork entry $i ", " ", "")
+    def admit(ids: Seq[Long]): Unit =
+      CurationPipeline.admitBatch(spark, batchDf(ids.map(i => i -> text(i))), root, stats)
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val marked = new java.util.concurrent.CountDownLatch(1)
+    val rs = new RecordingStream()
+    try {
+      rs.enable("jdk.ProcessStart").withStackTrace()
+      rs.enable(classOf[CompactionForkMark])
+      rs.onEvent("jdk.ProcessStart", e =>
+        if (Option(e.getStackTrace).exists(_.getFrames.asScala
+            .exists(_.getMethod.getType.getName.contains("CurationPipeline"))))
+          starts.add(e.getString("command")))
+      rs.onEvent("graft.CompactionSpec.Mark", _ => marked.countDown())
+      rs.startAsync()
+      admit(1L to 4L)
+      admit(5L to 8L)
+      CurationPipeline.compact(spark, root)
+      admit(9L to 12L)
+      new CompactionForkMark().commit()
+      assert(marked.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the JFR stream never delivered the mark")
+    } finally rs.close()
+    assert(stats.admitted.get == 12)
+    assert(starts.isEmpty, s"${starts.size} process starts, first: ${starts.asScala.headOption}")
+  }
+
+  test("a new SparkContext on the same root probes and decides the same") {
+    val root = java.nio.file.Files.createTempDirectory("graft_restart").toString
+    def text(i: Long) =
+      (0 until 14).map(w => s"s${i}t$w").mkString(s"restart entry $i ", " ", "")
+    def frame(s: org.apache.spark.sql.SparkSession, docs: Seq[(Long, String)]) =
+      s.createDataFrame(docs).toDF("doc_id", "text").withColumn("ts", current_timestamp())
+    val stats = new CurationPipeline.Stats
+    CurationPipeline.admitBatch(spark, frame(spark, (1L to 8L).map(i => i -> text(i))), root, stats)
+    CurationPipeline.compact(spark, root)
+    CurationPipeline.admitBatch(spark, frame(spark, (9L to 12L).map(i => i -> text(i))), root, stats)
+    val probe = Seq(21L -> text(2), 22L -> (text(3) + " more"),
+      23L -> (text(10) + " more"), 24L -> text(40))
+    def hits(s: org.apache.spark.sql.SparkSession): (Set[Long], Int) = {
+      val df = frame(s, probe)
+      (CurationPipeline.corpusBandHits(s, root, Dedup.bandKeys(Dedup.minhashSignaturesRowwise(
+          df, col("doc_id"), col("text"), CurationPipeline.ShingleN)))
+        .collect().map(_.getLong(0)).toSet,
+        CurationPipeline.corpusHashHits(s, root, df.select(md5(col("text")).as("text_hash")))
+          .collect().length)
+    }
+    val before = hits(spark)
+    // 21 copies doc 2, so its band rows hit too
+    assert(before == (Set(21L, 22L, 23L), 1), before)
+
+    val old = spark.sparkContext
+    spark.stop()
+    val next = graft.SparkSpec.session()
+    assert((next.sparkContext ne old) && !next.sparkContext.isStopped)
+    assert(hits(next) == before, "a restarted context probes differently")
+    val s2 = new CurationPipeline.Stats
+    CurationPipeline.admitBatch(next, frame(next, probe), root, s2)
+    assert(s2.recent.map(d => d.docId -> (d.decision, d.reason)).toMap == Map(
+      21L -> ("rejected", "exact_dup_corpus"), 22L -> ("rejected", "near_dup_corpus"),
+      23L -> ("rejected", "near_dup_corpus"), 24L -> ("admitted", "")))
+    // the new context holds only its own resident generation
+    assert(next.sparkContext.getPersistentRDDs.size == 1, next.sparkContext.getPersistentRDDs)
+    CurationPipeline.release(root)
+    assert(next.sparkContext.getPersistentRDDs.isEmpty)
   }
 }
