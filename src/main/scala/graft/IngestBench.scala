@@ -17,12 +17,12 @@ import graft.serve.CurationPipeline
   * What this measures: how per-batch admit cost splits between the BATCH
   * and the corpus. Neither layout reads the index per batch. A compacted
   * generation is read once, at its first probe, into resident sorted
-  * key partitions that each admit binary-searches in one Spark job; a
-  * tail file is read once onto the driver, and each admit searches it
-  * there. So `first_ms` carries the one-time load (the generation build,
-  * or the driver read of a bulk-seeded tail), and the drift of `p50_ms`
-  * with N is the O(batch × log N) search plus the resident partitions'
-  * memory.
+  * key partitions that each admit binary-searches in one Spark job; tail
+  * files are read once onto the driver, in one job, and each admit
+  * searches them there. So `first_ms` carries the one-time load (the
+  * generation build, or the read of a bulk-seeded tail), and the drift
+  * of `p50_ms` with N is the O(batch × log N) search plus the resident
+  * partitions' memory.
   *
   * `runMain graft.IngestBench [indexDocs] [batchSize] [nBatches] [cores]`
   * — prints one JSON line. Workload per batch: 80% fresh docs, 10% exact

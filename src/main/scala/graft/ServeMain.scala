@@ -4,11 +4,11 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.serve._
-import graft.streaming.{CdpEvent, CdpPipeline, ProfileSnapshot}
+import graft.streaming.{CdpEvent, CdpFold, CdpPipeline, ProfileSnapshot, SegmentEvent}
 
 /** The packaged application — the counterpart of the reference's Spring
   * boot shell (`PulseboardApplication.kt`): one process wiring the
@@ -21,10 +21,11 @@ import graft.streaming.{CdpEvent, CdpPipeline, ProfileSnapshot}
   *   GET  /sse/alerts | /sse/cdp/segments | /sse/cdp/profiles
   *   GET  /health | /stats/overview | /stats/cdp
   *
-  * Ingested CDP events flow through BOTH stateful queries (segments and
-  * changed-only profile updates); profile summaries keep a driver-side
-  * top-20 view exactly like the reference's in-memory ProfileStore
-  * (bounded: summaries evict beyond MaxProfiles by lastSeen).
+  * Ingested CDP events flow through ONE fold query (`serve_cdp`: segment
+  * events and changed-only profile updates) and the reengage query;
+  * profile summaries keep a driver-side top-20 view exactly like the
+  * reference's in-memory ProfileStore (bounded: summaries evict beyond
+  * MaxProfiles by lastSeen).
   */
 object ServeMain {
 
@@ -65,14 +66,14 @@ object ServeMain {
     val profilesHub = new EventHub
     val stats = new StatsService
     val sim = new ServePipelines.SparkSim(spark, alertsHub, stats)
-    // the profile-summary store (filled by the profiles query below) is
-    // the metrics' profile count — the reference reports its store size
+    // the profile-summary store (filled by the fold query below) is the
+    // metrics' profile count — the reference reports its store size
     val summaries = new ConcurrentHashMap[String, ProfileSnapshot]()
-    val cdpMetrics = new CdpMetrics(Some("serve_segments"),
+    val cdpMetrics = new CdpMetrics(Some("serve_cdp"),
       profileCount = Some(() => summaries.size.toLong),
       // the reengage query is the serving path's only watermark-carrying
-      // query (the fold processors are TimeMode.None) — its watermark is
-      // what cdp.watermark.lag_ms reports
+      // query (the fold is TimeMode.None) — its watermark is what
+      // cdp.watermark.lag_ms reports
       watermarkQuery = Some("serve_reengage")).attach(spark)
 
     // in-memory CDP bus (S5); production swaps this for the Kafka source.
@@ -80,32 +81,17 @@ object ServeMain {
     // so each streaming query gets its own stream and the ingest callback
     // fans out — two queries on one MemoryStream die with out-of-order
     // commits as soon as their batch boundaries diverge
-    val segmentsIn = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CdpEvent]
-    val profilesIn = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CdpEvent]
+    val foldIn = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CdpEvent]
 
-    val segmentQuery = CdpPipeline.segmentEvents(spark, segmentsIn.toDS())
-      .writeStream.queryName("serve_segments").outputMode(OutputMode.Append())
-      .foreachBatch(ServePipelines.publishSegments(segmentsHub) _)
-      .start()
-
-    // timer-driven reengage segment (O4's idle path): ENTER with no new
-    // events when the watermark passes lastSeen + idle — the one serving
-    // query that carries an event-time watermark (cdp.watermark.lag_ms
-    // reads it). Publishes into the same segments SSE hub.
-    val reengageIn = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CdpEvent]
-    val reengageQuery = CdpPipeline.reengageEvents(spark,
-        reengageIn.toDS().withWatermark("ts", "1 minute").as[CdpEvent],
-        idleMs = ReengageIdleMs)
-      .writeStream.queryName("serve_reengage").outputMode(OutputMode.Append())
-      .foreachBatch(ServePipelines.publishSegments(segmentsHub) _)
-      .start()
-
-    // changed-only profile updates maintain the top-20 summary view
+    // the CDP fold: segment events go to the segments hub, changed-only
+    // snapshots maintain the top-20 summary view
     val profileChanged = ServePipelines.profilePublisher(profilesHub)
-    val profileQuery = CdpPipeline.profileUpdates(spark, profilesIn.toDS())
-      .writeStream.queryName("serve_profiles").outputMode(OutputMode.Append())
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[ProfileSnapshot], _: Long) =>
-        val updated = batch.collect()
+    val foldQuery = CdpPipeline.fold(spark, foldIn.toDS())
+      .writeStream.queryName("serve_cdp").outputMode(OutputMode.Append())
+      .foreachBatch { (batch: Dataset[CdpFold], _: Long) =>
+        val rows = batch.collect()
+        ServePipelines.publishSegments(segmentsHub, rows.toSeq.flatMap(_.events))
+        val updated = rows.flatMap(_.snapshot)
         if (updated.nonEmpty) {
           updated.foreach(p => summaries.put(p.profileId, p))
           // bound the driver-side store like the reference's cache caps
@@ -118,6 +104,19 @@ object ServeMain {
         }
         ()
       }
+      .start()
+
+    // timer-driven reengage segment (O4's idle path): ENTER with no new
+    // events when the watermark passes lastSeen + idle — the one serving
+    // query that carries an event-time watermark (cdp.watermark.lag_ms
+    // reads it). Publishes into the same segments SSE hub.
+    val reengageIn = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CdpEvent]
+    val reengageQuery = CdpPipeline.reengageEvents(spark,
+        reengageIn.toDS().withWatermark("ts", "1 minute").as[CdpEvent],
+        idleMs = ReengageIdleMs)
+      .writeStream.queryName("serve_reengage").outputMode(OutputMode.Append())
+      .foreachBatch((batch: Dataset[SegmentEvent], _: Long) =>
+        ServePipelines.publishSegments(segmentsHub, batch.collect().toSeq))
       .start()
 
     // ingested events are counted HERE (one per accepted POST) — counting
@@ -138,18 +137,16 @@ object ServeMain {
     //    chunked drain bounds blocks at ~10/s regardless of POST rate.
     // (The Kafka source in production has neither problem — this is the
     // in-memory bus's serving discipline.)
-    // ONE FEEDER PER STREAM, not one feeder calling three addDatas: a
+    // ONE FEEDER PER STREAM, not one feeder calling both addDatas: a
     // chunk that fails on the second stream after succeeding on the
     // first would be retried (duplicating events into the stream that
-    // already took it — none of these pipelines dedup by eventId) and
-    // eventually dropped (permanently diverging the three stateful
+    // already took it — the reengage pipeline does not dedup by eventId)
+    // and eventually dropped (permanently diverging the two stateful
     // views). Per-stream feeders give each stream its own retry budget;
-    // acceptance checks capacity on ALL three before enqueueing anywhere
+    // acceptance checks capacity on BOTH before enqueueing anywhere
     // (the residual race is a benign one-event divergence only under
     // simultaneous overload, vs guaranteed divergence on any sink error).
-    val cdpFeeders = Seq(
-        "segments" -> segmentsIn, "profiles" -> profilesIn,
-        "reengage" -> reengageIn)
+    val cdpFeeders = Seq("fold" -> foldIn, "reengage" -> reengageIn)
       .map { case (n, stream) =>
         val f = new IngestFeeder[CdpEvent](s"cdp-feeder-$n",
           chunkMax = 50000, maxPending = 500000,
@@ -162,13 +159,13 @@ object ServeMain {
           () => f.backlog, () => f.retryAttemptsNow)
         f
       }
-    // acceptance is ATOMIC across the three feeders (one lock around
+    // acceptance is ATOMIC across the two feeders (one lock around
     // check+offer): without it, two handler threads racing at the
     // capacity boundary could each pass the capacity check and then
-    // have only SOME of their offers land — a 202'd event present in
-    // two views and missing from the third, exactly the silent
+    // have only ONE of their offers land — a 202'd event present in
+    // one view and missing from the other, exactly the silent
     // divergence the per-stream split exists to prevent. The lock
-    // covers three queue adds (~ns); HTTP parsing stays outside it.
+    // covers two queue adds (~ns); HTTP parsing stays outside it.
     // A feeder dying between check and offer is still possible —
     // detected and counted instead of ignored.
     val acceptLock = new Object
@@ -221,7 +218,7 @@ object ServeMain {
       port = port, heartbeatMs = heartbeatMs,
       ingest = Some(ingest), cdpMetrics = Some(cdpMetrics),
       corpusIngest = Some(corpusIngest), corpusStats = Some(corpusStats)).start()
-    App(server, spark, Seq(segmentQuery, reengageQuery, profileQuery, corpusQuery), sim,
+    App(server, spark, Seq(foldQuery, reengageQuery, corpusQuery), sim,
       alertsHub, segmentsHub, profilesHub, cdpMetrics,
       feeders = cdpFeeders :+ corpusFeeder, corpusRoot = Some(s"$corpusDir/index"))
   }

@@ -3,7 +3,7 @@ package graft.serve
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQueryListener
+import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
 
 /** The reference's CDP metric surface (`docs/cdp/README.md:595-604`,
   * registered in `cdp/runtime/CdpEventProcessor.kt:78-160`) mapped onto
@@ -57,20 +57,23 @@ final class CdpMetrics(queryName: Option[String] = None,
   override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
   override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
 
+  /** Wall clock minus `p`'s event-time watermark, if it reports one. */
+  private def recordWatermark(p: StreamingQueryProgress): Unit = {
+    val wm = p.eventTime.get("watermark")
+    if (wm != null && wm.nonEmpty)
+      try {
+        val wmMs = java.time.Instant.parse(wm).toEpochMilli
+        if (wmMs > 0) watermarkLagMs.set(System.currentTimeMillis() - wmMs)
+      } catch { case _: Exception => }
+  }
+
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = e.progress
     // watermark lag can come from a DIFFERENT query than the counters:
-    // the CDP profile/segment processors are TimeMode.None (per-key
-    // ordered fold, no watermark op), while the timer-driven reengage
-    // query carries the serving path's event-time watermark
-    if (watermarkQuery.contains(p.name)) {
-      val wm = p.eventTime.get("watermark")
-      if (wm != null && wm.nonEmpty)
-        try {
-          val wmMs = java.time.Instant.parse(wm).toEpochMilli
-          if (wmMs > 0) watermarkLagMs.set(System.currentTimeMillis() - wmMs)
-        } catch { case _: Exception => }
-    }
+    // the CDP fold is TimeMode.None (per-key ordered fold, no watermark
+    // op), while the timer-driven reengage query carries the serving
+    // path's event-time watermark
+    if (watermarkQuery.contains(p.name)) recordWatermark(p)
     if (queryName.forall(n => n == p.name)) {
       processed.addAndGet(p.numInputRows)
       val om = p.observedMetrics
@@ -82,12 +85,7 @@ final class CdpMetrics(queryName: Option[String] = None,
         buffered.set(ops.map(_.numRowsUpdated).sum)
         dropped.addAndGet(ops.map(_.numRowsDroppedByWatermark).sum)
       }
-      val wm = p.eventTime.get("watermark")
-      if (wm != null && wm.nonEmpty)
-        try {
-          val wmMs = java.time.Instant.parse(wm).toEpochMilli
-          if (wmMs > 0) watermarkLagMs.set(System.currentTimeMillis() - wmMs)
-        } catch { case _: Exception => }
+      recordWatermark(p)
       val i = batchCount.getAndIncrement()
       batchRing.set((i % batchRing.length).toInt, p.batchDuration)
     }
@@ -108,9 +106,10 @@ final class CdpMetrics(queryName: Option[String] = None,
     "cdp.events.processed" -> processed.get,
     "cdp.events.late" -> late.get,
     "cdp.events.dropped" -> dropped.get,
-    // supplier read live at snapshot time: the store fills from a
-    // DIFFERENT query than the listened one, so a cached value could
-    // lag a just-completed batch forever on an idle stream
+    // supplier read live at snapshot time: the listened query's sink
+    // fills the store before its progress event is posted, and the
+    // listener bus delivers that event asynchronously, so a value cached
+    // here would trail the store by that delay
     "cdp.profiles.total" -> profileCount.map(_()).getOrElse(profilesTotal.get),
     "cdp.events.buffered" -> buffered.get,
     "cdp.watermark.lag_ms" -> watermarkLagMs.get,

@@ -9,12 +9,10 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path}
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopStreams
 import org.apache.parquet.io.{OutputFile, PositionOutputStream}
@@ -26,6 +24,7 @@ import org.apache.spark.sql.execution.datasources.parquet.SparkToParquetSchemaCo
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ArrayExpressions
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.storage.StorageLevel
 
 import graft.operators.{Dedup, Route}
@@ -99,11 +98,11 @@ import graft.streaming.LocalCheckpointFileManager
   * hash into two longs and a band key into one, exactly). An admit packs
   * its batch keys on the driver, runs ONE job of binary-search tasks over
   * those partitions (no Catalyst plan, no broadcast, no generation file
-  * read), and searches the live tail on the driver: each live tail file's
-  * packed keys are loaded once per file name, and `appendTail` adds the
-  * file it writes. Per admit the work is O(batch × log index), plus a
-  * fixed job cost. A generation too large for memory reads its
-  * disk-backed blocks: still one job, with no planning. Membership is all
+  * read), and searches the live tail on the driver: the keys of the live
+  * tail files not yet held are read in one job, once per file name, and
+  * `appendTail` adds the file it writes. Per admit the work is O(batch ×
+  * log index), plus a fixed job cost. A generation too large for memory
+  * reads its disk-backed blocks: still one job, with no planning. Membership is all
   * either side answers, so the hits are the same as a join's.
   *
   * The resident generation is keyed by root, generation directory and
@@ -299,21 +298,6 @@ object CurationPipeline {
       Generation(v, d.toString, files("absorbedHash"), files("absorbedBand"))
     }
   }
-
-  private def emptyDf(spark: SparkSession, schemaDdl: String): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType.fromDDL(schemaDdl))
-
-  /** Read a set of tail part files with an EXPLICIT schema: an empty file
-    * list and a _SUCCESS-only directory both yield an empty frame without
-    * schema inference, while genuine read failures (corrupt file,
-    * transient FS error) PROPAGATE and fail the compaction.
-    */
-  private def readFiles(spark: SparkSession, files: Seq[String],
-                        schemaDdl: String): DataFrame =
-    if (files.isEmpty) emptyDf(spark, schemaDdl)
-    else spark.read.schema(StructType.fromDDL(schemaDdl)).parquet(files: _*)
 
   /** The file system the driver writes `dir`'s files through. On a local
     * path it is the checkpoint manager's checksummed `LocalFileSystem`,
@@ -628,6 +612,31 @@ object CurationPipeline {
   private def string(r: InternalRow, i: Int): String =
     if (r.isNullAt(i)) null else r.getUTF8String(i).toString
 
+  /** Packs index rows into [[KeySet]] chunks on the executors, one chunk
+    * per (partition, slot), `sorted` or in arrival order: `hashes` rows
+    * lead with `text_hash`, `bands` rows with `band, key`, and `slot`
+    * picks the chunk of a row from the row and its packed key (a hash's
+    * `hi`). The one parser of index key files: `build` slots keys by
+    * resident partition, `readTail` by file.
+    */
+  private def packKeys(hashes: DataFrame, bands: DataFrame, sorted: Boolean)(
+      slot: (InternalRow, Long) => Int): RDD[(Int, KeySet)] = {
+    def chunks(df: DataFrame)(add: (InternalRow, Long => KeyBuilder) => Unit) =
+      df.queryExecution.toRdd.mapPartitions { rows =>
+        val parts = mutable.LongMap.empty[KeyBuilder]
+        rows.foreach(r => add(r, k => parts.getOrElseUpdate(slot(r, k), new KeyBuilder)))
+        parts.iterator.map { case (s, b) => (s.toInt, b.result(sorted)) }
+      }
+    chunks(hashes) { (r, to) =>
+      val s = string(r, 0)
+      val hi = Keys.hashHi(s)
+      to(hi).hash(hi, Keys.hashLo(s))
+    }.union(chunks(bands) { (r, to) =>
+      val k = Keys.band(string(r, 1))
+      to(k).band(if (r.isNullAt(0)) -1 else r.getInt(0), k)
+    })
+  }
+
   /** Builds generation `g` into a persisted RDD of one sorted [[KeySet]]
     * per partition (`defaultParallelism` partitions, by `Keys.partOf`):
     * one job that packs each generation file's keys into a chunk per
@@ -638,23 +647,10 @@ object CurationPipeline {
     val t0 = System.nanoTime()
     val sc = spark.sparkContext
     val n = sc.defaultParallelism
-    def chunks(df: DataFrame)(add: (Array[KeyBuilder], InternalRow) => Unit) =
-      df.queryExecution.toRdd.mapPartitions { rows =>
-        val parts = Array.fill(n)(new KeyBuilder)
-        rows.foreach(add(parts, _))
-        parts.iterator.zipWithIndex.map { case (b, p) => (p, b.result(sorted = false)) }
-      }
-    val hashes = chunks(genFiles(spark, g.dir, "hash", HashSchema)) { (parts, r) =>
-      val s = string(r, 0)
-      val hi = Keys.hashHi(s)
-      parts(Keys.partOf(hi, n)).hash(hi, Keys.hashLo(s))
-    }
-    val bands = chunks(genFiles(spark, g.dir, "bands", BandSchema).select("band", "key")) {
-      (parts, r) =>
-        val k = Keys.band(string(r, 1))
-        parts(Keys.partOf(k, n)).band(if (r.isNullAt(0)) -1 else r.getInt(0), k)
-    }
-    val keys = hashes.union(bands).partitionBy(new HashPartitioner(n))
+    val keys = packKeys(genFiles(spark, g.dir, "hash", HashSchema),
+        genFiles(spark, g.dir, "bands", BandSchema).select("band", "key"), sorted = false)(
+        (_, k) => Keys.partOf(k, n))
+      .partitionBy(new HashPartitioner(n))
       .mapPartitions({ cs =>
         val b = new KeyBuilder
         cs.foreach(c => b.addAll(c._2))
@@ -672,23 +668,37 @@ object CurationPipeline {
     r
   }
 
-  /** One tail file's keys, read on the driver. */
-  private def readTailFile(conf: Configuration, file: String, bandFile: Boolean): KeySet = {
-    val b = new KeyBuilder
-    val in = ParquetReader.builder(new GroupReadSupport, new Path(file)).withConf(conf).build()
-    try {
-      var g = in.read()
-      while (g != null) {
-        if (bandFile) b.band(g.getInteger("band", 0), Keys.band(g.getString("key", 0)))
-        else b.hash(g.getString("text_hash", 0))
-        g = in.read()
-      }
-    } finally in.close()
-    b.result()
+  /** The keys of tail files, one sorted [[KeySet]] per file: one job that
+    * reads and sorts every file on the executors, each row keyed by its
+    * file.
+    */
+  private def readTail(spark: SparkSession, hashFiles: Seq[String],
+                       bandFiles: Seq[String]): Map[String, KeySet] = {
+    val files = hashFiles ++ bandFiles
+    // a scan names a row's file by its URI, as `Path.toUri` spells it
+    val slots = files.map(f => UTF8String.fromString(new Path(f).toUri.toString))
+      .zipWithIndex.toMap
+    def read(fs: Seq[String], ddl: String, cols: String*) = spark.read
+      .schema(StructType.fromDDL(ddl)).parquet(fs: _*)
+      .select((cols :+ "_metadata.file_path").map(col): _*)
+    val chunks = packKeys(read(hashFiles, HashSchema, "text_hash"),
+        read(bandFiles, BandSchema, "band", "key"), sorted = true) { (r, _) =>
+      val f = r.getUTF8String(r.numFields - 1)
+      slots.getOrElse(f, throw new IllegalStateException(s"corpus index: row of unread file $f"))
+    }.collect().groupMap(_._1)(_._2)
+    // a file read as one split is sorted already; one read in several is merged
+    files.indices.map(i => files(i) -> (chunks.getOrElse(i, Array.empty[KeySet]) match {
+      case Array(ks) => ks
+      case parts =>
+        val b = new KeyBuilder
+        parts.foreach(b.addAll)
+        b.result()
+    })).toMap
   }
 
   /** `root`'s live tail as driver-held keys: files `gen` absorbed leave,
-    * files not yet held are read once.
+    * files not yet held are read, all in one job; none runs when every
+    * live file is held.
     */
   private def tailKeys(spark: SparkSession, root: String,
                        gen: Option[Generation]): Seq[KeySet] =
@@ -699,15 +709,15 @@ object CurationPipeline {
         tails.put(root, t)
         t
       }
-      val live =
+      val hashes =
         liveTail(spark, s"$root/hash_tail", gen.map(_.absorbedHash).getOrElse(Set.empty))
-          .map(_ -> false) ++
+      val bands =
         liveTail(spark, s"$root/band_tail", gen.map(_.absorbedBand).getOrElse(Set.empty))
-          .map(_ -> true)
-      val liveNames = live.map(_._1).toSet
-      t.files.filterInPlace((f, _) => liveNames(f))
-      for ((f, bandFile) <- live if !t.files.contains(f))
-        t.files(f) = readTailFile(sc.hadoopConfiguration, f, bandFile)
+      val live = (hashes ++ bands).toSet
+      t.files.filterInPlace((f, _) => live(f))
+      if (!live.forall(t.files.contains))
+        t.files ++= readTail(spark, hashes.filterNot(t.files.contains),
+          bands.filterNot(t.files.contains))
       t.files.values.toSeq
     }
 
@@ -972,11 +982,11 @@ object CurationPipeline {
   /** Startup compaction — the serve path's DEFAULT: fold any pre-existing
     * tail bulk into a generation BEFORE the first served batch. A corpus
     * bulk-seeded into the append tail (an offline loader's natural output
-    * shape) would otherwise be held as driver tail keys, read file by file
-    * on the driver at the first admit, until the 64-batch auto-compaction
-    * cadence first fires; a generation spreads the same keys over the
-    * resident partitions, built by one parallel job, and corpus ≫ batch is
-    * the production regime.
+    * shape) would otherwise be held as driver tail keys, every admit
+    * searching all of them on the driver, until the 64-batch
+    * auto-compaction cadence first fires; a generation spreads the same
+    * keys over the resident partitions, built by one parallel job, and
+    * corpus ≫ batch is the production regime.
     * No-op when the live tail is empty: compacting then would only
     * rewrite the current generation.
     */
@@ -1049,7 +1059,7 @@ object CurationPipeline {
     for ((sub, snap, schemaDdl) <- Seq(("hash", hashSnap, HashSchema),
                                        ("bands", bandSnap, BandSchema)))
       (prev.map(g => genFiles(spark, g.dir, sub, schemaDdl)).toSeq :+
-          readFiles(spark, snap, schemaDdl))
+          spark.read.schema(StructType.fromDDL(schemaDdl)).parquet(snap: _*))
         .reduce(_ unionAll _)
         .distinct().write.mode("overwrite").parquet(s"$dir/$sub")
 

@@ -73,12 +73,9 @@ object ServePipelines {
     }
   }
 
-  def publishSegments(hub: EventHub)(
-      batch: Dataset[SegmentEvent], batchId: Long): Unit = {
-    val evs = batch.collect()
+  def publishSegments(hub: EventHub, evs: Seq[SegmentEvent]): Unit =
     evs.sortBy(e => (e.ts.getTime, e.profileId, e.segment))
       .foreach(e => hub.publish(segmentEnvelope(e)))
-  }
 
   /** Changed-only profile publication (W7): the hub-side dedup reuses
     * SnapshotSink.ChangedOnlyHub so an unchanged top-20 emits nothing.

@@ -3,6 +3,7 @@ package graft.streaming
 import java.sql.Timestamp
 
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, explode_outer}
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Streaming CDP pipeline (SURVEY §3.2): dedup → profile merge (grow-only
@@ -10,7 +11,7 @@ import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
   * segment evaluation → ENTER/EXIT emission.
   *
   * The per-event transition is a pure function (`applyCore`), used by both
-  * the streaming operators (`CdpProcessors` on `transformWithState`) and
+  * the streaming fold (`CdpFoldProcessor` on `transformWithState`) and
   * the batch replay (`profileSnapshots`, mapGroups) — so batch results are
   * the replayed fixpoint of the stream, which is how correctness is tested.
   *
@@ -64,12 +65,12 @@ object CdpPipeline {
       .getOrElse("event:" + e.eventId)
 
   /** Pure per-event transition WITHOUT dedup bookkeeping: `seenEventIds`
-    * passes through untouched. Both the streaming processors and the
-    * batch replay reach it through `applyEvent` (dedup check + seen-id
-    * sweep) — the processors keep the dedup cache INLINE in their single
-    * ValueState row, see the CdpProcessors doc for the two rejected
-    * MapState designs. Caller must feed events in (ts, eventId) order per
-    * profile and must have dedup-checked already.
+    * passes through untouched. Both the streaming fold and the batch
+    * replay reach it through `applyEvent` (dedup check + seen-id sweep) —
+    * the fold keeps the dedup cache INLINE in its single ValueState row,
+    * see the `CdpFoldProcessor` doc for the two rejected MapState designs.
+    * Caller must feed events in (ts, eventId) order per profile and must
+    * have dedup-checked already.
     */
   def applyCore(pid: String, st: ProfileState, e: CdpEvent): (ProfileState, Seq[SegmentEvent]) = {
     val t = micros(e.ts)
@@ -119,9 +120,9 @@ object CdpPipeline {
     * cap within the TTL gets size-evicted (keep most-recent half-cap),
     * exactly as Caffeine's maximumSize would — bounded state, amortized
     * O(1)/event sweep, dedup exact within TTL up to the size cap. The
-    * STREAMING processors keep the same cache in a `MapState` with the
-    * same TTL + cap sweep (`CdpProcessorBase.sweep`), so batch replay and
-    * stream dedup stay bit-identical.
+    * streaming fold keeps the same cache inline in its profile
+    * `ValueState` and sweeps it through this same function, so batch
+    * replay and stream dedup stay bit-identical.
     */
   def applyEvent(pid: String, st: ProfileState, e: CdpEvent): (ProfileState, Seq[SegmentEvent]) = {
     if (st.seenEventIds.contains(e.eventId)) return (st, Nil)
@@ -147,16 +148,27 @@ object CdpPipeline {
     }
   }
 
-  /** Streaming: segment ENTER/EXIT events (transformWithState; the dedup
-    * cache rides inline in the profile ValueState — see
-    * `SegmentEventsProcessor` and the CdpProcessors design note).
+  /** Streaming: the CDP fold (`CdpFoldProcessor`) — per profile per
+    * micro-batch one `CdpFold` row of segment events and changed-only
+    * snapshot, so one query serves both views from one state copy.
     */
-  def segmentEvents(spark: SparkSession, events: Dataset[CdpEvent]): Dataset[SegmentEvent] = {
+  def fold(spark: SparkSession, events: Dataset[CdpEvent]): Dataset[CdpFold] = {
     import spark.implicits._
     events
       .groupByKey(profileId)
-      .transformWithState(new SegmentEventsProcessor,
+      .transformWithState(new CdpFoldProcessor,
         TimeMode.None(), OutputMode.Append())
+  }
+
+  /** Streaming: segment ENTER/EXIT events, the fold's events exploded.
+    * Not `explode`: its inferred size filter would sit between this
+    * projection and the fold's serializer, which then keeps serializing
+    * every row's snapshot only to drop it.
+    */
+  def segmentEvents(spark: SparkSession, events: Dataset[CdpEvent]): Dataset[SegmentEvent] = {
+    import spark.implicits._
+    fold(spark, events).select(explode_outer(col("events")).as("e"))
+      .where(col("e").isNotNull).select("e.*").as[SegmentEvent]
   }
 
   private[streaming] def toSnapshot(pid: String, st: ProfileState): ProfileSnapshot =
@@ -169,19 +181,27 @@ object CdpPipeline {
       st.segments.toSeq.sorted)
 
   /** Streaming: one updated ProfileSnapshot per profile per micro-batch
-    * that CHANGED it (W7 changed-only at the operator, not the sink: a
-    * batch of pure duplicates emits nothing). This is the stream the
-    * profiles SSE endpoint consumes — the reference polls its profile
-    * store every second instead (`CdpController.kt:105-146`); emitting on
-    * change needs no store polling and no second state copy downstream.
+    * that CHANGED it — the fold's non-null snapshots (W7 changed-only at
+    * the operator, not the sink: a batch of pure duplicates emits
+    * nothing). This is the stream the profiles SSE endpoint consumes —
+    * the reference polls its profile store every second instead
+    * (`CdpController.kt:105-146`); emitting on change needs no store
+    * polling and no second state copy downstream.
     */
   def profileUpdates(spark: SparkSession, events: Dataset[CdpEvent]): Dataset[ProfileSnapshot] = {
     import spark.implicits._
-    events
-      .groupByKey(profileId)
-      .transformWithState(new ProfileUpdatesProcessor,
-        TimeMode.None(), OutputMode.Append())
+    fold(spark, events).where(col("snapshot").isNotNull).select("snapshot.*")
+      .as[ProfileSnapshot]
   }
+
+  /** lastSeenUs: newest event-time seen; inReengage: ENTER fired, awaiting
+    * return or cleanup; timerMs: the registered timer's expiry (so the next
+    * batch can delete it before re-arming — transformWithState timers are
+    * explicit, not the single auto-reset timeout fMGWS had).
+    */
+  case class ReengageState(lastSeenUs: Long, inReengage: Boolean, timerMs: Long)
+
+  val ReengageCleanupFactor = 10L
 
   /** Streaming reengage segment (`SegmentEngine.kt:147-151`): a profile
     * ENTERs `reengage` when idle longer than `idleMs` — a segment change
@@ -202,15 +222,6 @@ object CdpPipeline {
     * (the profile re-folds from empty), the same bounded-state trade
     * `Dedup.exactStream` documents for its TTL.
     */
-  /** lastSeenUs: newest event-time seen; inReengage: ENTER fired, awaiting
-    * return or cleanup; timerMs: the registered timer's expiry (so the next
-    * batch can delete it before re-arming — transformWithState timers are
-    * explicit, not the single auto-reset timeout fMGWS had).
-    */
-  case class ReengageState(lastSeenUs: Long, inReengage: Boolean, timerMs: Long)
-
-  val ReengageCleanupFactor = 10L
-
   def reengageEvents(spark: SparkSession, events: Dataset[CdpEvent],
                      idleMs: Long): Dataset[SegmentEvent] = {
     import spark.implicits._

@@ -23,9 +23,12 @@ case class ProfilePacked(
     traits: Seq[TraitKV], lastSeenUs: Long, buckets: Seq[BucketKV],
     segments: Seq[String], seen: Seq[SeenKV])
 
-/** transformWithState processors backing the CDP streaming operators
-  * (Spark 4's arbitrary-state API — typed state variables, explicit
-  * timers, RocksDB changelog checkpointing).
+/** The CDP fold (`CdpPipeline.fold`) on transformWithState (Spark 4's
+  * arbitrary-state API — typed state variables, explicit timers, RocksDB
+  * changelog checkpointing): at most one `CdpFold` row per profile per
+  * micro-batch, none for a batch of pure duplicates (W7 changed-only).
+  * seenEventIds is a cache, not profile content — ignored when deciding
+  * whether the profile changed.
   *
   * State is ONE ValueState[ProfilePacked] per profile, dedup cache
   * included, read (one `get()`: `exists()` is itself a full get and
@@ -48,14 +51,13 @@ case class ProfilePacked(
   * event-time TTL, 10k size cap, amortized sweep) are bit-identical by
   * construction.
   */
-private[streaming] abstract class CdpProcessorBase[O]
-  extends StatefulProcessor[String, CdpEvent, O] {
+class CdpFoldProcessor extends StatefulProcessor[String, CdpEvent, CdpFold] {
 
-  @transient protected var profile: ValueState[ProfilePacked] = _
+  @transient private var profile: ValueState[ProfilePacked] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
     profile = getHandle.getValueState[ProfilePacked]("profile",
-      CdpProcessorBase.ProfileEncoder, TTLConfig.NONE)
+      CdpFoldProcessor.ProfileEncoder, TTLConfig.NONE)
   }
 
   private def pack(st: ProfileState): ProfilePacked =
@@ -77,46 +79,20 @@ private[streaming] abstract class CdpProcessorBase[O]
       p.segments.toSet,
       p.seen.map(s => s.id -> s.ts).toMap)
 
-  /** Ordered dedup fold of one micro-batch (shared with batch replay via
-    * `orderedFold`); writes state back, returns (state before, state
-    * after, segment events emitted).
-    */
-  protected def foldBatch(pid: String, rows: Iterator[CdpEvent])
-  : (ProfileState, ProfileState, Seq[SegmentEvent]) = {
+  override def handleInputRows(pid: String, rows: Iterator[CdpEvent],
+                               timerValues: TimerValues): Iterator[CdpFold] = {
     val st0 = Option(profile.get()).map(unpack).getOrElse(ProfileState.empty)
     val (st, emits) = orderedFold(pid, st0, rows)
     if (st != st0) profile.update(pack(st))
-    (st0, st, emits)
+    val changed = st.copy(seenEventIds = Map.empty) != st0.copy(seenEventIds = Map.empty)
+    if (!changed && emits.isEmpty) Iterator.empty
+    else Iterator.single(CdpFold(pid, emits, Option.when(changed)(toSnapshot(pid, st))))
   }
 }
 
-private[streaming] object CdpProcessorBase {
+object CdpFoldProcessor {
   // derived once per JVM: init() runs per partition per micro-batch
   private val ProfileEncoder = Encoders.product[ProfilePacked]
-}
-
-/** Streaming segment ENTER/EXIT emission (`CdpPipeline.segmentEvents`). */
-class SegmentEventsProcessor extends CdpProcessorBase[SegmentEvent] {
-  override def handleInputRows(pid: String, rows: Iterator[CdpEvent],
-                               timerValues: TimerValues): Iterator[SegmentEvent] = {
-    val (_, _, emits) = foldBatch(pid, rows)
-    emits.iterator
-  }
-}
-
-/** Changed-only profile snapshots (`CdpPipeline.profileUpdates`, W7): a
-  * micro-batch of pure duplicates emits nothing. seenEventIds is a cache,
-  * not profile content — ignored when deciding whether the profile
-  * changed.
-  */
-class ProfileUpdatesProcessor extends CdpProcessorBase[ProfileSnapshot] {
-  override def handleInputRows(pid: String, rows: Iterator[CdpEvent],
-                               timerValues: TimerValues): Iterator[ProfileSnapshot] = {
-    val (st0, next, _) = foldBatch(pid, rows)
-    if (next.copy(seenEventIds = Map.empty) == st0.copy(seenEventIds = Map.empty))
-      Iterator.empty
-    else Iterator.single(toSnapshot(pid, next))
-  }
 }
 
 /** Timer-driven reengage segment (`CdpPipeline.reengageEvents`): ENTER

@@ -48,3 +48,9 @@ final case class ProfileSnapshot(
     trackCount24h: Long,
     lastSeen: Timestamp,
     segments: Seq[String])
+
+/** One profile's micro-batch through `CdpPipeline.fold`: its segment
+  * events in fold order, and its snapshot if the batch changed it.
+  */
+final case class CdpFold(
+    profileId: String, events: Seq[SegmentEvent], snapshot: Option[ProfileSnapshot])

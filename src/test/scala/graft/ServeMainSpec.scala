@@ -8,7 +8,8 @@ import graft.SparkSpec
 
 /** The packaged application shell: one wire() call serves the full API;
   * a POSTed CDP event reaches BOTH the segments and the profiles SSE
-  * streams through the two stateful queries.
+  * streams through the one CDP fold query, fed beside the reengage query
+  * by two CDP feeders.
   */
 class ServeMainSpec extends SparkSpec {
 
@@ -51,6 +52,10 @@ class ServeMainSpec extends SparkSpec {
     val base = s"http://localhost:${app.server.boundPort}"
     try {
       assert(http("GET", s"$base/health")._2 == """{"status":"UP"}""")
+      assert(app.queries.map(_.name).toSet == Set("serve_cdp", "serve_reengage", "serve_corpus"))
+      val feeders = "\"cdp-feeder-[a-z]+\"".r
+        .findAllIn(http("GET", s"$base/stats/overview")._2).toSet
+      assert(feeders == Set("\"cdp-feeder-fold\"", "\"cdp-feeder-reengage\""), feeders)
 
       val segF = scala.concurrent.Future {
         sseFirstMatch(s"$base/sse/cdp/segments",

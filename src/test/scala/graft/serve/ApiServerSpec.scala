@@ -7,7 +7,8 @@ import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
 
 import graft.SparkSpec
-import graft.streaming.{CdpEvent, CdpPipeline, EntityEvent, EntityPipeline, ProfileSnapshot}
+import graft.streaming.{CdpEvent, CdpPipeline, EntityEvent, EntityPipeline, ProfileSnapshot,
+  SegmentEvent}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -221,7 +222,9 @@ class ApiServerSpec extends SparkSpec {
       .start()
     val segmentQuery = CdpPipeline.segmentEvents(spark, cdpIn.toDS())
       .writeStream.queryName("api_segments").outputMode(OutputMode.Append())
-      .foreachBatch(ServePipelines.publishSegments(segmentsHub) _)
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[SegmentEvent], _: Long) =>
+        ServePipelines.publishSegments(segmentsHub, b.collect().toSeq)
+      }
       .start()
     val profileChanged = ServePipelines.profilePublisher(profilesHub)
     try {

@@ -32,6 +32,8 @@ class CompactionForkMark extends jdk.jfr.Event
   *     superseded generation dirs and absorbed tail files after a
   *     one-generation grace window, and the guards keep working from the
   *     generation alone;
+  *  4b. a tail-only root reads its live tail in one job at its first
+  *     probe, and the probes and admits after it read no tail file;
   *  5. an admit into a compacted index runs at most 3 Spark jobs, none of
   *     which writes or broadcasts, and reads no generation file;
   *  6. a generation written in the older key-slot layout (`kp=`
@@ -346,6 +348,42 @@ class CompactionSpec extends SparkSpec {
     assert(broadcasts.isEmpty, s"admit planned broadcasts: ${broadcasts.mkString(", ")}")
     val scans = plans.flatMap(genScans)
     assert(scans.isEmpty, s"admit read generation files: ${scans.mkString(", ")}")
+  }
+
+  test("a tail-only root reads its tail in one job at the first probe, none after") {
+    import spark.implicits._
+    val root = java.nio.file.Files.createTempDirectory("graft_tailread").toString
+    def text(i: Long) =
+      (0 until 14).map(w => s"r${i}q$w").mkString(s"tail read entry $i ", " ", "")
+    // a bulk-seeded tail, written by Spark as an offline loader writes it:
+    // no driver tail holds its files yet
+    val bulk = batchDf((1L to 8L).map(i => (i, text(i))))
+    bulk.select(md5(col("text")).as("text_hash"))
+      .write.mode("overwrite").parquet(s"$root/hash_tail")
+    Dedup.bandKeys(Dedup.minhashSignaturesRowwise(bulk, col("doc_id"), col("text"),
+        CurationPipeline.ShingleN))
+      .write.mode("overwrite").parquet(s"$root/band_tail")
+    val q = batchDf(Seq(1L -> text(3), 2L -> text(300))).select(md5(col("text")))
+      .collect().map(_.getString(0)).toSeq.toDF("text_hash")
+    def jobs(body: => Unit): Seq[SparkListenerJobStart] =
+      eventsDuring(body).collect { case j: SparkListenerJobStart => j }
+    def tailReads(js: Seq[SparkListenerJobStart]) =
+      js.filter(_.stageInfos.exists(_.rddInfos.exists(_.name == "FileScanRDD")))
+    var hits = 0
+    val first = jobs { hits = CurationPipeline.corpusHashHits(spark, root, q).collect().length }
+    assert(hits == 1, "of a seeded text and a fresh one, one hash must hit")
+    assert(first.size == 1 && tailReads(first).size == 1,
+      s"first probe: ${first.size} jobs, ${tailReads(first).size} tail reads")
+    assert(jobs(CurationPipeline.corpusHashHits(spark, root, q).collect()).isEmpty,
+      "a second probe ran a job")
+    val stats = new CurationPipeline.Stats
+    for (ids <- Seq(Seq(11L, 12L, 13L), Seq(14L, 15L, 16L))) {
+      val admit = jobs(CurationPipeline.admitBatch(spark,
+        batchDf(ids.map(i => i -> text(i)) :+ (ids.head + 10, text(ids.head - 10))), root, stats))
+      assert(tailReads(admit).isEmpty, s"an admit read tail files: ${tailReads(admit)}")
+    }
+    assert(stats.admitted.get == 6 && stats.recent.count(_.reason == "exact_dup_corpus") == 2,
+      stats.recent)
   }
 
   test("driver-written tail appends read back and compact exactly") {

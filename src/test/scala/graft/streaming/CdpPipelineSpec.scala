@@ -156,4 +156,58 @@ class CdpPipelineSpec extends SparkSpec {
       assert(snaps2.length == 2 && snaps2.map(_.trackCount24h).max == 1L)
     } finally query.stop()
   }
+
+  test("fold rows equal the segmentEvents and profileUpdates projections, batch by batch") {
+    import spark.implicits._
+    implicit val sq = spark.sqlContext
+    val ins = Seq.fill(3)(MemoryStream[CdpEvent])
+    val folds = new java.util.concurrent.ConcurrentLinkedQueue[CdpFold]
+    val segs = new java.util.concurrent.ConcurrentLinkedQueue[SegmentEvent]
+    val snaps = new java.util.concurrent.ConcurrentLinkedQueue[ProfileSnapshot]
+    def sink[T](ds: org.apache.spark.sql.Dataset[T],
+                out: java.util.concurrent.ConcurrentLinkedQueue[T]) =
+      ds.writeStream.outputMode(OutputMode.Append())
+        .foreachBatch { (b: org.apache.spark.sql.Dataset[T], _: Long) =>
+          b.collect().foreach(out.add); ()
+        }
+        .start()
+    val queries = Seq(sink(fold(spark, ins(0).toDS()), folds),
+      sink(segmentEvents(spark, ins(1).toDS()), segs),
+      sink(profileUpdates(spark, ins(2).toDS()), snaps))
+    def step(evs: Seq[CdpEvent]): Seq[CdpFold] = {
+      Seq(folds, segs, snaps).foreach(_.clear())
+      ins.foreach(_.addData(evs))
+      queries.foreach(_.processAllAvailable())
+      import scala.jdk.CollectionConverters._
+      val rows = folds.asScala.toSeq.sortBy(_.profileId)
+      assert(rows.map(_.profileId).distinct.size == rows.size, s"one row per profile: $rows")
+      assert(rows.flatMap(_.events) == segs.asScala.toSeq.sortBy(_.profileId),
+        "segmentEvents differs from the fold's events")
+      assert(rows.flatMap(_.snapshot) == snaps.asScala.toSeq.sortBy(_.profileId),
+        "profileUpdates differs from the fold's snapshots")
+      rows
+    }
+    val first = (1 to 5).map(i => track(s"t$i", f"2024-01-01T00:0$i:00Z", "u1")) ++ Seq(
+      identify("p1", "2024-01-01T00:00:00Z", "u2", Map("plan" -> "pro")),
+      identify("f1", "2024-01-01T00:00:00Z", "u3", Map("plan" -> "free")))
+    try {
+      val b1 = step(first)
+      assert(b1.map(r => r.profileId -> r.events.map(e => (e.segment, e.action))) == Seq(
+        "user:u1" -> Seq(("power_user", "ENTER")), "user:u2" -> Seq(("pro_plan", "ENTER")),
+        "user:u3" -> Nil))
+      assert(b1.forall(_.snapshot.nonEmpty))
+      // pure duplicates: the fold is a no-op, so no row at all
+      assert(step(first.take(3) :+ first.last).isEmpty)
+      // a trait change without a segment change: a snapshot, no events
+      val b3 = step(Seq(identify("f2", "2024-01-01T00:10:00Z", "u3", Map("plan" -> "basic"))))
+      assert(b3.size == 1 && b3.head.events.isEmpty &&
+        b3.head.snapshot.exists(_.traits("plan") == "basic"), b3)
+      // EXITs: u2 leaves pro_plan, u1's tracks age out of the 24 h window
+      val b4 = step(Seq(
+        identify("p2", "2024-01-01T01:00:00Z", "u2", Map("plan" -> "free")),
+        track("t6", "2024-01-03T00:00:00Z", "u1")))
+      assert(b4.map(r => r.profileId -> r.events.map(e => (e.segment, e.action))) == Seq(
+        "user:u1" -> Seq(("power_user", "EXIT")), "user:u2" -> Seq(("pro_plan", "EXIT"))))
+    } finally queries.foreach(_.stop())
+  }
 }
