@@ -31,8 +31,4 @@ object QueryDef {
   def withStaged(name: String, oracle: String, staged: String)(
       query: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, query, Some(oracle), Some(staged))
-
-  def noOracle(name: String)(
-      query: (SparkSession, String) => DataFrame): QueryDef =
-    QueryDef(name, query, None)
 }

@@ -39,9 +39,8 @@ object Num {
   /** floor(x + eps) — floor's flip is a full unit, so bias is mandatory. */
   def floorB(c: Column): Column = floor(c + Eps)
 
-  /** Oracle-SQL fragments with the matching bias. */
+  /** Oracle-SQL twin of `r4`, with the matching bias. */
   def r4Sql(expr: String): String = s"round($expr + 0.00000025, 4)"
-  def floorSql(expr: String): String = s"floor($expr + 0.00000025)"
 
   // ---- integer-grid money arithmetic (round-14, found by the 10x
   // oracle gate) ----

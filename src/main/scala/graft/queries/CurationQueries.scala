@@ -889,10 +889,6 @@ object CurationQueries {
       resume: Map[String, DataFrame] = Map.empty) {
       val DQ = DedupQueries
 
-      /** Which boundaries this instance resolved from dumps instead of
-        * computing — the structural assertion surface for resume specs.
-        */
-      def resumedBoundaries: Set[String] = resume.keySet
       // corpus ⋈ dump ids → the same (id, text, n_words) rows the stage
       // computed when it was dumped; leaf-rooted like a computed boundary
       // (downstream stages fan these into many consumers)

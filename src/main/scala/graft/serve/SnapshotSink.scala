@@ -2,14 +2,11 @@ package graft.serve
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions._
-
-/** Serving-layer pieces (SURVEY §2.1 S9–S12, §2.6 W7, §2.3 A10).
+/** Serving-layer pieces (SURVEY §2.1 S11, §2.6 W7).
   *
   * Spark ends at foreachBatch; an HTTP/SSE layer consumes these hubs. The
-  * engine-side contracts — changed-only emission, top-N projection,
-  * observe() counters — are what's implemented and tested here.
+  * engine-side contract — changed-only emission — is what's implemented
+  * and tested here.
   */
 object SnapshotSink {
 
@@ -42,22 +39,4 @@ object SnapshotSink {
       changed
     }
   }
-
-  /** P5/S11: the top-N profile projection (order by lastSeen desc, strip
-    * identifier prefixes) — the exact shape the snapshot hub publishes.
-    */
-  def topNProfiles(profiles: DataFrame, n: Int): DataFrame =
-    profiles
-      .orderBy(col("lastSeen").desc, col("profileId"))
-      .limit(n)
-      .withColumn("identifiers",
-        transform(col("identifiers"),
-          id => regexp_replace(id, "^(user:|email:|anon:)", "")))
-
-  /** A10: global stats via observe() — events/alerts counted per batch;
-    * read from StreamingQueryProgress.observedMetrics (no extra action,
-    * no driver-side state).
-    */
-  def observed(df: DataFrame, name: String): DataFrame =
-    df.observe(name, count(lit(1)).as("rows"))
 }

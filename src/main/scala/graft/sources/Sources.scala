@@ -94,9 +94,6 @@ object Sources {
       .option("kafka.bootstrap.servers", brokers)
       .option("topic", topic)
 
-  def cdpKafkaKey: org.apache.spark.sql.Column =
-    coalesce(col("userId"), col("anonymousId"), col("eventId"))
-
   /** S6 transport toggle: kafka|file are factory-constructible here;
     * memory mode wires a MemoryStream directly (tests own its lifecycle),
     * so requesting it raises with that instruction.

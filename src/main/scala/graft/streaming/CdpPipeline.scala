@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, explode_outer}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
 
 /** Streaming CDP pipeline (SURVEY §3.2): dedup → profile merge (grow-only
@@ -48,14 +47,19 @@ object CdpPipeline {
       anonymousIds: Set[String],
       traits: Map[String, (String, Long, String)], // value, ts-micros, eventId of last write
       lastSeenUs: Long, // event-time microseconds
-      buckets: Map[Long, Long], // minute bucket -> TRACK count
+      // (minute bucket, TRACK count), ascending by bucket. Not a
+      // Map[Long, Long]: the fold stores this class as its
+      // transformWithState value, whose schema is written as Avro
+      // metadata, and Avro map keys must be strings — a Long-keyed map
+      // fails at query start (seen on Spark 4.1.2)
+      buckets: Seq[(Long, Long)],
       segments: Set[String],
       seenEventIds: Map[String, Long]) // eventId -> ts-micros (recency cache)
 
   object ProfileState {
     val empty: ProfileState =
       ProfileState(Set.empty, Set.empty, Set.empty, Map.empty, 0L,
-        Map.empty, Set.empty, Map.empty)
+        Nil, Set.empty, Map.empty)
   }
 
   /** The reference's routing key (`CdpEvent.kt:28-30`). */
@@ -95,12 +99,16 @@ object CdpPipeline {
     val buckets0 =
       if (e.eventType == "TRACK") {
         val b = (tMs / BucketMs) * BucketMs
-        st.buckets.updated(b, st.buckets.getOrElse(b, 0L) + 1L)
+        val (lo, hi) = st.buckets.span(_._1 < b)
+        hi.headOption match {
+          case Some((`b`, n)) => lo ++ ((b, n + 1L) +: hi.tail)
+          case _ => lo ++ ((b, 1L) +: hi)
+        }
       } else st.buckets
     // prune buckets outside the trailing 24 h of the newest event seen
     val horizon = ((lastSeen / 1000L - DayMs) / BucketMs) * BucketMs
-    val buckets = buckets0.filter(_._1 >= horizon)
-    val track24h = buckets.valuesIterator.sum
+    val buckets = buckets0.dropWhile(_._1 < horizon)
+    val track24h = buckets.iterator.map(_._2).sum
     val segs = Set.newBuilder[String]
     if (track24h >= PowerUserThreshold) segs += "power_user"
     if (traits.get("plan").exists(_._1 == "pro")) segs += "pro_plan"
@@ -148,27 +156,30 @@ object CdpPipeline {
     }
   }
 
-  /** Streaming: the CDP fold (`CdpFoldProcessor`) — per profile per
-    * micro-batch one `CdpFold` row of segment events and changed-only
-    * snapshot, so one query serves both views from one state copy.
+  /** The CDP fold over `events` on transformWithState, each profile's
+    * micro-batch emitted through `emit` (see `CdpFoldProcessor`).
+    */
+  private def foldWith[T: Encoder](events: Dataset[CdpEvent])(
+      emit: (String, Seq[SegmentEvent], Option[ProfileState]) => Iterator[T]): Dataset[T] =
+    events.groupByKey(profileId)(Encoders.STRING)
+      .transformWithState(new CdpFoldProcessor(emit), TimeMode.None(), OutputMode.Append())
+
+  /** Streaming: the CDP fold — per profile per micro-batch one `CdpFold`
+    * row of segment events and changed-only snapshot, so one query serves
+    * both views from one state copy.
     */
   def fold(spark: SparkSession, events: Dataset[CdpEvent]): Dataset[CdpFold] = {
     import spark.implicits._
-    events
-      .groupByKey(profileId)
-      .transformWithState(new CdpFoldProcessor,
-        TimeMode.None(), OutputMode.Append())
+    foldWith(events) { (pid, emits, changed) =>
+      if (emits.isEmpty && changed.isEmpty) Iterator.empty
+      else Iterator.single(CdpFold(pid, emits, changed.map(toSnapshot(pid, _))))
+    }
   }
 
-  /** Streaming: segment ENTER/EXIT events, the fold's events exploded.
-    * Not `explode`: its inferred size filter would sit between this
-    * projection and the fold's serializer, which then keeps serializing
-    * every row's snapshot only to drop it.
-    */
+  /** Streaming: segment ENTER/EXIT events, the fold's events alone. */
   def segmentEvents(spark: SparkSession, events: Dataset[CdpEvent]): Dataset[SegmentEvent] = {
     import spark.implicits._
-    fold(spark, events).select(explode_outer(col("events")).as("e"))
-      .where(col("e").isNotNull).select("e.*").as[SegmentEvent]
+    foldWith(events)((_, emits, _) => emits.iterator)
   }
 
   private[streaming] def toSnapshot(pid: String, st: ProfileState): ProfileSnapshot =
@@ -176,12 +187,12 @@ object CdpPipeline {
       st.userIds.toSeq.sorted, st.emails.toSeq.sorted,
       st.anonymousIds.toSeq.sorted,
       st.traits.map { case (k, (v, _, _)) => k -> v },
-      st.buckets.valuesIterator.sum,
+      st.buckets.iterator.map(_._2).sum,
       new Timestamp(st.lastSeenUs / 1000L),
       st.segments.toSeq.sorted)
 
   /** Streaming: one updated ProfileSnapshot per profile per micro-batch
-    * that CHANGED it — the fold's non-null snapshots (W7 changed-only at
+    * that CHANGED it — the fold's snapshots alone (W7 changed-only at
     * the operator, not the sink: a batch of pure duplicates emits
     * nothing). This is the stream the profiles SSE endpoint consumes —
     * the reference polls its profile store every second instead
@@ -190,8 +201,7 @@ object CdpPipeline {
     */
   def profileUpdates(spark: SparkSession, events: Dataset[CdpEvent]): Dataset[ProfileSnapshot] = {
     import spark.implicits._
-    fold(spark, events).where(col("snapshot").isNotNull).select("snapshot.*")
-      .as[ProfileSnapshot]
+    foldWith(events)((pid, _, changed) => changed.iterator.map(toSnapshot(pid, _)))
   }
 
   /** lastSeenUs: newest event-time seen; inReengage: ENTER fired, awaiting

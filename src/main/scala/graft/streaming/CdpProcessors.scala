@@ -7,30 +7,16 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
 
 import CdpPipeline._
 
-/** Storage form of `ProfileState`, with every map stored as an entry
-  * array and rebuilt on read. This packing is required, not an opt-in
-  * encoding choice: transformWithState writes each state variable's schema
-  * as Avro metadata, and Avro map keys must be strings. `ProfileState`
-  * stored directly fails at query start with `IncompatibleSchemaException:
-  * Unexpected type MapType(LongType,LongType,false)` (`buckets` is
-  * `Map[Long, Long]`; seen on Spark 4.1.2).
-  */
-case class TraitKV(k: String, v: String, ts: Long, eid: String)
-case class BucketKV(b: Long, n: Long)
-case class SeenKV(id: String, ts: Long)
-case class ProfilePacked(
-    userIds: Seq[String], emails: Seq[String], anonymousIds: Seq[String],
-    traits: Seq[TraitKV], lastSeenUs: Long, buckets: Seq[BucketKV],
-    segments: Seq[String], seen: Seq[SeenKV])
-
-/** The CDP fold (`CdpPipeline.fold`) on transformWithState (Spark 4's
-  * arbitrary-state API — typed state variables, explicit timers, RocksDB
-  * changelog checkpointing): at most one `CdpFold` row per profile per
-  * micro-batch, none for a batch of pure duplicates (W7 changed-only).
-  * seenEventIds is a cache, not profile content — ignored when deciding
-  * whether the profile changed.
+/** The CDP fold (`CdpPipeline.fold`, `segmentEvents`, `profileUpdates`)
+  * on transformWithState (Spark 4's arbitrary-state API — typed state
+  * variables, explicit timers, RocksDB changelog checkpointing). Per
+  * profile per micro-batch it hands `emit` the batch's segment events and
+  * the new state if the batch changed the profile (W7 changed-only: a
+  * batch of pure duplicates changes nothing); each view's `emit` builds
+  * only the rows that view outputs. seenEventIds is a cache, not profile
+  * content — ignored when deciding whether the profile changed.
   *
-  * State is ONE ValueState[ProfilePacked] per profile, dedup cache
+  * State is ONE ValueState[ProfileState] per profile, dedup cache
   * included, read (one `get()`: `exists()` is itself a full get and
   * decode) and written at most once per key per micro-batch — the same IO
   * pattern the fMGWS predecessor had. Two designs were tried and
@@ -51,48 +37,29 @@ case class ProfilePacked(
   * event-time TTL, 10k size cap, amortized sweep) are bit-identical by
   * construction.
   */
-class CdpFoldProcessor extends StatefulProcessor[String, CdpEvent, CdpFold] {
+class CdpFoldProcessor[T](emit: (String, Seq[SegmentEvent], Option[ProfileState]) => Iterator[T])
+  extends StatefulProcessor[String, CdpEvent, T] {
 
-  @transient private var profile: ValueState[ProfilePacked] = _
+  @transient private var profile: ValueState[ProfileState] = _
 
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-    profile = getHandle.getValueState[ProfilePacked]("profile",
+    profile = getHandle.getValueState[ProfileState]("profile",
       CdpFoldProcessor.ProfileEncoder, TTLConfig.NONE)
   }
 
-  private def pack(st: ProfileState): ProfilePacked =
-    ProfilePacked(
-      st.userIds.toSeq.sorted, st.emails.toSeq.sorted,
-      st.anonymousIds.toSeq.sorted,
-      st.traits.toSeq.map { case (k, (v, t, eid)) => TraitKV(k, v, t, eid) }.sortBy(_.k),
-      st.lastSeenUs,
-      st.buckets.toSeq.map { case (b, n) => BucketKV(b, n) }.sortBy(_.b),
-      st.segments.toSeq.sorted,
-      st.seenEventIds.toSeq.map { case (id, t) => SeenKV(id, t) })
-
-  private def unpack(p: ProfilePacked): ProfileState =
-    ProfileState(
-      p.userIds.toSet, p.emails.toSet, p.anonymousIds.toSet,
-      p.traits.map(t => t.k -> ((t.v, t.ts, t.eid))).toMap,
-      p.lastSeenUs,
-      p.buckets.map(b => b.b -> b.n).toMap,
-      p.segments.toSet,
-      p.seen.map(s => s.id -> s.ts).toMap)
-
   override def handleInputRows(pid: String, rows: Iterator[CdpEvent],
-                               timerValues: TimerValues): Iterator[CdpFold] = {
-    val st0 = Option(profile.get()).map(unpack).getOrElse(ProfileState.empty)
+                               timerValues: TimerValues): Iterator[T] = {
+    val st0 = Option(profile.get()).getOrElse(ProfileState.empty)
     val (st, emits) = orderedFold(pid, st0, rows)
-    if (st != st0) profile.update(pack(st))
+    if (st != st0) profile.update(st)
     val changed = st.copy(seenEventIds = Map.empty) != st0.copy(seenEventIds = Map.empty)
-    if (!changed && emits.isEmpty) Iterator.empty
-    else Iterator.single(CdpFold(pid, emits, Option.when(changed)(toSnapshot(pid, st))))
+    emit(pid, emits, Option.when(changed)(st))
   }
 }
 
 object CdpFoldProcessor {
   // derived once per JVM: init() runs per partition per micro-batch
-  private val ProfileEncoder = Encoders.product[ProfilePacked]
+  private val ProfileEncoder = Encoders.product[ProfileState]
 }
 
 /** Timer-driven reengage segment (`CdpPipeline.reengageEvents`): ENTER

@@ -64,10 +64,16 @@ class RandomizedParitySpec extends SparkSpec {
       // random consecutive batch boundaries
       val cuts = (Seq(0, events.length) ++ Seq.fill(3)(rnd.nextInt(events.length)))
         .distinct.sorted
-      val incremental = cuts.zip(cuts.tail).foldLeft(CdpPipeline.ProfileState.empty) {
-        case (st, (from, until)) => foldFrom(st, events.slice(from, until))
-      }
-      assert(incremental == oneShot, s"seed=$seed cuts=$cuts")
+      // fold batch by batch, each batch sorted as the stream's fold sorts it
+      def batched(log: Seq[CdpEvent]) =
+        cuts.zip(cuts.tail).foldLeft(CdpPipeline.ProfileState.empty) {
+          case (st, (from, until)) => foldFrom(st,
+            log.slice(from, until).sortBy(e => (CdpPipeline.micros(e.ts), e.eventId)))
+        }
+      assert(batched(events) == oneShot, s"seed=$seed cuts=$cuts")
+      // the same events arriving shuffled across those batches: a TRACK
+      // now lands before, between and after the minute buckets held
+      assert(batched(rnd.shuffle(events)) == oneShot, s"seed=$seed cuts=$cuts, shuffled")
     }
   }
 

@@ -357,4 +357,17 @@ class ApiServerSpec extends SparkSpec {
       server.stop()
     }
   }
+
+  test("profile summaries: top 20 by lastSeen desc, ties by profileId, prefixes stripped") {
+    def snap(pid: String, t: String) = ProfileSnapshot(pid, Seq(s"user:$pid"),
+      Seq("email:a@b.c"), Seq("anon:x"), Map.empty, 0L, ts(t), Nil)
+    val snaps = Seq(snap("p2", "2024-01-01T00:00:01Z"), snap("p3", "2024-01-01T00:00:03Z"),
+      snap("p1", "2024-01-01T00:00:03Z")) ++
+      (40 until 10 by -1).map(i => snap(s"q$i", "2024-01-01T00:00:00Z"))
+    val env = ServePipelines.profileSummariesEnvelope(snaps)
+    val ids = "\"profileId\":\"([^\"]+)\"".r.findAllMatchIn(env).map(_.group(1)).toSeq
+    assert(ids == Seq("p1", "p3", "p2") ++ (11 to 27).map(i => s"q$i"), env)
+    assert(env.contains("\"userIds\":[\"p1\"]") && env.contains("\"emails\":[\"a@b.c\"]")
+      && env.contains("\"anonymousIds\":[\"x\"]"), env)
+  }
 }

@@ -1,8 +1,9 @@
 package graft.streaming
 
 import graft.SparkSpec
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, TransformWithState}
+import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 /** CDP pipeline: reference-pinned semantics — power_user ENTER after 5
   * TRACKs, LWW equal-ts tie keeps later arrival, dedup per profile but
@@ -157,7 +158,7 @@ class CdpPipelineSpec extends SparkSpec {
     } finally query.stop()
   }
 
-  test("fold rows equal the segmentEvents and profileUpdates projections, batch by batch") {
+  test("fold, segmentEvents and profileUpdates emit the same rows, batch by batch") {
     import spark.implicits._
     implicit val sq = spark.sqlContext
     val ins = Seq.fill(3)(MemoryStream[CdpEvent])
@@ -208,6 +209,14 @@ class CdpPipelineSpec extends SparkSpec {
         track("t6", "2024-01-03T00:00:00Z", "u1")))
       assert(b4.map(r => r.profileId -> r.events.map(e => (e.segment, e.action))) == Seq(
         "user:u1" -> Seq(("power_user", "EXIT")), "user:u2" -> Seq(("pro_plan", "EXIT"))))
+      // each view's rows come straight out of its fold: no Generate over
+      // fold rows, and no Filter that would keep the CdpFold serializer
+      def optimized(q: StreamingQuery) =
+        q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.optimizedPlan
+      val Seq(segPlan, snapPlan) = queries.tail.map(optimized)
+      assert(Seq(segPlan, snapPlan).forall(_.exists(_.isInstanceOf[TransformWithState])))
+      assert(!segPlan.exists(_.isInstanceOf[Generate]), segPlan)
+      assert(!snapPlan.exists(_.isInstanceOf[Filter]), snapPlan)
     } finally queries.foreach(_.stop())
   }
 }
