@@ -76,7 +76,8 @@ object ServeMain {
       // cdp.watermark.lag_ms reports
       watermarkQuery = Some("serve_reengage")).attach(spark)
 
-    // in-memory CDP bus (S5); production swaps this for the Kafka source.
+    // in-memory CDP bus (S5). A Kafka source would need the
+    // spark-sql-kafka connector, which this build does not ship.
     // MemoryStream is SINGLE-consumer (one shared commit cursor + buffer),
     // so each streaming query gets its own stream and the ingest callback
     // fans out — two queries on one MemoryStream die with out-of-order
@@ -135,8 +136,6 @@ object ServeMain {
     //  - one addData PER EVENT makes each event its own source block →
     //    micro-batches spanning thousands of single-row partitions; the
     //    chunked drain bounds blocks at ~10/s regardless of POST rate.
-    // (The Kafka source in production has neither problem — this is the
-    // in-memory bus's serving discipline.)
     // ONE FEEDER PER STREAM, not one feeder calling both addDatas: a
     // chunk that fails on the second stream after succeeding on the
     // first would be retried (duplicating events into the stream that

@@ -87,31 +87,4 @@ object Bloom {
       // input still reads all-bits-set correctly
       .agg((count(col(hc)) === count(lit(1))).as("maybe"))
   }
-
-  /** Stateless probe for STREAMING guards: one left stream-static
-    * broadcast join per salt (K joins), `maybe` = all K positions hit.
-    * No aggregation, no watermark, no state store — runs in append mode,
-    * so a live ingestion stream can shed definite-nonmembers (or flag
-    * definite-possible contamination) map-side against a train-side
-    * filter. Per-KEY verdicts match [[mightContain]] exactly (spec'd);
-    * cardinality differs on duplicate probe rows — the batch probe's
-    * groupBy collapses them, this variant is one output row per input
-    * row, which is the correct shape for a pass-through stream guard.
-    * Internal columns are picked collision-free against the probe schema.
-    */
-  def mightContainStream(bits: DataFrame, probes: DataFrame): DataFrame = {
-    require(!probes.columns.contains("maybe"), "probes must not carry 'maybe'")
-    val taken = probes.columns.toSet
-    val hits = (0 until K).map(j => TextOps.freshName(s"__hit$j", taken))
-    val joined = (0 until K).foldLeft(probes) { (df, j) =>
-      val pc = TextOps.freshName(s"__pos$j", taken ++ hits)
-      df.withColumn(pc, TextOps.saltedBucket(col("v"), lit(j), MBits))
-        .join(broadcast(bits.select(col("pos").as(pc), lit(1L).as(hits(j)))),
-          Seq(pc), "left")
-        .drop(pc)
-    }
-    joined
-      .withColumn("maybe", hits.map(col(_).isNotNull).reduce(_ && _))
-      .drop(hits: _*)
-  }
 }

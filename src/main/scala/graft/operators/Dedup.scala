@@ -50,19 +50,6 @@ object Dedup {
     docs.groupBy(md5(text).as("text_hash"))
       .agg(min(id).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** Streaming exact dedup: keep the first arrival per content hash,
-    * with state bounded by the watermark (a duplicate arriving within
-    * `delay` of the original's event time is dropped; state for hashes
-    * older than the watermark is evicted, so a duplicate arriving later
-    * than the window passes — the explicit bounded-state trade every
-    * streaming dedup makes; size `delay` to the dedup horizon you need).
-    * Input needs an event-time `ts` column.
-    */
-  def exactStream(docs: DataFrame, text: Column, delay: String): DataFrame =
-    docs.withColumn("text_hash", md5(text))
-      .withWatermark("ts", delay)
-      .dropDuplicatesWithinWatermark("text_hash")
-
   // -------------------------------------------------------------- minhash
 
   /** Base for positional rolling-hash composition of shingles. */

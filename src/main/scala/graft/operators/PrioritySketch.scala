@@ -3,10 +3,9 @@ package graft.operators
 import org.apache.spark.sql.graft.Md5Prefix64
 
 /** The DLT priority-sample sketch kernel — THE one implementation of the
-  * draw formula and top-(K+1) retention that `CurationQueries
-  * .prioritySample` (DataFrame twin), `streaming.StreamSampleProcessor`
-  * (keyed state twin), and `serve.CurationPipeline.Stats` (driver-side
-  * serving twin) all share. The documented bit-for-bit parity between
+  * draw formula and top-(K+1) retention that `serve.CurationPipeline
+  * .Stats` (driver-side serving kernel) folds and `CurationQueries
+  * .prioritySample` (DataFrame twin) mirrors. The documented parity between
   * those surfaces holds exactly as long as nobody re-implements this:
   * any tie-break, retention-window, or draw-range change must happen
   * here (and in the SQL strings that interpolate [[DrawRange]]).

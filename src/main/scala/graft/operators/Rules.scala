@@ -24,12 +24,6 @@ object Rules {
       .when(value / threshold >= 5.0, lit("MEDIUM"))
       .otherwise(lit("LOW"))
 
-  /** F4 alert id (`core/Rules.kt:236`): "alert-" + UUID. Excluded from
-    * oracle-checked outputs (non-deterministic by design); appended by
-    * sinks via `withColumn("alert_id", alertId)`.
-    */
-  def alertId: Column = concat(lit("alert-"), expr("uuid()"))
-
   private def keys = Seq(col("user_id"), col("event_type"))
 
   /** R1 velocity spike (`core/Rules.kt:37-60`):

@@ -157,7 +157,7 @@ object CdpReplay {
     // in arrival (event_id) order — monotone, like the reference's
     // clock.instant(). Classified strictly: > 120 s behind the clock →
     // dropped, > 5 s → late, else normal — via the SAME
-    // Watermarks.lateClass expression the streaming path uses. Scale
+    // Watermarks.lateClass expression q_lateness_dedup_replay uses. Scale
     // shape: one window partitioned by user_id (the reference's per-profile
     // queue), no global ordering, no shuffle beyond the user_id hash.
     QueryDef(

@@ -46,7 +46,7 @@ object EventAnalytics {
 
   val defs: Seq[QueryDef] = Seq(
 
-    // Sessionization: a new session starts when the gap since the user's
+    // Sessions: a new session starts when the gap since the user's
     // previous event exceeds 30 min. Classic lag + running-sum window —
     // one shuffle on user_id, frames maintained incrementally.
     QueryDef(

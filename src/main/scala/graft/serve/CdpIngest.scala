@@ -16,8 +16,8 @@ import graft.streaming.CdpEvent
   * (`CdpEvent.kt:36-44`: non-blank eventId, >= 1 identifier, TRACK needs
   * name), and hand the typed event to the pipeline's source. Parsing is
   * driver-thread-local jackson — one POST must not cost a Spark job; the
-  * streaming query consumes from whatever bus `sink` feeds (MemoryStream
-  * in tests, Kafka in production via Sources.kafkaSink). `sink` returns
+  * streaming query consumes from whatever bus `sink` feeds (`ServeMain`'s
+  * `MemoryStream`s, through `IngestFeeder`). `sink` returns
   * whether the event was actually enqueued — a full/dead ingest backlog
   * must surface as a retryable 503, not a 202 into a black hole.
   */

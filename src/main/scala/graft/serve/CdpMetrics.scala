@@ -23,7 +23,7 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
   *                             (rows re-materialized this micro-batch)
   *  - cdp.watermark.lag_ms   ← wall clock minus the progress watermark
   *  - cdp.events.late        ← the `lateness/late_count` observe() metric
-  *                             (Watermarks.classifyLate)
+  *                             of the monitored query, if it observes one
   *  - cdp.events.dropped     ← beyond-watermark rows never reach the
   *                             operator; Spark 4 reports them per sink via
   *                             numRowsDroppedByWatermark, summed here

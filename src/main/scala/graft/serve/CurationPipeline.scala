@@ -160,7 +160,7 @@ object CurationPipeline {
     * `GET /corpus/sample`.
     */
   val SampleK = 10
-  private val SampleSalt = "corpus"
+  private[serve] val SampleSalt = "corpus"
 
   /** Driver-side counters + a bounded recent-decision log for the REST
     * surface (the reference's in-memory stats pattern).
@@ -204,14 +204,14 @@ object CurationPipeline {
     def recent: Seq[Decision] = decisions.iterator().asScala.toSeq
 
     /** Live weight-proportional sample of the ADMITTED corpus: the shared
-      * DLT sketch kernel (`operators.PrioritySketch` — the SAME code the
-      * streaming twin folds, so parity with `CurationQueries
-      * .prioritySample` cannot drift) with a single global key, weight =
-      * admitted text length. K+1 entries — a k-bounded kernel exactly
-      * like the decision log above, not corpus state. Durable: admitBatch
-      * persists the candidates next to the dedup indexes and loadSample
-      * restores them on attach, so the equals-the-batch-operator claim
-      * survives a pipeline restart, same as the guard state.
+      * DLT sketch kernel (`operators.PrioritySketch`, so parity with
+      * `CurationQueries.prioritySample` cannot drift) with a single
+      * global key, weight = admitted text length. K+1 entries — a
+      * k-bounded kernel exactly like the decision log above, not corpus
+      * state. Durable: admitBatch persists the candidates next to the
+      * dedup indexes and loadSample restores them on attach, so the
+      * equals-the-batch-operator claim survives a pipeline restart, same
+      * as the guard state.
       */
     private var sketch = graft.operators.PrioritySketch(SampleK, SampleSalt)
 

@@ -230,7 +230,7 @@ object CdpPipeline {
     * timer at `idleMs * ReengageCleanupFactor` past lastSeen removes the
     * state entirely — an EXIT for a return beyond that horizon is lost
     * (the profile re-folds from empty), the same bounded-state trade
-    * `Dedup.exactStream` documents for its TTL.
+    * every watermark-bounded dedup makes.
     */
   def reengageEvents(spark: SparkSession, events: Dataset[CdpEvent],
                      idleMs: Long): Dataset[SegmentEvent] = {

@@ -205,7 +205,6 @@ object EntityPipeline {
   * late events the two-tier lateness machinery exists to classify. Under
   * ephemeral-key workloads (session ids, NATed IPs) bound the key space
   * upstream — pre-filter to entities worth tracking — rather than here.
-  * RollingCounterProcessor shares this contract.
   */
 class EntityAlertProcessor(cfg: EntityPipeline.RuleConfig)
   extends org.apache.spark.sql.streaming.StatefulProcessor[

@@ -11,11 +11,7 @@ import org.apache.spark.sql.functions._
   * Caffeine TTL cache (`CdpEventProcessor.kt:344-351`); duplicates of the
   * same eventId on different profiles are both kept (same scoping).
   *
-  * W2 — two-tier lateness: the drop tier (> graceSec late) is the
-  * watermark itself; the "late but accepted" tier is observability only
-  * (reference `CdpEventProcessor.kt:188-217`), surfaced here as an
-  * `observe()` metric so `StreamingQueryProgress` reports it without
-  * changing behavior.
+  * W2 — two-tier lateness: [[lateClass]].
   */
 object Watermarks {
 
@@ -25,24 +21,12 @@ object Watermarks {
     df.withWatermark(tsCol, s"$graceSec seconds")
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
 
-  /** W2: tag + count late-but-accepted rows (ts more than softLagSec
-    * behind `now` — wall clock in production, injectable for deterministic
-    * tests, mirroring the reference's fixed-clock test pattern). Adds an
-    * `is_late` column and an observed `late_count` metric; drops nothing.
-    */
-  def classifyLate(df: DataFrame, tsCol: String, softLagSec: Int,
-                   now: org.apache.spark.sql.Column = current_timestamp()): DataFrame =
-    df.withColumn("is_late",
-        col(tsCol) < now - expr(s"INTERVAL $softLagSec SECONDS"))
-      .observe("lateness", sum(when(col("is_late"), 1L).otherwise(0L)).as("late_count"))
-
   /** W2 full two-tier classification (reference
     * `CdpEventProcessor.kt:188-217`, strict `isBefore` on both cutoffs):
     * dropped if ts is more than graceSec behind the processing clock,
     * late if more than softLagSec behind, else normal. Shared by the
-    * streaming observability path and the batch replay oracle
-    * (q_lateness_classes), so the oracle checks the same expression the
-    * pipeline would evaluate.
+    * batch replays q_lateness_classes and q_lateness_dedup_replay, so
+    * both classify with one expression.
     */
   def lateClass(ts: org.apache.spark.sql.Column, now: org.apache.spark.sql.Column,
                 softLagSec: Int, graceSec: Int): org.apache.spark.sql.Column =

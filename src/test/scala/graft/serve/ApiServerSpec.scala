@@ -325,6 +325,9 @@ class ApiServerSpec extends SparkSpec {
       val (cTrack, bTrack) = http("POST", s"$base/cdp/ingest", Some(
         """{"eventId":"ing-3","ts":"2024-01-01T01:00:00Z","payload":{"type":"TRACK","userId":"u2"}}"""))
       assert(cTrack == 400 && bTrack.contains("TRACK event requires a name"))
+      val (cBlank, bBlank) = http("POST", s"$base/cdp/ingest", Some(
+        """{"eventId":"  ","ts":"2024-01-01T01:00:00Z","payload":{"type":"IDENTIFY","userId":"u2"}}"""))
+      assert(cBlank == 400 && bBlank.contains("eventId must not be blank"))
       val (cBadTs, _) = http("POST", s"$base/cdp/ingest", Some(
         """{"eventId":"ing-4","ts":"not-a-time","payload":{"type":"IDENTIFY","userId":"u2"}}"""))
       assert(cBadTs == 400)

@@ -4,6 +4,7 @@ import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
 import graft.SparkSpec
+import graft.queries.CurationQueries
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
 
@@ -212,6 +213,59 @@ class CorpusIngestSpec extends SparkSpec {
       query.stop()
       server.stop()
     }
+  }
+
+  test("served sample beyond a census: uneven cuts equal prioritySample") {
+    import spark.implicits._
+    import CurationPipeline.{SampleK, SampleSalt}
+    val rnd = new scala.util.Random(7)
+    val docs = rnd.shuffle((0 until 40).map(i => (1000L + i, 1L + rnd.nextInt(900000))))
+    // uneven cuts (3 docs, then most of the corpus, then the tail), each
+    // folded into a Stats restored from the previous cut's candidates, as
+    // loadSample restores the sketch when the pipeline restarts
+    val stats = Seq(docs.take(3), docs.slice(3, 31), docs.drop(31))
+      .foldLeft(new CurationPipeline.Stats) { (prev, cut) =>
+        val next = new CurationPipeline.Stats
+        next.restoreSample(prev.sampleCandidates)
+        cut.foreach { case (id, w) => next.offerSample(id, w) }
+        next
+      }
+
+    val entry = ("\\{\"docId\":(\\d+),\"nChars\":(\\d+)," +
+      "\"priority\":([0-9.]+),\"wHat\":([0-9.]+)\\}").r
+    def parse(json: String): Map[Long, (Double, Double)] =
+      entry.findAllMatchIn(json)
+        .map(m => m.group(1).toLong -> ((m.group(3).toDouble, m.group(4).toDouble))).toMap
+    val json = stats.sampleJson
+    val tau = "\"tau\":([0-9.]+)".r.findFirstMatchIn(json).get.group(1).toDouble
+    assert(tau > 0.0, json)
+    val got = parse(json)
+    val want = CurationQueries.prioritySample(
+        docs.map { case (id, w) => ("corpus", id, w) }.toDF("source", "doc_id", "n_chars"),
+        SampleK, SampleSalt)
+      .collect()
+      .map(r => r.getLong(1) -> ((r.getDouble(3), r.getDouble(4)))).toMap
+    assert(got.size == SampleK, json)
+    assert(got.keySet == want.keySet, json)
+    // both sides round to 4 decimals; a half-way value may land one
+    // unit apart
+    for ((id, (p, wh)) <- want) {
+      assert(math.abs(got(id)._1 - p) <= 1e-4 + 1e-9, s"$id priority: $json")
+      assert(math.abs(got(id)._2 - wh) <= 1e-4 + 1e-9, s"$id wHat: $json")
+    }
+
+    val reborn = new CurationPipeline.Stats
+    reborn.restoreSample(stats.sampleCandidates)
+    assert(reborn.sampleJson == json)
+
+    // a replayed doc id keeps its one slot: re-offering the first cut
+    // changes nothing, and a twice-offered id in a census is one entry
+    docs.take(3).foreach { case (id, w) => stats.offerSample(id, w) }
+    assert(stats.sampleJson == json)
+    val census = new CurationPipeline.Stats
+    Seq((1L, 100L), (1L, 100L), (2L, 50L)).foreach { case (id, w) => census.offerSample(id, w) }
+    assert(parse(census.sampleJson).keySet == Set(1L, 2L), census.sampleJson)
+    assert(census.sampleCandidates.size == 2)
   }
 }
 

@@ -1,59 +1,9 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.functions.Identifiers
 import org.apache.spark.sql.functions._
 
 class SourcesSpec extends SparkSpec {
-
-  test("wire parse: nested envelope, ISO ts, payload flattened") {
-    import spark.implicits._
-    val raw = Seq(
-      """{"eventId":"e1","ts":"2024-01-01T00:00:05Z","payload":{"type":"TRACK","userId":"u1","name":"feature_used","properties":{"k":"1"}}}""")
-      .toDF("value")
-    val parsed = Sources.parseWire(raw, Sources.cdpEventWireSchema).collect().head
-    assert(parsed.getAs[String]("eventId") == "e1")
-    assert(parsed.getAs[java.sql.Timestamp]("ts") == ts("2024-01-01T00:00:05Z"))
-    assert(parsed.getAs[String]("userId") == "u1")
-    assert(parsed.getAs[Map[String, String]]("properties") == Map("k" -> "1"))
-  }
-
-  test("CDP validation: blank id / no identifier / TRACK without name rejected") {
-    import spark.implicits._
-    val rows = Seq(
-      ("e1", "TRACK", "u1", "feature"),    // valid
-      ("", "TRACK", "u1", "feature"),      // blank event id
-      ("e3", "IDENTIFY", null, null),      // no identifier
-      ("e4", "TRACK", "u1", null))         // track without name
-      .toDF("eventId", "type", "userId", "name")
-      .withColumn("anonymousId", lit(null: String))
-      .withColumn("email", lit(null: String))
-    val (valid, invalid) = Sources.validateCdp(rows)
-    assert(valid.collect().map(_.getAs[String]("eventId")).toSet == Set("e1"))
-    val reasons = invalid.collect()
-      .map(r => r.getAs[String]("eventId") -> r.getAs[String]("invalid_reason")).toMap
-    assert(reasons("") == "blank_event_id")
-    assert(reasons("e3") == "no_identifier")
-    assert(reasons("e4") == "track_without_name")
-  }
-
-  test("identifier normalize: prefix inference and email lowercasing") {
-    import spark.implicits._
-    val out = Seq("  Bob@Example.COM ", "user:u1", "anon-123", "plainid", "email:X@Y.Z")
-      .toDF("id").select(Identifiers.normalize(col("id")).as("n"))
-      .collect().map(_.getString(0)).toSeq
-    assert(out == Seq("email:bob@example.com", "user:u1", "anon:anon-123",
-      "user:plainid", "email:x@y.z"))
-  }
-
-  test("identifier extract: compact normalized array") {
-    import spark.implicits._
-    val out = Seq(("u1", null: String, "a1"), (null: String, "B@C.D", null: String))
-      .toDF("userId", "email", "anonymousId")
-      .select(Identifiers.extract(col("userId"), col("email"), col("anonymousId")).as("ids"))
-      .collect().map(_.getSeq[String](0)).toSeq
-    assert(out == Seq(Seq("user:u1", "anon:a1"), Seq("email:b@c.d")))
-  }
 
   test("simulator: deterministic, correct SASE mix, ~5% duplicate ids") {
     val a = Simulator.entityEvents(spark, 20000)
@@ -70,22 +20,6 @@ class SourcesSpec extends SparkSpec {
     assert(math.abs(mix("LOGIN") / n - 0.2) < 0.02)
     val dupRate = 1.0 - a.select("eventId").distinct().count() / n
     assert(dupRate > 0.03 && dupRate < 0.07)
-  }
-
-  test("file stream source parses the wire envelope end-to-end") {
-    val dir = java.nio.file.Files.createTempDirectory("wire").toString
-    java.nio.file.Files.writeString(java.nio.file.Path.of(dir, "a.json"),
-      """{"eventId":"e1","ts":"2024-01-01T00:00:05Z","payload":{"entityId":"ent1","profile":"SASE","type":"LOGIN","value":7,"tags":{"status":"OK"}}}""")
-    val stream = Sources.entityStream(spark, "file", dir)
-    val query = stream.writeStream.format("memory").queryName("wire_file")
-      .outputMode("append").start()
-    try {
-      query.processAllAvailable()
-      val row = spark.table("wire_file").collect().head
-      assert(row.getAs[String]("eventId") == "e1")
-      assert(row.getAs[String]("entityId") == "ent1")
-      assert(row.getAs[Long]("value") == 7L)
-    } finally query.stop()
   }
 
   test("multimodal frame fan-out: one row per sampled frame") {
@@ -117,17 +51,5 @@ class SourcesSpec extends SparkSpec {
       val out = spark.table("wm_dedup").collect().map(_.getString(0)).sorted
       assert(out.toSeq == Seq("e1", "e2"))
     } finally query.stop()
-  }
-
-  test("late classification tags rows older than the soft lag, drops nothing") {
-    import spark.implicits._
-    val df = Seq(
-      ("a", ts("2024-01-01T00:00:00Z")),
-      ("b", ts("2024-01-01T00:09:56Z")))
-      .toDF("id", "ts")
-    val out = graft.streaming.Watermarks.classifyLate(
-      df, "ts", softLagSec = 5, now = to_timestamp(lit("2024-01-01 00:10:00")))
-      .collect().map(r => r.getString(0) -> r.getBoolean(2)).toMap
-    assert(out == Map("a" -> true, "b" -> false))
   }
 }
