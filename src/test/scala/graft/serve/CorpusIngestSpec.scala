@@ -215,15 +215,17 @@ class CorpusIngestSpec extends SparkSpec {
     }
   }
 
-  test("served sample beyond a census: uneven cuts equal prioritySample") {
-    import spark.implicits._
-    import CurationPipeline.{SampleK, SampleSalt}
+  // 40 docs, more than the SampleK slots, so the sample is not a census
+  private def sampleDocs: Seq[(Long, Long)] = {
     val rnd = new scala.util.Random(7)
-    val docs = rnd.shuffle((0 until 40).map(i => (1000L + i, 1L + rnd.nextInt(900000))))
-    // uneven cuts (3 docs, then most of the corpus, then the tail), each
-    // folded into a Stats restored from the previous cut's candidates, as
-    // loadSample restores the sketch when the pipeline restarts
-    val stats = Seq(docs.take(3), docs.slice(3, 31), docs.drop(31))
+    rnd.shuffle((0 until 40).map(i => (1000L + i, 1L + rnd.nextInt(900000))))
+  }
+
+  // uneven cuts (3 docs, then most of the corpus, then the tail), each
+  // folded into a Stats restored from the previous cut's candidates, as
+  // loadSample restores the sketch when the pipeline restarts
+  private def foldSampleCuts(docs: Seq[(Long, Long)]): CurationPipeline.Stats =
+    Seq(docs.take(3), docs.slice(3, 31), docs.drop(31))
       .foldLeft(new CurationPipeline.Stats) { (prev, cut) =>
         val next = new CurationPipeline.Stats
         next.restoreSample(prev.sampleCandidates)
@@ -231,15 +233,21 @@ class CorpusIngestSpec extends SparkSpec {
         next
       }
 
-    val entry = ("\\{\"docId\":(\\d+),\"nChars\":(\\d+)," +
-      "\"priority\":([0-9.]+),\"wHat\":([0-9.]+)\\}").r
-    def parse(json: String): Map[Long, (Double, Double)] =
-      entry.findAllMatchIn(json)
-        .map(m => m.group(1).toLong -> ((m.group(3).toDouble, m.group(4).toDouble))).toMap
+  private val sampleEntry = ("\\{\"docId\":(\\d+),\"nChars\":(\\d+)," +
+    "\"priority\":([0-9.]+),\"wHat\":([0-9.]+)\\}").r
+  private def parseSample(json: String): Map[Long, (Double, Double)] =
+    sampleEntry.findAllMatchIn(json)
+      .map(m => m.group(1).toLong -> ((m.group(3).toDouble, m.group(4).toDouble))).toMap
+
+  test("served sample beyond a census: uneven cuts equal prioritySample") {
+    import spark.implicits._
+    import CurationPipeline.{SampleK, SampleSalt}
+    val docs = sampleDocs
+    val stats = foldSampleCuts(docs)
     val json = stats.sampleJson
     val tau = "\"tau\":([0-9.]+)".r.findFirstMatchIn(json).get.group(1).toDouble
     assert(tau > 0.0, json)
-    val got = parse(json)
+    val got = parseSample(json)
     val want = CurationQueries.prioritySample(
         docs.map { case (id, w) => ("corpus", id, w) }.toDF("source", "doc_id", "n_chars"),
         SampleK, SampleSalt)
@@ -257,14 +265,19 @@ class CorpusIngestSpec extends SparkSpec {
     val reborn = new CurationPipeline.Stats
     reborn.restoreSample(stats.sampleCandidates)
     assert(reborn.sampleJson == json)
+  }
 
-    // a replayed doc id keeps its one slot: re-offering the first cut
-    // changes nothing, and a twice-offered id in a census is one entry
+  test("served sample: a replayed doc id occupies one slot") {
+    // re-offering the first cut beyond a census changes nothing, and a
+    // twice-offered id in a census is one entry
+    val docs = sampleDocs
+    val stats = foldSampleCuts(docs)
+    val json = stats.sampleJson
     docs.take(3).foreach { case (id, w) => stats.offerSample(id, w) }
     assert(stats.sampleJson == json)
     val census = new CurationPipeline.Stats
     Seq((1L, 100L), (1L, 100L), (2L, 50L)).foreach { case (id, w) => census.offerSample(id, w) }
-    assert(parse(census.sampleJson).keySet == Set(1L, 2L), census.sampleJson)
+    assert(parseSample(census.sampleJson).keySet == Set(1L, 2L), census.sampleJson)
     assert(census.sampleCandidates.size == 2)
   }
 }
