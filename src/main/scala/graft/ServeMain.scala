@@ -8,7 +8,7 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
 
 import graft.serve._
-import graft.streaming.{CdpEvent, CdpFold, CdpPipeline, ProfileSnapshot, SegmentEvent}
+import graft.streaming.{CdpEvent, CdpFold, CdpPipeline, ProfileSnapshot}
 
 /** The packaged application — the counterpart of the reference's Spring
   * boot shell (`PulseboardApplication.kt`): one process wiring the
@@ -21,11 +21,11 @@ import graft.streaming.{CdpEvent, CdpFold, CdpPipeline, ProfileSnapshot, Segment
   *   GET  /sse/alerts | /sse/cdp/segments | /sse/cdp/profiles
   *   GET  /health | /stats/overview | /stats/cdp
   *
-  * Ingested CDP events flow through ONE fold query (`serve_cdp`: segment
-  * events and changed-only profile updates) and the reengage query;
-  * profile summaries keep a driver-side top-20 view exactly like the
-  * reference's in-memory ProfileStore (bounded: summaries evict beyond
-  * MaxProfiles by lastSeen).
+  * Ingested CDP events flow through ONE query (`serve_cdp`) over one bus:
+  * the fold (segment events and changed-only profile updates) unioned
+  * with the reengage timer. Profile summaries keep a driver-side top-20
+  * view exactly like the reference's in-memory ProfileStore (bounded:
+  * summaries evict beyond MaxProfiles by lastSeen).
   */
 object ServeMain {
 
@@ -66,28 +66,31 @@ object ServeMain {
     val profilesHub = new EventHub
     val stats = new StatsService
     val sim = new ServePipelines.SparkSim(spark, alertsHub, stats)
-    // the profile-summary store (filled by the fold query below) is the
+    // the profile-summary store (filled by the CDP query below) is the
     // metrics' profile count — the reference reports its store size
     val summaries = new ConcurrentHashMap[String, ProfileSnapshot]()
     val cdpMetrics = new CdpMetrics(Some("serve_cdp"),
-      profileCount = Some(() => summaries.size.toLong),
-      // the reengage query is the serving path's only watermark-carrying
-      // query (the fold is TimeMode.None) — its watermark is what
-      // cdp.watermark.lag_ms reports
-      watermarkQuery = Some("serve_reengage")).attach(spark)
+      profileCount = Some(() => summaries.size.toLong)).attach(spark)
 
     // in-memory CDP bus (S5). A Kafka source would need the
     // spark-sql-kafka connector, which this build does not ship.
-    // MemoryStream is SINGLE-consumer (one shared commit cursor + buffer),
-    // so each streaming query gets its own stream and the ingest callback
-    // fans out — two queries on one MemoryStream die with out-of-order
-    // commits as soon as their batch boundaries diverge
-    val foldIn = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CdpEvent]
+    val cdpIn = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CdpEvent]
+    val events = cdpIn.toDS()
 
-    // the CDP fold: segment events go to the segments hub, changed-only
-    // snapshots maintain the top-20 summary view
+    // one query, two branches over the bus: the fold (TimeMode.None, so
+    // an event behind the watermark still updates its profile) and the
+    // timer-driven reengage segment (O4's idle path: ENTER with no new
+    // events when the watermark passes lastSeen + idle), whose events
+    // ride as event-only CdpFold rows. The reengage branch carries the
+    // query's one event-time watermark (cdp.watermark.lag_ms reads it);
+    // the fold branch's input is observed once for the event counters.
+    // Segment events go to the segments hub, changed-only snapshots
+    // maintain the top-20 summary view.
+    val reengage = CdpPipeline.reengageEvents(spark,
+        events.withWatermark("ts", "1 minute").as[CdpEvent], idleMs = ReengageIdleMs)
+      .map(e => CdpFold(e.profileId, Seq(e), None))
     val profileChanged = ServePipelines.profilePublisher(profilesHub)
-    val foldQuery = CdpPipeline.fold(spark, foldIn.toDS())
+    val cdpQuery = CdpPipeline.fold(spark, CdpMetrics.observe(events)).union(reengage)
       .writeStream.queryName("serve_cdp").outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[CdpFold], _: Long) =>
         val rows = batch.collect()
@@ -107,25 +110,13 @@ object ServeMain {
       }
       .start()
 
-    // timer-driven reengage segment (O4's idle path): ENTER with no new
-    // events when the watermark passes lastSeen + idle — the one serving
-    // query that carries an event-time watermark (cdp.watermark.lag_ms
-    // reads it). Publishes into the same segments SSE hub.
-    val reengageIn = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[CdpEvent]
-    val reengageQuery = CdpPipeline.reengageEvents(spark,
-        reengageIn.toDS().withWatermark("ts", "1 minute").as[CdpEvent],
-        idleMs = ReengageIdleMs)
-      .writeStream.queryName("serve_reengage").outputMode(OutputMode.Append())
-      .foreachBatch((batch: Dataset[SegmentEvent], _: Long) =>
-        ServePipelines.publishSegments(segmentsHub, batch.collect().toSeq))
-      .start()
-
     // ingested events are counted HERE (one per accepted POST) — counting
     // changed snapshots downstream would under-report batched updates.
     //
     // POSTs land in a bounded concurrent queue; ONE feeder thread drains
     // it and calls addData per ~100 ms chunk (IngestFeeder — see its
-    // scaladoc for the soak-learned failure properties). Two load-bearing
+    // scaladoc for the soak-learned failure properties), so each chunk
+    // reaches both branches of the query at once. Two load-bearing
     // properties the 1k-rps soak found the hard way when handlers called
     // addData from HTTP threads directly:
     //  - MemoryStream's row serializer is a single ExpressionEncoder
@@ -136,49 +127,15 @@ object ServeMain {
     //  - one addData PER EVENT makes each event its own source block →
     //    micro-batches spanning thousands of single-row partitions; the
     //    chunked drain bounds blocks at ~10/s regardless of POST rate.
-    // ONE FEEDER PER STREAM, not one feeder calling both addDatas: a
-    // chunk that fails on the second stream after succeeding on the
-    // first would be retried (duplicating events into the stream that
-    // already took it — the reengage pipeline does not dedup by eventId)
-    // and eventually dropped (permanently diverging the two stateful
-    // views). Per-stream feeders give each stream its own retry budget;
-    // acceptance checks capacity on BOTH before enqueueing anywhere
-    // (the residual race is a benign one-event divergence only under
-    // simultaneous overload, vs guaranteed divergence on any sink error).
-    val cdpFeeders = Seq("fold" -> foldIn, "reengage" -> reengageIn)
-      .map { case (n, stream) =>
-        val f = new IngestFeeder[CdpEvent](s"cdp-feeder-$n",
-          chunkMax = 50000, maxPending = 500000,
-          sink = chunk => { stream.addData(chunk); () }).start()
-        // a chunk dropped after MaxChunkRetries diverges this stream's
-        // stateful view exactly like a die-mid-accept — surface it in
-        // /stats/overview next to the fan-out divergence counter, plus
-        // the backlog/retry gauges that show degradation BEFORE drops
-        stats.registerFeeder(s"cdp-feeder-$n", () => f.dropped.get,
-          () => f.backlog, () => f.retryAttemptsNow)
-        f
-      }
-    // acceptance is ATOMIC across the two feeders (one lock around
-    // check+offer): without it, two handler threads racing at the
-    // capacity boundary could each pass the capacity check and then
-    // have only ONE of their offers land — a 202'd event present in
-    // one view and missing from the other, exactly the silent
-    // divergence the per-stream split exists to prevent. The lock
-    // covers two queue adds (~ns); HTTP parsing stays outside it.
-    // A feeder dying between check and offer is still possible —
-    // detected and counted instead of ignored.
-    val acceptLock = new Object
-    val ingest = new CdpIngest(e => acceptLock.synchronized {
-      val accepted = cdpFeeders.forall(_.hasCapacity)
-      if (accepted) {
-        val landed = cdpFeeders.map(_.offer(e))
-        if (landed.contains(false)) {
-          stats.recordDivergence(1L)
-          System.err.println(
-            "[serve] CDP fan-out divergence: a feeder died mid-accept")
-        }
-        stats.recordEvents(1L)
-      }
+    val cdpFeeder = new IngestFeeder[CdpEvent]("cdp-feeder",
+      chunkMax = 50000, maxPending = 500000,
+      sink = chunk => { cdpIn.addData(chunk); () }).start()
+    // backlog/retry gauges show degradation BEFORE a chunk is dropped
+    stats.registerFeeder("cdp-feeder", () => cdpFeeder.dropped.get,
+      () => cdpFeeder.backlog, () => cdpFeeder.retryAttemptsNow)
+    val ingest = new CdpIngest(e => {
+      val accepted = cdpFeeder.offer(e)
+      if (accepted) stats.recordEvents(1L)
       accepted
     })
 
@@ -217,9 +174,9 @@ object ServeMain {
       port = port, heartbeatMs = heartbeatMs,
       ingest = Some(ingest), cdpMetrics = Some(cdpMetrics),
       corpusIngest = Some(corpusIngest), corpusStats = Some(corpusStats)).start()
-    App(server, spark, Seq(foldQuery, reengageQuery, corpusQuery), sim,
+    App(server, spark, Seq(cdpQuery, corpusQuery), sim,
       alertsHub, segmentsHub, profilesHub, cdpMetrics,
-      feeders = cdpFeeders :+ corpusFeeder, corpusRoot = Some(s"$corpusDir/index"))
+      feeders = Seq(cdpFeeder, corpusFeeder), corpusRoot = Some(s"$corpusDir/index"))
   }
 
   /** Bounded top-20 by (lastSeen desc, profileId) without sorting the

@@ -122,13 +122,10 @@ final class ApiServer(
       "eventsPerMin" -> stats.eventsPerMin,
       "alertsPerMin" -> stats.alertsPerMin,
       "uptimeSec" -> stats.uptimeSec,
-      // both stateful-view drift modes, visible to operators instead of
-      // stderr-only: die-mid-accept fan-out divergence + per-feeder
-      // retry-budget drops (should all read 0 in a healthy service) —
-      // plus the two EARLY per-feeder gauges (live backlog depth,
-      // retry-in-progress attempts) that show a sink degrading before
-      // anything is lost
-      "fanoutDivergence" -> stats.divergenceCount,
+      // per-feeder retry-budget drops, visible to operators instead of
+      // stderr-only (should read 0 in a healthy service) — plus the two
+      // EARLY per-feeder gauges (live backlog depth, retry-in-progress
+      // attempts) that show a sink degrading before anything is lost
       "feederDroppedTotal" -> stats.droppedTotal,
       "feederDropped" -> scala.collection.immutable.ListMap(
         stats.droppedByFeeder: _*),

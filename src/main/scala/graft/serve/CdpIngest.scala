@@ -17,7 +17,7 @@ import graft.streaming.CdpEvent
   * name), and hand the typed event to the pipeline's source. Parsing is
   * driver-thread-local jackson — one POST must not cost a Spark job; the
   * streaming query consumes from whatever bus `sink` feeds (`ServeMain`'s
-  * `MemoryStream`s, through `IngestFeeder`). `sink` returns
+  * `MemoryStream`, through `IngestFeeder`). `sink` returns
   * whether the event was actually enqueued — a full/dead ingest backlog
   * must surface as a retryable 503, not a 202 into a black hole.
   */

@@ -2,14 +2,29 @@ package graft.serve
 
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.{col, count, current_timestamp, lit, when}
 import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryProgress}
+
+import graft.streaming.{CdpEvent, Watermarks}
 
 /** The reference's CDP metric surface (`docs/cdp/README.md:595-604`,
   * registered in `cdp/runtime/CdpEventProcessor.kt:78-160`) mapped onto
-  * Spark's OWN telemetry — no hand-rolled counters inside operators:
+  * Spark's OWN telemetry — no hand-rolled counters inside operators.
+  * `snapshot` serves:
   *
-  *  - cdp.events.processed   ← progress.numInputRows (cumulative)
+  *  - cdp.events.processed   ← `processed` of the `cdp_events` observed
+  *                             row (see [[CdpMetrics.observe]]), summed
+  *                             over batches. Not numInputRows: a query
+  *                             whose branches each scan the bus counts
+  *                             every event once per branch there
+  *  - cdp.events.late        ← `late` of the same row: events W2's
+  *                             `Watermarks.lateClass` does not call normal
+  *  - cdp.events.dropped     ← stateOperators.numRowsDroppedByWatermark,
+  *                             summed: rows behind the watermark that an
+  *                             event-time operator ignored (the serve
+  *                             query's reengage timer; the fold has no
+  *                             watermark and drops nothing)
   *  - cdp.profiles.total     ← the serving profile-store size when a
   *                             `profileCount` supplier is given (exactly
   *                             the reference's metric: its in-memory
@@ -17,27 +32,18 @@ import org.apache.spark.sql.streaming.{StreamingQueryListener, StreamingQueryPro
   *                             stateOperators.numRowsTotal. The fallback
   *                             over-counts under transformWithState,
   *                             where numRowsTotal sums rows across ALL
-  *                             state variables (profile + dedup-cache
-  *                             entries + counters), not keyed profiles
-  *  - cdp.events.buffered    ← stateOperators.numRowsUpdated last batch
-  *                             (rows re-materialized this micro-batch)
+  *                             state variables, not keyed profiles
+  *  - cdp.events.buffered    ← stateOperators.numRowsUpdated last batch,
+  *                             summed over the query's state operators
+  *                             (the serve query's fold and reengage timer)
   *  - cdp.watermark.lag_ms   ← wall clock minus the progress watermark
-  *  - cdp.events.late        ← the `lateness/late_count` observe() metric
-  *                             of the monitored query, if it observes one
-  *  - cdp.events.dropped     ← beyond-watermark rows never reach the
-  *                             operator; Spark 4 reports them per sink via
-  *                             numRowsDroppedByWatermark, summed here
-  *  - cdp.events.dedup_hits  ← numRowsDroppedByWatermark of the dedup
-  *                             operator is the TTL-evicted analogue; exact
-  *                             dedup hits = processed - distinct outputs,
-  *                             observable per-query (not aggregated here)
+  *  - cdp.batch.p50_ms/p99_ms ← the retained micro-batch durations
   *
   * Attach one listener per monitored query name; snapshot served by
   * `/stats/cdp`.
   */
 final class CdpMetrics(queryName: Option[String] = None,
-                       profileCount: Option[() => Long] = None,
-                       watermarkQuery: Option[String] = None)
+                       profileCount: Option[() => Long] = None)
   extends StreamingQueryListener {
 
   private val processed = new AtomicLong(0L)
@@ -69,16 +75,12 @@ final class CdpMetrics(queryName: Option[String] = None,
 
   override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
     val p = e.progress
-    // watermark lag can come from a DIFFERENT query than the counters:
-    // the CDP fold is TimeMode.None (per-key ordered fold, no watermark
-    // op), while the timer-driven reengage query carries the serving
-    // path's event-time watermark
-    if (watermarkQuery.contains(p.name)) recordWatermark(p)
     if (queryName.forall(n => n == p.name)) {
-      processed.addAndGet(p.numInputRows)
-      val om = p.observedMetrics
-      if (om.containsKey("lateness"))
-        late.addAndGet(om.get("lateness").getLong(0))
+      val observed = p.observedMetrics.get(CdpMetrics.Observed)
+      if (observed != null) {
+        processed.addAndGet(observed.getAs[Long]("processed"))
+        late.addAndGet(observed.getAs[Long]("late"))
+      }
       val ops = p.stateOperators
       if (ops.nonEmpty) {
         profilesTotal.set(ops.map(_.numRowsTotal).max)
@@ -122,4 +124,20 @@ final class CdpMetrics(queryName: Option[String] = None,
   }
 
   def detach(spark: SparkSession): Unit = spark.streams.removeListener(this)
+}
+
+object CdpMetrics {
+
+  /** Name of the observed row `observe` attaches. */
+  private val Observed = "cdp_events"
+
+  /** `events` observed as one `cdp_events` row per micro-batch: `processed`
+    * (rows) and `late` (rows W2's lateClass — 5 s soft lag, 120 s grace
+    * against the batch clock — does not call normal). Apply it once per
+    * query, on one branch's input, so each event counts once.
+    */
+  def observe(events: Dataset[CdpEvent]): Dataset[CdpEvent] =
+    events.observe(Observed, count(lit(1)).as("processed"),
+      count(when(Watermarks.lateClass(col("ts"), current_timestamp(), 5, 120) =!= "normal",
+        true)).as("late"))
 }

@@ -71,19 +71,10 @@ final class StatsService(clock: () => Long = System.currentTimeMillis) {
   def recordEvents(n: Long): Unit = bump(evBuckets, evStamp, n)
   def recordAlerts(n: Long): Unit = bump(alBuckets, alStamp, n)
 
-  // fan-out divergence: accepted events that failed to land in EVERY
-  // per-stream feeder (a feeder died mid-accept) — should stay 0; a
-  // nonzero value means the stateful views have drifted and by how much
-  private val divergence = new java.util.concurrent.atomic.AtomicLong(0L)
-  def recordDivergence(n: Long): Unit = { divergence.addAndGet(n); () }
-  def divergenceCount: Long = divergence.get
-
-  // the SECOND divergence mode: events a feeder accepted but dropped
-  // after exhausting a chunk's retry budget — plus the two EARLY gauges
-  // (backlog depth, retry-in-progress) that let a soak see a feeder
-  // degrading BEFORE it drops. Registered as live gauges (the feeders
-  // own their counters); exposed so /stats/overview shows both ways the
-  // stateful views can drift, not just die-mid-accept.
+  // events a feeder accepted but dropped after exhausting a chunk's
+  // retry budget — plus the two EARLY gauges (backlog depth,
+  // retry-in-progress) that let a soak see a feeder degrading BEFORE it
+  // drops. Registered as live gauges (the feeders own their counters).
   final case class FeederGauges(dropped: () => Long, backlog: () => Int,
                                 retryAttempts: () => Int)
   private val feederGauges =

@@ -62,21 +62,13 @@ final class IngestFeeder[A](name: String, chunkMax: Int, maxPending: Int,
     */
   def retryAttemptsNow: Int = if (retrying == null) 0 else retryAttempts
 
-  /** True when an `offer` would currently be accepted — lets a caller
-    * fanning one event to SEVERAL feeders check capacity on all of them
-    * before enqueueing anywhere (a mid-fan-out rejection would diverge
-    * the streams).
-    */
-  def hasCapacity: Boolean = running && queued.get() < maxPending
-
   /** Enqueue one element. `false` = backlog full or feeder dead; the
     * caller must reject the request (503), not acknowledge it.
     *
     * The bound is enforced by atomic RESERVATION (increment first, roll
-    * back on overflow), not check-then-add: paths without an external
-    * accept lock (the corpus ingest) offer from many HTTP threads at
-    * once, and a racy check could overshoot maxPending by the number of
-    * in-flight handlers.
+    * back on overflow), not check-then-add: HTTP handlers offer from
+    * many threads at once, and a racy check could overshoot maxPending
+    * by the number of in-flight handlers.
     */
   def offer(a: A): Boolean =
     if (!running) false

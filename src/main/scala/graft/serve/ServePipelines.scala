@@ -3,7 +3,6 @@ package graft.serve
 import java.util.concurrent.atomic.AtomicReference
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.sources.Simulator
@@ -100,8 +99,8 @@ object ServePipelines {
     *
     * Each generator generation offsets the deterministic event index so a
     * swapped-in generator never re-issues earlier eventIds. Event counts
-    * reach stats via observe() on the generator (A10 — no extra action;
-    * read from each progress's observedMetrics).
+    * reach stats from the generator's own collected batch (A10 — no extra
+    * action).
     */
   final class SparkSim(spark: SparkSession, alertsHub: EventHub,
                        stats: StatsService, seed: Long = 42L) extends SimControl {
@@ -115,43 +114,6 @@ object ServePipelines {
     @volatile private var lateness0 = 90L
     private var generation = 0L // guarded by synchronized
 
-    // every generator id THIS sim ever started (bounded by reconfig count,
-    // cleared on stop): matching the CURRENT genQ id alone would drop late
-    // progress events from a just-swapped generator and events that land
-    // before state.set() publishes the new Running — both are real
-    // generated events and must count
-    private val simQueryIds =
-      java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
-
-    /** Unique tag in this sim's generator query NAMES: ids are only known
-      * after start(), so registering post-start raced the first progress
-      * event (fired before the add → its events silently dropped).
-      * onQueryStarted is delivered synchronously WITH start(), so matching
-      * the name there closes the window; the tag scopes it to this sim.
-      */
-    private val simTag = java.util.UUID.randomUUID().toString.take(8)
-
-    // scoped to THIS sim's generators (progress events on a session are
-    // global, and another SparkSim on the same session must not
-    // cross-count) and removed on stop so recreated sims don't leak dead
-    // listeners
-    private val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit =
-        if (e.name != null && e.name.startsWith(s"sim_${simTag}_")) {
-          simQueryIds.add(e.id); ()
-        }
-      override def onQueryTerminated(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit = {
-        if (simQueryIds.contains(e.progress.id)) {
-          val om = e.progress.observedMetrics
-          if (om.containsKey("sim_events")) {
-            val n = om.get("sim_events").getLong(0)
-            if (n > 0) stats.recordEvents(n)
-          }
-        }
-      }
-    }
-
     /** Start (or, on reconfig, swap in) the stateless generator. The
       * per-batch collect is bounded by rps x trigger interval — the same
       * bounded serving-layer collect as the hubs.
@@ -162,19 +124,19 @@ object ServePipelines {
       val events = Simulator
         .entityEventStream(spark, rps0, lateness0.toInt, profileName, seed,
           idxOffset = generation << 40)
-        .observe("sim_events", count(lit(1)).as("rows"))
         .as[EntityEvent]
-      val q = events.writeStream
-        .queryName(s"sim_${simTag}_gen_$generation")
+      events.writeStream
+        .queryName(s"sim_gen_$generation")
         .outputMode("append")
         .foreachBatch { (batch: Dataset[EntityEvent], _: Long) =>
           val evs = batch.collect()
-          if (evs.nonEmpty) bus.addData(evs.toSeq)
+          if (evs.nonEmpty) {
+            bus.addData(evs.toSeq)
+            stats.recordEvents(evs.length.toLong)
+          }
           ()
         }
         .start()
-      simQueryIds.add(q.id) // idempotent belt-and-braces with onQueryStarted
-      q
     }
 
     override def start(profile: Option[String], rps: Double, latenessSec: Long): Boolean =
@@ -185,9 +147,8 @@ object ServePipelines {
         if (state.get.exists(_.pipeQ.isActive)) false
         else {
           // a dead-pipeline leftover (e.g. publishAlerts threw) still owns
-          // a live generator and a listener registration — reap it, or the
-          // orphaned generator pumps a consumerless bus forever and the
-          // re-added listener double-counts every progress event
+          // a live generator — reap it, or the orphaned generator pumps a
+          // consumerless bus forever
           cleanup()
           profile.foreach(profileName = _)
           rps0 = rps
@@ -195,7 +156,6 @@ object ServePipelines {
           import spark.implicits._
           implicit val sq = spark.sqlContext
           val bus = MemoryStream[EntityEvent]
-          spark.streams.addListener(listener)
           val pipeQ = EntityPipeline.alerts(spark, bus.toDS())
             .writeStream
             .queryName("sim_pipeline")
@@ -218,15 +178,13 @@ object ServePipelines {
       }
     }
 
-    /** Stop both queries and detach the listener for whatever `state`
-      * holds — including a half-dead pair (pipeline crashed, generator
-      * alive). Always safe to call; no-op when state is empty.
+    /** Stop both queries for whatever `state` holds — including a
+      * half-dead pair (pipeline crashed, generator alive). Always safe to
+      * call; no-op when state is empty.
       */
     private def cleanup(): Unit = state.getAndSet(None).foreach { r =>
       r.genQ.stop()
       r.pipeQ.stop()
-      spark.streams.removeListener(listener)
-      simQueryIds.clear()
     }
 
     override def stop(): Boolean = synchronized {

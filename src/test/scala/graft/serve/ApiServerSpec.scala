@@ -83,7 +83,7 @@ class ApiServerSpec extends SparkSpec {
       assert(s2.contains("\"status\":\"already_running\""))
       assert(http("GET", s"$base/sim/status")._2.contains("\"running\":true"))
 
-      // the rate stream must reach /stats/overview via observe() metrics
+      // the rate stream must reach /stats/overview via the generator count
       val deadline = System.currentTimeMillis() + 30000
       var events = 0L
       while (events == 0 && System.currentTimeMillis() < deadline) {
@@ -220,7 +220,7 @@ class ApiServerSpec extends SparkSpec {
       .writeStream.outputMode(OutputMode.Append())
       .foreachBatch(ServePipelines.publishAlerts(alertsHub, stats) _)
       .start()
-    val segmentQuery = CdpPipeline.segmentEvents(spark, cdpIn.toDS())
+    val segmentQuery = CdpPipeline.segmentEvents(spark, CdpMetrics.observe(cdpIn.toDS()))
       .writeStream.queryName("api_segments").outputMode(OutputMode.Append())
       .foreachBatch { (b: org.apache.spark.sql.Dataset[SegmentEvent], _: Long) =>
         ServePipelines.publishSegments(segmentsHub, b.collect().toSeq)

@@ -111,18 +111,6 @@ class IngestFeederSpec extends AnyFunSuite {
     assert(f.offer(4))
   }
 
-  test("hasCapacity reflects backlog and death without enqueueing") {
-    val f = new IngestFeeder[Int]("t", chunkMax = 10, maxPending = 1,
-      sink = _ => ())
-    assert(f.hasCapacity)
-    assert(f.offer(1))
-    assert(!f.hasCapacity)
-    f.drainOnce()
-    assert(f.hasCapacity)
-    f.markDead()
-    assert(!f.hasCapacity)
-  }
-
   test("a dead feeder rejects offers (no 202 into a black hole)") {
     val f = new IngestFeeder[Int]("t", chunkMax = 10, maxPending = 100,
       sink = _ => ())
